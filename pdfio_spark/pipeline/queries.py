@@ -1645,7 +1645,7 @@ def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
     # assignment and probe ranking are ROW-LOCAL array ops over the
     # checkpointed base — the former crossJoin + row_number window
     # shuffled (vec_id, embedding, c_sim, c_id) k-fanned-out TWICE
-    # (once per consumer branch; 14 exchanges in the r6 plan, 3 now).
+    # (once per consumer branch; 14 exchanges in the r6 plan, 6 now).
     # Ordering is the same (c_sim DESC, c_id ASC) key the window used;
     # values bit-identical (oracle-pinned at sf0.01 + sf0.1).
     # database side: every vector lives in exactly its nearest cell

@@ -3,41 +3,16 @@
     spark-submit --py-files pdfio_spark.zip pdfio_spark/pipeline/run.py \
         --input  <parquet/iceberg of (url, warc_ts, html, text, lang)> \
         --output <results dir/table> --metrics <metrics dir/table> \
-        [--resume] [--cpus N] \
-        [--mode pdf|html|wet|wat|dedup|sigaudit|filter|pii|urlfilter|
-                decontam|domaincap|linededup|substrdedup|semdedup|
-                mix|dedupref|urldedup]
+        [--resume] [--cpus N] [--mode MODE] [--<mode>-opts JSON]
 
---mode pdf (default) runs the full PDF parse stack; --mode html runs
-the web-page boilerplate strip (html_extract) over the same table
-shape; --mode wet ingests pre-extracted text (url, text — e.g. from
-sources.read_wet) and annotates the oracle-verified analytics set;
---mode wat (r6) ingests flattened crawl metadata (url, metadata map,
-nbytes — sources.read_wat) and promotes the selection paths (content
-type, server, HTTP status, link count, title) to typed columns;
---mode dedup (r6) runs the composed exact+near-dup keep-decision
-operator (job.dedup_decisions) over (url, text); --mode sigaudit
-(r6) runs the corpus-scale signature audit
-(job.validate_signatures_over) over (url, html) — trust anchors and
-CRL/OCSP revocation material come from --trust-pems/--crl-pems/
---ocsp-ders (driver-read, closure-shipped) or each executor's
-$PDFIO_SPARK_* env; --mode filter (r6) runs the Gopher/C4-style
-quality gate (job.quality_decisions) over (url, text) — keep
-decisions with per-rule reason tags, map-only; --mode semdedup (r6)
-runs SemDeDup (job.semdedup_decisions) over (url, embedding) —
-embedding-cluster semantic dedup, corpus-global like --mode dedup;
---mode mix (r6) runs the data-mixture sampling stage
-(job.mix_decisions) — per-key rates (registrable domain by default;
-key_col weights any corpus column, e.g. lang) with deterministic
-downsampling and epoch-style upsampling, map-only; --mode dedupref
-(r6) decides a NEW crawl against a FROZEN kept corpus
-(job.dedup_against — hash probe + the shared band kernel, doc-local
-given the reference); --mode urldedup (r6) collapses recrawls of the
-same resource by normalized url (job.urldedup_decisions,
-corpus-global). All modes share the
-resume/metrics/run_id-reconcile contract (dedup resume re-derives the
-corpus-global decisions and appends only unwritten rows — see
-run_job).
+Every --mode is one row of STAGES below, in one place: its operator,
+its metrics aggregate, the input columns its scan prunes to (also the
+source schema of its streaming twin in streaming.py), whether its
+decisions are corpus-global, its options kwarg and a one-line
+description (`--help` lists them). --mode pdf (default) runs the full
+PDF parse stack. All modes share the resume/metrics/run_id-reconcile
+contract (corpus-global resume re-derives the decisions over the full
+input and appends only unwritten rows — see run_job).
 
 Input is the Common-Crawl-style table of the north rule (the binary
 `html` column carries PDF bytes). The job:
@@ -55,6 +30,184 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+
+if __name__ == "__main__" and __package__ in (None, ""):
+    # spark-submit runs this file as a bare script: re-enter through
+    # the package (provided by --py-files or the repo checkout) so
+    # relative imports resolve
+    import os
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))))
+    from pdfio_spark.pipeline.run import main as _pkg_main
+    sys.exit(_pkg_main())
+
+import inspect
+from typing import Callable, NamedTuple
+
+from .html_extract import extract_html, html_metrics
+from .job import (annotate_wat, annotate_wet, decontam_decisions,
+                  decontam_metrics, dedup_against, dedup_decisions,
+                  dedup_metrics, domain_cap_decisions, domaincap_metrics,
+                  extract_pdfs, extraction_metrics, filter_metrics,
+                  linededup_decisions, linededup_metrics, mix_decisions,
+                  mix_metrics, pii_metrics, pii_scrub_over,
+                  quality_decisions, resume_filter, semdedup_decisions,
+                  semdedup_metrics, sigaudit_metrics, substrdedup_decisions,
+                  substrdedup_metrics, url_filter_decisions,
+                  urldedup_decisions, urldedup_metrics, urlfilter_metrics,
+                  validate_signatures_over, wat_metrics, wet_metrics)
+
+
+class Stage(NamedTuple):
+    """One run.py mode. `op(corpus, *args, **kw)` -> output rows, where
+    (args, kw) is `prep(spark, opts)` when set (side inputs read before
+    the job starts) and ((), opts) otherwise."""
+    op: Callable
+    metrics: Callable
+    # "name type" fields the scan prunes to (a function of the options
+    # where they decide the columns); also the streaming twin's schema
+    cols: tuple | Callable = ("url string", "html binary")
+    # decisions depend on EVERY other doc: resume must re-derive over
+    # the full input, then append only unwritten rows
+    corpus_global: bool = False
+    opts_kw: str | None = None
+    # accepted option keys; None = op's keyword parameters
+    keys: tuple | None = None
+    prep: Callable | None = None
+    doc: str = ""
+
+    def fields(self, opts=None) -> tuple:
+        return self.cols(opts or {}) if callable(self.cols) else self.cols
+
+    def option_keys(self) -> tuple:
+        if self.keys is not None:
+            return self.keys
+        return tuple(inspect.signature(self.op).parameters)[1:]
+
+
+_TEXT = ("url string", "text string")
+
+
+def _domaincap_cols(o):
+    # the token-budget variant weighs docs by their text
+    if o.get("max_tokens_per_domain") is not None:
+        return _TEXT
+    return ("url string",)
+
+
+def _mix_cols(o):
+    # a non-domain mix key (e.g. lang) must reach the scan
+    k = o.get("key_col", "domain")
+    return ("url string",) + (() if k == "domain" else (f"{k} string",))
+
+
+def _decontam_prep(spark, o):
+    o = dict(o)
+    path = o.pop("benchmark_path", None)
+    bench = o.pop("benchmark_texts", None)
+    if (path is None) == (bench is None):
+        raise ValueError("decontam needs exactly one of "
+                         "benchmark_path / benchmark_texts")
+    if path is not None:
+        bench = spark.read.parquet(path).select("text")
+    return (bench,), o
+
+
+def _dedupref_prep(spark, o):
+    if ("reference_path" in o) == ("index_path" in o):
+        raise ValueError("mode='dedupref' needs dedupref_opts "
+                         "with exactly one of reference_path "
+                         "(frozen kept corpus, hashed inline) / "
+                         "index_path (build_dedup_index output — "
+                         "the amortized daily path)")
+    ref = (spark.read.parquet(o["reference_path"]).select("text")
+           if "reference_path" in o else None)
+    return (ref,), {"index_path": o.get("index_path")}
+
+
+STAGES: dict[str, Stage] = {
+    "pdf": Stage(
+        extract_pdfs, extraction_metrics,
+        doc="full PDF parse stack over (url, html = PDF bytes), "
+            "split-path skew topology"),
+    "html": Stage(
+        extract_html, html_metrics,
+        doc="web-page boilerplate strip over the same table shape"),
+    "wet": Stage(
+        annotate_wet, wet_metrics, _TEXT,
+        doc="pre-extracted text (sources.read_wet) annotated with the "
+            "oracle-verified analytics set"),
+    "wat": Stage(
+        annotate_wat, wat_metrics,
+        ("url string", "metadata map<string,string>", "nbytes long"),
+        doc="flattened crawl metadata (sources.read_wat) -> typed "
+            "content type / server / status / link count / title"),
+    "dedup": Stage(
+        dedup_decisions, dedup_metrics, _TEXT, True,
+        doc="composed exact + near-dup keep decisions over (url, text)"),
+    # material from --trust-pems/--crl-pems/--ocsp-ders (read once,
+    # shipped in task closures) or each executor's $PDFIO_SPARK_* env;
+    # a typo'd 'crl_blobs' would otherwise silently audit WITHOUT
+    # revocation checking, so the keys are pinned (export_certs is not
+    # a mode key)
+    "sigaudit": Stage(
+        validate_signatures_over, sigaudit_metrics,
+        opts_kw="sig_material",
+        keys=("trust_pems", "crl_blobs", "ocsp_ders"),
+        doc="corpus-scale signature audit over (url, html), trust and "
+            "CRL/OCSP material from the --trust-pems/--crl-pems/"
+            "--ocsp-ders files"),
+    # defaults are tuned for real web text — a real corpus run is
+    # EXPECTED to tune them (100%-drop on synthetic short-text corpora
+    # is faithful, not a bug)
+    "filter": Stage(
+        quality_decisions, filter_metrics, _TEXT, opts_kw="filter_opts",
+        doc="Gopher/C4-style quality gate: keep decisions with "
+            "per-rule reason tags, map-only"),
+    "pii": Stage(
+        pii_scrub_over, pii_metrics, _TEXT,
+        doc="PII redaction plus per-category counters, map-only"),
+    "urlfilter": Stage(
+        url_filter_decisions, urlfilter_metrics, ("url string",),
+        opts_kw="url_opts",
+        doc="URL gate before any content is read (--blocked-domains "
+            "merges a list read from a file into url_opts)"),
+    "decontam": Stage(
+        decontam_decisions, decontam_metrics, _TEXT, opts_kw="decontam_opts",
+        keys=("benchmark_path", "benchmark_texts", "k", "min_hits"),
+        prep=_decontam_prep,
+        doc="benchmark decontamination: drop docs sharing a k-token "
+            "span with an evaluation set"),
+    # a domain's keep set depends on every other doc in it
+    "domaincap": Stage(
+        domain_cap_decisions, domaincap_metrics, _domaincap_cols, True,
+        opts_kw="domaincap_opts",
+        doc="per-registrable-domain document or token cap"),
+    "linededup": Stage(
+        linededup_decisions, linededup_metrics, _TEXT, True,
+        doc="C4 corpus-level line dedup"),
+    "substrdedup": Stage(
+        substrdedup_decisions, substrdedup_metrics, _TEXT, True,
+        doc="exact-substring dedup"),
+    "semdedup": Stage(
+        semdedup_decisions, semdedup_metrics,
+        ("url string", "embedding array<float>"), True,
+        opts_kw="semdedup_opts",
+        doc="SemDeDup embedding-cluster semantic dedup over "
+            "(url, embedding)"),
+    "mix": Stage(
+        mix_decisions, mix_metrics, _mix_cols, opts_kw="mix_opts",
+        doc="data-mixture sampling: per-key rates (registrable domain "
+            "or key_col), deterministic down/upsampling, map-only"),
+    "dedupref": Stage(
+        dedup_against, dedup_metrics, _TEXT, opts_kw="dedupref_opts",
+        keys=("reference_path", "index_path"), prep=_dedupref_prep,
+        doc="decide a NEW crawl against a FROZEN kept corpus, "
+            "doc-local given the reference"),
+    "urldedup": Stage(
+        urldedup_decisions, urldedup_metrics, ("url string",), True,
+        doc="collapse recrawls of the same resource by normalized url"),
+}
 
 
 def make_cc_table(docs, classes=None):
@@ -97,224 +250,35 @@ def run_job(spark, input_path: str, output_path: str,
     import uuid
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
-    from .html_extract import extract_html, html_metrics
-    from .job import extract_pdfs, extraction_metrics
 
-    # validate the mode BEFORE any column select: an unknown mode used
-    # to surface as a misleading cannot-resolve-column AnalysisException
-    # on WET-shaped tables (r5 review)
-    if mode == "html":
-        extract_fn, metrics_fn = extract_html, html_metrics
-    elif mode == "pdf":
-        extract_fn, metrics_fn = extract_pdfs, extraction_metrics
-    elif mode == "wet":
-        from .job import annotate_wet, wet_metrics
-        extract_fn, metrics_fn = annotate_wet, wet_metrics
-    elif mode == "dedup":
-        from .job import dedup_decisions, dedup_metrics
-        extract_fn, metrics_fn = dedup_decisions, dedup_metrics
-    elif mode == "wat":
-        from .job import annotate_wat, wat_metrics
-        extract_fn, metrics_fn = annotate_wat, wat_metrics
-    elif mode == "filter":
-        import inspect
-        from .job import filter_metrics, quality_decisions
-        fo = filter_opts or {}
-        # fail fast on a typo'd threshold name: 'min_word' would
-        # otherwise silently run the Gopher defaults (the sig_material
-        # key lesson). Defaults are tuned for real web text — a real
-        # corpus run is EXPECTED to tune these (100%-drop on synthetic
-        # short-text corpora is faithful, not a bug)
-        valid = set(inspect.signature(quality_decisions).parameters)
-        bad = set(fo) - (valid - {"corpus"})
-        if bad:
-            raise ValueError(f"unknown filter_opts keys {sorted(bad)} "
-                             f"(valid: {sorted(valid - {'corpus'})})")
-
-        def extract_fn(c, _fo=fo):
-            return quality_decisions(c, **_fo)
-        metrics_fn = filter_metrics
-    elif mode == "pii":
-        from .job import pii_metrics, pii_scrub_over
-        extract_fn, metrics_fn = pii_scrub_over, pii_metrics
-    elif mode == "domaincap":
-        from .job import domain_cap_decisions, domaincap_metrics
-        co = domaincap_opts or {}
-        bad = set(co) - {"max_per_domain", "max_tokens_per_domain"}
-        if bad:
-            raise ValueError(f"unknown domaincap_opts keys "
-                             f"{sorted(bad)} (max_per_domain | "
-                             "max_tokens_per_domain)")
-
-        def extract_fn(c, _co=co):
-            return domain_cap_decisions(c, **_co)
-        metrics_fn = domaincap_metrics
-    elif mode == "decontam":
-        from .job import decontam_decisions, decontam_metrics
-        do = dict(decontam_opts or {})
-        bad = set(do) - {"benchmark_path", "benchmark_texts", "k",
-                         "min_hits"}
-        if bad:
-            raise ValueError(f"unknown decontam_opts keys "
-                             f"{sorted(bad)} (benchmark_path | "
-                             "benchmark_texts | k | min_hits)")
-        bench_path = do.pop("benchmark_path", None)
-        bench = do.pop("benchmark_texts", None)
-        if (bench_path is None) == (bench is None):
-            raise ValueError("decontam needs exactly one of "
-                             "benchmark_path / benchmark_texts")
-        if bench_path is not None:
-            bench = spark.read.parquet(bench_path).select("text")
-
-        def extract_fn(c, _b=bench, _do=do):
-            return decontam_decisions(c, _b, **_do)
-        metrics_fn = decontam_metrics
-    elif mode == "urlfilter":
-        import inspect
-        from .job import url_filter_decisions, urlfilter_metrics
-        uo = url_opts or {}
-        # fail fast on a typo'd option name (the filter_opts rule):
-        # 'blocked_domain' would otherwise silently gate NOTHING
-        valid = set(inspect.signature(url_filter_decisions).parameters)
-        bad = set(uo) - (valid - {"corpus"})
-        if bad:
-            raise ValueError(f"unknown url_opts keys {sorted(bad)} "
-                             f"(valid: {sorted(valid - {'corpus'})})")
-
-        def extract_fn(c, _uo=uo):
-            return url_filter_decisions(c, **_uo)
-        metrics_fn = urlfilter_metrics
-    elif mode == "dedupref":
-        from .job import dedup_against, dedup_metrics
-        ro = dedupref_opts or {}
-        bad = set(ro) - {"reference_path", "index_path"}
-        if bad:
-            raise ValueError(f"unknown dedupref_opts keys "
-                             f"{sorted(bad)} (reference_path | "
-                             "index_path)")
-        if ("reference_path" in ro) == ("index_path" in ro):
-            raise ValueError("mode='dedupref' needs dedupref_opts "
-                             "with exactly one of reference_path "
-                             "(frozen kept corpus, hashed inline) / "
-                             "index_path (build_dedup_index output — "
-                             "the amortized daily path)")
-        ref = (spark.read.parquet(ro["reference_path"]).select("text")
-               if "reference_path" in ro else None)
-
-        def extract_fn(c, _ref=ref, _ix=ro.get("index_path")):
-            return dedup_against(c, _ref, index_path=_ix)
-        metrics_fn = dedup_metrics
-    elif mode == "mix":
-        from .job import mix_decisions, mix_metrics
-        mo = mix_opts or {}
-        bad = set(mo) - {"weights", "default_rate", "seed", "key_col"}
-        if bad:
-            raise ValueError(f"unknown mix_opts keys {sorted(bad)} "
-                             "(weights | default_rate | seed | "
-                             "key_col)")
-
-        def extract_fn(c, _mo=mo):
-            return mix_decisions(c, **_mo)
-        metrics_fn = mix_metrics
-    elif mode == "semdedup":
-        from .job import semdedup_decisions, semdedup_metrics
-        so = semdedup_opts or {}
-        bad = set(so) - {"k", "iters", "tau", "train_frac", "nprobe"}
-        if bad:
-            raise ValueError(f"unknown semdedup_opts keys "
-                             f"{sorted(bad)} (k | iters | tau | "
-                             "train_frac | nprobe)")
-
-        def extract_fn(c, _so=so):
-            return semdedup_decisions(c, **_so)
-        metrics_fn = semdedup_metrics
-    elif mode == "urldedup":
-        from .job import urldedup_decisions, urldedup_metrics
-        extract_fn, metrics_fn = urldedup_decisions, urldedup_metrics
-    elif mode == "linededup":
-        from .job import linededup_decisions, linededup_metrics
-        extract_fn, metrics_fn = linededup_decisions, linededup_metrics
-    elif mode == "substrdedup":
-        from .job import substrdedup_decisions, substrdedup_metrics
-        extract_fn, metrics_fn = (substrdedup_decisions,
-                                  substrdedup_metrics)
-    elif mode == "sigaudit":
-        from .job import sigaudit_metrics, validate_signatures_over
-        sm = sig_material or {}
-        # fail fast on a typo'd key: a misspelled 'crl_blobs' would
-        # otherwise silently audit WITHOUT revocation checking (the
-        # append_updates style-typo lesson)
-        bad = set(sm) - {"trust_pems", "crl_blobs", "ocsp_ders"}
-        if bad:
-            raise ValueError(f"unknown sig_material keys {sorted(bad)} "
-                             "(trust_pems | crl_blobs | ocsp_ders)")
-
-        def extract_fn(c, _sm=sm):
-            return validate_signatures_over(
-                c, trust_pems=_sm.get("trust_pems"),
-                crl_blobs=_sm.get("crl_blobs"),
-                ocsp_ders=_sm.get("ocsp_ders"))
-        metrics_fn = sigaudit_metrics
-    else:
-        raise ValueError(f"unknown mode {mode!r} (pdf | html | wet | "
-                         "wat | dedup | sigaudit | filter | pii | "
-                         "urlfilter | decontam | domaincap | "
-                         "linededup | substrdedup | semdedup | mix | "
-                         "dedupref | urldedup)")
-    if sig_material is not None and mode != "sigaudit":
-        raise ValueError("sig_material is only valid with "
-                         "mode='sigaudit'")
-    if filter_opts is not None and mode != "filter":
-        raise ValueError("filter_opts is only valid with "
-                         "mode='filter'")
-    if url_opts is not None and mode != "urlfilter":
-        raise ValueError("url_opts is only valid with "
-                         "mode='urlfilter'")
-    if decontam_opts is not None and mode != "decontam":
-        raise ValueError("decontam_opts is only valid with "
-                         "mode='decontam'")
-    if domaincap_opts is not None and mode != "domaincap":
-        raise ValueError("domaincap_opts is only valid with "
-                         "mode='domaincap'")
-    if semdedup_opts is not None and mode != "semdedup":
-        raise ValueError("semdedup_opts is only valid with "
-                         "mode='semdedup'")
-    if mix_opts is not None and mode != "mix":
-        raise ValueError("mix_opts is only valid with mode='mix'")
-    if dedupref_opts is not None and mode != "dedupref":
-        raise ValueError("dedupref_opts is only valid with "
-                         "mode='dedupref'")
+    # validate the mode and its options BEFORE any column select or
+    # read: an unknown mode used to surface as a misleading
+    # cannot-resolve-column AnalysisException on WET-shaped tables
+    stage = STAGES.get(mode)
+    if stage is None:
+        raise ValueError(f"unknown mode {mode!r} ({' | '.join(STAGES)})")
+    given = dict(sig_material=sig_material, filter_opts=filter_opts,
+                 url_opts=url_opts, decontam_opts=decontam_opts,
+                 domaincap_opts=domaincap_opts,
+                 semdedup_opts=semdedup_opts, mix_opts=mix_opts,
+                 dedupref_opts=dedupref_opts)
+    opts = given.pop(stage.opts_kw, None) or {}
+    # fail fast on a typo'd key: 'min_word' or 'blocked_domain' would
+    # otherwise silently run the defaults (the sig_material lesson)
+    keys = stage.option_keys()
+    if bad := set(opts) - set(keys):
+        raise ValueError(f"unknown {stage.opts_kw} keys {sorted(bad)} "
+                         f"({' | '.join(keys)})")
+    for other, st in STAGES.items():
+        if given.get(st.opts_kw) is not None:
+            raise ValueError(f"{st.opts_kw} is only valid with "
+                             f"mode={other!r}")
+    args, kw = stage.prep(spark, opts) if stage.prep else ((), opts)
 
     rid = run_id or uuid.uuid4().hex
-    src = spark.read.parquet(input_path)
     # column pruning reaches the scan: each mode reads only its columns
-    cols = {"wet": ["url", "text"], "dedup": ["url", "text"],
-            "filter": ["url", "text"], "pii": ["url", "text"],
-            "urlfilter": ["url"], "decontam": ["url", "text"],
-            # the token-budget variant weighs docs by their text
-            "domaincap": (["url", "text"]
-                          if (domaincap_opts or {})
-                          .get("max_tokens_per_domain") is not None
-                          else ["url"]),
-            "linededup": ["url", "text"],
-            "substrdedup": ["url", "text"],
-            "semdedup": ["url", "embedding"],
-            # a non-domain mix key (e.g. lang) must reach the scan
-            "mix": (["url"]
-                    + ([k] if (k := (mix_opts or {})
-                               .get("key_col", "domain")) != "domain"
-                       else [])),
-            "dedupref": ["url", "text"],
-            "urldedup": ["url"],
-            "wat": ["url", "metadata", "nbytes"]}.get(mode,
-                                                      ["url", "html"])
-    # decisions in these modes depend on EVERY other doc: resume must
-    # re-derive over the full input, then append only unwritten rows
-    # domaincap's keep set depends on every other doc in a domain —
-    # corpus-global like the dedups
-    corpus_global = mode in ("dedup", "linededup", "substrdedup",
-                             "domaincap", "semdedup", "urldedup")
-    corpus = src.select(*cols)
+    corpus = spark.read.parquet(input_path).select(
+        *(f.rsplit(" ", 1)[0] for f in stage.fields(opts)))
     # the resume contract keys on url, and a NULL key matches NOTHING
     # in the anti-join (SQL null equality) — a NULL-url row would be
     # reprocessed and its decision re-APPENDED on every resume no
@@ -341,19 +305,18 @@ def run_job(spark, input_path: str, output_path: str,
     # e.g. orphan rows written by a different --mode — and silently
     # skipped it); resume/reconcile failures now surface
     if prev is not None:
-        if not corpus_global:
+        if not stage.corpus_global:
             # join strategy left to Spark (job.resume_filter): `done`
             # is the UNBOUNDED set of all previously-written urls — a
             # forced broadcast OOMs exactly on the crash-recovery path
             # it exists for (r4 review fix)
-            from .job import resume_filter
             corpus = resume_filter(corpus, prev.select("url"))
         if metrics_path and "run_id" in prev.columns:
-            _reconcile_metrics(spark, prev, metrics_path, metrics_fn)
+            _reconcile_metrics(spark, prev, metrics_path, stage.metrics)
 
     t0 = time.perf_counter()
-    extracted = extract_fn(corpus)
-    if corpus_global and prev is not None:
+    extracted = stage.op(corpus, *args, **kw)
+    if stage.corpus_global and prev is not None:
         # dedup decisions are corpus-GLOBAL: a doc's keep_id depends
         # on every other doc, so resume must NOT shrink the input
         # (deciding the missing docs against a partial corpus would
@@ -367,7 +330,6 @@ def run_job(spark, input_path: str, output_path: str,
         # becomes the dedup winner / enters a full domain cap), and
         # written rows are immutable — audit and warn rather than
         # silently violate the invariant (r6 review).
-        from .job import resume_filter
         # one checkpoint of the full re-derived set feeds both the
         # displacement audit and the anti-join (the decision plan
         # would otherwise evaluate twice)
@@ -407,7 +369,7 @@ def run_job(spark, input_path: str, output_path: str,
     # the reconcile pass above covers the opposite loss (output
     # committed, metrics not)
     if metrics_path:
-        metrics_fn(extracted.drop("run_id")) \
+        stage.metrics(extracted.drop("run_id")) \
             .withColumn("run_id", F.lit(rid)) \
             .withColumn("reconciled", F.lit(False)) \
             .withColumn("ts", F.current_timestamp()) \
@@ -449,20 +411,23 @@ def _reconcile_metrics(spark, prev_output, metrics_path: str,
             .write.mode("append").parquet(metrics_path)
 
 
-def main(argv=None) -> None:
+# every options kwarg but sig_material (built from the three file
+# flags below) is a JSON-object flag, e.g.
+# --filter-opts '{"min_words": 10, "langs": ["en", "de"]}'
+_JSON_OPTS = [st.opts_kw for st in STAGES.values()
+              if st.opts_kw and st.opts_kw.endswith("_opts")]
+
+
+def _arg_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(description="pdfio-spark extraction job")
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--mode",
-                    choices=("pdf", "html", "wet", "wat", "dedup",
-                             "sigaudit", "filter", "pii", "urlfilter",
-                             "decontam", "domaincap", "linededup",
-                             "substrdedup", "semdedup", "mix",
-                             "dedupref", "urldedup"),
-                    default="pdf")
+    ap.add_argument("--mode", choices=tuple(STAGES), default="pdf",
+                    help="; ".join(f"{m}: {st.doc}"
+                                   for m, st in STAGES.items()))
     # sigaudit material: os.pathsep-separated file paths, read on the
     # driver and shipped into task closures (works on a real cluster
     # where executors lack the driver's filesystem); omit to fall
@@ -470,64 +435,26 @@ def main(argv=None) -> None:
     ap.add_argument("--trust-pems", default=None)
     ap.add_argument("--crl-pems", default=None)
     ap.add_argument("--ocsp-ders", default=None)
-    # --mode filter thresholds as a JSON object, e.g.
-    # --filter-opts '{"min_words": 10, "langs": ["en", "de"]}'
-    ap.add_argument("--filter-opts", default=None)
-    # --mode urlfilter options as a JSON object; --blocked-domains is
-    # a newline-separated entry file read on the DRIVER (a UT1-style
-    # list doesn't fit in argv) and merged into url_opts
-    ap.add_argument("--url-opts", default=None)
+    # --mode urlfilter: a newline-separated entry file read here, before
+    # the job starts (a UT1-style list doesn't fit in argv), merged into
+    # url_opts
     ap.add_argument("--blocked-domains", default=None)
-    # --mode decontam options, e.g. --decontam-opts
-    # '{"benchmark_path": "/data/eval.parquet", "k": 13}'
-    ap.add_argument("--decontam-opts", default=None)
-    # --mode domaincap options, e.g. --domaincap-opts
-    # '{"max_per_domain": 100000}'
-    ap.add_argument("--domaincap-opts", default=None)
-    # --mode semdedup options, e.g. --semdedup-opts
-    # '{"k": 1024, "tau": 0.95, "train_frac": 0.1}'
-    ap.add_argument("--semdedup-opts", default=None)
-    # --mode mix options, e.g. --mix-opts
-    # '{"weights": {"wikipedia.org": 3.0, "spam.net": 0.1}}'
-    ap.add_argument("--mix-opts", default=None)
-    # --mode dedupref options, e.g. --dedupref-opts
-    # '{"reference_path": "/data/kept_corpus"}'
-    ap.add_argument("--dedupref-opts", default=None)
-    args = ap.parse_args(argv)
+    for kw in _JSON_OPTS:
+        ap.add_argument("--" + kw.replace("_", "-"), default=None)
+    return ap
 
-    filter_opts = None
-    if args.filter_opts is not None:
-        import json
-        filter_opts = json.loads(args.filter_opts)
-    url_opts = None
-    if args.url_opts is not None:
-        import json
-        url_opts = json.loads(args.url_opts)
-    decontam_opts = None
-    if args.decontam_opts is not None:
-        import json
-        decontam_opts = json.loads(args.decontam_opts)
-    domaincap_opts = None
-    if args.domaincap_opts is not None:
-        import json
-        domaincap_opts = json.loads(args.domaincap_opts)
-    semdedup_opts = None
-    if args.semdedup_opts is not None:
-        import json
-        semdedup_opts = json.loads(args.semdedup_opts)
-    mix_opts = None
-    if args.mix_opts is not None:
-        import json
-        mix_opts = json.loads(args.mix_opts)
-    dedupref_opts = None
-    if args.dedupref_opts is not None:
-        import json
-        dedupref_opts = json.loads(args.dedupref_opts)
+
+def main(argv=None) -> None:
+    import json
+    args = _arg_parser().parse_args(argv)
+    opts = {kw: json.loads(getattr(args, kw)) for kw in _JSON_OPTS
+            if getattr(args, kw) is not None}
     if args.blocked_domains is not None:
         with open(args.blocked_domains) as f:
             doms = [ln.strip() for ln in f if ln.strip()
                     and not ln.strip().startswith("#")]
-        url_opts = dict(url_opts or {}, blocked_domains=doms)
+        opts["url_opts"] = dict(opts.get("url_opts") or {},
+                                blocked_domains=doms)
 
     # build sig_material from the flags in EVERY mode: run_job's
     # mode guard then rejects e.g. `--mode pdf --crl-pems x.pem`
@@ -535,41 +462,20 @@ def main(argv=None) -> None:
     # silent-no-revocation failure the sig_material key check exists
     # to prevent (r6 review x2)
     from ..pd.signature import read_pathsep_blobs
-
-    def _read_all(spec):
-        return read_pathsep_blobs(spec) if spec else None
-
     sig_material = {
-        k: v for k, v in
-        (("trust_pems", _read_all(args.trust_pems)),
-         ("crl_blobs", _read_all(args.crl_pems)),
-         ("ocsp_ders", _read_all(args.ocsp_ders))) if v is not None}
-    if not sig_material:
-        sig_material = None
+        k: read_pathsep_blobs(spec) for k, spec in
+        (("trust_pems", args.trust_pems), ("crl_blobs", args.crl_pems),
+         ("ocsp_ders", args.ocsp_ders)) if spec}
 
     from .session import get_spark
     spark = get_spark(cpus=args.cpus, app="pdfio_spark_job")
     spark.sparkContext.setLogLevel("WARN")
     out = run_job(spark, args.input, args.output, args.metrics,
                   args.resume, mode=args.mode,
-                  sig_material=sig_material, filter_opts=filter_opts,
-                  url_opts=url_opts, decontam_opts=decontam_opts,
-                  domaincap_opts=domaincap_opts,
-                  semdedup_opts=semdedup_opts, mix_opts=mix_opts,
-                  dedupref_opts=dedupref_opts)
+                  sig_material=sig_material or None, **opts)
     print(out)
     spark.stop()
 
 
 if __name__ == "__main__":
-    if __package__ in (None, ""):
-        # spark-submit runs this file as a bare script: re-enter through
-        # the package (provided by --py-files or the repo checkout) so
-        # relative imports resolve
-        import os
-        sys.path.insert(0, os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))))
-        from pdfio_spark.pipeline.run import main as _pkg_main
-        _pkg_main()
-    else:
-        main()
+    main()

@@ -10,18 +10,83 @@ the genuinely streaming variant for crawl-as-it-arrives deployments:
 
 plus a watermarked windowed metrics stream (late-data tolerant), the
 standard Structured Streaming shapes (SURVEY §2.12 streaming).
+
+Each stateless twin of a run.py mode is one _stream_map call whose
+source schema is that mode's STAGES column declaration (the columns
+the batch scan prunes to); the stateful twins keep their GroupState
+functions and share _ttl and _sink.
 """
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import SparkSession, functions as F
 
-from .job import _EXTRACT_DDL, _extract_batches
+from .html_extract import extract_html
+from .job import (_EXTRACT_DDL, _extract_batches, annotate_wat,
+                  annotate_wet, mix_decisions, pii_scrub_over,
+                  quality_decisions, url_filter_decisions,
+                  validate_signatures_over)
+from .run import STAGES
 
-__all__ = ["stream_extract", "stream_metrics", "stream_dedup",
-           "stream_neardup", "neardup_keep_decisions",
+__all__ = ["stream_extract", "stream_extract_html", "stream_metrics",
+           "stream_dedup", "stream_neardup", "neardup_keep_decisions",
            "stream_ingest_wet", "stream_ingest_wat", "stream_sigaudit",
-           "stream_quality_filter", "stream_pii_scrub",
-           "stream_line_dedup"]
+           "stream_quality_filter", "stream_url_filter", "stream_mix",
+           "stream_pii_scrub", "stream_shard_export",
+           "stream_domain_cap", "stream_line_dedup",
+           "stream_substr_dedup"]
+
+
+def _schema(mode: str, opts=None) -> str:
+    """The run.py stage's scan columns as a stream source schema."""
+    return ", ".join(STAGES[mode].fields(opts))
+
+
+def _source(spark, input_dir: str, schema: str, max_files=8):
+    src = spark.readStream.schema(schema)
+    if max_files:
+        src = src.option("maxFilesPerTrigger", max_files)
+    return src.parquet(input_dir)
+
+
+def _sink(df, output_dir: str, checkpoint_dir: str,
+          available_now: bool = True, partition_by=None):
+    """Append to a checkpointed parquet sink: exactly-once, resume by
+    restarting with the same checkpoint dir."""
+    writer = df.writeStream.format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer = (writer.option("path", output_dir)
+              .option("checkpointLocation", checkpoint_dir)
+              .outputMode("append"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _stream_map(spark, input_dir: str, checkpoint_dir: str,
+                output_dir: str, available_now: bool, schema: str, op,
+                fan_out: bool = False, partition_by=None):
+    """The stateless twin: readStream of `schema` -> op -> parquet sink.
+    fan_out spreads each micro-batch over every core — for CPU-bound
+    UDF ops, whose file-source partitioning is maxFilesPerTrigger tasks
+    (the batch path's perf lesson)."""
+    src = _source(spark, input_dir, schema)
+    if fan_out:
+        src = src.repartition(spark.sparkContext.defaultParallelism)
+    return _sink(op(src), output_dir, checkpoint_dir, available_now,
+                 partition_by)
+
+
+def _ttl(state_ttl_hours):
+    """state_ttl_hours -> (timeout ms or None, the GroupState
+    timeoutConf that goes with it)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    if state_ttl_hours is None:
+        return None, GroupStateTimeout.NoTimeout
+    return (max(1, int(state_ttl_hours * 3600 * 1000)),
+            GroupStateTimeout.ProcessingTimeTimeout)
 
 
 def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
@@ -40,13 +105,11 @@ def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
     heap; default None keeps exactly-once semantics for bounded
     keyspaces."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
-    src = (spark.readStream
-           .schema("url string, html binary, nbytes long")
-           .parquet(input_dir))
-    ttl_ms = None if state_ttl_hours is None else \
-        max(1, int(state_ttl_hours * 3600 * 1000))
+    src = _source(spark, input_dir,
+                  "url string, html binary, nbytes long", max_files=None)
+    ttl_ms, timeout = _ttl(state_ttl_hours)
 
     def dedup_fn(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
@@ -78,16 +141,8 @@ def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
         outputStructType="url string, nbytes long",
         stateStructType="seen int",
         outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                     if ttl_ms is not None
-                     else GroupStateTimeout.NoTimeout)))
-    return (deduped.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+        timeoutConf=timeout))
+    return _sink(deduped, output_dir, checkpoint_dir)
 
 
 def stream_neardup(spark: SparkSession, input_dir: str,
@@ -112,20 +167,18 @@ def stream_neardup(spark: SparkSession, input_dir: str,
     lexicographically smallest url in the batch (deterministic);
     across batches/restarts the checkpoint makes first-wins exact."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
     from .queries import minhash_band_melt
 
-    src = (spark.readStream
-           .schema("url string, text string")
-           .parquet(input_dir))
+    src = _source(spark, input_dir, "url string, text string",
+                  max_files=None)
     melted = minhash_band_melt(src, id_col="url")
     words = F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+")
     short = (src.filter(F.size(words) < 3)
              .select("url", F.lit(-1).alias("band"),
                      F.xxhash64("url").alias("bucket"),
                      F.col("url").alias("keeper")))
-    ttl_ms = None if state_ttl_hours is None else \
-        max(1, int(state_ttl_hours * 3600 * 1000))
+    ttl_ms, timeout = _ttl(state_ttl_hours)
 
     def flag_fn(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
@@ -157,16 +210,8 @@ def stream_neardup(spark: SparkSession, input_dir: str,
                          "keeper string",
         stateStructType="keeper string",
         outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                     if ttl_ms is not None
-                     else GroupStateTimeout.NoTimeout)))
-    return (flags.unionByName(short).writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+        timeoutConf=timeout))
+    return _sink(flags.unionByName(short), output_dir, checkpoint_dir)
 
 
 def neardup_keep_decisions(spark: SparkSession, flags_dir: str):
@@ -190,27 +235,13 @@ def stream_extract(spark: SparkSession, input_dir: str,
     is free (restart with the same checkpoint dir).
 
     Returns the StreamingQuery (already started)."""
-    src = (spark.readStream
-           .schema("url string, html binary, nbytes long")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    # fan out each micro-batch across every core: the file-source
-    # partitioning is maxFilesPerTrigger tasks, which strands the
-    # other cores for the CPU-bound UDF (the batch path's perf lesson;
-    # measured on the 100k streaming soak: 3,550 -> 6,501 docs/s, the
-    # rest of the gap to batch is per-micro-batch scheduling)
-    par = spark.sparkContext.defaultParallelism
-    extracted = (src.select("url", "html")
-                 .repartition(par)
-                 .mapInArrow(_extract_batches, _EXTRACT_DDL))
-    writer = (extracted.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    # fan out: measured on the 100k streaming soak, 3,550 -> 6,501
+    # docs/s; the rest of the gap to batch is per-micro-batch scheduling
+    return _stream_map(
+        spark, input_dir, checkpoint_dir, output_dir, available_now,
+        _schema("pdf"),
+        lambda src: src.mapInArrow(_extract_batches, _EXTRACT_DDL),
+        fan_out=True)
 
 
 def stream_extract_html(spark: SparkSession, input_dir: str,
@@ -219,19 +250,8 @@ def stream_extract_html(spark: SparkSession, input_dir: str,
     """Streaming twin of run.py --mode html: file-source stream of
     (url, html) web pages -> boilerplate strip -> parquet sink,
     exactly-once via the streaming checkpoint."""
-    from .html_extract import extract_html
-    src = (spark.readStream
-           .schema("url string, html binary")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (extract_html(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("html"), extract_html)
 
 
 def stream_ingest_wet(spark: SparkSession, input_dir: str,
@@ -241,19 +261,8 @@ def stream_ingest_wet(spark: SparkSession, input_dir: str,
     (url, text) pre-extracted pages -> the oracled analytics
     annotation (job.annotate_wet's expression set; stateless, so no
     GroupState) -> parquet sink, exactly-once via the checkpoint."""
-    from .job import annotate_wet
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (annotate_wet(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("wet"), annotate_wet)
 
 
 def stream_ingest_wat(spark: SparkSession, input_dir: str,
@@ -263,20 +272,8 @@ def stream_ingest_wat(spark: SparkSession, input_dir: str,
     (url, metadata map, nbytes) crawl-metadata rows -> typed
     selection columns (job.annotate_wat's expression set; stateless)
     -> parquet sink, exactly-once via the checkpoint."""
-    from .job import annotate_wat
-    src = (spark.readStream
-           .schema("url string, metadata map<string,string>, "
-                   "nbytes long")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (annotate_wat(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("wat"), annotate_wat)
 
 
 def stream_quality_filter(spark: SparkSession, input_dir: str,
@@ -288,19 +285,9 @@ def stream_quality_filter(spark: SparkSession, input_dir: str,
     needed: this runs at scan speed) -> parquet sink, exactly-once
     via the checkpoint. `thresholds` pass through (min_words=...,
     langs=..., etc.)."""
-    from .job import quality_decisions
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (quality_decisions(src, **thresholds).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("filter"),
+                       partial(quality_decisions, **thresholds))
 
 
 def stream_url_filter(spark: SparkSession, input_dir: str,
@@ -314,19 +301,9 @@ def stream_url_filter(spark: SparkSession, input_dir: str,
     `url_opts` pass through (blocked_domains=..., blocked_tokens=...,
     etc.); a DataFrame blocklist must be a BATCH DataFrame (it is
     broadcast per micro-batch)."""
-    from .job import url_filter_decisions
-    src = (spark.readStream
-           .schema("url string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (url_filter_decisions(src, **url_opts).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("urlfilter"),
+                       partial(url_filter_decisions, **url_opts))
 
 
 def stream_mix(spark: SparkSession, input_dir: str,
@@ -336,7 +313,6 @@ def stream_mix(spark: SparkSession, input_dir: str,
     (a deterministic hash of the url), so the stateless map per
     micro-batch IS globally correct — same rationale as the urlfilter
     twin; a dict `weights` is broadcast per micro-batch."""
-    from .job import mix_decisions
     key = mix_opts.get("key_col", "domain")
     if key != "domain" and \
             key not in spark.read.parquet(input_dir).columns:
@@ -345,20 +321,9 @@ def stream_mix(spark: SparkSession, input_dir: str,
         # no-op; the batch path fails loudly — match it (the
         # stream_domain_cap text rule, r6 review)
         raise ValueError(f"key_col {key!r} not in {input_dir}")
-    schema = ("url string" if key == "domain"
-              else f"url string, {key} string")
-    src = (spark.readStream
-           .schema(schema)
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (mix_decisions(src, **mix_opts).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("mix", mix_opts),
+                       partial(mix_decisions, **mix_opts))
 
 
 def stream_shard_export(spark: SparkSession, input_dir: str,
@@ -379,23 +344,16 @@ def stream_shard_export(spark: SparkSession, input_dir: str,
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     keys = [F.col(c) for c in key_cols]
-    src = (spark.readStream
-           .schema(schema)
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    df = (src.withColumn("sort_key", F.xxhash64(*keys, F.lit(seed)))
-          .withColumn("shard",
-                      F.pmod(F.col("sort_key"), F.lit(n_shards))
-                      .cast("int")))
-    writer = (df.writeStream
-              .format("parquet")
-              .partitionBy("shard")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    def shard(src):
+        return (src.withColumn("sort_key",
+                               F.xxhash64(*keys, F.lit(seed)))
+                .withColumn("shard",
+                            F.pmod(F.col("sort_key"), F.lit(n_shards))
+                            .cast("int")))
+
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, schema, shard, partition_by="shard")
 
 
 def stream_domain_cap(spark: SparkSession, input_dir: str,
@@ -443,11 +401,8 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
         if "text" not in spark.read.parquet(input_dir).columns:
             raise ValueError("max_tokens_per_domain needs a `text` "
                              f"column in {input_dir}")
-    src = (spark.readStream
-           .schema("url string, text string" if token_mode
-                   else "url string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _source(spark, input_dir, _schema(
+        "domaincap", {"max_tokens_per_domain": max_tokens_per_domain}))
     wcols = ([ws_tokens_expr().cast("long").alias("w")]
              if token_mode else [])
     m = (src.select(F.coalesce(F.col("url"), F.lit(""))
@@ -499,13 +454,7 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
                          else "cnt long"),
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout)
-    return (decided.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _sink(decided, output_dir, checkpoint_dir)
 
 
 def _first_seen_state_fn(cols, ttl_ms):
@@ -593,13 +542,9 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
     (an expired line re-admits one copy, the stream_dedup tradeoff).
     NOTE (CLAUDE.md invariant): availableNow + ProcessingTimeTimeout
     never self-terminates — tests with a TTL must stop() the query."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from .queries import _WS_CHARS
 
-    src = (spark.readStream
-           .schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _source(spark, input_dir, "doc_id long, text string")
     lines = src.select(
         "doc_id",
         F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")),
@@ -609,8 +554,7 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
              .withColumn("kept", F.lit(True)))
     keyed = (lines.filter(~is_blank)
              .withColumn("k", F.md5("line")))
-    ttl_ms = None if state_ttl_hours is None else \
-        max(1, int(state_ttl_hours * 3600 * 1000))
+    ttl_ms, timeout = _ttl(state_ttl_hours)
 
     decided = keyed.groupBy("k").applyInPandasWithState(
         _first_seen_state_fn(["doc_id", "pos", "line", "kept"],
@@ -619,18 +563,10 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
                          "kept boolean",
         stateStructType="seen int",
         outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                     if ttl_ms is not None
-                     else GroupStateTimeout.NoTimeout))
+        timeoutConf=timeout)
     out = blank.select("doc_id", "pos", "line", "kept") \
         .unionByName(decided)
-    return (out.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _sink(out, output_dir, checkpoint_dir)
 
 
 def stream_substr_dedup(spark: SparkSession, input_dir: str,
@@ -661,31 +597,18 @@ def stream_substr_dedup(spark: SparkSession, input_dir: str,
     no rows here and pass through reassembly untouched.
     NOTE (CLAUDE.md invariant): availableNow + ProcessingTimeTimeout
     never self-terminates — tests with a TTL must stop() the query."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from .queries import GRAM_K, substr_gram_melt
 
-    src = (spark.readStream
-           .schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _source(spark, input_dir, "doc_id long, text string")
     grams = substr_gram_melt(src, k or GRAM_K)
-    ttl_ms = None if state_ttl_hours is None else \
-        max(1, int(state_ttl_hours * 3600 * 1000))
+    ttl_ms, timeout = _ttl(state_ttl_hours)
     decided = grams.groupBy("g").applyInPandasWithState(
         _first_seen_state_fn(["doc_id", "pos", "kept"], ttl_ms),
         outputStructType="doc_id long, pos int, kept boolean",
         stateStructType="seen int",
         outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                     if ttl_ms is not None
-                     else GroupStateTimeout.NoTimeout))
-    return (decided.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+        timeoutConf=timeout)
+    return _sink(decided, output_dir, checkpoint_dir)
 
 
 def stream_pii_scrub(spark: SparkSession, input_dir: str,
@@ -696,19 +619,8 @@ def stream_pii_scrub(spark: SparkSession, input_dir: str,
     (job.pii_scrub_over — stateless JVM regexes, runs at scan speed,
     no fan-out needed) -> parquet sink, exactly-once via the
     checkpoint."""
-    from .job import pii_scrub_over
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (pii_scrub_over(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema("pii"), pii_scrub_over)
 
 
 def stream_sigaudit(spark: SparkSession, input_dir: str,
@@ -723,23 +635,12 @@ def stream_sigaudit(spark: SparkSession, input_dir: str,
     checkpoint. CMS parse + verify is CPU-bound per row, so each
     micro-batch fans out across every core (the stream_extract
     lesson)."""
-    from .job import validate_signatures_over
-    src = (spark.readStream
-           .schema("url string, html binary")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    par = spark.sparkContext.defaultParallelism
-    audited = validate_signatures_over(
-        src.repartition(par), trust_pems=trust_pems,
-        crl_blobs=crl_blobs, ocsp_ders=ocsp_ders)
-    writer = (audited.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _stream_map(
+        spark, input_dir, checkpoint_dir, output_dir, available_now,
+        _schema("sigaudit"),
+        partial(validate_signatures_over, trust_pems=trust_pems,
+                crl_blobs=crl_blobs, ocsp_ders=ocsp_ders),
+        fan_out=True)
 
 
 def stream_metrics(spark: SparkSession, input_dir: str,
@@ -757,9 +658,8 @@ def stream_metrics(spark: SparkSession, input_dir: str,
     watermark evict finalized windows; a sink consumer upserts by
     (window, status) — for the memory-sink demo that means taking the
     LAST emission per key."""
-    src = (spark.readStream
-           .schema("ts timestamp, status string, nbytes long")
-           .parquet(input_dir))
+    src = _source(spark, input_dir,
+                  "ts timestamp, status string, nbytes long", max_files=None)
     agg = (src.withWatermark("ts", watermark)
            .groupBy(F.window("ts", window).alias("w"), "status")
            .agg(F.count("*").alias("n_docs"),

@@ -70,12 +70,14 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def _soak_run_job(spark, rows_df, job_mode: str, mode: str, smj: bool,
-                  soak_dir: str, **run_kw) -> None:
-    """Shared harness for run_job-surfaced soak modes (wat, rundedup):
-    materialize the input like a crawl table, time EVERYTHING run_job
-    does (transform + both parquet appends), report one JSON line,
-    clean up."""
-    import time as _t
+                  soak_dir: str, check=None, **run_kw) -> None:
+    """Shared harness for the run_job-surfaced soak modes (wat,
+    rundedup, runfilter, runpii, runsemdedup, runurl, runmix,
+    runurldedup, rundomaincap): materialize the input like a crawl
+    table, time EVERYTHING run_job does (transform + both parquet
+    appends), report one JSON line, clean up. `check(result,
+    metrics_path)`, when given, runs untimed before the cleanup: it
+    asserts on the run and returns extra JSON fields."""
     from pdfio_spark.pipeline.run import run_job
     inp = os.path.join(soak_dir, f"{mode}_in")
     outp = os.path.join(soak_dir, f"{mode}_out")
@@ -84,12 +86,13 @@ def _soak_run_job(spark, rows_df, job_mode: str, mode: str, smj: bool,
         shutil.rmtree(p, ignore_errors=True)
     rows_df.write.parquet(inp)
     n = spark.read.parquet(inp).count()
-    t0 = _t.perf_counter()
+    t0 = time.perf_counter()
     r = run_job(spark, inp, outp, met, mode=job_mode, **run_kw)
-    dt = _t.perf_counter() - t0
+    dt = time.perf_counter() - t0
+    extra = check(r, met) if check else {}
     print(json.dumps({"mode": mode, "smj": smj, "n_docs": n,
                       "written": r["written"],
-                      "by_status": r["by_status"],
+                      "by_status": r["by_status"], **extra,
                       "sec": round(dt, 1),
                       "docs_per_sec": round(n / dt, 1)}))
     for p in (inp, outp, met):
@@ -906,7 +909,6 @@ def main() -> None:
         # cheapest production stage (url column only reaches the
         # scan; map-only exprs + two broadcast joins), its docs/s is
         # the contract ceiling for a decision-only pass.
-        from pdfio_spark.pipeline.run import run_job
         urls = (spark.range(n_docs).selectExpr(
             "concat(element_at(array('https', 'http'), "
             "cast(id % 2 + 1 as int)), '://', "
@@ -918,27 +920,11 @@ def main() -> None:
             "'/page/', cast(id as string), "
             "element_at(array('', '#frag', '?q=casino'), "
             "cast(id % 5 % 3 + 1 as int))) as url"))
-        inp = os.path.join(soak_dir, "ru_in")
-        outp = os.path.join(soak_dir, "ru_out")
-        met = os.path.join(soak_dir, "ru_met")
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        urls.repartition(cpus * 2).write.parquet(inp)
         blocked = [f"site{i}.example.com" for i in range(100)]
-        t0 = time.perf_counter()
-        res = run_job(spark, inp, outp, met, mode="urlfilter",
-                      run_id=f"soak-{mode}",
+        _soak_run_job(spark, urls.repartition(cpus * 2), "urlfilter",
+                      mode, smj, soak_dir, run_id=f"soak-{mode}",
                       url_opts={"blocked_domains": blocked,
                                 "blocked_tokens": ["casino"]})
-        dt = time.perf_counter() - t0
-        print(json.dumps({"mode": mode, "n_docs": res["written"],
-                          "by_status": res["by_status"],
-                          "sec": round(dt, 1),
-                          "docs_per_sec": round(res["written"] / dt,
-                                                1)}))
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        spark.stop()
         return
 
     if mode == "runmix":
@@ -948,39 +934,25 @@ def main() -> None:
         # domain), 100 domains weighted 0.0 (drop), 100 weighted 2.5
         # (epoch upsample), rest default 1.0 — closed-form expected
         # class counts, map-only + one broadcast join.
-        from pdfio_spark.pipeline.run import run_job
         urls = (spark.range(n_docs).selectExpr(
             "concat('https://www.site', cast(id % 1000 as string), "
             "'.com/page/', cast(id as string)) as url"))
-        inp = os.path.join(soak_dir, "rm_in")
-        outp = os.path.join(soak_dir, "rm_out")
-        met = os.path.join(soak_dir, "rm_met")
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        urls.repartition(cpus * 2).write.parquet(inp)
         w = {f"site{i}.com": 0.0 for i in range(100)}
         w.update({f"site{i}.com": 2.5 for i in range(100, 200)})
-        t0 = time.perf_counter()
-        res = run_job(spark, inp, outp, met, mode="mix",
-                      run_id=f"soak-{mode}",
+
+        def check(res, met):
+            bs = res["by_status"]
+            want = n_docs // 10  # 100 of 1000 domains per class
+            assert bs.get("dropped", 0) == want, bs
+            assert bs.get("upsampled", 0) == want, bs
+            assert bs.get("kept", 0) == n_docs - 2 * want, bs
+            n_out = (spark.read.parquet(met)
+                     .agg(F.sum("n_copies_out")).collect()[0][0])
+            return {"n_copies_out": int(n_out)}
+
+        _soak_run_job(spark, urls.repartition(cpus * 2), "mix", mode,
+                      smj, soak_dir, check, run_id=f"soak-{mode}",
                       mix_opts={"weights": w})
-        dt = time.perf_counter() - t0
-        bs = res["by_status"]
-        want = n_docs // 10  # 100 of 1000 domains per class
-        assert bs.get("dropped", 0) == want, bs
-        assert bs.get("upsampled", 0) == want, bs
-        assert bs.get("kept", 0) == n_docs - 2 * want, bs
-        n_out = (spark.read.parquet(met)
-                 .agg(F.sum("n_copies_out")).collect()[0][0])
-        print(json.dumps({"mode": mode, "n_docs": res["written"],
-                          "by_status": bs,
-                          "n_copies_out": int(n_out),
-                          "sec": round(dt, 1),
-                          "docs_per_sec": round(res["written"] / dt,
-                                                1)}))
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        spark.stop()
         return
 
     if mode == "shardexport":
@@ -1092,32 +1064,20 @@ def main() -> None:
         # URL-canonical dedup at 1M urls: every odd url is a
         # #fragment recrawl of its even sibling -> exactly half
         # collapse; keeper = the fragment-less raw min.
-        from pdfio_spark.pipeline.run import run_job
         urls = (spark.range(n_docs).selectExpr(
             "concat('https://site', "
             "cast(floor(id / 2) % 1000 as string), "
             "'.com/p/', cast(floor(id / 2) as string), "
             "case when id % 2 = 1 then '#frag' else '' end) as url"))
-        inp = os.path.join(soak_dir, "rud_in")
-        outp = os.path.join(soak_dir, "rud_out")
-        met = os.path.join(soak_dir, "rud_met")
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        urls.repartition(cpus * 2).write.parquet(inp)
-        t0 = time.perf_counter()
-        res = run_job(spark, inp, outp, met, mode="urldedup",
-                      run_id=f"soak-{mode}")
-        dt = time.perf_counter() - t0
-        bs = res["by_status"]
-        assert bs.get("kept", 0) == n_docs // 2 + n_docs % 2, bs
-        assert bs.get("url_dup", 0) == n_docs // 2, bs
-        print(json.dumps({"mode": mode, "n_docs": res["written"],
-                          "by_status": bs, "sec": round(dt, 1),
-                          "docs_per_sec": round(res["written"] / dt,
-                                                1)}))
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        spark.stop()
+
+        def check(res, met):
+            bs = res["by_status"]
+            assert bs.get("kept", 0) == n_docs // 2 + n_docs % 2, bs
+            assert bs.get("url_dup", 0) == n_docs // 2, bs
+            return {}
+
+        _soak_run_job(spark, urls.repartition(cpus * 2), "urldedup",
+                      mode, smj, soak_dir, check, run_id=f"soak-{mode}")
         return
 
     if mode == "rundomaincap":
@@ -1133,7 +1093,6 @@ def main() -> None:
         # the ONE registrable domain example.com and the operator
         # ranked all 1M rows of it in 12 s (kept exactly 1000): the
         # total-skew extreme, handled without a straggler.
-        from pdfio_spark.pipeline.run import run_job
         # SOAK_TOKENCAP=1 runs the token-budget variant instead: same
         # skew, docs weighted 5-14 tokens (id-hash), budget 10k
         # tokens/domain — the weighted histogram + second window over
@@ -1146,27 +1105,12 @@ def main() -> None:
             "array_join(transform(sequence(1, "
             "cast(5 + pmod(xxhash64(id), 10) as int)), "
             "x -> 'tok'), ' ') as text"))
-        inp = os.path.join(soak_dir, "rdc_in")
-        outp = os.path.join(soak_dir, "rdc_out")
-        met = os.path.join(soak_dir, "rdc_met")
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        urls.repartition(cpus * 2).write.parquet(inp)
         opts = ({"max_per_domain": None,
                  "max_tokens_per_domain": 10_000} if tokencap
                 else {"max_per_domain": 1000})
-        t0 = time.perf_counter()
-        res = run_job(spark, inp, outp, met, mode="domaincap",
-                      run_id=f"soak-{mode}", domaincap_opts=opts)
-        dt = time.perf_counter() - t0
-        print(json.dumps({"mode": mode, "n_docs": res["written"],
-                          "by_status": res["by_status"],
-                          "sec": round(dt, 1),
-                          "docs_per_sec": round(res["written"] / dt,
-                                                1)}))
-        for d in (inp, outp, met):
-            shutil.rmtree(d, ignore_errors=True)
-        spark.stop()
+        _soak_run_job(spark, urls.repartition(cpus * 2), "domaincap",
+                      mode, smj, soak_dir, run_id=f"soak-{mode}",
+                      domaincap_opts=opts)
         return
 
     if mode == "rundecontam":
