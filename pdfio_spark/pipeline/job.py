@@ -3,8 +3,9 @@
 Topology (SURVEY §2.1 S1/S10, §4.2):
 
     scan (url, html)            [SQL: column-pruned parquet/iceberg scan]
-      -> size-bucketed salted repartition   [custom: large-PDF skew]
-      -> mapInArrow(extract_batch)          [UDF: the whole parse stack]
+      -> split by size: small docs stay on their scan partition,
+         the heavy tail is shuffled by url  [custom: large-PDF skew]
+      -> mapInArrow(_extract_batches)       [UDF: the whole parse stack]
       -> results + per-partition metrics    [SQL: checkpointed lineage]
 
 The extraction UDF is Arrow-batched: one Python process decodes a
@@ -13,9 +14,9 @@ Python<->JVM round trips. Failure isolation is row-level (status/err
 columns); a corrupt PDF never fails a task.
 
 At 100 TB the same topology holds: the scan is an Iceberg table with
-url/html pruned at the source, the repartition key spreads multi-GB
-PDFs across executors, and the metrics sink is an Iceberg append that
-gives exactly-once resume via anti-join on completed partitions.
+url/html pruned at the source, the tail shuffle spreads multi-GB
+PDFs across executors, and the output is an Iceberg append that gives
+exactly-once resume via an anti-join on completed urls.
 """
 from __future__ import annotations
 
@@ -184,12 +185,12 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
 _EXTRACT_DDL = ("url string, n_pages int, text string, status string, "
                 "err string, nbytes long, dur_us long")
 
-# docs above this size go through the skew repartition; everything else
+# docs above this size go through the tail shuffle; everything else
 # extracts in place on the scan partitioning (zero shuffle)
 SKEW_THRESHOLD_BYTES = 2 * 1024 * 1024
 
 
-def extract_pdfs(corpus: DataFrame, skew_partitions: int | None = None,
+def extract_pdfs(corpus: DataFrame,
                  skew_threshold: int = SKEW_THRESHOLD_BYTES) -> DataFrame:
     """(url, html[, nbytes]) -> extraction rows.
 
@@ -201,19 +202,23 @@ def extract_pdfs(corpus: DataFrame, skew_partitions: int | None = None,
       - small docs (the overwhelming majority) extract IN PLACE on the
         scan partitioning — `maxPartitionBytes` already bounds the bytes
         per task, so per-task cost is bounded when cost ~ size;
-      - the heavy tail (> skew_threshold) is repartitioned round-robin
-        across the cluster so multi-GB PDFs with super-linear parse cost
+      - the heavy tail (> skew_threshold) is hash-spread by url across
+        the cluster so multi-GB PDFs with super-linear parse cost
         cannot straggle one scan partition; this shuffles only the tail.
 
     AQE cannot split a straggler *row*, so the split must happen before
-    the UDF stage. An explicit partition count is used for the tail —
-    AQE would coalesce a small-byte shuffle even though UDF cost is
-    per-row CPU.
+    the UDF stage. The tail shuffle has no partition count, so AQE sizes
+    it: the hash partitions coalesce to about max(tail bytes /
+    defaultParallelism, 1 MB minPartitionSize) each, which spreads a
+    tail of docs over the threshold across the cores. Both branches
+    meet BEFORE the one UDF, so when the tail shuffle holds no rows AQE
+    drops its union branch and starts no Python task for it. Measured
+    at local[2] on a tail-free `pdf_mixed` step: the explicit
+    `repartition(max(defaultParallelism, 8))` this replaces, which AQE
+    neither coalesces nor prunes, ran 8 empty Python tasks of ~250 ms
+    beside the 2 that held rows.
     """
     df = corpus
-    if skew_partitions is None:
-        sc = df.sparkSession.sparkContext
-        skew_partitions = max(sc.defaultParallelism, 8)
     if "nbytes" not in df.columns:
         df = df.withColumn("nbytes", F.length("html").cast("long"))
     # NULL html (or a NULL pre-supplied nbytes) fails BOTH branch
@@ -221,14 +226,11 @@ def extract_pdfs(corpus: DataFrame, skew_partitions: int | None = None,
     # where the UDF's `html or b""` quarantines it as an error row
     # (r5 review)
     df = df.withColumn("nbytes", F.coalesce("nbytes", F.lit(0)))
-    small = (df.filter(F.col("nbytes") <= skew_threshold)
-             .select("url", "html")
-             .mapInArrow(_extract_batches, _EXTRACT_DDL))
-    big = (df.filter(F.col("nbytes") > skew_threshold)
-           .select("url", "html")
-           .repartition(skew_partitions)
-           .mapInArrow(_extract_batches, _EXTRACT_DDL))
-    return small.unionByName(big)
+    small = df.filter(F.col("nbytes") <= skew_threshold).select("url", "html")
+    tail = (df.filter(F.col("nbytes") > skew_threshold)
+            .select("url", "html")
+            .repartition("url"))
+    return small.unionByName(tail).mapInArrow(_extract_batches, _EXTRACT_DDL)
 
 
 def extract_pdfs_sharded(corpus: DataFrame, pages_per_shard: int = 4,
@@ -1906,7 +1908,7 @@ def sigaudit_metrics(extracted: DataFrame) -> DataFrame:
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics rows — the checkpoint payload
     (SURVEY §2.1 S10). Written per batch to the metrics table; resume
-    anti-joins completed partition ids."""
+    anti-joins the urls already in the output (resume_filter)."""
     return (extracted
             .withColumn("partition_id", F.spark_partition_id())
             .groupBy("partition_id")

@@ -3,6 +3,7 @@ streaming ingestion. One shared local session (slow-marked but part of
 the gate — the driver's pytest run is the correctness check)."""
 import os
 import shutil
+import sys
 import tempfile
 
 import pytest
@@ -2509,6 +2510,128 @@ def test_extract_pdfs_null_html_quarantined(spark):
     rows = {r["url"]: r["status"] for r in extract_pdfs(df).collect()}
     assert set(rows) == {"doc://null", "doc://empty"}
     assert rows["doc://null"] == "error"
+
+
+def _pad_pdf(pdf: bytes, size: int, seed: int) -> bytes:
+    """Grow a classic-xref PDF past `size` bytes with an unreferenced
+    stream object inserted before its xref table: the offsets of the
+    objects before it stay valid and only startxref moves. The payload
+    is random so shuffle compression cannot shrink it."""
+    import random
+    at = pdf.rindex(b"\nxref\n") + 1
+    body = random.Random(seed).randbytes(size)
+    obj = (b"999 0 obj\n<< /Length %d >>\nstream\n" % len(body) + body
+           + b"\nendstream\nendobj\n")
+    tail = pdf[at:]
+    sx = tail.rindex(b"startxref\n") + len(b"startxref\n")
+    eol = tail.index(b"\n", sx)
+    tail = tail[:sx] + b"%d" % (at + len(obj)) + tail[eol:]
+    return pdf[:at] + obj + tail
+
+
+def test_extract_pdfs_heavy_tail(spark):
+    """The heavy-tail path: docs over skew_threshold ride an AQE-sized
+    shuffle by url into the one extraction UDF. Every url comes back
+    once with extract_doc's result, a NULL-html row is quarantined (the
+    coalesce(nbytes, 0) contract), and tail docs over AQE's 1 MB
+    minPartitionSize run in more than one task."""
+    from pyspark.sql import functions as F
+    from pdfio_spark.fixtures import FIXTURE_CLASSES, build_fixture
+    from pdfio_spark.pd.extract import extract_doc
+    threshold = 1 << 20
+    docs = {f"doc://small/{i}": build_fixture(
+        cls, [f"Doc {i}: {cls} in place"])
+        for i, cls in enumerate(FIXTURE_CLASSES[:8])}
+    for i in range(4):
+        docs[f"doc://tail/{i}"] = _pad_pdf(
+            build_fixture("flate_simple", [f"Doc {i}: heavy tail"]),
+            threshold + (1 << 18), seed=i)
+    docs["doc://tail/garbage"] = bytes(threshold + 1)
+    rows = [(u, bytearray(b)) for u, b in docs.items()]
+    rows.append(("doc://null", None))
+    df = spark.createDataFrame(rows, "url string, html binary")
+
+    got = (extract_pdfs(df, skew_threshold=threshold)
+           .withColumn("task", F.spark_partition_id()).collect())
+    assert sorted(r["url"] for r in got) == sorted([*docs, "doc://null"])
+    by_url = {r["url"]: r for r in got}
+    for url, pdf in [*docs.items(), ("doc://null", b"")]:
+        want = extract_doc(pdf)
+        r = by_url[url]
+        assert (r["text"], r["n_pages"], r["status"]) == (
+            want["text"], want["n_pages"], want["status"]), url
+    assert by_url["doc://tail/0"]["status"] == "ok"
+    assert by_url["doc://tail/0"]["text"].strip() == "Doc 0: heavy tail"
+    assert by_url["doc://null"]["status"] == "error"
+    assert by_url["doc://null"]["nbytes"] == 0
+    tail_tasks = {r["task"] for r in got if r["url"].startswith("doc://tail")}
+    small_tasks = {r["task"] for r in got
+                   if r["url"].startswith("doc://small")}
+    assert len(tail_tasks) > 1
+    assert not tail_tasks & small_tasks
+
+
+def test_worker_skips_spark_archive_rereads(spark, tmp_path):
+    """Importing pdfio_spark.pipeline on a Python worker pins the zip
+    directories of Spark's own archives across PySpark's per-task
+    importlib.invalidate_caches(); a zip shipped with addPyFile after
+    the first task still imports, and is still re-read."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    def probe(batches):
+        import pyarrow as pa
+        import pdfio_spark.pipeline  # noqa: F401  (what a UDF module does)
+        spark_zips = [f for f in sys.path_importer_cache.values()
+                      if isinstance(f, zipimport.zipimporter)
+                      and os.path.basename(f.archive) == "pyspark.zip"]
+        before = [f._files for f in spark_zips]
+        importlib.invalidate_caches()
+        kept = all(f._files is b for f, b in zip(spark_zips, before))
+        pinned = zipimport.zipimporter.invalidate_caches.spark_archives
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{
+            "n": len(spark_zips), "kept": kept,
+            "pinned": sorted(os.path.basename(p) for p in pinned)}])
+
+    out = spark.range(4, numPartitions=2).mapInArrow(
+        probe, "n long, kept boolean, pinned array<string>").collect()
+    assert all(r["n"] > 0 and r["kept"] for r in out)
+    for r in out:
+        assert len(r["pinned"]) == 3 and "pyspark.zip" in r["pinned"]
+        assert any(p.startswith("py4j-") for p in r["pinned"])
+        assert any(p.startswith("spark-core_") for p in r["pinned"])
+    # outside a Python worker the importers keep CPython's behaviour
+    assert not hasattr(zipimport.zipimporter.invalidate_caches,
+                       "spark_archives")
+
+    mod = f"pdfio_addpy_probe_{os.getpid()}"
+    zpath = tmp_path / f"{mod}.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr(f"{mod}.py", "VALUE = 'shipped after the first task'\n")
+    spark.sparkContext.addPyFile(str(zpath))
+
+    def use_shipped(batches, mod=mod):
+        import pyarrow as pa
+        import pdfio_spark.pipeline  # noqa: F401
+        value = importlib.import_module(mod).VALUE
+        own = [f for f in sys.path_importer_cache.values()
+               if isinstance(f, zipimport.zipimporter)
+               and f.archive.endswith(f"{mod}.zip")]
+        before = [f._files for f in own]
+        importlib.invalidate_caches()
+        reread = all(f._files is not b for f, b in zip(own, before))
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{
+            "value": value, "n": len(own), "reread": reread}])
+
+    out = spark.range(4, numPartitions=2).mapInArrow(
+        use_shipped, "value string, n long, reread boolean").collect()
+    assert all(r["value"] == "shipped after the first task"
+               and r["n"] > 0 and r["reread"] for r in out)
 
 
 def test_sharded_blank_pages_match_plain_path(spark):

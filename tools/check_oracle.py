@@ -10,7 +10,8 @@ import hashlib
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
@@ -65,7 +66,6 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
     from pdfio_spark.pipeline.session import get_spark
 
