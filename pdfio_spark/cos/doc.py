@@ -209,10 +209,12 @@ class CosDoc:
             gens = (arr[:, 11:16].astype(np.int64) - 0x30) @ _POW10_5
             in_use = arr[:, 17] != 0x66  # 'f'
             xref = self.xref
-            for i in np.nonzero(in_use)[0]:
-                ref = Ref(oid + int(i), int(gens[i]))
+            for i, off, gen in zip(np.nonzero(in_use)[0].tolist(),
+                                   offsets[in_use].tolist(),
+                                   gens[in_use].tolist()):
+                ref = Ref(oid + i, gen)
                 if ref not in xref:
-                    xref[ref] = _ObjectLoc(int(offsets[i]))
+                    xref[ref] = _ObjectLoc(off)
 
     def _read_xref_stream(self, stm: Stream) -> None:
         """Binary W-field records of an xref stream

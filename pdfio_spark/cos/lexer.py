@@ -14,31 +14,49 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
-
 from .objects import Comment, HexStr, LitStr, Name, Ref, f32
 
 __all__ = ["Buf", "ParseError"]
 
-# precompiled scanners for the hot paths (token runs, numbers, strings)
-_NAME_RUN = re.compile(rb"[^\x00\t\n\x0c\r ()<>{}\[\]%/]*")
-_NUM_RUN = re.compile(rb"[0-9+\-.]*")
-_UNUM_RUN = re.compile(rb"[0-9]*")
-_SPACE_RUN = re.compile(rb"[\x00\t\n\x0c\r ]*")
+# PDF character classes (reference src/bytes.jl:128-146)
+_WS = b"\x00\t\n\x0c\r "
+_SPACE = frozenset(_WS)
+_DELIM = frozenset(b"()<>{}[]%/")
+_ODIGITS = frozenset(b"01234567")
+_XDIGITS = frozenset(b"0123456789abcdefABCDEF")
+
+# Precompiled scanners. Each token scanner also takes the whitespace
+# after its token, the reference's chomp_space, in the same match.
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>{}\[\]%/]"
+_SPACE_RUN = re.compile(rb"[" + _WS + rb"]*")
+_NAME_WS = re.compile(rb"/(" + _REGULAR + rb"*)[" + _WS + rb"]*")
+_WORD_WS = re.compile(rb"(" + _REGULAR + rb"*)[" + _WS + rb"]*")
+_NUM_WS = re.compile(rb"([0-9+\-.]*)[" + _WS + rb"]*")
+_UNUM_WS = re.compile(rb"([0-9]*)[" + _WS + rb"]*")
+# a number, then `gen R` when R is followed by a delimiter, space or EOF
+# (the guard keeps `1 0 RG` three operands)
+_NUM_REF = re.compile(rb"([0-9+\-.]*)[" + _WS + rb"]*(?:([0-9]+)[" + _WS
+                      + rb"]*R(?!" + _REGULAR + rb")[" + _WS + rb"]*)?")
+_COMMENT_WS = re.compile(rb"%([^\r\n]*)[" + _WS + rb"]*")
 _LIT_SPECIAL = re.compile(rb"[\\()]")
-_HEX_RUN = re.compile(rb"[0-9a-fA-F\x00\t\n\x0c\r ]*")
+_HEX_RUN = re.compile(rb"[0-9a-fA-F" + _WS + rb"]*")
 
 
 class ParseError(Exception):
     pass
 
 
-# PDF character classes (/root/reference/src/bytes.jl:128-146)
-_SPACE = frozenset(b"\x00\t\n\x0c\r ")
-_DELIM = frozenset(b"()<>{}[]%/")
-_DIGITS = frozenset(b"0123456789")
-_ODIGITS = frozenset(b"01234567")
-_XDIGITS = frozenset(b"0123456789abcdefABCDEF")
+# parse_value's dispatch on the first byte (CosReader.jl:26-38)
+_K_WORD, _K_NUM, _K_SNUM, _K_NAME, _K_LIT, _K_ANGLE, _K_ARRAY, \
+    _K_COMMENT = range(8)
+_KIND = bytearray(256)  # all _K_WORD: operators, constants, stray bytes
+for _c in b"0123456789":
+    _KIND[_c] = _K_NUM
+for _c, _k in ((0x2D, _K_SNUM), (0x2B, _K_SNUM), (0x2E, _K_SNUM),
+               (0x2F, _K_NAME), (0x28, _K_LIT), (0x3C, _K_ANGLE),
+               (0x5B, _K_ARRAY), (0x25, _K_COMMENT)):
+    _KIND[_c] = _k
+_KIND = bytes(_KIND)
 
 # Literal-string escapes (/root/reference/src/bytes.jl:84-92)
 _ESCAPES = {
@@ -47,9 +65,25 @@ _ESCAPES = {
     ord("r"): 0x0D, ord("t"): 0x09,
 }
 
-_TRUE = b"true"
-_FALSE = b"false"
-_NULL = b"null"
+_CONSTS = {b"true": True, b"false": False, b"null": None}
+
+
+def _number(token: bytes, pos: int):
+    """A numeric token's value: '+' ignored, '.' makes a float32
+    (CosReader.jl:455-509)."""
+    if 0x2B in token:
+        token = token.replace(b"+", b"")
+    if not token:
+        raise ParseError(f"bad number at {pos}")
+    if 0x2E in token:
+        try:
+            return f32(float(token))
+        except ValueError:
+            raise ParseError(f"bad float {token!r} at {pos}")
+    try:
+        return int(token)
+    except ValueError:
+        raise ParseError(f"bad int {token!r} at {pos}")
 
 
 def _default_parse_more(token: bytes):
@@ -58,12 +92,11 @@ def _default_parse_more(token: bytes):
 
 class Buf:
     """bytes + cursor with the reference's lexing primitives."""
-    __slots__ = ("data", "pos", "_marks")
+    __slots__ = ("data", "pos")
 
     def __init__(self, data: bytes, pos: int = 0):
         self.data = data
         self.pos = pos
-        self._marks: list[int] = []
 
     # ---- primitives (BufferParser.jl:10-32) ----
     def eof(self) -> bool:
@@ -87,16 +120,11 @@ class Buf:
         self.pos += len(out)
         return out
 
-    def mark(self) -> None:
-        self._marks.append(self.pos)
-
-    def unmark(self) -> None:
-        self._marks.pop()
-
-    def reset(self) -> None:
-        self.pos = self._marks.pop()
-
     def skipv(self, expected: bytes) -> None:
+        if self.data.startswith(expected, self.pos):
+            self.pos += len(expected)
+            return
+        # mismatch: the cursor stops at the first differing byte
         for c in expected:
             if self.eof() or self.data[self.pos] != c:
                 got = "EOF" if self.eof() else chr(self.data[self.pos])
@@ -108,14 +136,8 @@ class Buf:
         data, p = self.data, self.pos
         if p >= len(data) or data[p] not in _SPACE:
             return 0
-        # 1-char runs dominate content streams: skip the regex for them
-        p1 = p + 1
-        if p1 >= len(data) or data[p1] not in _SPACE:
-            self.pos = p1
-            return 1
-        end = _SPACE_RUN.match(data, p1).end()
-        self.pos = end
-        return end - p
+        self.pos = _SPACE_RUN.match(data, p).end()
+        return self.pos - p
 
     def chomp_eol(self) -> None:
         data, ln = self.data, len(self.data)
@@ -141,44 +163,48 @@ class Buf:
 
     # ---- value parsing (CosReader.jl) ----
     def parse_value(self, parse_more=_default_parse_more):
-        """Dispatch on first byte (/root/reference/src/CosReader.jl:26-38)."""
-        self.chomp_space()
-        b = self.peek()
-        if b == 0x28:                       # (
-            return self.parse_string()
-        if b == 0x3C:                       # <
-            return self.parse_xstring()
-        if b == 0x25:                       # %
-            return self.parse_comment()
-        if b == 0x2F:                       # /
-            return self.parse_name()
-        if b in (0x2D, 0x2B, 0x2E):         # - + .
-            return self.parse_number()
-        if b in _DIGITS:
+        """Dispatch on first byte (reference src/CosReader.jl:26-38).
+        Every value parser leaves the cursor past the value's trailing
+        whitespace, except the constant/operator tokens, which keep the
+        reference's one-byte arithmetic (parse_ops_or_const)."""
+        data, p = self.data, self.pos
+        ln = len(data)
+        if p < ln and data[p] in _SPACE:
+            p = self.pos = _SPACE_RUN.match(data, p).end()
+        if p >= ln:
+            raise ParseError("unexpected EOF")
+        k = _KIND[data[p]]
+        if k == _K_NUM:
             return self.try_parse_indirect_reference()
-        if b == 0x5B:                       # [
+        if k == _K_NAME:
+            return self.parse_name()
+        if k == _K_WORD:
+            return self.parse_ops_or_const(parse_more)
+        if k == _K_LIT:
+            return self.parse_string()
+        if k == _K_ARRAY:
             return self.parse_array()
-        return self.parse_ops_or_const(parse_more)
+        if k == _K_ANGLE:
+            return self.parse_xstring()
+        if k == _K_SNUM:
+            return self.parse_number()
+        return self.parse_comment()
 
     def parse_comment(self) -> Comment:
-        self.skip(1)
-        out = bytearray()
-        while not self.eof():  # EOF-tolerant: truncated streams may end
-            c = self.advance()  # mid-comment (corrupt-flate fixtures)
-            if c in (0x0D, 0x0A):
-                break
-            out.append(c)
-        self.chomp_space()
-        return Comment(bytes(out))
+        # EOF-tolerant: truncated streams may end mid-comment
+        # (corrupt-flate fixtures)
+        m = _COMMENT_WS.match(self.data, self.pos)
+        self.pos = m.end()
+        return Comment(m.group(1))
 
     def parse_name(self) -> Name:
         data = self.data
         if self.pos >= len(data) or data[self.pos] != 0x2F:
             raise ParseError(f"expected / at {self.pos}")
-        m = _NAME_RUN.match(data, self.pos + 1)
-        token = m.group()
-        self.pos = m.end()
+        m = _NAME_WS.match(data, self.pos)
+        token = m.group(1)
         if 0x23 in token:  # '#' hex escape (CosReader.jl:61-71)
+            self.pos = m.end(1)
             out = bytearray()
             i, ln = 0, len(token)
             while i < ln:
@@ -193,30 +219,25 @@ class Buf:
                     out.append(c)
                     i += 1
             token = bytes(out)
-        self.chomp_space()
+        self.pos = m.end()
         return Name(token.decode("latin-1"))
 
     def parse_ops_or_const(self, parse_more=_default_parse_more):
         """Keyword tokenizer with the reference's exact cursor arithmetic
         (/root/reference/src/CosReader.jl:80-112): constants consume
         token+1 space; parse_more may claim fewer bytes than the token."""
-        start = self.pos
-        m = _NAME_RUN.match(self.data, self.pos)
-        token = m.group()
-        self.pos = m.end()
-        ns = self.chomp_space()
-        reset_marker = ns > 0 and not self.eof()
-        tb = bytes(token)
+        data, start = self.data, self.pos
+        m = _WORD_WS.match(data, start)
+        tb = m.group(1)
+        end = self.pos = m.end()
+        ns = end - m.end(1)
         if not tb and ns == 0:
             # corrupt input: no token, no whitespace -> would spin forever
-            raise ParseError(f"unparseable byte at {self.pos}")
+            raise ParseError(f"unparseable byte at {end}")
+        reset_marker = ns > 0 and end < len(data)
         nused = len(tb) + 1
-        if tb == _TRUE:
-            ret = True
-        elif tb == _FALSE:
-            ret = False
-        elif tb == _NULL:
-            ret = None  # PDF null
+        if tb in _CONSTS:
+            ret = _CONSTS[tb]
         else:
             nused, ret = parse_more(tb)
             if nused < len(tb):
@@ -224,21 +245,26 @@ class Buf:
             else:
                 nused += 1
         if reset_marker:
-            self.pos = min(start + nused, len(self.data))
+            self.pos = min(start + nused, len(data))
         return ret
 
     def parse_array(self) -> list:
+        data = self.data
+        ln = len(data)
         out = []
-        self.skip(1)  # [
-        self.chomp_space()
-        if self.peek() != 0x5D:
-            while True:
-                out.append(self.parse_value())
-                self.chomp_space()
-                if self.peek() == 0x5D:
-                    break
-        self.skip(1)
-        self.chomp_space()
+        p = self.pos + 1  # past [
+        while True:
+            if p < ln and data[p] in _SPACE:
+                p = _SPACE_RUN.match(data, p).end()
+            if p >= ln:
+                self.pos = p
+                raise ParseError("unexpected EOF")
+            if data[p] == 0x5D:  # ]
+                break
+            self.pos = p
+            out.append(self.parse_value())
+            p = self.pos
+        self.pos = _SPACE_RUN.match(data, p + 1).end()
         return out
 
     def _read_octal_escape(self, c: int) -> int:
@@ -277,9 +303,7 @@ class Buf:
                     out.append(self._read_octal_escape(c))
                     p = self.pos
                 elif c in (0x0D, 0x0A):
-                    self.pos = p
-                    self.chomp_space()
-                    p = self.pos
+                    p = _SPACE_RUN.match(data, p).end()
                 else:
                     e = _ESCAPES.get(c, 0)
                     if e == 0:
@@ -293,9 +317,8 @@ class Buf:
                     paren -= 1
                     out.append(c)
                 else:
-                    self.pos = p
-                    self.chomp_space()
-                    return LitStr(bytes(out))
+                    self.pos = _SPACE_RUN.match(data, p).end()
+                    return LitStr(out)
 
     def parse_xstring(self):
         data = self.data
@@ -308,96 +331,85 @@ class Buf:
         if end >= len(data) or data[end] != 0x3E:
             raise ParseError(f"unexpected char in hex string at {end}")
         chunk = data[p:end]
-        out = chunk.translate(None, b"\x00\t\n\x0c\r ")
+        out = chunk.translate(None, _WS)
         if len(out) % 2 != 0:
             # odd length: append a zero nibble per spec 7.3.4.3.
             # DIVERGENCE: the reference pushes NUL into its hex vector
             # (CosReader.jl:197) which later makes hex2bytes THROW —
             # it rejects the doc; we tolerate per spec.
             out += b"0"
-        self.pos = end + 1
-        self.chomp_space()
+        self.pos = _SPACE_RUN.match(data, end + 1).end()
         return HexStr(out)
 
     def parse_dict(self) -> dict:
-        """Cursor must be just past '<<' (CosReader.jl:206-236)."""
-        self.chomp_space()
+        """Cursor must be just past '<<' (CosReader.jl:206-236). Bytes
+        between entries other than '/' and '>' are skipped one by one."""
+        data = self.data
+        ln = len(data)
         d: dict = {}
+        p = _SPACE_RUN.match(data, self.pos).end()
         while True:
-            if self.peek() == 0x2F:
-                key = self.parse_name()
-                self.chomp_space()
+            if p >= ln:
+                self.pos = p
+                raise ParseError("unexpected EOF")
+            c = data[p]
+            if c == 0x2F:
+                m = _NAME_WS.match(data, p)
+                if 0x23 in m.group(1):
+                    self.pos = p
+                    key = self.parse_name()
+                else:
+                    key = Name(m.group(1).decode("latin-1"))
+                    self.pos = m.end()
                 val = self.parse_value()
                 if val is not None:  # null values deleted (CosReader.jl:219)
                     d[key] = val
-            self.chomp_space()
-            c = self.peek()
-            if c == 0x2F:
+                p = self.pos
+                if p < ln and data[p] in _SPACE:
+                    p = _SPACE_RUN.match(data, p).end()
                 continue
-            self.skip(1)
+            p += 1
             if c == 0x3E:
+                self.pos = p
                 self.skipv(b">")
-                break
-        self.chomp_space()
-        return d
+                self.pos = _SPACE_RUN.match(data, self.pos).end()
+                return d
 
     # ---- numbers (CosReader.jl:455-509) ----
     def parse_unsignednumber(self) -> int:
-        m = _UNUM_RUN.match(self.data, self.pos)
-        token = m.group()
+        m = _UNUM_WS.match(self.data, self.pos)
+        token = m.group(1)
         if not token:
             raise ParseError(f"bad number at {self.pos}")
         self.pos = m.end()
-        self.chomp_space()
         return int(token)
 
     def parse_number(self):
-        m = _NUM_RUN.match(self.data, self.pos)
-        token = m.group()
+        m = _NUM_WS.match(self.data, self.pos)
         self.pos = m.end()
-        self.chomp_space()
-        if 0x2B in token:
-            token = token.replace(b"+", b"")  # '+' ignored (ref)
-        if not token:
-            raise ParseError(f"bad number at {self.pos}")
-        if 0x2E in token:  # '.' -> float32
-            try:
-                return f32(float(token))
-            except ValueError:
-                raise ParseError(f"bad float {token!r} at {self.pos}")
-        try:
-            return int(token)
-        except ValueError:
-            raise ParseError(f"bad int {token!r} at {self.pos}")
+        return _number(m.group(1), self.pos)
 
     # ---- indirect refs (CosReader.jl:370-419) ----
     def try_parse_indirect_reference(self):
-        nobj = self.parse_number()
-        if isinstance(nobj, np.floating):
-            return nobj
-        self.chomp_space()
-        save = self.pos
-        if not self.eof() and self.peek() in _DIGITS:
-            genn = self.parse_unsignednumber()
-            self.chomp_space()
-            if not self.eof() and self.peek() == 0x52:  # 'R'
-                self.skip(1)
-                # must be followed by delimiter/space (guards RG op)
-                if self.eof() or self.peek() in _DELIM or self.peek() in _SPACE:
-                    self.chomp_space()
-                    return Ref(nobj, genn)
-            self.pos = save
-            self.chomp_space()
-            return nobj
-        self.chomp_space()
+        """`n g R` is a reference only when R is followed by a
+        delimiter, space or EOF; otherwise the cursor stays just past
+        the first number and its whitespace."""
+        m = _NUM_REF.match(self.data, self.pos)
+        gen = m.group(2)
+        if gen is None:
+            self.pos = m.end()
+            return _number(m.group(1), self.pos)
+        self.pos = m.start(2)
+        nobj = _number(m.group(1), self.pos)
+        if isinstance(nobj, int):
+            self.pos = m.end()
+            return Ref(nobj, int(gen))
         return nobj
 
     def parse_indirect_ref(self) -> Ref:
         self.chomp_space()
         objn = self.parse_unsignednumber()
-        self.chomp_space()
         genn = self.parse_unsignednumber()
-        self.chomp_space()
         self.skipv(b"R")
         if not (self.eof() or self.peek() in _DELIM or self.peek() in _SPACE):
             raise ParseError(f"invalid delimiter after R at {self.pos}")

@@ -11,14 +11,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..cos.lexer import Buf, ParseError
+from ..cos.lexer import _SPACE, _SPACE_RUN, Buf, ParseError
 from ..cos.objects import Comment, HexStr, LitStr, Name, f32
 from .fonts import get_text_box
 
 __all__ = ["load_objects", "eval_content", "GState", "TextLayout",
            "new_state"]
-
-_SPACE = frozenset(b"\x00\t\n\x0c\r ")
 
 # op -> (kind, noperand); kind: e=element, t=textrun, g=begin-group,
 # E=end-group, i=inline-image. Group payload: text|marked.
@@ -47,8 +45,16 @@ for _name, _nop in [
     _OPS[_name.encode()] = ("e", _nop, None)
 
 
+# whole-token hits of the longest match below, one lookup each
+_OP_TOKENS = {k: (len(k), (v[0], k.decode(), v[1], v[2]))
+              for k, v in _OPS.items()}
+
+
 def _get_content_op(token: bytes):
     """Longest-match over the first <=3 bytes (PDPageElement.jl:485-497)."""
+    hit = _OP_TOKENS.get(token)
+    if hit is not None:
+        return hit
     s = min(len(token), 3)
     while s > 0:
         hit = _OPS.get(token[:s])
@@ -111,14 +117,15 @@ _NODE_TYPES = (Element, TextRun, TextObject, MarkedContent, InlineImage)
 def _populate_element(group: Group, elem: Element) -> None:
     """Pop fixed arity, or pop-while-operand for arity -1 (sc/scn)
     (PDPageElement.jl:110-123)."""
+    objs = group.objs
     if elem.noperand >= 0:
-        for _ in range(elem.noperand):
-            if not group.objs:
-                break
-            elem.operands.insert(0, group.objs.pop())
+        k = max(len(objs) - elem.noperand, 0)
     else:
-        while group.objs and not isinstance(group.objs[-1], _NODE_TYPES):
-            elem.operands.insert(0, group.objs.pop())
+        k = len(objs)
+        while k and not isinstance(objs[k - 1], _NODE_TYPES):
+            k -= 1
+    elem.operands = objs[k:]
+    del objs[k:]
 
 
 def _collect_inline_image(img: InlineImage, buf: Buf) -> None:
@@ -134,64 +141,60 @@ def _collect_inline_image(img: InlineImage, buf: Buf) -> None:
             break
         if value is None and buf.eof():
             return
-    data = bytearray()
-    ln = len(buf.data)
-    while buf.pos < ln:
-        b1 = buf.data[buf.pos]
-        if b1 == 0x45:  # 'E'
-            if buf.pos + 1 < ln and buf.data[buf.pos + 1] == 0x49:  # 'I'
-                if buf.pos + 2 >= ln or buf.data[buf.pos + 2] in _SPACE:
-                    buf.pos += 3 if buf.pos + 2 < ln else 2
-                    img.data = bytes(data)
-                    return
-        data.append(b1)
-        buf.pos += 1
-    img.data = bytes(data)
+    data, start = buf.data, buf.pos
+    i = data.find(b"EI", start)
+    while i >= 0 and i + 2 < len(data) and data[i + 2] not in _SPACE:
+        i = data.find(b"EI", i + 1)
+    if i < 0:
+        img.data = data[start:]
+        buf.pos = len(data)
+    else:
+        img.data = data[start:i]
+        buf.pos = min(i + 3, len(data))
 
 
 def load_objects(group: Group, buf: Buf) -> Group:
     """Token loop building the group tree (PDPageElement.jl:97-130)."""
-    while not group.is_eog and not buf.eof():
-        buf.chomp_space()
-        if buf.eof():
+    data = buf.data
+    ln = len(data)
+    objs = group.objs
+    while not group.is_eog:
+        p = buf.pos
+        if p < ln and data[p] in _SPACE:
+            p = buf.pos = _SPACE_RUN.match(data, p).end()
+        if p >= ln:
             break
         obj = buf.parse_value(_get_content_op)
-        if isinstance(obj, Comment):
-            continue
-        if not isinstance(obj, tuple):
-            group.objs.append(obj)
+        if not isinstance(obj, tuple):  # a Ref is a tuple: it fails below
+            if not isinstance(obj, Comment):
+                objs.append(obj)
             continue
         kind, op, nop, gtype = obj
+        if kind == "i":
+            img = InlineImage()
+            _collect_inline_image(img, buf)
+            objs.append(img)
+            continue
+        elem = Element(op, nop)
+        _populate_element(group, elem)
         if kind == "e":
-            elem = Element(op, nop)
-            _populate_element(group, elem)
-            group.objs.append(elem)
+            objs.append(elem)
         elif kind == "t":
-            elem = Element(op, nop)
-            _populate_element(group, elem)
             tr = TextRun(elem)
             for operand in elem.operands:
                 if isinstance(operand, (LitStr, HexStr)):
                     tr.ss.append(operand)
                 elif isinstance(operand, list):
                     tr.ss.extend(operand)
-            group.objs.append(tr)
+            objs.append(tr)
         elif kind == "g":
-            elem = Element(op, nop)
-            _populate_element(group, elem)
             newobj = TextObject() if gtype == "text" else MarkedContent()
             newobj.group.objs.append(elem)
             load_objects(newobj.group, buf)
-            group.objs.append(newobj)
-        elif kind == "E":
-            elem = Element(op, nop)
-            _populate_element(group, elem)
-            group.objs.append(elem)
+            objs.append(newobj)
+        else:  # "E"
+            objs.append(elem)
             group.is_eog = True
-        elif kind == "i":
-            img = InlineImage()
-            _collect_inline_image(img, buf)
-            group.objs.append(img)
     return group
 
 
@@ -213,8 +216,10 @@ class TextLayout:
         self.fontflags = fontflags
 
 
-def _ident3() -> np.ndarray:
-    return np.identity(3, dtype=np.float32)
+# State matrices are never written in place (every operator builds a new
+# one), so one read-only identity serves every reset.
+_IDENT3 = np.identity(3, dtype=np.float32)
+_IDENT3.flags.writeable = False
 
 
 class GState:
@@ -225,7 +230,7 @@ class GState:
         d = {
             "text_layout": [],
             "h_profile": {},
-            "CTM": _ident3(),
+            "CTM": _IDENT3,
             "Tc": f32(0.0), "Tw": f32(0.0), "Tz": f32(100.0),
             "TL": f32(0.0), "Tr": 0, "Ts": f32(0.0),
         }
@@ -272,16 +277,16 @@ def _set_text_pos(tx, ty, state: GState) -> None:
     """(PDPageElement.jl:788-798)."""
     tlm = state.get("Tlm")
     if tlm is None:
-        tlm = _ident3()
+        tlm = _IDENT3
     tlm = _translate(tlm, tx, ty)
-    state["Tm"] = tlm.copy()
+    state["Tm"] = tlm
     state["Tlm"] = tlm
 
 
 def _offset_text_pos(tx, ty, state: GState) -> None:
     tm = state.get("Tm")
     if tm is None:
-        tm = _ident3()
+        tm = _IDENT3
     state["Tm"] = _translate(tm, tx, ty)
 
 
@@ -290,36 +295,46 @@ def _offset_text_leading(state: GState) -> None:
     _set_text_pos(f32(0.0), -tl, state)
 
 
+_F0 = f32(0.0)
+_F100 = f32(100.0)
+_NO_FONT = (Name(""), None)
+_BOX = np.array([[0.0, 0.0, 1.0], [0.0, 0.0, 1.0],
+                 [0.0, 0.0, 1.0], [0.0, 0.0, 1.0]], dtype=np.float32)
+
+
 def _eval_text_run(tr: TextRun, state: GState, ctx) -> None:
     """(PDPageElement.jl:682-711) — the byte-identical-critical kernel."""
-    _eval_element(tr.elem, state, ctx)
-    tfs = state.get("fontsize", f32(0.0))
-    th = state["Tz"] / f32(100.0)
-    tc = state["Tc"]
-    tw = state["Tw"]
-    tm = state.get("Tm")
+    if tr.elem.op in ("'", '"'):  # Tj and TJ change no state first
+        _eval_element(tr.elem, state, ctx)
+    st = state.stack[-1]
+    tfs = st.get("fontsize", _F0)
+    th = st["Tz"] / _F100
+    tm = st.get("Tm")
     if tm is None:
-        tm = _ident3()
-    ctm = state["CTM"]
-    trm = tm @ ctm
+        tm = _IDENT3
+    trm = tm @ st["CTM"]
 
-    fontname, font = state.get("font", (Name(""), None))
-    heap = state["text_layout"]
-    text, w, h = get_text_box(tr.ss, font, tfs, tc, tw, th)
+    fontname, font = st.get("font", _NO_FONT)
+    text, w, h = get_text_box(tr.ss, font, tfs, st["Tc"], st["Tw"], th)
 
-    d = state["h_profile"]
-    ih = int(np.rint(h * 10))
+    d = st["h_profile"]
+    # the reference's rint(h * 10): a float32 h times 10 is a float64
+    # product, and round() rounds half to even like np.rint
+    ih = round(float(h) * 10)
     d[ih] = d.get(ih, 0) + len(text)
 
-    tb = np.array([[0.0, 0.0, 1.0], [w, 0.0, 1.0],
-                   [w, h, 1.0], [0.0, h, 1.0]], dtype=np.float32) @ trm
-    if not state.get("in_artifact", False):
+    # the box corners [[0 0 1] [w 0 1] [w h 1] [0 h 1]] @ trm
+    box = _BOX.copy()
+    box[1, 0] = box[2, 0] = w
+    box[2, 1] = box[3, 1] = h
+    tb = box @ trm
+    if not st.get("in_artifact", False):
         # span fontname is the Tf resource name (PDPageElement.jl:704-706)
-        heap.append(TextLayout(
+        st["text_layout"].append(TextLayout(
             tb[0, 0], tb[0, 1], tb[1, 0], tb[1, 1],
             tb[2, 0], tb[2, 1], tb[3, 0], tb[3, 1],
             text, fontname, font.flags if font is not None else 0))
-    _offset_text_pos(w, f32(0.0), state)
+    _offset_text_pos(w, _F0, state)
 
 
 def _eval_element(elem: Element, state: GState, ctx) -> None:
@@ -335,7 +350,7 @@ def _eval_element(elem: Element, state: GState, ctx) -> None:
     elif op == "Tm":
         tm = _mat(*(f32(x) for x in ops[:6]))
         state["Tm"] = tm
-        state["Tlm"] = tm.copy()
+        state["Tlm"] = tm
     elif op == "Tf":
         if len(ops) >= 2:
             fontname = ops[0]
@@ -379,14 +394,11 @@ def eval_content(group: Group, state: GState, ctx=None) -> GState:
         elif isinstance(obj, TextRun):
             _eval_text_run(obj, state, ctx)
         elif isinstance(obj, TextObject):
-            ident = _ident3()
-            state["Tm"] = ident
-            state["Tlm"] = ident.copy()
-            state["Trm"] = ident.copy()
+            state["Tm"] = _IDENT3
+            state["Tlm"] = _IDENT3
             eval_content(obj.group, state, ctx)
             state.delete("Tm")
             state.delete("Tlm")
-            state.delete("Trm")
         elif isinstance(obj, MarkedContent):
             first = obj.group.objs[0] if obj.group.objs else None
             tag = (first.operands[0] if isinstance(first, Element)

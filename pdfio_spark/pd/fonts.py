@@ -20,7 +20,9 @@ Mirrors the decode-to-unicode plane of the reference
 from __future__ import annotations
 
 import json
+import math
 import re
+import struct
 
 import numpy as np
 
@@ -73,7 +75,7 @@ ZAP_TO_UNICODE = _enc_to_unicode("ZAP", AGL_ZAP)
 class AdobeFontMetrics:
     __slots__ = ("cid_to_name", "name_to_wx", "kern_pairs", "has_kerning",
                  "italic_angle", "is_fixed_pitch", "weight", "fontname",
-                 "_wx256", "_kern256")
+                 "_wx256", "_kern256", "run")
 
     def __init__(self, raw: dict):
         self.cid_to_name = {int(k): v for k, v in raw["cid_to_name"].items()}
@@ -87,6 +89,7 @@ class AdobeFontMetrics:
         self.fontname = raw["fontname"]
         self._wx256 = None
         self._kern256 = None
+        self.run: RunWidths | None = None
 
     def flags(self) -> int:
         res = 0
@@ -534,12 +537,13 @@ def get_glyph_id_mapping(doc, font) -> tuple[dict, dict]:
 
 class CIDWidth:
     """Type0 /W interval widths + /DW default (PDFonts.jl:489-496)."""
-    __slots__ = ("imap", "dw", "cache")
+    __slots__ = ("imap", "dw", "cache", "run")
 
     def __init__(self, imap=None, dw=f32(1000.0)):
         self.imap = imap if imap is not None else _IntervalList()
         self.dw = f32(dw)
         self.cache: dict = {}
+        self.run: RunWidths | None = None
 
 
 def get_font_widths(doc, font):
@@ -644,7 +648,8 @@ class PDFont:
     """Bundle: unicode mapping + widths + glyph<->cid + flags + name
     (PDFonts.jl:498-519). Cached per document."""
     __slots__ = ("obj", "widths", "fum", "glyph_name_to_cid",
-                 "cid_to_glyph_name", "flags", "fontname", "_strtable")
+                 "cid_to_glyph_name", "flags", "fontname", "_strtable",
+                 "_run")
 
     def __init__(self, doc, cosfont: dict):
         self.obj = cosfont
@@ -655,6 +660,12 @@ class PDFont:
         self.flags = _font_flags(doc, cosfont, self.widths)
         self.fontname = _font_name(doc, cosfont, self.widths)
         self._strtable = None
+        self._run: RunWidths | None = None
+
+    def run_widths(self) -> "RunWidths":
+        if self._run is None:
+            self._run = run_widths(self.widths)
+        return self._run
 
     def strtable(self) -> list[str] | None:
         """byte -> decoded-string table for simple-font fums (one dict
@@ -749,16 +760,15 @@ def space_code(widths) -> int:
     return SPACE_GID_STD
 
 
-def init_code(widths) -> int:
-    return 0
-
-
 # ------------------------------------------------ text decode+width
 
 def get_encoded_string(s, pdfont) -> str:
     """bytes -> text via the font's unicode mapping; unmapped -> U+0000
     (NativeEncodingToUnicode, Utils.jl:82-88)."""
-    barr = s.binary if isinstance(s, HexStr) else bytes(s)
+    return _decode(s, s.binary if isinstance(s, HexStr) else bytes(s), pdfont)
+
+
+def _decode(s, barr: bytes, pdfont) -> str:
     if pdfont is None or pdfont.fum is None:
         # decoded as ASCII (reference warns + CDTextString fallback)
         return pdf_doc_decode(s)
@@ -767,7 +777,9 @@ def get_encoded_string(s, pdfont) -> str:
         return "".join(map(chr, cmap_decode(barr, fum)))
     table = pdfont.strtable() if hasattr(pdfont, "strtable") else None
     if table is not None:
-        return "".join(table[b] for b in barr)
+        # latin-1 maps each byte to the code point of its value, which
+        # str.translate looks up in the 256-entry table
+        return barr.decode("latin-1").translate(table)
     cps = []
     for b in barr:
         v = fum.get(b)
@@ -810,84 +822,167 @@ def pdf_doc_decode(s) -> str:
     return "".join(chr(PDFDOC_TO_UNICODE.get(b, 0)) for b in raw)
 
 
-def _iter_codes(barr: bytes, widths):
-    """get_char iteration: 2-byte codes for CID fonts (PDFonts.jl:626-646)."""
-    if isinstance(widths, CIDWidth):
-        for i in range(0, len(barr) - 1, 2):
-            yield barr[i] * 256 + barr[i + 1]
-    else:
-        yield from barr
+_THOUSAND = f32(1000.0)
+_ZERO = f32(0.0)
+# contribution vectors (or CID terms) a RunWidths keeps before it starts
+# over; the table can sit on a process-wide font
+_RUN_CACHE_CAP = 64
+_CID_CACHE_CAP = 4096
+
+
+class RunWidths:
+    """A font's glyph-run width terms for get_string_width.
+
+    Every character but a string's first adds
+    c = wx*tfs/1000 + (tw if space else tc) (+ kern), since the TJ
+    offset tj applies to the first only. c depends on the code and on
+    (tfs, tc, tw) alone, so it is computed once per triple as a float32
+    vector over codes 0..255 (per code for CID fonts) with the same f32
+    operations, in the same order, as the per-string formula. The cache
+    keys hold the float32 bits, so -0.0 and 0.0 stay apart."""
+    __slots__ = ("cid", "wx", "kern", "zero_kern", "sc", "_terms")
+
+    def __init__(self, widths):
+        self.sc = space_code(widths)
+        self.cid = widths if isinstance(widths, CIDWidth) else None
+        self.wx = self.kern = None
+        # an AFM font without kerning still adds its all-zero kern row,
+        # which turns a -0.0 term into 0.0
+        self.zero_kern = False
+        if isinstance(widths, AdobeFontMetrics):
+            self.wx = widths.wx256()
+            if widths.has_kerning:
+                self.kern = widths.kern256()
+            else:
+                self.zero_kern = True
+        elif self.cid is None:
+            base = np.asarray(widths, dtype=np.float32)
+            self.wx = np.where(base == 0, np.float32(1000.0), base)
+        self._terms: dict = {}
+
+    def _first_term(self, code, w, tfs, tj, tc, tw):
+        return (w - tj) * tfs / _THOUSAND + (tw if code == self.sc else tc)
+
+    def width(self, barr: bytes, pc: int, tfs, tj, tc, tw) -> np.float32:
+        """get_string_width over float32 tfs, tj, tc, tw."""
+        if self.cid is not None:
+            return self._cid_width(barr, tfs, tj, tc, tw)
+        key = struct.pack("fff", tfs, tc, tw)
+        c = self._terms.get(key)
+        if c is None:
+            c = self.wx * tfs / _THOUSAND + np.where(
+                np.arange(len(self.wx)) == self.sc, tw, tc)
+            if self.zero_kern:
+                c = c + _ZERO
+            if len(self._terms) >= _RUN_CACHE_CAP:
+                self._terms.clear()
+            self._terms[key] = c
+        codes = np.frombuffer(barr, dtype=np.uint8)
+        w = c[codes]
+        if self.kern is not None:
+            prev = np.empty_like(codes)
+            prev[0] = pc & 0xFF if 0 <= pc < 256 else 0
+            prev[1:] = codes[:-1]
+            kw = self.kern[prev, codes]
+            w = w + kw
+        if tj or math.copysign(1.0, tj) < 0:
+            c0 = codes[0]
+            w0 = self._first_term(c0, self.wx[c0], tfs, tj, tc, tw)
+            if self.kern is not None:
+                w0 = w0 + kw[0]
+            elif self.zero_kern:
+                w0 = w0 + _ZERO
+            w[0] = w0
+        return np.add.accumulate(w)[-1]
+
+    def _cid_width(self, barr: bytes, tfs, tj, tc, tw) -> np.float32:
+        """2-byte codes (PDFonts.jl:626-646); summed from 0.0 in order."""
+        codes = [barr[i] * 256 + barr[i + 1]
+                 for i in range(0, len(barr) - 1, 2)]
+        if not codes:
+            return _ZERO
+        key = struct.pack("fff", tfs, tc, tw)
+        terms = self._terms
+        w = []
+        for code in codes:
+            t = terms.get((key, code))
+            if t is None:
+                t = get_character_width(code, self.cid) * tfs / _THOUSAND \
+                    + (tw if code == self.sc else tc)
+                if len(terms) >= _CID_CACHE_CAP:
+                    terms.clear()
+                terms[(key, code)] = t
+            w.append(t)
+        w = np.array(w, dtype=np.float32)
+        if tj or math.copysign(1.0, tj) < 0:
+            w[0] = self._first_term(
+                codes[0], get_character_width(codes[0], self.cid),
+                tfs, tj, tc, tw)
+        # 0.0 + (w0 + w1 + ...) is the sum from 0.0: they differ only
+        # when every term is -0.0, and then 0.0 + -0.0 is 0.0
+        return _ZERO + np.add.accumulate(w)[-1]
+
+
+def run_widths(widths) -> RunWidths:
+    """The RunWidths of `widths`, kept on AFM metrics and CID widths (so
+    fonts sharing them share it); a bare /Widths vector gets a fresh
+    one, which its PDFont keeps."""
+    if isinstance(widths, (AdobeFontMetrics, CIDWidth)):
+        if widths.run is None:
+            widths.run = RunWidths(widths)
+        return widths.run
+    return RunWidths(widths)
+
+
+_NO_FONT_RUN = RunWidths(np.zeros(256, dtype=np.float32))
 
 
 def get_string_width(barr: bytes, widths, pc: int, tfs, tj, tc, tw) -> np.float32:
     """Float32 width accumulation (PDFonts.jl:648-663):
     w = (w - tj)*tfs/1000 + (space ? tw : tc); w += kern; tj first char
-    only. Vectorized over the string; np.add.accumulate keeps the
-    scalar loop's SEQUENTIAL f32 summation order (ufunc.accumulate is
-    defined sequentially, unlike pairwise np.sum)."""
+    only, summed sequentially in f32 (np.add.accumulate, not the
+    pairwise np.sum)."""
     if len(barr) == 0:
         return f32(0.0)
-    sc = space_code(widths)
-    thousand = f32(1000.0)
-    if isinstance(widths, CIDWidth):
-        totalw = f32(0.0)
-        tj = f32(tj)
-        for c in _iter_codes(barr, widths):
-            w = get_character_width(c, widths)
-            w = (w - tj) * tfs / thousand + (tw if c == sc else tc)
-            pc = c
-            tj = f32(0.0)
-            totalw = totalw + w
-        return totalw
-    codes = np.frombuffer(barr, dtype=np.uint8)
-    if isinstance(widths, AdobeFontMetrics):
-        wx = widths.wx256()[codes]
-        kern = widths.kern256()
-        prev = np.empty_like(codes)
-        prev[0] = pc & 0xFF if 0 <= pc < 256 else 0
-        prev[1:] = codes[:-1]
-        kw = kern[prev, codes]
-    else:
-        base = np.asarray(widths, dtype=np.float32)
-        eff = np.where(base == 0, np.float32(1000.0), base)
-        wx = eff[codes]
-        kw = None
-    tjv = np.zeros(len(codes), dtype=np.float32)
-    tjv[0] = f32(tj)
-    w = (wx - tjv) * f32(tfs) / thousand + np.where(
-        codes == sc, f32(tw), f32(tc)).astype(np.float32)
-    if kw is not None:
-        w = w + kw
-    return np.add.accumulate(w)[-1]
+    return run_widths(widths).width(barr, pc, f32(tfs), f32(tj), f32(tc),
+                                    f32(tw))
+
+
+def _as_f32(x) -> np.float32:
+    return x if type(x) is np.float32 else f32(x)
 
 
 def get_text_box(ss: list, pdfont, tfs, tc, tw, th):
     """get_TextBox (PDFonts.jl:665-691): decode strings, apply TJ kern
     (inject space when kern < -180), accumulate width. Returns
     (text, w*th, tfs)."""
-    totalw = f32(0.0)
-    tj = f32(0.0)
+    totalw = tj = _ZERO
     parts: list[str] = []
     nchars = 0
     last_char = ""
-    widths = pdfont.widths if pdfont is not None else np.zeros(256, np.float32)
+    if pdfont is None:
+        rw = _NO_FONT_RUN
+    elif isinstance(pdfont, PDFont):
+        rw = pdfont.run_widths()
+    else:
+        rw = run_widths(pdfont.widths)
+    tfs32, tc32, tw32 = _as_f32(tfs), _as_f32(tc), _as_f32(tw)
     for s in ss:
         if isinstance(s, (HexStr, LitStr)):
-            prev_char = init_code(widths)
-            t = get_encoded_string(s, pdfont)
-            if (-tj) > 180 and len(t) > 0 and t[0] != " " and \
-                    nchars > 0 and last_char != " ":
-                parts.append(" ")
-                nchars += 1
-                last_char = " "
+            barr = s.binary if isinstance(s, HexStr) else bytes(s)
+            t = _decode(s, barr, pdfont)
             if t:
+                if tj < -180 and t[0] != " " and nchars > 0 and \
+                        last_char != " ":
+                    parts.append(" ")
+                    nchars += 1
                 parts.append(t)
                 nchars += len(t)
                 last_char = t[-1]
-            barr = s.binary if isinstance(s, HexStr) else bytes(s)
-            totalw = totalw + get_string_width(
-                barr, widths, prev_char, tfs, tj, tc, tw)
-            tj = f32(0.0)
+            if barr:
+                # init_code: every string starts from code 0
+                totalw = totalw + rw.width(barr, 0, tfs32, tj, tc32, tw32)
+            tj = _ZERO
         elif isinstance(s, (int, float, np.floating, np.integer)) and \
                 not isinstance(s, bool):
             tj = f32(s)

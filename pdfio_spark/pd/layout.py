@@ -92,8 +92,11 @@ def show_text_layout(state) -> str:
             ht = h
         xw = xwr * ht
         nc = len(tl.text)
-        with np.errstate(divide="ignore", invalid="ignore"):
+        if nc:
             w = span_width(tl) / f32(nc)
+        else:  # an empty span divides by zero: inf, or nan for 0/0
+            with np.errstate(divide="ignore", invalid="ignore"):
+                w = span_width(tl) / f32(nc)
         if not (w > pt1 and h > pt1):
             continue
         if ht > h:

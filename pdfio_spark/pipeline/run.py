@@ -290,14 +290,19 @@ def run_job(spark, input_path: str, output_path: str,
 
     prev = None
     if resume:
+        # a declared schema, not inference: mergeSchema read every
+        # part-file footer in a Spark job on each resume, O(output
+        # files). A dir mixing pre-run_id part-files with stamped ones
+        # still surfaces run_id (NULL for the old rows) whichever
+        # footer Spark samples (r5 review: a hidden column made EVERY
+        # run an "orphan" and double-counted lineage). The input read
+        # above keeps its inference: declared, a missing column would
+        # read as silent NULLs.
+        fields = "url string, run_id string"
+        if stage.corpus_global:
+            fields += ", status string"  # the displacement audit
         try:
-            # mergeSchema: a dir mixing pre-run_id part-files with
-            # stamped ones must surface the run_id column regardless
-            # of which footer Spark samples (r5 review: a hidden
-            # column made EVERY run an "orphan" and double-counted
-            # lineage)
-            prev = (spark.read.option("mergeSchema", True)
-                    .parquet(output_path))
+            prev = spark.read.schema(fields).parquet(output_path)
         except AnalysisException:
             pass  # no prior output -> fresh run
     # the try covers ONLY the output read (ADVICE r5: the old block
@@ -311,8 +316,9 @@ def run_job(spark, input_path: str, output_path: str,
             # forced broadcast OOMs exactly on the crash-recovery path
             # it exists for (r4 review fix)
             corpus = resume_filter(corpus, prev.select("url"))
-        if metrics_path and "run_id" in prev.columns:
-            _reconcile_metrics(spark, prev, metrics_path, stage.metrics)
+        if metrics_path:
+            _reconcile_metrics(spark, prev, output_path, metrics_path,
+                               stage.metrics)
 
     t0 = time.perf_counter()
     extracted = stage.op(corpus, *args, **kw)
@@ -334,24 +340,23 @@ def run_job(spark, input_path: str, output_path: str,
         # displacement audit and the anti-join (the decision plan
         # would otherwise evaluate twice)
         extracted = extracted.localCheckpoint()
-        if "status" in prev.columns:
-            n_displaced = (
-                extracted.select("url", "status")
-                .join(prev.select("url", F.col("status")
-                                  .alias("_prev_status")), "url")
-                .filter(F.col("status") != F.col("_prev_status"))
-                .count())
-            if n_displaced:
-                import warnings
-                warnings.warn(
-                    f"corpus-global resume: {n_displaced} previously"
-                    "-written decision(s) diverge from the set "
-                    "re-derived over the current input — the input "
-                    "grew since the interrupted run. Written rows "
-                    "are immutable, so mode invariants (dedup "
-                    "uniqueness / domain caps) may now be violated; "
-                    "corpus-global resume is crash recovery over an "
-                    "unchanged snapshot, not incremental ingest.")
+        n_displaced = (
+            extracted.select("url", "status")
+            .join(prev.select("url", F.col("status")
+                              .alias("_prev_status")), "url")
+            .filter(F.col("status") != F.col("_prev_status"))
+            .count())
+        if n_displaced:
+            import warnings
+            warnings.warn(
+                f"corpus-global resume: {n_displaced} previously"
+                "-written decision(s) diverge from the set "
+                "re-derived over the current input — the input "
+                "grew since the interrupted run. Written rows "
+                "are immutable, so mode invariants (dedup "
+                "uniqueness / domain caps) may now be violated; "
+                "corpus-global resume is crash recovery over an "
+                "unchanged snapshot, not incremental ingest.")
         extracted = resume_filter(extracted, prev.select("url"))
     # localCheckpoint (not cache): the resume anti-join scans
     # output_path lazily, so ANY recomputation after the append —
@@ -379,33 +384,35 @@ def run_job(spark, input_path: str, output_path: str,
             "run_id": rid, "wall_sec": round(wall, 2)}
 
 
-def _reconcile_metrics(spark, prev_output, metrics_path: str,
-                       metrics_fn) -> None:
+def _reconcile_metrics(spark, prev_output, output_path: str,
+                       metrics_path: str, metrics_fn) -> None:
     """Append recomputed metrics rows for run_ids whose output
     committed but whose metrics append never ran (crash in between).
     Exact, not estimated: output rows carry every column the metrics
-    aggregate reads."""
+    aggregate reads. `prev_output` holds only (url, run_id, ...); the
+    orphan check is one query over the two run_id sets, and the full
+    output is read only when an orphan exists."""
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
+    runs = prev_output.select("run_id", F.lit(False).alias("in_metrics"))
     try:
-        met = (spark.read.option("mergeSchema", True)
-               .parquet(metrics_path))
-        covered = (met.select("run_id").distinct()
-                   if "run_id" in met.columns
-                   else met.sparkSession.createDataFrame(
-                       [], "run_id string"))
+        met = spark.read.schema("run_id string").parquet(metrics_path)
+        runs = runs.unionByName(
+            met.select("run_id", F.lit(True).alias("in_metrics")))
     except AnalysisException:
-        covered = spark.createDataFrame([], "run_id string")
-    orphans = (prev_output.filter(F.col("run_id").isNotNull())
-               .select("run_id").distinct()
-               .join(covered, "run_id", "left_anti"))
-    # orphan set = number of crashed runs — tiny; broadcast is safe
-    rows = prev_output.join(F.broadcast(orphans), "run_id")
-    per_run = rows.select("run_id").distinct().collect()
-    for r in per_run:
-        one = rows.filter(F.col("run_id") == r["run_id"]).drop("run_id")
+        pass  # no metrics yet: every stamped run is an orphan
+    orphans = [r["run_id"] for r in
+               runs.filter(F.col("run_id").isNotNull())
+               .groupBy("run_id").agg(F.max("in_metrics").alias("m"))
+               .filter(~F.col("m")).select("run_id").collect()]
+    if not orphans:
+        return
+    # the aggregate needs the output's other columns: infer them now
+    full = spark.read.option("mergeSchema", True).parquet(output_path)
+    for rid in orphans:
+        one = full.filter(F.col("run_id") == rid).drop("run_id")
         metrics_fn(one) \
-            .withColumn("run_id", F.lit(r["run_id"])) \
+            .withColumn("run_id", F.lit(rid)) \
             .withColumn("reconciled", F.lit(True)) \
             .withColumn("ts", F.current_timestamp()) \
             .write.mode("append").parquet(metrics_path)

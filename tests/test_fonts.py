@@ -146,6 +146,127 @@ class TestWidths:
         assert text2 == "abcd"
 
 
+def _width_oracle(barr, widths, pc, tfs, tj, tc, tw):
+    """get_string_width as the per-string formula computes it: every
+    term in f32 afresh, summed in order (np.add.accumulate)."""
+    if len(barr) == 0:
+        return f32(0.0)
+    sc = fonts.space_code(widths)
+    thousand = f32(1000.0)
+    if isinstance(widths, fonts.CIDWidth):
+        totalw = f32(0.0)
+        tj = f32(tj)
+        for i in range(0, len(barr) - 1, 2):
+            c = barr[i] * 256 + barr[i + 1]
+            w = fonts.get_character_width(c, widths)
+            w = (w - tj) * tfs / thousand + (tw if c == sc else tc)
+            tj = f32(0.0)
+            totalw = totalw + w
+        return totalw
+    codes = np.frombuffer(barr, dtype=np.uint8)
+    if isinstance(widths, fonts.AdobeFontMetrics):
+        wx = widths.wx256()[codes]
+        prev = np.empty_like(codes)
+        prev[0] = pc & 0xFF if 0 <= pc < 256 else 0
+        prev[1:] = codes[:-1]
+        kw = widths.kern256()[prev, codes]
+    else:
+        base = np.asarray(widths, dtype=np.float32)
+        wx = np.where(base == 0, np.float32(1000.0), base)[codes]
+        kw = None
+    tjv = np.zeros(len(codes), dtype=np.float32)
+    tjv[0] = f32(tj)
+    w = (wx - tjv) * f32(tfs) / thousand + np.where(
+        codes == sc, f32(tw), f32(tc)).astype(np.float32)
+    if kw is not None:
+        w = w + kw
+    return np.add.accumulate(w)[-1]
+
+
+def _bits(x) -> bytes:
+    return np.asarray(x, dtype=np.float32).tobytes()
+
+
+class TestStringWidthFastPath:
+    """get_string_width's cached contribution vectors against the
+    formula, bit for bit."""
+
+    STRINGS = (b"", b"A", b" ", b"AV", b"Hello World", b"To. Wa, AVAT",
+               bytes(range(256)), b"\x00\xff \x00 ", b"\x20\x20\x41")
+    # (tfs, tc, tw): -0.0 must not share a cache entry with 0.0, and
+    # an all -0.0 triple makes every term -0.0
+    SPACING = ((12.0, 0.0, 0.0), (10.5, 0.25, 3.0), (-8.0, -0.0, 0.0),
+               (0.0, 1.0, -2.0), (1000.0, 0.1, 0.1), (12.0, -0.0, -0.0),
+               (7.25, 0.0, -0.0), (0.0, 0.0, 0.0), (-0.0, -0.0, -0.0))
+    TJ = (0.0, -250.0, 120.5, -0.0, 1e-3)
+    PC = (0, 65, -1, 300)
+
+    def _check(self, widths, strings):
+        # one table across every call, as a PDFont keeps it (a bare
+        # /Widths vector gets a fresh one per get_string_width call)
+        rw = fonts.run_widths(widths)
+        n = 0
+        for _ in range(2):  # the second pass reads the caches
+            for tfs, tc, tw in self.SPACING:
+                for tj in self.TJ:
+                    for pc in self.PC:
+                        for s in strings:
+                            args = (s, widths, pc, f32(tfs), f32(tj),
+                                    f32(tc), f32(tw))
+                            want = _bits(_width_oracle(*args))
+                            got = fonts.get_string_width(*args)
+                            assert type(got) is np.float32
+                            assert _bits(got) == want, args
+                            if s:
+                                assert _bits(rw.width(s, *args[2:])) \
+                                    == want, args
+                            n += 1
+        return n
+
+    def test_afm_with_kerning(self):
+        for name in ("Helvetica", "Times-Bold"):
+            afm = fonts.read_afm(name)
+            assert afm.has_kerning
+            assert self._check(afm, self.STRINGS)
+
+    def test_afm_without_kerning(self):
+        afm = fonts.read_afm("Courier")
+        assert not afm.has_kerning
+        assert self._check(afm, self.STRINGS)
+
+    def test_widths_vector_with_zeros(self):
+        rng = np.random.default_rng(7)
+        wv = rng.integers(0, 900, 256).astype(np.float32)
+        wv[::5] = 0  # a 0 reads 1000
+        wv[32] = 0
+        assert self._check(wv, self.STRINGS)
+
+    def test_cid_widths(self):
+        cw = fonts.CIDWidth(dw=f32(900.0))
+        cw.imap.set(0x0020, 0x007E, f32(500.0))
+        cw.imap.set(0x0041, 0x0041, f32(722.0))
+        cw.imap.set(0x3000, 0x30FF, f32(1000.0))
+        strings = (b"", b"\x00", b"\x00A", b"\x00A\x00 \x00V",
+                   b"\x30\x42\x00\x20\x30", b"\xff\xff\x00\x41\x12")
+        assert self._check(cw, strings)
+
+    def test_caches_stay_bounded(self):
+        afm = fonts.read_afm("Helvetica")
+        rw = fonts.run_widths(afm)
+        assert fonts.run_widths(afm) is rw  # shared by every font
+        for i in range(3 * fonts._RUN_CACHE_CAP):
+            fonts.get_string_width(b"AV", afm, 0, f32(1 + i), f32(0),
+                                   f32(0), f32(0))
+            assert len(rw._terms) <= fonts._RUN_CACHE_CAP
+        cw = fonts.CIDWidth()
+        crw = fonts.run_widths(cw)
+        barr = bytes(range(256)) * 4
+        for i in range(8):
+            fonts.get_string_width(barr, cw, 0, f32(1 + i), f32(0),
+                                   f32(0), f32(0))
+            assert len(crw._terms) <= fonts._CID_CACHE_CAP
+
+
 class TestGlyphNames:
     def test_agl_uniXXXX(self):
         assert fonts.get_agl_unicode("uni0041") == [0x41]

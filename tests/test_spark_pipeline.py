@@ -276,6 +276,46 @@ def test_run_job_metrics_reconcile(spark, corpus, tmp_path):
     assert sum(by_run.values()) == spark.read.parquet(outp).count()
 
 
+def test_run_job_resume_beside_pre_run_id_output(spark, corpus, tmp_path):
+    """An output dir holding a part-file written before outputs carried
+    run_id, beside stamped part-files: resume reads the dir with a
+    declared schema, so the old rows read run_id NULL. They are no
+    orphan run (nothing is reconciled), their urls are still skipped,
+    and the metrics count every stamped row exactly once."""
+    from pyspark.sql import functions as F
+    from pdfio_spark.pipeline.job import extract_pdfs
+    from pdfio_spark.pipeline.run import run_job
+    inp = str(tmp_path / "in")
+    outp = str(tmp_path / "out")
+    met = str(tmp_path / "metrics")
+    corpus.select("url", "html").write.parquet(inp)
+    full = spark.read.parquet(inp)
+    # the pre-run_id part-file: 10 docs, no run_id column
+    legacy = full.orderBy("url").limit(10)
+    extract_pdfs(legacy).coalesce(1).write.parquet(outp)
+    legacy_urls = {r["url"] for r in legacy.select("url").collect()}
+    # a stamped run over a slice that overlaps the old rows
+    first_in = str(tmp_path / "in1")
+    full.orderBy("url").limit(25).write.parquet(first_in)
+    r1 = run_job(spark, first_in, outp, met, resume=True, run_id="a")
+    assert r1["written"] == 15
+    r2 = run_job(spark, inp, outp, met, resume=True, run_id="b")
+    assert r2["written"] == 60 - 25
+    out = spark.read.option("mergeSchema", True).parquet(outp)
+    assert out.count() == 60
+    assert out.select("url").distinct().count() == 60
+    assert {r["url"] for r in out.filter(F.col("run_id").isNull())
+            .select("url").collect()} == legacy_urls
+    m = spark.read.parquet(met)
+    assert m.filter("reconciled").count() == 0
+    by_run = {r["run_id"]: r["n"] for r in
+              m.groupBy("run_id").agg(F.sum("n_docs").alias("n"))
+              .collect()}
+    assert by_run == {"a": 15, "b": 35}
+    assert sum(by_run.values()) == \
+        out.filter(F.col("run_id").isNotNull()).count()
+
+
 def test_stream_metrics_watermark(spark, tmp_path):
     """Watermarked windowed rollup over an event stream."""
     import datetime as dt
