@@ -30,12 +30,11 @@ from __future__ import annotations
 import codecs
 import re
 from html.parser import HTMLParser
-from typing import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixtures import chunk_text, sanitize
+from .maprows import map_rows
 
 # ------------------------------------------------------------- builder
 
@@ -335,21 +334,6 @@ def extract_main_html(data: bytes) -> dict:
 
 # -------------------------------------------------------- spark stages
 
-_HTML_CORPUS_ARROW = pa.schema([
-    ("url", pa.string()),
-    ("html", pa.binary()),
-    ("nbytes", pa.int64()),
-])
-
-_HTML_RESULT_ARROW = pa.schema([
-    ("url", pa.string()),
-    ("title", pa.string()),
-    ("main_text", pa.string()),
-    ("n_blocks", pa.int64()),
-    ("status", pa.string()),
-])
-
-
 def gen_html_corpus(docs: DataFrame,
                     partitions: int | None = None) -> DataFrame:
     """documents(doc_id, text, lang) -> (url, html, nbytes) web pages.
@@ -357,28 +341,16 @@ def gen_html_corpus(docs: DataFrame,
     task per core so a single small parquet file doesn't serialize the
     whole downstream pipeline."""
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            langs = batch.column("lang").to_pylist()
-            urls, pages, sizes = [], [], []
-            for did, txt, lang in zip(ids, texts, langs):
-                page = build_html_for_doc(int(did), txt or "", lang)
-                urls.append(f"doc://{did}")
-                pages.append(page)
-                sizes.append(len(page))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(pages, pa.binary()),
-                 pa.array(sizes, pa.int64())],
-                schema=_HTML_CORPUS_ARROW)
+    def gen(did, txt, lang):
+        page = build_html_for_doc(int(did), txt or "", lang)
+        yield f"doc://{did}", page, len(page)
 
     sc = docs.sparkSession.sparkContext
     if partitions is None:
         partitions = max(sc.defaultParallelism, 8)
     docs = docs.select("doc_id", "text", "lang").repartition(partitions)
-    return docs.mapInArrow(gen, "url string, html binary, nbytes long")
+    return map_rows(docs, ["doc_id", "text", "lang"],
+                    "url string, html binary, nbytes long", gen)
 
 
 def extract_html(corpus: DataFrame) -> DataFrame:
@@ -388,30 +360,13 @@ def extract_html(corpus: DataFrame) -> DataFrame:
     so no skew split-path is needed; the stage inherits the corpus
     partitioning (1 task/core)."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            pages = batch.column("html").to_pylist()
-            out = {k: [] for k in
-                   ("url", "title", "main_text", "n_blocks", "status")}
-            for url, page in zip(urls, pages):
-                r = extract_main_html(page or b"")
-                out["url"].append(url)
-                out["title"].append(r["title"])
-                out["main_text"].append(r["main_text"])
-                out["n_blocks"].append(r["n_blocks"])
-                out["status"].append(r["status"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["url"], pa.string()),
-                 pa.array(out["title"], pa.string()),
-                 pa.array(out["main_text"], pa.string()),
-                 pa.array(out["n_blocks"], pa.int64()),
-                 pa.array(out["status"], pa.string())],
-                schema=_HTML_RESULT_ARROW)
+    def run(url, page):
+        r = extract_main_html(page or b"")
+        yield url, r["title"], r["main_text"], r["n_blocks"], r["status"]
 
-    return corpus.select("url", "html").mapInArrow(
-        run, "url string, title string, main_text string, "
-             "n_blocks long, status string")
+    return map_rows(corpus, ["url", "html"],
+                    "url string, title string, main_text string, "
+                    "n_blocks long, status string", run)
 
 
 def html_metrics(extracted: DataFrame) -> DataFrame:

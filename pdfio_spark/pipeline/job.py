@@ -5,7 +5,7 @@ Topology (SURVEY §2.1 S1/S10, §4.2):
     scan (url, html)            [SQL: column-pruned parquet/iceberg scan]
       -> split by size: small docs stay on their scan partition,
          the heavy tail is shuffled by url  [custom: large-PDF skew]
-      -> mapInArrow(_extract_batches)       [UDF: the whole parse stack]
+      -> extract_in_place                   [UDF (map_rows): the parse stack]
       -> results + per-partition metrics    [SQL: checkpointed lineage]
 
 The extraction UDF is Arrow-batched: one Python process decodes a
@@ -21,44 +21,18 @@ exactly-once resume via an anti-join on completed urls.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (IntegerType, LongType, StringType,
-                               StructField, StructType)
 
 from ..fixtures import FIXTURE_CLASSES, build_fixture, chunk_text, sanitize
+from .maprows import map_rows
 
-__all__ = ["gen_pdf_corpus", "extract_pdfs", "extraction_metrics",
-           "EXTRACT_SCHEMA", "resume_filter"]
+__all__ = ["gen_pdf_corpus", "extract_pdfs", "extract_in_place",
+           "extraction_metrics", "resume_filter"]
 
 # Output schema of the extraction stage (FIXTURES.md §5, spans optional)
-EXTRACT_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("n_pages", IntegerType()),
-    StructField("text", StringType()),
-    StructField("status", StringType()),
-    StructField("err", StringType()),
-    StructField("nbytes", LongType()),
-    StructField("dur_us", LongType()),
-])
-
-_EXTRACT_ARROW = pa.schema([
-    ("url", pa.string()),
-    ("n_pages", pa.int32()),
-    ("text", pa.string()),
-    ("status", pa.string()),
-    ("err", pa.string()),
-    ("nbytes", pa.int64()),
-    ("dur_us", pa.int64()),
-])
-
-_CORPUS_ARROW = pa.schema([
-    ("url", pa.string()),
-    ("html", pa.binary()),
-    ("nbytes", pa.int64()),
-])
+_EXTRACT_DDL = ("url string, n_pages int, text string, status string, "
+                "err string, nbytes long, dur_us long")
 
 
 def make_pdf_for_doc(doc_id: int, text: str, classes=None) -> bytes:
@@ -79,21 +53,9 @@ def gen_pdf_corpus(docs: DataFrame, classes: list[str] | None = None,
     Common-Crawl Iceberg scan instead."""
     cls_tuple = tuple(classes) if classes else None
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            urls, pdfs, sizes = [], [], []
-            for did, txt in zip(doc_ids, texts):
-                pdf = make_pdf_for_doc(int(did), txt or "", cls_tuple)
-                urls.append(f"doc://{did}")
-                pdfs.append(pdf)
-                sizes.append(len(pdf))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(pdfs, pa.binary()),
-                 pa.array(sizes, pa.int64())],
-                schema=_CORPUS_ARROW)
+    def gen(did, txt):
+        pdf = make_pdf_for_doc(int(did), txt or "", cls_tuple)
+        yield f"doc://{did}", pdf, len(pdf)
 
     # a single small parquet file arrives as ONE partition — fan out so
     # generation parallelizes and downstream stages inherit parallelism
@@ -103,7 +65,8 @@ def gen_pdf_corpus(docs: DataFrame, classes: list[str] | None = None,
     if partitions is None:
         partitions = max(sc.defaultParallelism, 8)
     docs = docs.select("doc_id", "text").repartition(partitions)
-    return docs.mapInArrow(gen, "url string, html binary, nbytes long")
+    return map_rows(docs, ["doc_id", "text"],
+                    "url string, html binary, nbytes long", gen)
 
 
 # per-row wall-clock budget (SURVEY R3): cycle guards and page caps
@@ -146,44 +109,26 @@ def _extract_with_timeout(html: bytes, timeout_sec: float, **kw) -> dict:
         signal.signal(signal.SIGALRM, old)
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        out = {k: [] for k in ("url", "n_pages", "text", "status", "err",
-                               "nbytes", "dur_us")}
-        for url, html in zip(urls, htmls):
-            t0 = time.perf_counter_ns()
-            try:
-                r = _extract_with_timeout(html or b"", ROW_TIMEOUT_SEC)
-            except RowTimeout as e:
-                # the alarm can fire in _extract_with_timeout's finally
-                # (after extract returned, before setitimer(0)) and
-                # escape its except — RowTimeout is a BaseException, so
-                # without this guard it would kill the task (r5 review)
-                r = {"n_pages": 0, "text": "", "status": "timeout",
-                     "err": str(e)}
-            dur = (time.perf_counter_ns() - t0) // 1000
-            out["url"].append(url)
-            out["n_pages"].append(r["n_pages"])
-            out["text"].append(r["text"])
-            out["status"].append(r["status"])
-            out["err"].append(r["err"])
-            out["nbytes"].append(len(html or b""))
-            out["dur_us"].append(dur)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out["url"], pa.string()),
-             pa.array(out["n_pages"], pa.int32()),
-             pa.array(out["text"], pa.string()),
-             pa.array(out["status"], pa.string()),
-             pa.array(out["err"], pa.string()),
-             pa.array(out["nbytes"], pa.int64()),
-             pa.array(out["dur_us"], pa.int64())],
-            schema=_EXTRACT_ARROW)
+def _extract_row(url, html):
+    t0 = time.perf_counter_ns()
+    try:
+        r = _extract_with_timeout(html or b"", ROW_TIMEOUT_SEC)
+    except RowTimeout as e:
+        # the alarm can fire in _extract_with_timeout's finally
+        # (after extract returned, before setitimer(0)) and
+        # escape its except — RowTimeout is a BaseException, so
+        # without this guard it would kill the task
+        r = {"n_pages": 0, "text": "", "status": "timeout", "err": str(e)}
+    dur = (time.perf_counter_ns() - t0) // 1000
+    yield (url, r["n_pages"], r["text"], r["status"], r["err"],
+           len(html or b""), dur)
 
 
-_EXTRACT_DDL = ("url string, n_pages int, text string, status string, "
-                "err string, nbytes long, dur_us long")
+def extract_in_place(corpus: DataFrame) -> DataFrame:
+    """(url, html) -> extraction rows on the input's own partitioning:
+    the one extraction UDF, shared by extract_pdfs and stream_extract."""
+    return map_rows(corpus, ["url", "html"], _EXTRACT_DDL, _extract_row)
+
 
 # docs above this size go through the tail shuffle; everything else
 # extracts in place on the scan partitioning (zero shuffle)
@@ -230,7 +175,7 @@ def extract_pdfs(corpus: DataFrame,
     tail = (df.filter(F.col("nbytes") > skew_threshold)
             .select("url", "html")
             .repartition("url"))
-    return small.unionByName(tail).mapInArrow(_extract_batches, _EXTRACT_DDL)
+    return extract_in_place(small.unionByName(tail))
 
 
 def extract_pdfs_sharded(corpus: DataFrame, pages_per_shard: int = 4,
@@ -242,36 +187,27 @@ def extract_pdfs_sharded(corpus: DataFrame, pages_per_shard: int = 4,
           -> explode page ranges            [SQL: sequence + explode]
           -> repartition(url, shard)        [shuffle: doc bytes x shards]
           -> extract page range             [UDF]
-          -> applyInPandas ordered reassembly per url
+          -> ordered reassembly per url     [SQL: _reassemble_shards]
 
     Tradeoff: the shuffle duplicates the doc bytes per shard, so this is
     the path for the page-heavy tail only — route docs here by a page
     count or size threshold, everything else through extract_pdfs.
     """
-    import pandas as pd
+    from ..pd.pagetree import PDDoc
 
     if shard_partitions is None:
         sc = corpus.sparkSession.sparkContext
         shard_partitions = max(sc.defaultParallelism, 8)
 
-    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pd.pagetree import PDDoc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o_n = []
-            for html in htmls:
-                try:
-                    o_n.append(PDDoc(html or b"").page_count())
-                except Exception:
-                    o_n.append(0)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("url"), batch.column("html"),
-                 pa.array(o_n, pa.int32())],
-                names=["url", "html", "n_pages"])
+    def probe(url, html):
+        try:
+            n = PDDoc(html or b"").page_count()
+        except Exception:
+            n = 0
+        yield url, html, n
 
-    probed = corpus.select("url", "html").mapInArrow(
-        probe, "url string, html binary, n_pages int")
+    probed = map_rows(corpus, ["url", "html"],
+                      "url string, html binary, n_pages int", probe)
     shards = probed.select(
         "url", "html", "n_pages",
         F.explode(F.sequence(
@@ -280,72 +216,49 @@ def extract_pdfs_sharded(corpus: DataFrame, pages_per_shard: int = 4,
                        F.lit(0)))).alias("shard_id"))
     shards = shards.repartition(shard_partitions, "url", "shard_id")
 
-    def extract_range(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            nps = batch.column("n_pages").to_pylist()
-            sids = batch.column("shard_id").to_pylist()
-            out = {k: [] for k in ("url", "shard_id", "n_pages", "text",
-                                   "status", "err")}
-            for url, html, np_, sid in zip(urls, htmls, nps, sids):
-                first = sid * pages_per_shard + 1
-                last = min((sid + 1) * pages_per_shard, np_)
-                # same per-row budget as the plain path: the sharded
-                # path exists FOR pathological docs, so a CPU-bomb
-                # page must yield a 'timeout' shard, not a stalled task
-                r = _extract_with_timeout(html or b"", ROW_TIMEOUT_SEC,
-                                          first_page=first,
-                                          last_page=last)
-                out["url"].append(url)
-                out["shard_id"].append(sid)
-                out["n_pages"].append(np_)
-                out["text"].append(r["text"])
-                out["status"].append(r["status"])
-                out["err"].append(r["err"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["url"], pa.string()),
-                 pa.array(out["shard_id"], pa.int32()),
-                 pa.array(out["n_pages"], pa.int32()),
-                 pa.array(out["text"], pa.string()),
-                 pa.array(out["status"], pa.string()),
-                 pa.array(out["err"], pa.string())],
-                names=["url", "shard_id", "n_pages", "text", "status",
-                       "err"])
+    def extract_range(url, html, np_, sid):
+        # same per-row budget as the plain path: the sharded path
+        # exists FOR pathological docs, so a CPU-bomb page must yield
+        # a 'timeout' shard, not a stalled task
+        r = _extract_with_timeout(html or b"", ROW_TIMEOUT_SEC,
+                                  first_page=sid * pages_per_shard + 1,
+                                  last_page=min((sid + 1) * pages_per_shard,
+                                                np_))
+        yield url, sid, np_, r["text"], r["status"], r["err"]
 
-    parts = shards.mapInArrow(
-        extract_range,
-        "url string, shard_id int, n_pages int, text string, "
-        "status string, err string")
+    parts = map_rows(shards, ["url", "html", "n_pages", "shard_id"],
+                     "url string, shard_id int, n_pages int, text string, "
+                     "status string, err string", extract_range)
+    return _reassemble_shards(parts)
 
-    def reassemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("shard_id")
-        # Mirror extract_doc's full status lattice (r5 review, second
-        # pass): 'empty' is a BENIGN no-text outcome (the plain path
-        # skips blank pages and still reports ok); a 'partial' shard
-        # CARRIES text, so an all-partial doc is partial, not error;
-        # and failures with zero extracted text anywhere (error/
-        # timeout shards mixed only with empty) are 'error' — the r4
-        # rule that 'partial' must never label an unusable doc.
-        has_content = pdf["status"].isin(("ok", "partial"))
-        failed = ~pdf["status"].isin(("ok", "partial", "empty"))
-        if not failed.any() and not (pdf["status"] == "partial").any():
-            status = "ok" if has_content.any() else "empty"
-        elif has_content.any():
-            status = "partial"
-        else:
-            status = "error"
-        return pd.DataFrame({
-            "url": [pdf["url"].iloc[0]],
-            "n_pages": [int(pdf["n_pages"].iloc[0])],
-            "text": ["".join(pdf["text"])],
-            "status": [status],
-            "err": ["; ".join(e for e in pdf["err"] if e)[:2000]],
-        })
 
-    return parts.groupBy("url").applyInPandas(
-        reassemble,
-        "url string, n_pages int, text string, status string, err string")
+def _reassemble_shards(parts: DataFrame) -> DataFrame:
+    """(url, shard_id, n_pages, text, status, err) shard rows -> one
+    (url, n_pages, text, status, err) row per url, in the JVM: texts
+    joined in shard order, non-empty errors joined by '; ' and cut to
+    2000 characters.
+
+    The status mirrors extract_doc's full lattice: 'empty' is a BENIGN
+    no-text outcome (the plain path skips blank pages and still reports
+    ok); a 'partial' shard CARRIES text, so an all-partial doc is
+    partial, not error; and failures with zero extracted text anywhere
+    (error/timeout shards mixed only with empty) are 'error', since
+    'partial' must never label an unusable doc."""
+    p = F.sort_array(F.collect_list(F.struct(
+        "shard_id", "n_pages", "text",
+        F.coalesce("status", F.lit("")).alias("status"), "err")))
+    status = F.expr("""
+        CASE WHEN exists(p, s -> s.status NOT IN ('ok', 'empty'))
+             THEN CASE WHEN exists(p, s -> s.status IN ('ok', 'partial'))
+                       THEN 'partial' ELSE 'error' END
+             WHEN exists(p, s -> s.status = 'ok') THEN 'ok'
+             ELSE 'empty' END""")
+    err = F.expr("array_join(filter(p.err, e -> e != ''), '; ')")
+    return (parts.groupBy("url").agg(p.alias("p"))
+            .select("url", F.col("p")[0]["n_pages"].alias("n_pages"),
+                    F.array_join("p.text", "").alias("text"),
+                    status.alias("status"),
+                    F.substring(err, 1, 2000).alias("err")))
 
 
 def annotate_wet(corpus: DataFrame) -> DataFrame:
@@ -774,6 +687,11 @@ def semdedup_metrics(extracted: DataFrame) -> DataFrame:
                        .otherwise(0)).alias("n_sem_dup")))
 
 
+# output of the corpus writers rewrite_pdfs and append_updates
+_REWRITE_DDL = ("url string, html binary, nbytes long, status string, "
+                "err string")
+
+
 def rewrite_pdfs(corpus: DataFrame, encrypt: str | None = None,
                  user_pw: bytes = b"", owner_pw: bytes | None = None,
                  pack: str = "classic") -> DataFrame:
@@ -787,36 +705,15 @@ def rewrite_pdfs(corpus: DataFrame, encrypt: str | None = None,
     CPU-bound per row)."""
     from ..cos.writer import rewrite_pdf
 
-    def rw(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out_html, out_n, out_st, out_err = [], [], [], []
-            for html in htmls:
-                try:
-                    b = rewrite_pdf(bytes(html or b""), encrypt=encrypt,
-                                    user_pw=user_pw, owner_pw=owner_pw,
-                                    pack=pack)
-                    out_html.append(b)
-                    out_n.append(len(b))
-                    out_st.append("ok")
-                    out_err.append(None)
-                except Exception as e:
-                    out_html.append(None)
-                    out_n.append(None)
-                    out_st.append("error")
-                    out_err.append(f"{type(e).__name__}: {e}"[:500])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(out_html, pa.binary()),
-                 pa.array(out_n, pa.int64()),
-                 pa.array(out_st, pa.string()),
-                 pa.array(out_err, pa.string())],
-                names=["url", "html", "nbytes", "status", "err"])
+    def rw(url, html):
+        try:
+            b = rewrite_pdf(bytes(html or b""), encrypt=encrypt,
+                            user_pw=user_pw, owner_pw=owner_pw, pack=pack)
+            yield url, b, len(b), "ok", None
+        except Exception as e:
+            yield url, None, None, "error", f"{type(e).__name__}: {e}"[:500]
 
-    return corpus.select("url", "html").mapInArrow(
-        rw, "url string, html binary, nbytes long, status string, "
-            "err string")
+    return map_rows(corpus, ["url", "html"], _REWRITE_DDL, rw)
 
 
 def append_updates(corpus: DataFrame, update_fn,
@@ -838,6 +735,7 @@ def append_updates(corpus: DataFrame, update_fn,
     with status='error' and NULL html — row-level isolation, one bad
     document never fails a task. Same fan-out rules as extraction
     apply upstream (parse + re-serialize is CPU-bound per row)."""
+    from ..cos.doc import CosDoc
     from ..cos.writer import append_update
     if style not in ("classic", "xrefstm"):
         # fail fast on the driver: inside the per-row try a typo'd
@@ -846,43 +744,20 @@ def append_updates(corpus: DataFrame, update_fn,
                          "(classic | xrefstm)")
     fn = update_fn  # closure snapshot
 
-    def rw(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..cos.doc import CosDoc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out_html, out_n, out_st, out_err = [], [], [], []
-            for html in htmls:
-                try:
-                    data = bytes(html or b"")
-                    doc = CosDoc(data)
-                    ups = fn(data, doc)
-                    if ups:
-                        b = append_update(data, ups, style=style,
-                                          doc=doc)
-                        st = "ok"
-                    else:
-                        b, st = data, "empty"
-                    out_html.append(b)
-                    out_n.append(len(b))
-                    out_st.append(st)
-                    out_err.append(None)
-                except Exception as e:
-                    out_html.append(None)
-                    out_n.append(None)
-                    out_st.append("error")
-                    out_err.append(f"{type(e).__name__}: {e}"[:500])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(out_html, pa.binary()),
-                 pa.array(out_n, pa.int64()),
-                 pa.array(out_st, pa.string()),
-                 pa.array(out_err, pa.string())],
-                names=["url", "html", "nbytes", "status", "err"])
+    def rw(url, html):
+        try:
+            data = bytes(html or b"")
+            doc = CosDoc(data)
+            ups = fn(data, doc)
+            if ups:
+                b, st = append_update(data, ups, style=style, doc=doc), "ok"
+            else:
+                b, st = data, "empty"
+            yield url, b, len(b), st, None
+        except Exception as e:
+            yield url, None, None, "error", f"{type(e).__name__}: {e}"[:500]
 
-    return corpus.select("url", "html").mapInArrow(
-        rw, "url string, html binary, nbytes long, status string, "
-            "err string")
+    return map_rows(corpus, ["url", "html"], _REWRITE_DDL, rw)
 
 
 def info_stamp(entries: dict) -> "callable":
@@ -935,7 +810,9 @@ def validate_signatures_over(corpus: DataFrame,
     (the reference writes <pdf>.pem files, PDDoc.jl:548-559;
     executors must not write local files, so the PEM text rides in
     the row)."""
-    from ..pd.signature import TrustStore, _load_crls, _load_ocsps
+    from ..pd.pagetree import PDDoc
+    from ..pd.signature import (TrustStore, _load_crls, _load_ocsps,
+                                validate_signatures)
     if trust_pems is not None:
         TrustStore.from_pems(list(trust_pems))  # driver fail-fast
     if crl_blobs is not None:
@@ -946,73 +823,41 @@ def validate_signatures_over(corpus: DataFrame,
     c_blobs = None if crl_blobs is None else [bytes(b) for b in crl_blobs]
     o_ders = None if ocsp_ders is None else [bytes(b) for b in ocsp_ders]
 
-    def sigs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pd.pagetree import PDDoc
-        from ..pd.signature import (TrustStore as TS, _load_crls as lc,
-                                    _load_ocsps as lo,
-                                    validate_signatures)
-        trust = None if t_pems is None else TS.from_pems(t_pems)
-        crls = None if c_blobs is None else lc(c_blobs)
-        ocsps = None if o_ders is None else lo(o_ders)
-        cols = ["url", "sig_index", "subfilter", "passed", "signer",
-                "m", "err", "status"]
-        if export_certs:
-            cols.append("certs_pem")
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in cols}
+    material = []  # parsed once per task: the parsed forms do not pickle
 
-            def emit(url, i=None, sub=None, passed=None, signer=None,
-                     m=None, err=None, status="ok", certs=None):
-                o["url"].append(url)
-                o["sig_index"].append(i)
-                o["subfilter"].append(sub)
-                o["passed"].append(passed)
-                o["signer"].append(signer)
-                o["m"].append(m)
-                o["err"].append(err)
-                o["status"].append(status)
-                if export_certs:
-                    o["certs_pem"].append(certs)
+    def row(url, i=None, sub=None, passed=None, signer=None, m=None,
+            err=None, status="ok", certs=None):
+        r = (url, i, sub, passed, signer, m, err, status)
+        return r + (certs,) if export_certs else r
 
-            for url, html in zip(urls, htmls):
-                try:
-                    data = bytes(html or b"")
-                    doc = PDDoc(data)
-                    sts = validate_signatures(
-                        doc, data, trust=trust, crls=crls, ocsp=ocsps,
-                        export_certs=export_certs)
-                    if not sts:
-                        emit(url, status="nosig")
-                    for i, st in enumerate(sts):
-                        emit(url, i, st["subfilter"],
-                             bool(st["passed"]), st["signer"], st["m"],
-                             st["error"],
-                             certs=[c["pem"] for c in st["certs"]]
-                             if export_certs and "certs" in st else None)
-                except Exception as e:
-                    emit(url, err=f"{type(e).__name__}: {e}"[:500],
-                         status="error")
-            arrays = [pa.array(o["url"], pa.string()),
-                      pa.array(o["sig_index"], pa.int32()),
-                      pa.array(o["subfilter"], pa.string()),
-                      pa.array(o["passed"], pa.bool_()),
-                      pa.array(o["signer"], pa.string()),
-                      pa.array(o["m"], pa.string()),
-                      pa.array(o["err"], pa.string()),
-                      pa.array(o["status"], pa.string())]
-            if export_certs:
-                arrays.append(pa.array(o["certs_pem"],
-                                       pa.list_(pa.string())))
-            yield pa.RecordBatch.from_arrays(arrays, names=cols)
+    def sigs(url, html):
+        if not material:
+            material.append((
+                None if t_pems is None else TrustStore.from_pems(t_pems),
+                None if c_blobs is None else _load_crls(c_blobs),
+                None if o_ders is None else _load_ocsps(o_ders)))
+        trust, crls, ocsps = material[0]
+        try:
+            data = bytes(html or b"")
+            sts = validate_signatures(PDDoc(data), data, trust=trust,
+                                      crls=crls, ocsp=ocsps,
+                                      export_certs=export_certs)
+            if not sts:
+                yield row(url, status="nosig")
+            for i, st in enumerate(sts):
+                yield row(url, i, st["subfilter"], bool(st["passed"]),
+                          st["signer"], st["m"], st["error"],
+                          certs=[c["pem"] for c in st["certs"]]
+                          if export_certs and "certs" in st else None)
+        except Exception as e:
+            yield row(url, err=f"{type(e).__name__}: {e}"[:500],
+                      status="error")
 
-    schema = ("url string, sig_index int, subfilter string, "
-              "passed boolean, signer string, m string, err string, "
-              "status string")
+    ddl = ("url string, sig_index int, subfilter string, passed boolean, "
+           "signer string, m string, err string, status string")
     if export_certs:
-        schema += ", certs_pem array<string>"
-    return corpus.select("url", "html").mapInArrow(sigs, schema)
+        ddl += ", certs_pem array<string>"
+    return map_rows(corpus, ["url", "html"], ddl, sigs)
 
 
 #: reason tags quality_decisions can emit — filter_metrics aggregates

@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pyarrow as pa
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+from .maprows import map_rows
 
 __all__ = ["gen_media_corpus", "media_metadata", "media_thumbnail",
            "media_frame_sample", "media_audio_stats", "synth_media",
@@ -146,7 +147,6 @@ def _fake_pixel_stat(body: bytes) -> float:
 def _resize_nearest(px, out_w: int, out_h: int):
     """Nearest-neighbor resize via index sampling — the real thumbnail
     math over real decoded pixels, no image library needed."""
-    import numpy as np
     h, w = px.shape[:2]
     ys = (np.arange(out_h) * h) // out_h
     xs = (np.arange(out_w) * w) // out_w
@@ -156,57 +156,27 @@ def _resize_nearest(px, out_w: int, out_h: int):
 def gen_media_corpus(emb: DataFrame) -> DataFrame:
     """embeddings(vec_id, ...) -> (media_id, kind, payload)."""
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("vec_id").to_pylist()
-            payloads = [synth_media(int(i)) for i in ids]
-            kinds = [int(i) % 3 for i in ids]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(kinds, pa.int32()),
-                 pa.array(payloads, pa.binary())],
-                names=["media_id", "kind", "payload"])
+    def gen(vec_id):
+        yield vec_id, int(vec_id) % 3, synth_media(int(vec_id))
 
     sc = emb.sparkSession.sparkContext
-    return (emb.select("vec_id")
-            .repartition(max(sc.defaultParallelism, 8))
-            .mapInArrow(gen, "media_id long, kind int, payload binary"))
+    ids = emb.select("vec_id").repartition(max(sc.defaultParallelism, 8))
+    return map_rows(ids, ["vec_id"],
+                    "media_id long, kind int, payload binary", gen)
 
 
 def media_metadata(media: DataFrame) -> DataFrame:
     """Parse the binary container header per row (real parsing)."""
 
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            out = {k: [] for k in ("media_id", "kind", "width", "height",
-                                   "dur_ms", "codec", "body_bytes")}
-            for mid, p in zip(ids, payloads):
-                h = parse_media_header(p or b"")
-                if h is None:
-                    continue
-                out["media_id"].append(mid)
-                out["kind"].append(h["kind"])
-                out["width"].append(h["width"])
-                out["height"].append(h["height"])
-                out["dur_ms"].append(h["dur_ms"])
-                out["codec"].append(h["codec"])
-                out["body_bytes"].append(len(h["body"]))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_id"], pa.int64()),
-                 pa.array(out["kind"], pa.int32()),
-                 pa.array(out["width"], pa.int32()),
-                 pa.array(out["height"], pa.int32()),
-                 pa.array(out["dur_ms"], pa.int64()),
-                 pa.array(out["codec"], pa.int32()),
-                 pa.array(out["body_bytes"], pa.int64())],
-                names=["media_id", "kind", "width", "height", "dur_ms",
-                       "codec", "body_bytes"])
+    def parse(mid, p):
+        h = parse_media_header(p or b"")
+        if h is not None:
+            yield (mid, h["kind"], h["width"], h["height"], h["dur_ms"],
+                   h["codec"], len(h["body"]))
 
-    return media.mapInArrow(
-        parse, "media_id long, kind int, width int, height int, "
-               "dur_ms long, codec int, body_bytes long")
+    return map_rows(media, ["media_id", "payload"],
+                    "media_id long, kind int, width int, height int, "
+                    "dur_ms long, codec int, body_bytes long", parse)
 
 
 def media_thumbnail(media: DataFrame, max_side: int = 128) -> DataFrame:
@@ -215,54 +185,35 @@ def media_thumbnail(media: DataFrame, max_side: int = 128) -> DataFrame:
 
     codecs = dict(_MEDIA_CODECS)  # driver-time snapshot -> task closure
 
-    def thumb(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            out = {k: [] for k in ("media_id", "decoded", "out_w",
-                                   "out_h", "px")}
-            for mid, p in zip(ids, payloads):
-                h = parse_media_header(p or b"")
-                if h is None or h["kind"] != 0:
-                    continue
-                w, ht = h["width"], h["height"]
-                m = max(w, ht)
-                if m <= max_side:
-                    ow, oh = w, ht
-                else:
-                    ow = max(1, (w * max_side) // m)
-                    oh = max(1, (ht * max_side) // m)
-                try:
-                    import numpy as np
-                    pixels = _decode_pixels(h["body"], w, ht, codecs)
-                    px = float(np.mean(_resize_nearest(pixels, ow, oh)))
-                    decoded = True
-                except Exception:
-                    # NotImplementedError (compressed codec) AND any
-                    # malformed-body decode error (a keystream body
-                    # starting with b'BM' raises ValueError at ~2^-16
-                    # per row — a real corpus row must fall back, not
-                    # fail the task). `decoded` makes the downgrade
-                    # visible per row (ADVICE r4), matching
-                    # media_audio_stats.
-                    px = _fake_pixel_stat(h["body"])
-                    decoded = False
-                out["media_id"].append(mid)
-                out["decoded"].append(decoded)
-                out["out_w"].append(ow)
-                out["out_h"].append(oh)
-                out["px"].append(px)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_id"], pa.int64()),
-                 pa.array(out["decoded"], pa.bool_()),
-                 pa.array(out["out_w"], pa.int32()),
-                 pa.array(out["out_h"], pa.int32()),
-                 pa.array(out["px"], pa.float64())],
-                names=["media_id", "decoded", "out_w", "out_h", "px"])
+    def thumb(mid, p):
+        h = parse_media_header(p or b"")
+        if h is None or h["kind"] != 0:
+            return
+        w, ht = h["width"], h["height"]
+        m = max(w, ht)
+        if m <= max_side:
+            ow, oh = w, ht
+        else:
+            ow = max(1, (w * max_side) // m)
+            oh = max(1, (ht * max_side) // m)
+        try:
+            pixels = _decode_pixels(h["body"], w, ht, codecs)
+            px = float(np.mean(_resize_nearest(pixels, ow, oh)))
+            decoded = True
+        except Exception:
+            # NotImplementedError (compressed codec) AND any
+            # malformed-body decode error (a keystream body
+            # starting with b'BM' raises ValueError at ~2^-16
+            # per row — a real corpus row must fall back, not
+            # fail the task). `decoded` makes the downgrade
+            # visible per row, matching media_audio_stats.
+            px = _fake_pixel_stat(h["body"])
+            decoded = False
+        yield mid, decoded, ow, oh, px
 
-    return media.mapInArrow(
-        thumb, "media_id long, decoded boolean, out_w int, out_h int, "
-               "px double")
+    return map_rows(media, ["media_id", "payload"],
+                    "media_id long, decoded boolean, out_w int, out_h int, "
+                    "px double", thumb)
 
 
 def media_audio_stats(media: DataFrame) -> DataFrame:
@@ -273,45 +224,24 @@ def media_audio_stats(media: DataFrame) -> DataFrame:
 
     codecs = dict(_MEDIA_CODECS)  # driver-time snapshot -> task closure
 
-    def stats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            out = {k: [] for k in ("media_id", "decoded", "rate",
-                                   "n_frames", "rms")}
-            for mid, p in zip(ids, payloads):
-                h = parse_media_header(p or b"")
-                if h is None or h["kind"] != 1:
-                    continue
-                out["media_id"].append(mid)
-                try:
-                    rate, samples = _decode_audio(h["body"], codecs)
-                    out["decoded"].append(True)
-                    out["rate"].append(rate)
-                    out["n_frames"].append(samples.shape[0])
-                    out["rms"].append(float(np.sqrt(np.mean(
-                        samples.astype(np.float64) ** 2))))
-                except Exception:
-                    # compressed codec (NotImplementedError) or a
-                    # corrupt/truncated RIFF body (ValueError /
-                    # struct.error) — both are per-row fallbacks, never
-                    # task failures
-                    out["decoded"].append(False)
-                    out["rate"].append(None)
-                    out["n_frames"].append(None)
-                    out["rms"].append(None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_id"], pa.int64()),
-                 pa.array(out["decoded"], pa.bool_()),
-                 pa.array(out["rate"], pa.int32()),
-                 pa.array(out["n_frames"], pa.int64()),
-                 pa.array(out["rms"], pa.float64())],
-                names=["media_id", "decoded", "rate", "n_frames", "rms"])
+    def stats(mid, p):
+        h = parse_media_header(p or b"")
+        if h is None or h["kind"] != 1:
+            return
+        try:
+            rate, samples = _decode_audio(h["body"], codecs)
+            yield (mid, True, rate, samples.shape[0],
+                   float(np.sqrt(np.mean(samples.astype(np.float64) ** 2))))
+        except Exception:
+            # compressed codec (NotImplementedError) or a
+            # corrupt/truncated RIFF body (ValueError /
+            # struct.error) — both are per-row fallbacks, never
+            # task failures
+            yield mid, False, None, None, None
 
-    return media.mapInArrow(
-        stats, "media_id long, decoded boolean, rate int, "
-               "n_frames long, rms double")
+    return map_rows(media, ["media_id", "payload"],
+                    "media_id long, decoded boolean, rate int, "
+                    "n_frames long, rms double", stats)
 
 
 _VIDEO_MAGICS = (("h264", b"\x00\x00\x00\x01"),
@@ -355,41 +285,23 @@ def media_frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
 
     codecs = dict(_MEDIA_CODECS)  # driver-time snapshot -> task closure
 
-    def frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            out = {k: [] for k in ("media_id", "decoded", "n_frames",
-                                   "mean_px")}
-            for mid, p in zip(ids, payloads):
-                h = parse_media_header(p or b"")
-                if h is None or h["kind"] != 2:
-                    continue
-                out["media_id"].append(mid)
-                try:
-                    fps, fr = _decode_frames(h["body"], codecs)
-                    step = max(1, round(fps * every_ms / 1000))
-                    sampled = list(fr)[::step]
-                    out["decoded"].append(True)
-                    out["n_frames"].append(len(sampled))
-                    out["mean_px"].append(float(np.mean(
-                        [np.mean(f) for f in sampled]))
-                        if sampled else None)
-                except Exception:
-                    # no codec (NotImplementedError) or a malformed
-                    # body in an injected decoder — per-row fallback
-                    # to the header synthesis, never a task failure
-                    out["decoded"].append(False)
-                    out["n_frames"].append(h["dur_ms"] // every_ms + 1)
-                    out["mean_px"].append(None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_id"], pa.int64()),
-                 pa.array(out["decoded"], pa.bool_()),
-                 pa.array(out["n_frames"], pa.int32()),
-                 pa.array(out["mean_px"], pa.float64())],
-                names=["media_id", "decoded", "n_frames", "mean_px"])
+    def frames(mid, p):
+        h = parse_media_header(p or b"")
+        if h is None or h["kind"] != 2:
+            return
+        try:
+            fps, fr = _decode_frames(h["body"], codecs)
+            step = max(1, round(fps * every_ms / 1000))
+            sampled = list(fr)[::step]
+            mean_px = (float(np.mean([np.mean(f) for f in sampled]))
+                       if sampled else None)
+            yield mid, True, len(sampled), mean_px
+        except Exception:
+            # no codec (NotImplementedError) or a malformed
+            # body in an injected decoder — per-row fallback
+            # to the header synthesis, never a task failure
+            yield mid, False, h["dur_ms"] // every_ms + 1, None
 
-    return media.mapInArrow(
-        frames, "media_id long, decoded boolean, n_frames int, "
-                "mean_px double")
+    return map_rows(media, ["media_id", "payload"],
+                    "media_id long, decoded boolean, n_frames int, "
+                    "mean_px double", frames)

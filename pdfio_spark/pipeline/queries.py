@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .job import extract_pdfs, gen_pdf_corpus
+from .maprows import map_rows
 
 # ---------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect) — predict the extraction output
@@ -396,49 +397,25 @@ def q_struct_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     /StructTreeRoot depth-first, emitting role + RoleMap-resolved role +
     attributes per element. Fixture: Document > [H1, Para x n_lines]
     with RoleMap Para->P — all predicted in closed form."""
-    import pyarrow as pa
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["tagged"])
 
-    def roles(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in ("url", "seq", "role", "mapped_role",
-                                 "title", "lang", "actual_text", "tagged")}
-            for url, html in zip(urls, htmls):
-                try:
-                    doc = PDDoc(html)
-                    for i, e in enumerate(doc.walk_structure()):
-                        o["url"].append(url)
-                        o["seq"].append(i + 1)
-                        o["role"].append(e["role"])
-                        o["mapped_role"].append(e["mapped_role"])
-                        o["title"].append(e["title"])
-                        o["lang"].append(e["lang"])
-                        o["actual_text"].append(e["actual_text"])
-                        o["tagged"].append(doc.is_tagged)
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o["url"], pa.string()),
-                 pa.array(o["seq"], pa.int32()),
-                 pa.array(o["role"], pa.string()),
-                 pa.array(o["mapped_role"], pa.string()),
-                 pa.array(o["title"], pa.string()),
-                 pa.array(o["lang"], pa.string()),
-                 pa.array(o["actual_text"], pa.string()),
-                 pa.array(o["tagged"], pa.string())],
-                names=["url", "seq", "role", "mapped_role", "title",
-                       "lang", "actual_text", "tagged"])
+    def roles(url, html):
+        try:
+            doc = PDDoc(html)
+            for i, e in enumerate(doc.walk_structure()):
+                yield (url, i + 1, e["role"], e["mapped_role"], e["title"],
+                       e["lang"], e["actual_text"], doc.is_tagged)
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        roles, "url string, seq int, role string, mapped_role string, "
-               "title string, lang string, actual_text string, "
-               "tagged string")
-        .orderBy("url", "seq"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, seq int, role string, mapped_role string, "
+                     "title string, lang string, actual_text string, "
+                     "tagged string", roles)
+            .orderBy("url", "seq"))
 
 
 ORACLE_STRUCT_ROLES = _LINES_CTE + """
@@ -470,51 +447,34 @@ def q_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     packaged trust store (verify_local_trust / CertStore semantics,
     PDSignature.jl:13-48). All outcomes predicted in closed form
     (signer identities are the packaged synthetic certificates)."""
-    import pyarrow as pa
+    from pdfio_spark.fixtures import test_trust_pems
+    from pdfio_spark.pd.pagetree import PDDoc
+    from pdfio_spark.pd.signature import TrustStore, validate_signatures
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(
         docs, classes=["signed", "signed_tampered", "signed_expired",
                        "signed_chain"])
+    trust = []  # built once per task: a TrustStore does not pickle
 
-    def sigs(batches):
-        from pdfio_spark.fixtures import test_trust_pems
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.pd.signature import (TrustStore,
-                                              validate_signatures)
-        trust = TrustStore.from_pems(test_trust_pems())
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in ("url", "subfilter", "passed", "signer",
-                                 "err")}
-            for url, html in zip(urls, htmls):
-                try:
-                    doc = PDDoc(html)
-                    # crls=[]/ocsp=[] pin revocation OFF like trust=
-                    # pins the anchors: the oracled passed/err columns
-                    # must not depend on process-wide setter/env state
-                    for st in validate_signatures(doc, html, trust=trust,
-                                                  crls=[], ocsp=[]):
-                        o["url"].append(url)
-                        o["subfilter"].append(st["subfilter"])
-                        o["passed"].append(bool(st["passed"]))
-                        o["signer"].append(st["signer"])
-                        o["err"].append(st["error"])
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o["url"], pa.string()),
-                 pa.array(o["subfilter"], pa.string()),
-                 pa.array(o["passed"], pa.bool_()),
-                 pa.array(o["signer"], pa.string()),
-                 pa.array(o["err"], pa.string())],
-                names=["url", "subfilter", "passed", "signer", "err"])
+    def sigs(url, html):
+        if not trust:
+            trust.append(TrustStore.from_pems(test_trust_pems()))
+        try:
+            # crls=[]/ocsp=[] pin revocation OFF like trust= pins the
+            # anchors: the oracled passed/err columns must not depend
+            # on process-wide setter/env state
+            for st in validate_signatures(PDDoc(html), html, trust=trust[0],
+                                          crls=[], ocsp=[]):
+                yield (url, st["subfilter"], bool(st["passed"]),
+                       st["signer"], st["error"])
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        sigs, "url string, subfilter string, passed boolean, "
-              "signer string, err string")
-        .orderBy("url"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, subfilter string, passed boolean, "
+                     "signer string, err string", sigs)
+            .orderBy("url"))
 
 
 ORACLE_SIGNATURES = """
@@ -547,42 +507,24 @@ def q_extract_spans_courier(spark: SparkSession, sf_dir: str) -> DataFrame:
     height 12. Geometry rounded to 1 decimal to absorb the engine's
     float32 accumulation vs the oracle's float64 (error ~1e-3 at
     60 chars; spacing between distinct values is >= 7.2)."""
-    import pyarrow as pa
+    from pdfio_spark.pd.extract import extract_doc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["flate_simple"])
 
-    def spans(batches):
-        from pdfio_spark.pd.extract import extract_doc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in ("url", "x0", "y0", "x1", "y1", "stext")}
-            for url, html in zip(urls, htmls):
-                r = extract_doc(html, with_spans=True)
-                if r["status"] != "ok":
-                    continue
-                for p in r["pages"]:
-                    for s in p["spans"]:
-                        o["url"].append(url)
-                        o["x0"].append(round(s["x0"], 1))
-                        o["y0"].append(round(s["y0"], 1))
-                        o["x1"].append(round(s["x1"], 1))
-                        o["y1"].append(round(s["y1"], 1))
-                        o["stext"].append(s["text"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o["url"], pa.string()),
-                 pa.array(o["x0"], pa.float64()),
-                 pa.array(o["y0"], pa.float64()),
-                 pa.array(o["x1"], pa.float64()),
-                 pa.array(o["y1"], pa.float64()),
-                 pa.array(o["stext"], pa.string())],
-                names=["url", "x0", "y0", "x1", "y1", "stext"])
+    def spans(url, html):
+        r = extract_doc(html, with_spans=True)
+        if r["status"] != "ok":
+            return
+        for p in r["pages"]:
+            for s in p["spans"]:
+                yield (url, round(s["x0"], 1), round(s["y0"], 1),
+                       round(s["x1"], 1), round(s["y1"], 1), s["text"])
 
-    return (corpus.mapInArrow(
-        spans, "url string, x0 double, y0 double, x1 double, y1 double, "
-               "stext string")
-        .orderBy("url", "y0"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, x0 double, y0 double, x1 double, "
+                     "y1 double, stext string", spans)
+            .orderBy("url", "y0"))
 
 
 ORACLE_EXTRACT_SPANS_COURIER = _LINES_CTE + """
@@ -602,39 +544,25 @@ def q_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction is the crawl-pipeline extension). Even docs are plain,
     odd docs are AES-256-encrypted (EF stream decrypts through StmF);
     the payload is a closed-form function of the first text line."""
-    import pyarrow as pa
+    from pdfio_spark.pd.navigation import get_attachments
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs,
                             classes=["with_attachment", "attach_encrypted"])
 
-    def atts(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.pd.navigation import get_attachments
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in ("url", "filename", "n_bytes", "payload")}
-            for url, html in zip(urls, htmls):
-                try:
-                    for a in get_attachments(PDDoc(html)):
-                        o["url"].append(url)
-                        o["filename"].append(a["name"])
-                        o["n_bytes"].append(a["n_bytes"])
-                        o["payload"].append(
-                            (a["data"] or b"").decode("latin-1"))
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o["url"], pa.string()),
-                 pa.array(o["filename"], pa.string()),
-                 pa.array(o["n_bytes"], pa.int64()),
-                 pa.array(o["payload"], pa.string())],
-                names=["url", "filename", "n_bytes", "payload"])
+    def atts(url, html):
+        try:
+            for a in get_attachments(PDDoc(html)):
+                yield (url, a["name"], a["n_bytes"],
+                       (a["data"] or b"").decode("latin-1"))
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        atts, "url string, filename string, n_bytes long, payload string")
-        .orderBy("url"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, filename string, n_bytes long, "
+                     "payload string", atts)
+            .orderBy("url"))
 
 
 ORACLE_ATTACHMENTS = """
@@ -657,39 +585,27 @@ def q_page_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse label->page search — p1_page is the page whose label is
     'P-1' (page 3 for docs with >= 3 pages, NULL otherwise). (r3:
     absorbed the former q_label_to_page.)"""
-    import pyarrow as pa
+    from pdfio_spark.pd.navigation import (find_page_for_label,
+                                           get_page_labels)
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["multipage_labels"])
 
-    def labels(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.pd.navigation import (get_page_labels,
-                                               find_page_for_label)
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o_url, o_pg, o_lab, o_p1 = [], [], [], []
-            for url, html in zip(urls, htmls):
-                try:
-                    doc = PDDoc(html)
-                    r = find_page_for_label(doc, "P-1")
-                    p1 = r[0] if r is not None else None
-                    for i, lab in enumerate(get_page_labels(doc)):
-                        o_url.append(url)
-                        o_pg.append(i + 1)
-                        o_lab.append(lab)
-                        o_p1.append(p1)
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_url, pa.string()), pa.array(o_pg, pa.int32()),
-                 pa.array(o_lab, pa.string()), pa.array(o_p1, pa.int32())],
-                names=["url", "page_no", "label", "p1_page"])
+    def labels(url, html):
+        try:
+            doc = PDDoc(html)
+            r = find_page_for_label(doc, "P-1")
+            p1 = r[0] if r is not None else None
+            for i, lab in enumerate(get_page_labels(doc)):
+                yield url, i + 1, lab, p1
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        labels, "url string, page_no int, label string, p1_page int")
-        .orderBy("url", "page_no"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, page_no int, label string, p1_page int",
+                     labels)
+            .orderBy("url", "page_no"))
 
 
 ORACLE_PAGE_LABELS = _LINES_CTE + """
@@ -710,56 +626,32 @@ def q_doc_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two fixture corpora (with_info, with_dates), one row per doc each,
     equi-joined on url with the smaller side broadcast. (r3: merged
     q_doc_info + q_dates.)"""
-    import pyarrow as pa
+    from pdfio_spark.pd.dates import CDDate
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     info_corpus = gen_pdf_corpus(docs, classes=["with_info"])
     dates_corpus = gen_pdf_corpus(docs, classes=["with_dates"])
 
-    def info(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o_url, o_prod, o_title = [], [], []
-            for url, html in zip(urls, htmls):
-                try:
-                    d = PDDoc(html).get_info()
-                    o_url.append(url)
-                    o_prod.append(d.get("Producer"))
-                    o_title.append(d.get("Title"))
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_url, pa.string()), pa.array(o_prod, pa.string()),
-                 pa.array(o_title, pa.string())],
-                names=["url", "producer", "title"])
+    def info(url, html):
+        try:
+            d = PDDoc(html).get_info()
+            yield url, d.get("Producer"), d.get("Title")
+        except Exception:
+            pass
 
-    def dates(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.pd.dates import CDDate
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o_url, o_raw, o_utc = [], [], []
-            for url, html in zip(urls, htmls):
-                try:
-                    raw = PDDoc(html).get_info().get("CreationDate")
-                    d = CDDate(raw)
-                    o_url.append(url)
-                    o_raw.append(raw)
-                    o_utc.append(d.utc().strftime("%Y-%m-%d %H:%M:%S"))
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_url, pa.string()), pa.array(o_raw, pa.string()),
-                 pa.array(o_utc, pa.string())],
-                names=["url", "raw_date", "utc"])
+    def dates(url, html):
+        try:
+            raw = PDDoc(html).get_info().get("CreationDate")
+            utc = CDDate(raw).utc().strftime("%Y-%m-%d %H:%M:%S")
+            yield url, raw, utc
+        except Exception:
+            pass
 
-    info_df = info_corpus.mapInArrow(
-        info, "url string, producer string, title string")
-    dates_df = dates_corpus.mapInArrow(
-        dates, "url string, raw_date string, utc string")
+    info_df = map_rows(info_corpus, ["url", "html"],
+                       "url string, producer string, title string", info)
+    dates_df = map_rows(dates_corpus, ["url", "html"],
+                        "url string, raw_date string, utc string", dates)
     # dates_df is one row per input doc — corpus-sized, not a dim;
     # shuffle join (r5 review)
     return (info_df.join(dates_df, "url")
@@ -786,54 +678,28 @@ def q_outline_dest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree (odd items — SURVEY T2 string keys, resolving to Fit). Layout +
     all coordinate slots + zoom are closed-form. (r3: absorbed the
     former q_outline — same walk, plus the dest matrix.)"""
-    import pyarrow as pa
+    from pdfio_spark.pd.navigation import get_outline
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["outline_toc"])
 
-    def dests(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.pd.navigation import get_outline
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            o = {k: [] for k in ("url", "level", "title", "page_no",
-                                 "layout",
-                                 "left", "bottom", "right", "top", "zoom")}
-            for url, html in zip(urls, htmls):
-                try:
-                    for item in get_outline(PDDoc(html)):
-                        d = item["dest"]
-                        if d is None:
-                            continue
-                        o["url"].append(url)
-                        o["level"].append(item["level"])
-                        o["title"].append(item["title"])
-                        o["page_no"].append(d["page_no"])
-                        o["layout"].append(d["layout"])
-                        for k in ("left", "bottom", "right", "top", "zoom"):
-                            o[k].append(d[k])
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o["url"], pa.string()),
-                 pa.array(o["level"], pa.int32()),
-                 pa.array(o["title"], pa.string()),
-                 pa.array(o["page_no"], pa.int32()),
-                 pa.array(o["layout"], pa.string()),
-                 pa.array(o["left"], pa.float64()),
-                 pa.array(o["bottom"], pa.float64()),
-                 pa.array(o["right"], pa.float64()),
-                 pa.array(o["top"], pa.float64()),
-                 pa.array(o["zoom"], pa.float64())],
-                names=list(o))
+    def dests(url, html):
+        try:
+            for item in get_outline(PDDoc(html)):
+                d = item["dest"]
+                if d is not None:
+                    yield (url, item["level"], item["title"], d["page_no"],
+                           d["layout"], d["left"], d["bottom"], d["right"],
+                           d["top"], d["zoom"])
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        dests, "url string, level int, title string, page_no int, "
-               "layout string, "
-               "left double, bottom double, right double, top double, "
-               "zoom double")
-        .orderBy("url", "title"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, level int, title string, page_no int, "
+                     "layout string, left double, bottom double, "
+                     "right double, top double, zoom double", dests)
+            .orderBy("url", "title"))
 
 
 ORACLE_OUTLINE_DEST = _LINES_CTE + """
@@ -3123,7 +2989,7 @@ FROM documents ORDER BY url
 
 def q_extract_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-sharded extraction of multipage docs (SURVEY R5): probe ->
-    explode ranges -> range-extract -> applyInPandas ordered reassembly.
+    explode ranges -> range-extract -> ordered reassembly in SQL.
     Must reproduce the unsharded byte-identical text, so it shares the
     multipage oracle."""
     from .job import extract_pdfs_sharded
@@ -3135,44 +3001,26 @@ def q_extract_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_page_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MediaBox via inheritable-attribute lookup (SURVEY D6)."""
-    import pyarrow as pa
+    from pdfio_spark.cos.objects import Name
+    from pdfio_spark.pd.pagetree import PDDoc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["multipage"])
 
-    def geom(batches):
-        from pdfio_spark.pd.pagetree import PDDoc
-        from pdfio_spark.cos.objects import Name
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out = {k: [] for k in ("url", "page_no", "x0", "y0", "x1", "y1")}
-            for url, html in zip(urls, htmls):
-                try:
-                    doc = PDDoc(html)
-                    for i in range(1, doc.page_count() + 1):
-                        box = doc.get_page(i).find_attribute(Name("MediaBox"))
-                        if not isinstance(box, list) or len(box) != 4:
-                            continue
-                        out["url"].append(url)
-                        out["page_no"].append(i)
-                        for k, v in zip(("x0", "y0", "x1", "y1"), box):
-                            out[k].append(float(v))
-                except Exception:
-                    pass
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["url"], pa.string()),
-                 pa.array(out["page_no"], pa.int32()),
-                 pa.array(out["x0"], pa.float64()),
-                 pa.array(out["y0"], pa.float64()),
-                 pa.array(out["x1"], pa.float64()),
-                 pa.array(out["y1"], pa.float64())],
-                names=["url", "page_no", "x0", "y0", "x1", "y1"])
+    def geom(url, html):
+        try:
+            doc = PDDoc(html)
+            for i in range(1, doc.page_count() + 1):
+                box = doc.get_page(i).find_attribute(Name("MediaBox"))
+                if isinstance(box, list) and len(box) == 4:
+                    yield (url, i, *map(float, box))
+        except Exception:
+            pass
 
-    return (corpus.mapInArrow(
-        geom, "url string, page_no int, x0 double, y0 double, "
-              "x1 double, y1 double")
-        .orderBy("url", "page_no"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, page_no int, x0 double, y0 double, "
+                     "x1 double, y1 double", geom)
+            .orderBy("url", "page_no"))
 
 
 ORACLE_PAGE_GEOMETRY = _LINES_CTE + """
@@ -3187,48 +3035,23 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full output schema incl. per-span geometry (FIXTURES.md §5).
     Span x1 depends on AFM width sums (kerning) — not SQL-expressible,
     so this is a rows-only check; values are covered by unit tests."""
-    import pyarrow as pa
+    from pdfio_spark.pd.extract import extract_doc
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = gen_pdf_corpus(docs, classes=["flate_simple"])
 
-    def spans(batches):
-        from pdfio_spark.pd.extract import extract_doc
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out = {k: [] for k in ("url", "page_no", "x0", "y0", "x1", "y1",
-                                   "stext", "font", "flags")}
-            for url, html in zip(urls, htmls):
-                r = extract_doc(html, with_spans=True)
-                for p in r["pages"]:
-                    for s in p.get("spans", []):
-                        out["url"].append(url)
-                        out["page_no"].append(p["page_no"])
-                        out["x0"].append(s["x0"])
-                        out["y0"].append(s["y0"])
-                        out["x1"].append(s["x1"])
-                        out["y1"].append(s["y1"])
-                        out["stext"].append(s["text"])
-                        out["font"].append(s["font"])
-                        out["flags"].append(s["flags"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["url"], pa.string()),
-                 pa.array(out["page_no"], pa.int32()),
-                 pa.array(out["x0"], pa.float64()),
-                 pa.array(out["y0"], pa.float64()),
-                 pa.array(out["x1"], pa.float64()),
-                 pa.array(out["y1"], pa.float64()),
-                 pa.array(out["stext"], pa.string()),
-                 pa.array(out["font"], pa.string()),
-                 pa.array(out["flags"], pa.int64())],
-                names=["url", "page_no", "x0", "y0", "x1", "y1",
-                       "stext", "font", "flags"])
+    def spans(url, html):
+        r = extract_doc(html, with_spans=True)
+        for p in r["pages"]:
+            for s in p.get("spans", []):
+                yield (url, p["page_no"], s["x0"], s["y0"], s["x1"], s["y1"],
+                       s["text"], s["font"], s["flags"])
 
-    return (corpus.mapInArrow(
-        spans, "url string, page_no int, x0 double, y0 double, x1 double, "
-               "y1 double, stext string, font string, flags long")
-        .orderBy("url", "page_no", "y0"))
+    return (map_rows(corpus, ["url", "html"],
+                     "url string, page_no int, x0 double, y0 double, "
+                     "x1 double, y1 double, stext string, font string, "
+                     "flags long", spans)
+            .orderBy("url", "page_no", "y0"))
 
 
 # ---------------------------------------------------------------------

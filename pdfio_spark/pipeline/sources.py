@@ -32,8 +32,9 @@ from __future__ import annotations
 import zlib
 from typing import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .maprows import map_rows
 
 __all__ = ["read_pdf_dir", "read_warc", "read_wat", "read_wet"]
 
@@ -137,6 +138,16 @@ def _safe_iter(gen):
             return
 
 
+def _records(blob: bytes | None, rtype: str) -> Iterator[dict]:
+    """The `rtype` records with a target URI in one shard file's bytes,
+    each gzip member and record parse stopped at its first decode
+    error."""
+    for member in _safe_iter(_split_gzip_members(blob or b"")):
+        for rec in _safe_iter(_parse_warc_records(member)):
+            if rec["type"] == rtype and rec["url"]:
+                yield rec
+
+
 def _shard_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", glob)
@@ -156,27 +167,13 @@ def read_warc(spark: SparkSession, path: str,
     those)."""
     files = _shard_files(spark, path, glob)
 
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls, tss, bodies, sizes = [], [], [], []
-            for blob in batch.column("content").to_pylist():
-                for member in _safe_iter(_split_gzip_members(blob or b"")):
-                    for rec in _safe_iter(_parse_warc_records(member)):
-                        if rec["type"] != "response" or not rec["url"]:
-                            continue
-                        payload = _strip_http_envelope(rec["body"])
-                        urls.append(rec["url"])
-                        tss.append(rec["date"])
-                        bodies.append(payload)
-                        sizes.append(len(payload))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(tss, pa.string()),
-                 pa.array(bodies, pa.binary()),
-                 pa.array(sizes, pa.int64())],
-                names=["url", "warc_ts_raw", "html", "nbytes"])
+    def parse(blob):
+        for rec in _records(blob, "response"):
+            payload = _strip_http_envelope(rec["body"])
+            yield rec["url"], rec["date"], payload, len(payload)
 
-    out = files.mapInArrow(
-        parse, "url string, warc_ts_raw string, html binary, nbytes long")
+    out = map_rows(files, ["content"], "url string, warc_ts_raw string, "
+                   "html binary, nbytes long", parse)
     return out.select(
         "url",
         F.to_timestamp("warc_ts_raw").alias("warc_ts"),
@@ -194,27 +191,14 @@ def read_wet(spark: SparkSession, path: str,
     parallelism and corrupt-member isolation as read_warc."""
     files = _shard_files(spark, path, glob)
 
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls, tss, texts, sizes = [], [], [], []
-            for blob in batch.column("content").to_pylist():
-                for member in _safe_iter(_split_gzip_members(blob or b"")):
-                    for rec in _safe_iter(_parse_warc_records(member)):
-                        if rec["type"] != "conversion" or not rec["url"]:
-                            continue
-                        body = rec["body"]
-                        urls.append(rec["url"])
-                        tss.append(rec["date"])
-                        texts.append(body.decode("utf-8", "replace"))
-                        sizes.append(len(body))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(tss, pa.string()),
-                 pa.array(texts, pa.string()),
-                 pa.array(sizes, pa.int64())],
-                names=["url", "warc_ts_raw", "text", "nbytes"])
+    def parse(blob):
+        for rec in _records(blob, "conversion"):
+            body = rec["body"]
+            yield (rec["url"], rec["date"], body.decode("utf-8", "replace"),
+                   len(body))
 
-    out = files.mapInArrow(
-        parse, "url string, warc_ts_raw string, text string, nbytes long")
+    out = map_rows(files, ["content"], "url string, warc_ts_raw string, "
+                   "text string, nbytes long", parse)
     return out.select(
         "url",
         F.to_timestamp("warc_ts_raw").alias("warc_ts"),
@@ -273,37 +257,19 @@ def read_wat(spark: SparkSession, path: str,
     import json as _json
     files = _shard_files(spark, path, glob)
 
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls, tss, metas, sizes = [], [], [], []
-            for blob in batch.column("content").to_pylist():
-                for member in _safe_iter(_split_gzip_members(blob or b"")):
-                    for rec in _safe_iter(_parse_warc_records(member)):
-                        if rec["type"] != "metadata" or not rec["url"]:
-                            continue
-                        try:
-                            # flatten INSIDE the guard: hostile
-                            # 1000-deep nesting raises RecursionError
-                            # from loads or the flatten walk — that
-                            # record must cost itself, not the task
-                            meta = dict(_flatten_wat(
-                                _json.loads(rec["body"])))
-                        except (ValueError, UnicodeDecodeError,
-                                RecursionError):
-                            continue
-                        urls.append(rec["url"])
-                        tss.append(rec["date"])
-                        metas.append(meta)
-                        sizes.append(len(rec["body"]))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(tss, pa.string()),
-                 pa.array(metas, pa.map_(pa.string(), pa.string())),
-                 pa.array(sizes, pa.int64())],
-                names=["url", "warc_ts_raw", "metadata", "nbytes"])
+    def parse(blob):
+        for rec in _records(blob, "metadata"):
+            try:
+                # flatten INSIDE the guard: hostile 1000-deep nesting
+                # raises RecursionError from loads or the flatten walk
+                # — that record must cost itself, not the task
+                meta = dict(_flatten_wat(_json.loads(rec["body"])))
+            except (ValueError, UnicodeDecodeError, RecursionError):
+                continue
+            yield rec["url"], rec["date"], meta, len(rec["body"])
 
-    out = files.mapInArrow(
-        parse, "url string, warc_ts_raw string, "
-               "metadata map<string,string>, nbytes long")
+    out = map_rows(files, ["content"], "url string, warc_ts_raw string, "
+                   "metadata map<string,string>, nbytes long", parse)
     return out.select(
         "url",
         F.to_timestamp("warc_ts_raw").alias("warc_ts"),

@@ -5,7 +5,7 @@ covered by the checkpoint/anti-join plane (job.py). This module adds
 the genuinely streaming variant for crawl-as-it-arrives deployments:
 
     readStream(file source of (url, html) parquet)
-      -> mapInArrow(extraction UDF)          [same kernel as batch]
+      -> extract_in_place (extraction UDF)   [same kernel as batch]
       -> writeStream(parquet sink, checkpointed, exactly-once)
 
 plus a watermarked windowed metrics stream (late-data tolerant), the
@@ -23,10 +23,9 @@ from functools import partial
 from pyspark.sql import SparkSession, functions as F
 
 from .html_extract import extract_html
-from .job import (_EXTRACT_DDL, _extract_batches, annotate_wat,
-                  annotate_wet, mix_decisions, pii_scrub_over,
-                  quality_decisions, url_filter_decisions,
-                  validate_signatures_over)
+from .job import (annotate_wat, annotate_wet, extract_in_place,
+                  mix_decisions, pii_scrub_over, quality_decisions,
+                  url_filter_decisions, validate_signatures_over)
 from .run import STAGES
 
 __all__ = ["stream_extract", "stream_extract_html", "stream_metrics",
@@ -239,9 +238,7 @@ def stream_extract(spark: SparkSession, input_dir: str,
     # docs/s; the rest of the gap to batch is per-micro-batch scheduling
     return _stream_map(
         spark, input_dir, checkpoint_dir, output_dir, available_now,
-        _schema("pdf"),
-        lambda src: src.mapInArrow(_extract_batches, _EXTRACT_DDL),
-        fan_out=True)
+        _schema("pdf"), extract_in_place, fan_out=True)
 
 
 def stream_extract_html(spark: SparkSession, input_dir: str,
