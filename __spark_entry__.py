@@ -34,6 +34,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for each query (omitted for the
-    hash-seed-dependent minhash/simhash ops -> rows-only check)."""
+    kern-dependent q_extract_spans -> rows-only check)."""
     from pdfio_spark.pipeline.queries import ORACLES
     return dict(ORACLES)

@@ -33,6 +33,8 @@ class UnsupportedEncryption(Exception):
 def rc4(key: bytes, data: bytes) -> bytes:
     """RC4 KSA+PRGA (reference has its own ksa/prga,
     /root/reference/src/LibCrypto.jl:972-985)."""
+    # not cryptography's ARC4: it takes only 5/7/8/10/16/20/24/32-byte
+    # keys, an object key is min(n + 5, 16) bytes (11 for /Length 48)
     S = list(range(256))
     j = 0
     klen = len(key)

@@ -31,7 +31,7 @@ import codecs
 import re
 from html.parser import HTMLParser
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..fixtures import chunk_text, sanitize
 from .maprows import map_rows
@@ -367,16 +367,3 @@ def extract_html(corpus: DataFrame) -> DataFrame:
     return map_rows(corpus, ["url", "html"],
                     "url string, title string, main_text string, "
                     "n_blocks long, status string", run)
-
-
-def html_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage/metrics for the HTML job — the checkpoint
-    payload, mirroring job.extraction_metrics for the PDF path."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_blocks").alias("sum_blocks"),
-                 F.sum(F.length("main_text")).alias("sum_chars"),
-                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
-                  .alias("n_ok")))

@@ -28,7 +28,7 @@ from ..fixtures import FIXTURE_CLASSES, build_fixture, chunk_text, sanitize
 from .maprows import map_rows
 
 __all__ = ["gen_pdf_corpus", "extract_pdfs", "extract_in_place",
-           "extraction_metrics", "resume_filter"]
+           "resume_filter"]
 
 # Output schema of the extraction stage (FIXTURES.md §5, spans optional)
 _EXTRACT_DDL = ("url string, n_pages int, text string, status string, "
@@ -277,23 +277,6 @@ def annotate_wet(corpus: DataFrame) -> DataFrame:
         .withColumn("err", F.lit(None).cast("string")))
 
 
-def wet_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the WET path (mirrors
-    extraction_metrics / html_metrics)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_chars_actual").alias("sum_chars"),
-                 # empty text splits to [''] -> ws_tokens 1; only ok
-                 # rows carry real tokens (r5 review: phantom +1/empty)
-                 F.sum(F.when(F.col("status") == "ok",
-                              F.col("ws_tokens")).otherwise(0))
-                  .alias("sum_tokens"),
-                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
-                  .alias("n_ok")))
-
-
 #: dotted prefix of the flattened HTTP-response half of a WAT
 #: envelope (sources._flatten_wat's key scheme)
 _WAT_HTTP = "Envelope.Payload-Metadata.HTTP-Response-Metadata."
@@ -331,20 +314,6 @@ def annotate_wat(corpus: DataFrame,
                     F.when(F.col("n_keys") > 0, "ok")
                     .otherwise("empty"))
         .withColumn("err", F.lit(None).cast("string")))
-
-
-def wat_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the WAT path (mirrors wet_metrics;
-    sums read only columns the output rows carry, so the crash
-    reconcile pass stays exact)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_keys").alias("sum_keys"),
-                 F.sum("nbytes").alias("sum_bytes"),
-                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
-                  .alias("n_ok")))
 
 
 def dedup_decisions(corpus: DataFrame) -> DataFrame:
@@ -394,20 +363,6 @@ def dedup_decisions(corpus: DataFrame) -> DataFrame:
                     .when(F.col("doc_id") != F.col("exact_keep"),
                           "exact_dup")
                     .otherwise("near_dup").alias("status")))
-
-
-def dedup_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the dedup path (mirrors
-    extraction_metrics): docs decided, kept, and dropped per class."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.col("is_kept").cast("int")).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "exact_dup", 1)
-                       .otherwise(0)).alias("n_exact_dup"),
-                 F.sum(F.when(F.col("status") == "near_dup", 1)
-                       .otherwise(0)).alias("n_near_dup")))
 
 
 def build_dedup_index(reference: DataFrame, index_path: str,
@@ -477,8 +432,8 @@ def dedup_against(corpus: DataFrame,
     Decisions are doc-local GIVEN the frozen reference, so the
     standard per-url resume anti-join applies (NOT corpus_global).
 
-    status: kept | exact_dup | near_dup (shares dedup_metrics via
-    the is_kept column)."""
+    status: kept | exact_dup | near_dup (shares the dedup mode's
+    metrics counters via the is_kept column)."""
     if (reference is None) == (index_path is None):
         raise ValueError("pass exactly one of reference / index_path")
     from .queries import minhash_band_melt
@@ -593,35 +548,6 @@ def substrdedup_decisions(corpus: DataFrame) -> DataFrame:
         "n_tokens")
 
 
-def linededup_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for --mode linededup: docs decided and
-    touched, line totals in/out — output-borne columns only, so the
-    crash reconcile pass stays exact (the wat_metrics rule)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("status") == "deduped", 1)
-                       .otherwise(0)).alias("n_deduped"),
-                 F.sum("n_lines").alias("n_lines"),
-                 F.sum("n_kept").alias("n_kept")))
-
-
-def substrdedup_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for --mode substrdedup: docs decided and
-    touched, token totals in/out plus duplicated-span starts —
-    output-borne columns only (the wat_metrics rule)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("status") == "deduped", 1)
-                       .otherwise(0)).alias("n_deduped"),
-                 F.sum("n_tokens").alias("n_tokens"),
-                 F.sum("n_dup_starts").alias("n_dup_starts"),
-                 F.sum("n_kept").alias("n_kept")))
-
-
 def semdedup_decisions(corpus: DataFrame, k: int | None = None,
                        iters: int | None = None,
                        tau: float | None = None,
@@ -672,19 +598,6 @@ def semdedup_decisions(corpus: DataFrame, k: int | None = None,
             .select("url", "c_id", "c_sim", "keep_url", "is_kept",
                     F.when(F.col("is_kept"), "kept")
                     .otherwise("sem_dup").alias("status")))
-
-
-def semdedup_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for --mode semdedup — output-borne
-    columns only (the wat_metrics rule): docs decided, kept, and
-    dropped as semantic dups."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.col("is_kept").cast("int")).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "sem_dup", 1)
-                       .otherwise(0)).alias("n_sem_dup")))
 
 
 # output of the corpus writers rewrite_pdfs and append_updates
@@ -860,8 +773,8 @@ def validate_signatures_over(corpus: DataFrame,
     return map_rows(corpus, ["url", "html"], ddl, sigs)
 
 
-#: reason tags quality_decisions can emit — filter_metrics aggregates
-#: one counter per tag, so the two stay in one place
+#: reason tags quality_decisions can emit — the filter mode's metrics
+#: hold one counter per tag, so the two stay in one place
 QUALITY_REASONS = ("too_few_words", "too_many_words", "punct_ratio",
                    "low_stopword_ratio", "lang", "dup_words",
                    "repetition")
@@ -901,7 +814,7 @@ def quality_decisions(corpus: DataFrame,
                  *repetition_metric_cols()))
     # one condition per QUALITY_REASONS tag, looked up BY the constant
     # (a drifted tag raises KeyError here instead of leaving its
-    # filter_metrics counter permanently 0 — r6 review)
+    # metrics counter permanently 0 — r6 review)
     conds = {
         "too_few_words": F.col("n_words") < min_words,
         "too_many_words": F.col("n_words") > max_words,
@@ -919,23 +832,6 @@ def quality_decisions(corpus: DataFrame,
     return (m.withColumn("reasons", reasons)
             .withColumn("status", F.when(F.size("reasons") == 0,
                                          "kept").otherwise("dropped")))
-
-
-def filter_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the quality-filter path: docs
-    decided, kept, and one counter per reason tag (a doc tripping two
-    rules counts in both) — reads only output-borne columns, so the
-    crash reconcile pass stays exact (the wat_metrics rule)."""
-    aggs = [F.count("*").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "kept", 1).otherwise(0))
-             .alias("n_kept")]
-    for r in QUALITY_REASONS:
-        aggs.append(
-            F.sum(F.when(F.array_contains("reasons", r), 1)
-                  .otherwise(0)).alias(f"n_{r}"))
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id").agg(*aggs))
 
 
 #: PII categories scrubbed by pii_scrub_over, in APPLICATION ORDER —
@@ -991,22 +887,6 @@ def pii_scrub_over(corpus: DataFrame) -> DataFrame:
     return (out.withColumn("n_pii", n_pii)
             .withColumn("status", F.when(F.col("n_pii") > 0, "scrubbed")
                         .otherwise("clean")))
-
-
-def pii_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the PII-scrub path: docs processed,
-    docs touched, and one counter per category — sums read only
-    output-borne columns, so the crash reconcile pass stays exact
-    (the wat_metrics rule)."""
-    aggs = [F.count("*").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "scrubbed", 1).otherwise(0))
-             .alias("n_scrubbed"),
-            F.sum("n_pii").alias("n_pii")]
-    for cat in PII_CATEGORIES:
-        aggs.append(F.sum(f"n_{cat}").alias(f"n_{cat}"))
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id").agg(*aggs))
 
 
 #: second-level public suffixes the registrable-domain heuristic
@@ -1197,18 +1077,6 @@ def urldedup_decisions(corpus: DataFrame) -> DataFrame:
                     .otherwise("url_dup").alias("status")))
 
 
-def urldedup_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for --mode urldedup — output-borne
-    columns only."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.col("is_kept").cast("int")).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "url_dup", 1)
-                       .otherwise(0)).alias("n_url_dup")))
-
-
 def mix_decisions(corpus: DataFrame, weights=None,
                   default_rate: float = 1.0,
                   seed: int = 0,
@@ -1319,23 +1187,6 @@ def mix_apply(corpus: DataFrame, decisions: DataFrame) -> DataFrame:
             .withColumn("copy", F.explode(
                 F.sequence(F.lit(0), F.col("n_copies") - 1)))
             .drop("n_copies"))
-
-
-def mix_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for --mode mix — output-borne columns
-    only: rows decided per class and the materialized copy mass
-    (sum n_copies = the output corpus size mix_apply would produce)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("status") == "dropped", 1)
-                       .otherwise(0)).alias("n_dropped"),
-                 F.sum(F.when(F.col("status") == "kept", 1)
-                       .otherwise(0)).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "upsampled", 1)
-                       .otherwise(0)).alias("n_upsampled"),
-                 F.sum("n_copies").alias("n_copies_out")))
 
 
 def shard_export(corpus: DataFrame, output_path: str,
@@ -1572,22 +1423,6 @@ def domain_cap_decisions(corpus: DataFrame,
             .select(*out_cols))
 
 
-def domaincap_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the domain-cap path — sums read only
-    output-borne columns, so the crash reconcile pass stays exact
-    (the wat_metrics rule). Deliberately no distinct-domain counter:
-    per-partition distincts are not sum-exact across partitionings,
-    which would break reconcile."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("status") == "kept", 1)
-                       .otherwise(0)).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "dropped", 1)
-                       .otherwise(0)).alias("n_capped")))
-
-
 #: tokens per decontamination gram — the GPT-3 Appendix C choice
 #: (13-gram overlap against evaluation sets)
 DECONTAM_K = 13
@@ -1688,81 +1523,6 @@ def decontam_decisions(corpus: DataFrame, benchmark,
                         .otherwise(F.array().cast("array<string>")))
             .withColumn("status", F.when(dropped, "dropped")
                         .otherwise("kept")))
-
-
-def decontam_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the decontamination path — sums read
-    only output-borne columns, so the crash reconcile pass stays
-    exact (the wat_metrics rule)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("status") == "kept", 1)
-                       .otherwise(0)).alias("n_kept"),
-                 F.sum(F.when(F.col("status") == "dropped", 1)
-                       .otherwise(0)).alias("n_contaminated"),
-                 F.sum("n_contam_grams").alias("n_contam_grams"),
-                 F.sum("n_contam_spans").alias("n_contam_spans")))
-
-
-def urlfilter_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the URL-gate path: docs, kept, one
-    counter per URL_REASONS tag — sums read only output-borne
-    columns, so the crash reconcile pass stays exact (the
-    wat_metrics rule)."""
-    aggs = [F.count("*").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "kept", 1).otherwise(0))
-             .alias("n_kept")]
-    for r in URL_REASONS:
-        aggs.append(
-            F.sum(F.when(F.array_contains("reasons", r), 1)
-                  .otherwise(0)).alias(f"n_{r}"))
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id").agg(*aggs))
-
-
-def sigaudit_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage for the signature-audit path: output
-    rows, SIGNATURE rows (status='ok' — a 3-signature doc contributes
-    3, this is per-signature, not per-doc), pass/revoked/untrusted
-    classes, and the nosig/error doc tallies — sums read only columns
-    the output rows carry, so the crash reconcile pass stays exact
-    (the wat_metrics rule)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
-                  .alias("n_sigs"),
-                 F.sum(F.when(F.col("passed"), 1).otherwise(0))
-                  .alias("n_passed"),
-                 F.sum(F.when(
-                     F.col("err") == "revoked signer certificate", 1)
-                     .otherwise(0)).alias("n_revoked"),
-                 F.sum(F.when(
-                     F.col("err") == "untrusted signer certificate", 1)
-                     .otherwise(0)).alias("n_untrusted"),
-                 F.sum(F.when(F.col("status") == "nosig", 1)
-                       .otherwise(0)).alias("n_nosig"),
-                 F.sum(F.when(F.col("status") == "error", 1)
-                       .otherwise(0)).alias("n_error")))
-
-
-def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage/metrics rows — the checkpoint payload
-    (SURVEY §2.1 S10). Written per batch to the metrics table; resume
-    anti-joins the urls already in the output (resume_filter)."""
-    return (extracted
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("nbytes").alias("sum_bytes"),
-                 F.sum("n_pages").alias("sum_pages"),
-                 F.max("dur_us").alias("max_dur_us"),
-                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0))
-                  .alias("n_ok")))
 
 
 def resume_filter(corpus: DataFrame, done_urls: DataFrame) -> DataFrame:

@@ -2811,30 +2811,9 @@ FROM kk ORDER BY doc_id
 """
 
 
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash (32-bit) per doc: token hash bit-vote, JVM expressions
-    only. Rows-only check (bit arithmetic differs across engines)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+")
-    tok = docs.select("doc_id", F.explode(words).alias("w"))
-    tok = tok.withColumn("h", F.xxhash64("w"))
-    bit_cols = [
-        F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1,
-                     1).otherwise(-1)).alias(f"b{i}")
-        for i in range(32)]
-    votes = tok.groupBy("doc_id").agg(*bit_cols)
-    sim_expr = None
-    for i in range(32):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(2 ** i)).otherwise(F.lit(0))
-        sim_expr = bit if sim_expr is None else sim_expr + bit
-    return (votes.select("doc_id", sim_expr.cast("long").alias("simhash32"))
-            .orderBy("doc_id"))
-
-
 def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable SimHash (16-bit, md5-derived token hashes) so the
-    fingerprints themselves are oracle-verified; q_dedup_simhash stays
-    the fast 32-bit xxhash64 production variant."""
+    fingerprints themselves are oracle-verified."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+")
     tok = docs.select("doc_id", F.explode(words).alias("w"))
@@ -3876,11 +3855,10 @@ QUERIES = {
     "q_html_main": q_html_main,
     # rows-only tail (hash-seed- or kern-dependent; each has an oracled
     # twin above: _md5 variants, q_extract_spans_courier).
-    # q_dedup_simhash and q_dedup_minhash retired from the registry in
-    # r6 to free slots for the fully-oracled q_line_dedup and
-    # q_substr_dedup (the 50-entry cap); both functions remain the
-    # fast xxhash production variants, covered by their _md5 oracled
-    # twins + pytests.
+    # q_dedup_minhash left the registry in r6 to free a slot for the
+    # fully-oracled q_substr_dedup (the 50-entry cap); it remains the
+    # fast xxhash production variant (bench.py resolves it from the
+    # module), covered by its _md5 oracled twin + pytests.
     "q_extract_spans": q_extract_spans,
 }
 

@@ -6,13 +6,15 @@
         [--resume] [--cpus N] [--mode MODE] [--<mode>-opts JSON]
 
 Every --mode is one row of STAGES below, in one place: its operator,
-its metrics aggregate, the input columns its scan prunes to (also the
-source schema of its streaming twin in streaming.py), whether its
-decisions are corpus-global, its options kwarg and a one-line
-description (`--help` lists them). --mode pdf (default) runs the full
-PDF parse stack. All modes share the resume/metrics/run_id-reconcile
-contract (corpus-global resume re-derives the decisions over the full
-input and appends only unwritten rows — see run_job).
+its lineage counters (Spark SQL aggregates over output-borne columns,
+which `lineage` applies per partition and stamps with the run), the
+input columns its scan prunes to (also the source schema of its
+streaming twin in streaming.py), whether its decisions are
+corpus-global, its options kwarg and a one-line description (`--help`
+lists them). --mode pdf (default) runs the full PDF parse stack. All
+modes share the resume/metrics/run_id-reconcile contract
+(corpus-global resume re-derives the decisions over the full input and
+appends only unwritten rows — see run_job).
 
 Input is the Common-Crawl-style table of the north rule (the binary
 `html` column carries PDF bytes). The job:
@@ -44,18 +46,15 @@ if __name__ == "__main__" and __package__ in (None, ""):
 import inspect
 from typing import Callable, NamedTuple
 
-from .html_extract import extract_html, html_metrics
-from .job import (annotate_wat, annotate_wet, decontam_decisions,
-                  decontam_metrics, dedup_against, dedup_decisions,
-                  dedup_metrics, domain_cap_decisions, domaincap_metrics,
-                  extract_pdfs, extraction_metrics, filter_metrics,
-                  linededup_decisions, linededup_metrics, mix_decisions,
-                  mix_metrics, pii_metrics, pii_scrub_over,
-                  quality_decisions, resume_filter, semdedup_decisions,
-                  semdedup_metrics, sigaudit_metrics, substrdedup_decisions,
-                  substrdedup_metrics, url_filter_decisions,
-                  urldedup_decisions, urldedup_metrics, urlfilter_metrics,
-                  validate_signatures_over, wat_metrics, wet_metrics)
+from .html_extract import extract_html
+from .job import (PII_CATEGORIES, QUALITY_REASONS, URL_REASONS,
+                  annotate_wat, annotate_wet, decontam_decisions,
+                  dedup_against, dedup_decisions, domain_cap_decisions,
+                  extract_pdfs, linededup_decisions, mix_decisions,
+                  pii_scrub_over, quality_decisions, resume_filter,
+                  semdedup_decisions, substrdedup_decisions,
+                  url_filter_decisions, urldedup_decisions,
+                  validate_signatures_over)
 
 
 class Stage(NamedTuple):
@@ -63,7 +62,9 @@ class Stage(NamedTuple):
     (args, kw) is `prep(spark, opts)` when set (side inputs read before
     the job starts) and ((), opts) otherwise."""
     op: Callable
-    metrics: Callable
+    # the lineage counters: Spark SQL aggregates over the output rows,
+    # one metrics row per partition (see lineage)
+    metrics: tuple
     # "name type" fields the scan prunes to (a function of the options
     # where they decide the columns); also the streaming twin's schema
     cols: tuple | Callable = ("url string", "html binary")
@@ -86,6 +87,28 @@ class Stage(NamedTuple):
 
 
 _TEXT = ("url string", "text string")
+
+_DOCS = "count(*) AS n_docs"
+_KEPT = "sum(cast(is_kept AS int)) AS n_kept"
+
+
+# counters are sum(if(..)), not count_if: the metrics schema keeps them
+# nullable (count_if is NOT NULL)
+def _is(status: str, name: str = "") -> str:
+    return f"sum(if(status = '{status}', 1, 0)) AS {name or 'n_' + status}"
+
+
+def _tagged(tags) -> tuple:
+    # a row tripping two rules counts in both
+    return tuple(f"sum(if(array_contains(reasons, '{t}'), 1, 0)) AS n_{t}"
+                 for t in tags)
+
+
+def _sums(*cols) -> tuple:
+    return tuple(f"sum({c}) AS {c}" for c in cols)
+
+
+_DEDUP = (_DOCS, _KEPT, _is("exact_dup"), _is("near_dup"))
 
 
 def _domaincap_cols(o):
@@ -127,31 +150,48 @@ def _dedupref_prep(spark, o):
 
 STAGES: dict[str, Stage] = {
     "pdf": Stage(
-        extract_pdfs, extraction_metrics,
+        extract_pdfs,
+        (_DOCS, "sum(nbytes) AS sum_bytes", "sum(n_pages) AS sum_pages",
+         "max(dur_us) AS max_dur_us", _is("ok")),
         doc="full PDF parse stack over (url, html = PDF bytes), "
             "split-path skew topology"),
     "html": Stage(
-        extract_html, html_metrics,
+        extract_html,
+        (_DOCS, "sum(n_blocks) AS sum_blocks",
+         "sum(length(main_text)) AS sum_chars", _is("ok")),
         doc="web-page boilerplate strip over the same table shape"),
     "wet": Stage(
-        annotate_wet, wet_metrics, _TEXT,
+        annotate_wet,
+        # empty text splits to [''] -> ws_tokens 1; only ok rows carry
+        # real tokens (r5 review: phantom +1/empty)
+        (_DOCS, "sum(n_chars_actual) AS sum_chars",
+         "sum(if(status = 'ok', ws_tokens, 0)) AS sum_tokens", _is("ok")),
+        _TEXT,
         doc="pre-extracted text (sources.read_wet) annotated with the "
             "oracle-verified analytics set"),
     "wat": Stage(
-        annotate_wat, wat_metrics,
+        annotate_wat,
+        (_DOCS, "sum(n_keys) AS sum_keys", "sum(nbytes) AS sum_bytes",
+         _is("ok")),
         ("url string", "metadata map<string,string>", "nbytes long"),
         doc="flattened crawl metadata (sources.read_wat) -> typed "
             "content type / server / status / link count / title"),
     "dedup": Stage(
-        dedup_decisions, dedup_metrics, _TEXT, True,
+        dedup_decisions, _DEDUP, _TEXT, True,
         doc="composed exact + near-dup keep decisions over (url, text)"),
     # material from --trust-pems/--crl-pems/--ocsp-ders (read once,
     # shipped in task closures) or each executor's $PDFIO_SPARK_* env;
     # a typo'd 'crl_blobs' would otherwise silently audit WITHOUT
     # revocation checking, so the keys are pinned (export_certs is not
-    # a mode key)
+    # a mode key). Output rows are per signature: n_sigs counts a
+    # 3-signature doc 3 times; nosig/error rows are per doc.
     "sigaudit": Stage(
-        validate_signatures_over, sigaudit_metrics,
+        validate_signatures_over,
+        ("count(*) AS n_rows", _is("ok", "n_sigs"),
+         "sum(if(passed, 1, 0)) AS n_passed",
+         "sum(if(err = 'revoked signer certificate', 1, 0)) AS n_revoked",
+         "sum(if(err = 'untrusted signer certificate', 1, 0)) "
+         "AS n_untrusted", _is("nosig"), _is("error")),
         opts_kw="sig_material",
         keys=("trust_pems", "crl_blobs", "ocsp_ders"),
         doc="corpus-scale signature audit over (url, html), trust and "
@@ -161,53 +201,88 @@ STAGES: dict[str, Stage] = {
     # EXPECTED to tune them (100%-drop on synthetic short-text corpora
     # is faithful, not a bug)
     "filter": Stage(
-        quality_decisions, filter_metrics, _TEXT, opts_kw="filter_opts",
+        quality_decisions, (_DOCS, _is("kept"), *_tagged(QUALITY_REASONS)),
+        _TEXT, opts_kw="filter_opts",
         doc="Gopher/C4-style quality gate: keep decisions with "
             "per-rule reason tags, map-only"),
     "pii": Stage(
-        pii_scrub_over, pii_metrics, _TEXT,
+        pii_scrub_over,
+        (_DOCS, _is("scrubbed"),
+         *_sums("n_pii", *(f"n_{c}" for c in PII_CATEGORIES))),
+        _TEXT,
         doc="PII redaction plus per-category counters, map-only"),
     "urlfilter": Stage(
-        url_filter_decisions, urlfilter_metrics, ("url string",),
-        opts_kw="url_opts",
+        url_filter_decisions, (_DOCS, _is("kept"), *_tagged(URL_REASONS)),
+        ("url string",), opts_kw="url_opts",
         doc="URL gate before any content is read (--blocked-domains "
             "merges a list read from a file into url_opts)"),
     "decontam": Stage(
-        decontam_decisions, decontam_metrics, _TEXT, opts_kw="decontam_opts",
+        decontam_decisions,
+        (_DOCS, _is("kept"), _is("dropped", "n_contaminated"),
+         *_sums("n_contam_grams", "n_contam_spans")),
+        _TEXT, opts_kw="decontam_opts",
         keys=("benchmark_path", "benchmark_texts", "k", "min_hits"),
         prep=_decontam_prep,
         doc="benchmark decontamination: drop docs sharing a k-token "
             "span with an evaluation set"),
-    # a domain's keep set depends on every other doc in it
+    # a domain's keep set depends on every other doc in it; no
+    # distinct-domain counter (see lineage)
     "domaincap": Stage(
-        domain_cap_decisions, domaincap_metrics, _domaincap_cols, True,
-        opts_kw="domaincap_opts",
+        domain_cap_decisions,
+        (_DOCS, _is("kept"), _is("dropped", "n_capped")),
+        _domaincap_cols, True, opts_kw="domaincap_opts",
         doc="per-registrable-domain document or token cap"),
     "linededup": Stage(
-        linededup_decisions, linededup_metrics, _TEXT, True,
+        linededup_decisions,
+        (_DOCS, _is("deduped"), *_sums("n_lines", "n_kept")), _TEXT, True,
         doc="C4 corpus-level line dedup"),
     "substrdedup": Stage(
-        substrdedup_decisions, substrdedup_metrics, _TEXT, True,
+        substrdedup_decisions,
+        (_DOCS, _is("deduped"),
+         *_sums("n_tokens", "n_dup_starts", "n_kept")), _TEXT, True,
         doc="exact-substring dedup"),
     "semdedup": Stage(
-        semdedup_decisions, semdedup_metrics,
+        semdedup_decisions, (_DOCS, _KEPT, _is("sem_dup")),
         ("url string", "embedding array<float>"), True,
         opts_kw="semdedup_opts",
         doc="SemDeDup embedding-cluster semantic dedup over "
             "(url, embedding)"),
+    # n_copies_out: the corpus size mix_apply would produce
     "mix": Stage(
-        mix_decisions, mix_metrics, _mix_cols, opts_kw="mix_opts",
+        mix_decisions,
+        (_DOCS, _is("dropped"), _is("kept"), _is("upsampled"),
+         "sum(n_copies) AS n_copies_out"),
+        _mix_cols, opts_kw="mix_opts",
         doc="data-mixture sampling: per-key rates (registrable domain "
             "or key_col), deterministic down/upsampling, map-only"),
     "dedupref": Stage(
-        dedup_against, dedup_metrics, _TEXT, opts_kw="dedupref_opts",
+        dedup_against, _DEDUP, _TEXT, opts_kw="dedupref_opts",
         keys=("reference_path", "index_path"), prep=_dedupref_prep,
         doc="decide a NEW crawl against a FROZEN kept corpus, "
             "doc-local given the reference"),
     "urldedup": Stage(
-        urldedup_decisions, urldedup_metrics, ("url string",), True,
+        urldedup_decisions, (_DOCS, _KEPT, _is("url_dup")),
+        ("url string",), True,
         doc="collapse recrawls of the same resource by normalized url"),
 }
+
+
+def lineage(extracted, mode: str, run_id: str, reconciled: bool = False):
+    """The metrics rows of one run of `mode` over its output rows: the
+    stage's counters per partition (the checkpoint payload, SURVEY
+    §2.1 S10), stamped with the run."""
+    from pyspark.sql import functions as F
+    # every counter reads only columns the output rows carry, so
+    # reconcile recomputes it exactly from the committed output; and
+    # none is a per-partition distinct, which would not sum exactly
+    # across the resume read's partitioning
+    return (extracted
+            .withColumn("partition_id", F.spark_partition_id())
+            .groupBy("partition_id")
+            .agg(*(F.expr(a) for a in STAGES[mode].metrics))
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("reconciled", F.lit(reconciled))
+            .withColumn("ts", F.current_timestamp()))
 
 
 def make_cc_table(docs, classes=None):
@@ -318,7 +393,7 @@ def run_job(spark, input_path: str, output_path: str,
             corpus = resume_filter(corpus, prev.select("url"))
         if metrics_path:
             _reconcile_metrics(spark, prev, output_path, metrics_path,
-                               stage.metrics)
+                               mode)
 
     t0 = time.perf_counter()
     extracted = stage.op(corpus, *args, **kw)
@@ -374,18 +449,15 @@ def run_job(spark, input_path: str, output_path: str,
     # the reconcile pass above covers the opposite loss (output
     # committed, metrics not)
     if metrics_path:
-        stage.metrics(extracted.drop("run_id")) \
-            .withColumn("run_id", F.lit(rid)) \
-            .withColumn("reconciled", F.lit(False)) \
-            .withColumn("ts", F.current_timestamp()) \
-            .write.mode("append").parquet(metrics_path)
+        lineage(extracted, mode, rid).write.mode("append") \
+            .parquet(metrics_path)
     wall = time.perf_counter() - t0
     return {"written": sum(stats.values()), "by_status": stats,
             "run_id": rid, "wall_sec": round(wall, 2)}
 
 
 def _reconcile_metrics(spark, prev_output, output_path: str,
-                       metrics_path: str, metrics_fn) -> None:
+                       metrics_path: str, mode: str) -> None:
     """Append recomputed metrics rows for run_ids whose output
     committed but whose metrics append never ran (crash in between).
     Exact, not estimated: output rows carry every column the metrics
@@ -410,11 +482,7 @@ def _reconcile_metrics(spark, prev_output, output_path: str,
     # the aggregate needs the output's other columns: infer them now
     full = spark.read.option("mergeSchema", True).parquet(output_path)
     for rid in orphans:
-        one = full.filter(F.col("run_id") == rid).drop("run_id")
-        metrics_fn(one) \
-            .withColumn("run_id", F.lit(rid)) \
-            .withColumn("reconciled", F.lit(True)) \
-            .withColumn("ts", F.current_timestamp()) \
+        lineage(full.filter(F.col("run_id") == rid), mode, rid, True) \
             .write.mode("append").parquet(metrics_path)
 
 

@@ -10,8 +10,9 @@ import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
-from pdfio_spark.pipeline.job import (extract_pdfs, extraction_metrics,
-                                      gen_pdf_corpus, resume_filter)
+from pdfio_spark.pipeline.job import (extract_pdfs, gen_pdf_corpus,
+                                      resume_filter)
+from pdfio_spark.pipeline.run import lineage
 from pdfio_spark.pipeline.session import get_spark
 
 
@@ -39,7 +40,7 @@ def test_extraction_all_ok(spark, corpus):
 
 
 def test_extraction_metrics(spark, corpus):
-    m = extraction_metrics(extract_pdfs(corpus)).collect()
+    m = lineage(extract_pdfs(corpus), "pdf", "t").collect()
     assert sum(r["n_docs"] for r in m) == 60
     assert all(r["n_ok"] == r["n_docs"] for r in m)
 
@@ -1152,8 +1153,7 @@ def test_mix_decisions_and_run_job_mix_mode(spark, tmp_path):
     (n_copies = floor(rate) + fractional coin), under the full
     resume/metrics/run_id contract; mix_apply materializes copies."""
     from pyspark.sql import functions as F
-    from pdfio_spark.pipeline.job import (mix_apply, mix_decisions,
-                                          mix_metrics)
+    from pdfio_spark.pipeline.job import mix_apply, mix_decisions
     from pdfio_spark.pipeline.run import run_job
     rows = ([(f"https://en.heavy.com/a{i}",) for i in range(40)]
             + [(f"https://light.com/b{i}",) for i in range(10)]
@@ -1207,7 +1207,7 @@ def test_mix_decisions_and_run_job_mix_mode(spark, tmp_path):
             .collect())
     assert all(list(r.ix) == list(range(r.n)) for r in cgrp)
     # metrics identity: copy mass out equals the applied count
-    msum = mix_metrics(dec).agg(
+    msum = lineage(dec, "mix", "t").agg(
         F.sum("n_docs"), F.sum("n_copies_out")).collect()[0]
     assert (msum[0], msum[1]) == (92, total)
     # validation: negative rate fails driver-side — BOTH forms (the
@@ -2214,7 +2214,7 @@ def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
         dedup_against(new)
 
     # production contract: doc-local resume (only appended input
-    # re-decided), metrics via the shared dedup_metrics
+    # re-decided), metrics via the dedup mode's shared counters
     inp, refp, outp, met = (str(tmp_path / p) for p in
                             ("dr_in", "dr_ref", "dr_out", "dr_met"))
     new.write.parquet(inp)
@@ -2452,41 +2452,6 @@ def test_stream_substr_dedup(spark, tmp_path):
         df4, out2.filter("NOT kept AND doc_id = 4")
         .select("doc_id", "pos"), k=K).collect()[0]
     assert (d4.n_tokens, d4.text_out) == (8, "fresh tokens here now")
-
-
-def test_dedup_simhash_production_variant(spark):
-    """q_dedup_simhash left the registry in r6 (slot freed for the
-    oracled q_line_dedup) but remains the fast 32-bit production
-    variant — pin its shape and its agreement with the oracled md5
-    twin on WHICH docs collide (identical texts -> identical
-    fingerprints in both)."""
-    from pdfio_spark.pipeline.queries import q_dedup_simhash
-    sf = "/root/testdata/sf0.001"
-    fast = q_dedup_simhash(spark, sf).collect()
-    assert all(0 <= r.simhash32 < 2 ** 32 for r in fast)
-    assert len(fast) == len({r.doc_id for r in fast}) > 0
-    # deterministic across conversions (no seed/HOF-index hazard:
-    # the bit votes come from a plain xxhash64 column, not a lambda)
-    again = q_dedup_simhash(spark, sf).collect()
-    assert {(r.doc_id, r.simhash32) for r in again} == \
-        {(r.doc_id, r.simhash32) for r in fast}
-    # docs sharing a fingerprint must actually share their token
-    # MULTISET's bit votes — verify one collision group end-to-end
-    # against a driver-side recompute of the voting rule
-    import pyspark.sql.functions as F
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    words = F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))),
-                    r"\s+")
-    tok = (docs.select("doc_id", F.explode(words).alias("w"))
-           .withColumn("h", F.xxhash64("w")).collect())
-    votes = {}
-    for r in tok:
-        b = votes.setdefault(r.doc_id, [0] * 32)
-        for i in range(32):
-            b[i] += 1 if (r.h >> i) & 1 else -1
-    expect = {d: sum(1 << i for i in range(32) if v[i] > 0)
-              for d, v in votes.items()}
-    assert {r.doc_id: r.simhash32 for r in fast} == expect
 
 
 def test_dedup_decisions_recrawl_changed_body_deterministic(spark):
@@ -3314,3 +3279,105 @@ def test_dedup_keep_list_collapses_cliques(spark):
     reps_pairs = Q._minhash_md5_candidates(
         spark.createDataFrame([(0, norm)], "doc_id long, text string"))
     assert reps_pairs.count() == 0
+
+
+# Every mode's metrics table as written: partition_id, the stage's
+# counters, then the run stamp. Readers of the table (these tests,
+# tools/soak.py n_copies_out) depend on the names, order, types and
+# nullability; the NOT NULL fields are partition_id, the stage's
+# count(*) and the stamp.
+_METRICS_COUNTERS = {
+    "pdf": "n_docs:bigint,sum_bytes:bigint,sum_pages:bigint,"
+           "max_dur_us:bigint,n_ok:bigint",
+    "html": "n_docs:bigint,sum_blocks:bigint,sum_chars:bigint,n_ok:bigint",
+    "wet": "n_docs:bigint,sum_chars:bigint,sum_tokens:bigint,n_ok:bigint",
+    "wat": "n_docs:bigint,sum_keys:bigint,sum_bytes:bigint,n_ok:bigint",
+    "dedup": "n_docs:bigint,n_kept:bigint,n_exact_dup:bigint,"
+             "n_near_dup:bigint",
+    "sigaudit": "n_rows:bigint,n_sigs:bigint,n_passed:bigint,"
+                "n_revoked:bigint,n_untrusted:bigint,n_nosig:bigint,"
+                "n_error:bigint",
+    "filter": "n_docs:bigint,n_kept:bigint,n_too_few_words:bigint,"
+              "n_too_many_words:bigint,n_punct_ratio:bigint,"
+              "n_low_stopword_ratio:bigint,n_lang:bigint,"
+              "n_dup_words:bigint,n_repetition:bigint",
+    "pii": "n_docs:bigint,n_scrubbed:bigint,n_pii:bigint,n_email:bigint,"
+           "n_ssn:bigint,n_ipv4:bigint,n_phone:bigint",
+    "urlfilter": "n_docs:bigint,n_kept:bigint,n_bad_scheme:bigint,"
+                 "n_no_host:bigint,n_url_too_long:bigint,"
+                 "n_blocked_domain:bigint,n_blocked_token:bigint",
+    "decontam": "n_docs:bigint,n_kept:bigint,n_contaminated:bigint,"
+                "n_contam_grams:bigint,n_contam_spans:bigint",
+    "domaincap": "n_docs:bigint,n_kept:bigint,n_capped:bigint",
+    "linededup": "n_docs:bigint,n_deduped:bigint,n_lines:bigint,"
+                 "n_kept:bigint",
+    "substrdedup": "n_docs:bigint,n_deduped:bigint,n_tokens:bigint,"
+                   "n_dup_starts:bigint,n_kept:bigint",
+    "semdedup": "n_docs:bigint,n_kept:bigint,n_sem_dup:bigint",
+    "mix": "n_docs:bigint,n_dropped:bigint,n_kept:bigint,"
+           "n_upsampled:bigint,n_copies_out:bigint",
+    "dedupref": "n_docs:bigint,n_kept:bigint,n_exact_dup:bigint,"
+                "n_near_dup:bigint",
+    "urldedup": "n_docs:bigint,n_kept:bigint,n_url_dup:bigint",
+}
+
+
+@pytest.fixture(scope="module")
+def every_mode_input(spark, tmp_path_factory):
+    """One small table carrying the columns of every mode's scan."""
+    from pdfio_spark.fixtures import build_fixture
+    tmp = tmp_path_factory.mktemp("every_mode")
+    texts = ["the cat sat on the mat and the dog ran away home",
+             "email me at a@b.com or call 555-123-4567 today please",
+             "the cat sat on the mat and the dog ran away home",
+             "completely different words appear here in this doc"]
+    rows = [(f"https://www.s{i % 2}.com/p{i}",
+             build_fixture("flate_simple", [t]), t, {"k": "v"}, 100 + i,
+             [float(i == j) for j in range(4)])
+            for i, t in enumerate(texts)]
+    inp, ref = str(tmp / "in"), str(tmp / "ref")
+    spark.createDataFrame(
+        rows, "url string, html binary, text string, "
+        "metadata map<string,string>, nbytes long, "
+        "embedding array<double>").write.parquet(inp)
+    spark.createDataFrame([(texts[0],)], "text string").write.parquet(ref)
+    return tmp, inp, ref, texts
+
+
+@pytest.mark.parametrize("mode", sorted(_METRICS_COUNTERS))
+def test_metrics_table_schema(spark, every_mode_input, mode):
+    """The metrics schema each mode writes, read from the part file's
+    Spark row metadata (a parquet read back makes every field
+    nullable, so only the footer keeps the written nullability)."""
+    import glob
+    import json
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+    from pdfio_spark.pipeline.run import STAGES, run_job
+    assert set(_METRICS_COUNTERS) == set(STAGES)
+    tmp, inp, ref, texts = every_mode_input
+    opts = {
+        "decontam": {"decontam_opts": {"benchmark_texts":
+                     spark.createDataFrame([(texts[1],)], "text string"),
+                     "k": 3}},
+        "dedupref": {"dedupref_opts": {"reference_path": ref}},
+        "semdedup": {"semdedup_opts": {"k": 2, "iters": 1, "tau": 0.99}},
+    }.get(mode, {})
+    met = str(tmp / f"{mode}_met")
+    run_job(spark, inp, str(tmp / f"{mode}_out"), met, mode=mode,
+            run_id="m", **opts)
+    part = sorted(glob.glob(os.path.join(met, "*.parquet")))[0]
+    st = StructType.fromJson(json.loads(pq.read_schema(part).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"]))
+    counters = _METRICS_COUNTERS[mode]
+    assert st.simpleString() == (
+        f"struct<partition_id:int,{counters},"
+        "run_id:string,reconciled:boolean,ts:timestamp>")
+    names = ["partition_id", *(c.split(":")[0] for c in
+                               counters.split(",")),
+             "run_id", "reconciled", "ts"]
+    assert [f.name for f in st.fields] == names
+    assert spark.read.parquet(met).columns == names
+    not_null = {"partition_id", names[1], "run_id", "reconciled", "ts"}
+    assert {f.name: f.nullable for f in st.fields} == {
+        n: n not in not_null for n in names}

@@ -13,13 +13,15 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import json, os, sys, time
 # pin to exactly `cpus` cores: a real N-executor cluster gives each
 # executor dedicated cores; without pinning, the local[8] JVM borrows
 # the box's idle cores for shuffle/arrow work and inflates the baseline
 os.sched_setaffinity(0, set(range(int(sys.argv[1]))))
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from pyspark.sql import functions as F
 from pdfio_spark.pipeline.session import get_spark
 from pdfio_spark.pipeline.job import extract_pdfs, gen_pdf_corpus
@@ -51,9 +53,8 @@ spark.stop()
 
 def run(cpus: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, str(cpus)],
-        capture_output=True, text=True, timeout=1200,
-        cwd="/root/repo")
+        [sys.executable, "-c", CHILD, str(cpus), ROOT],
+        capture_output=True, text=True, timeout=1200, cwd=ROOT)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
             return json.loads(line)
@@ -84,8 +85,8 @@ def main() -> None:
 
     pair_2_8 = mkpair(best[2], best[8])
     pair_8_32 = mkpair(best[8], best[32])
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    path = "/root/repo/BENCH/scaling.json"
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    path = os.path.join(ROOT, "BENCH", "scaling.json")
     earlier = []
     # the VM shows double-digit run-to-run variance; the file records
     # the best-observed capability, not the latest noisy sample.

@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -137,8 +138,8 @@ def main() -> None:
         "cpus": cpus,
         "output_identical": checked,
     }
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/skew_crossover.json", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "skew_crossover.json"), "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
     spark.stop()
