@@ -57,12 +57,6 @@ def _aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     return dec.update(data) + dec.finalize()
 
 
-def _aes_ecb_decrypt_nopad(key: bytes, data: bytes) -> bytes:
-    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-    dec = Cipher(algorithms.AES(key), modes.ECB()).decryptor()
-    return dec.update(data) + dec.finalize()
-
-
 from .objects import str_bytes as _str_bytes  # canonical coercion
 
 

@@ -1560,7 +1560,3 @@ def build_fixture(cls: str, lines: list[str]) -> bytes:
         # v1 content is superseded; expected text is `lines` (v2)
         return make_incremental_pdf(["OLD CONTENT SUPERSEDED"], lines)
     raise ValueError(cls)
-
-
-def fixture_class_for(doc_id: int) -> str:
-    return FIXTURE_CLASSES[doc_id % len(FIXTURE_CLASSES)]

@@ -1215,21 +1215,51 @@ FROM m ORDER BY doc_id
 """
 
 
+def _fold(arr):
+    """0.0-seeded left fold (sum) of a double array — the one
+    summation order of every exact dot and norm below (_py_norm is its
+    driver-side twin)."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _dot(a, b):
+    """Dot product of two numeric arrays, element products in double.
+    A cast of an operand that is already double is optimized away, so
+    callers over double arrays get the same plan as a cast-free fold."""
+    return _fold(F.zip_with(
+        a, b, lambda x, y: x.cast("double") * y.cast("double")))
+
+
+def _norm(c):
+    """L2 norm of a numeric array (the fold _qn_sql spells in SQL)."""
+    return F.sqrt(_fold(F.transform(
+        c, lambda x: x.cast("double") * x.cast("double"))))
+
+
 def _cos_expr(a, b):
-    """Shared exact-cosine Column expression (zip_with/aggregate dot +
-    norms, round 6) for bruteforce / IVF / neardup — one formulation to
-    keep in lockstep with its SQL twin _SQL_COS (r5 review: three
-    hand-maintained copies). ann_lsh_topk_over intentionally differs —
-    it pre-normalizes in its checkpointed base."""
+    """Shared exact-cosine Column expression (dot / norms, round 6)
+    for bruteforce / IVF / PQ re-rank / neardup — kept in lockstep with
+    its SQL twin _SQL_COS. ann_lsh_topk_over and semdedup_over
+    pre-normalize in their checkpointed bases and pay one _dot."""
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-    nrm = lambda c: F.sqrt(F.aggregate(
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    return F.round(dot / (nrm(a) * nrm(b)), 6)
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _topk(df: DataFrame, key: str, score: str, tie: str,
+          k: int) -> DataFrame:
+    """The top-`k` rows per `key` by `score` DESC, ties to the lowest
+    `tie` (the family's ranking), rank 1..k in column `rk`."""
+    w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(tie))
+    return (df.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= k))
+
+
+def _probe_rows(probe_filter=None):
+    """The query rows of an ANN operator: `probe_filter`, default every
+    100th vec_id (the registry's probe set, ORACLE_ANN_* twin)."""
+    return (probe_filter if probe_filter is not None
+            else F.col("vec_id") % 100 == 0)
 
 
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1241,16 +1271,13 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B: 1.11-1.36 s -> 0.92-1.06 s at sf0.1)
     emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
            .repartition(spark.sparkContext.defaultParallelism))
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
+    queries = emb.filter(_probe_rows()).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
     sim = _cos_expr("embedding", "q_emb")
     pairs = (emb.crossJoin(F.broadcast(queries))
              .filter(F.col("vec_id") != F.col("q_id"))
              .select("q_id", "vec_id", sim.alias("cos_sim")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (pairs.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 5)
-            .orderBy("q_id", "rk"))
+    return _topk(pairs, "q_id", "cos_sim", "vec_id", 5).orderBy("q_id", "rk")
 
 
 ORACLE_ANN_BRUTEFORCE = """
@@ -1313,8 +1340,36 @@ IVF_LLOYD_ITERS = 2
 IVF_QUANT = 1_000_000
 
 
+def _quantized():
+    """The embedding column as IVF_QUANT-scaled bigints (`qe`), the
+    integer image every IVF/PQ/SemDeDup trainer runs on."""
+    return F.transform(F.col("embedding"),
+                       lambda x: F.round(x.cast("double") * IVF_QUANT)
+                       .cast("long"))
+
+
+def _train_slice(df: DataFrame, frac: float | None) -> DataFrame:
+    """Deterministic xxhash64(vec_id) training sample (the 10^12
+    lever shared by IVF/PQ/IVF-PQ/SemDeDup), or all of `df` when
+    `frac` is None."""
+    if frac is None:
+        return df
+    return df.filter(F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000))
+                     < int(frac * 1_000_000))
+
+
+def _require_pos_int(**knobs) -> None:
+    """Raise unless every knob is an int >= 1. A 0 would silently
+    return zero rows (slice(arr, 1, 0) is [], a rank cut `<= 0` keeps
+    nothing), and a string from a JSON opts template would only
+    surface as an opaque analysis error at plan time."""
+    for name, v in knobs.items():
+        if not isinstance(v, int) or isinstance(v, bool) or v < 1:
+            raise ValueError(f"{name} must be an int >= 1, got {v!r}")
+
+
 def _py_norm(vals) -> float:
-    """Driver-side twin of _cos_expr's nrm fold: 0.0-seeded left fold
+    """Driver-side twin of the _norm fold: 0.0-seeded left fold
     of double(v)*double(v), then sqrt — the SAME IEEE-754 ops in the
     SAME order the JVM fold runs, so the result is bit-identical to
     evaluating the Column expression (int->double conversion, each
@@ -1414,9 +1469,11 @@ def _ivf_train_cells(t: DataFrame, k: int, iters: int,
     dim = len(cents[0][1])
     # one generated SQL agg expression (array of per-dimension integer
     # sums) — 64 individually built F.sum Columns cost ~0.6 s of py4j
-    # round-trips per pass
+    # round-trips per pass. try_element_at: a member too short for a
+    # position adds NULL there (as DuckDB's qe[i] does), where ANSI
+    # element_at would fail the whole training job
     sum_sql = ("array(" + ",".join(
-        f"sum(element_at(qe, {i + 1}))" for i in range(dim)) + ")")
+        f"sum(try_element_at(qe, {i + 1}))" for i in range(dim)) + ")")
     for _ in range(iters):
         sums = (t.select(_argmax_cell("qe", cents, qn_sql)
                          .alias("c_id"), "qe")
@@ -1433,42 +1490,14 @@ def _ivf_train_cells(t: DataFrame, k: int, iters: int,
     return cents
 
 
-def ivf_train(base: DataFrame, k: int = IVF_K,
-              iters: int = IVF_LLOYD_ITERS,
-              train: DataFrame | None = None) -> DataFrame:
-    """Deterministic spherical-k-means centroids over a quantized
-    base (vec_id, qe: array<long>): init = the k lowest vec_ids; each
-    Lloyd pass reassigns by cosine argmax (ties break toward the
-    lowest c_id, matching the search ranking's ORDER BY c_sim DESC,
-    c_id ASC) and replaces a cell centroid with the exact integer
-    elementwise SUM of its members (see IVF_QUANT — order-independent,
-    so cross-engine bit-identical; an emptied cell keeps its previous
-    centroid). r7: the loop runs in _ivf_train_cells with centroids as
-    driver literals — per-pass cost is one map-only pass + a k-group
-    partial agg instead of a corpus-wide k-fanned shuffle; trained
-    values are bit-identical (oracle-pinned both scales).
-
-    `train` (default: the full base) is the at-scale lever: at 10^12
-    vectors the Lloyd passes run over a SAMPLE — centroid quality
-    needs ~1000x k training points, not the corpus (tools/soak.py ivf
-    mode demonstrates 100k vectors trained on a 10% sample). Returns
-    (c_id, c_emb) — k rows, broadcastable."""
-    t = train if train is not None else base
-    cells = _ivf_train_cells(
-        t, k, iters, qn_sql="qn" if "qn" in t.columns else None)
-    return base.sparkSession.createDataFrame(
-        cells, "c_id long, c_emb array<long>")
-
-
 def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
                  nprobe: int = IVF_NPROBE,
                  iters: int = IVF_LLOYD_ITERS,
                  train_frac: float | None = None,
                  topk: int = 5,
-                 probe_filter=None,
-                 fan_out: bool = True) -> DataFrame:
+                 probe_filter=None) -> DataFrame:
     """IVF ANN over an embeddings-shaped DataFrame: Lloyd-trained
-    coarse quantizer (ivf_train) + top-`topk` exact-cosine search
+    coarse quantizer (_ivf_train_cells) + top-`topk` exact-cosine search
     within each probe's `nprobe` nearest cells. train_frac samples
     the training set (deterministic xxhash64(vec_id) slice — the
     10^12-scale path); probe_filter (default vec_id % 100 == 0)
@@ -1477,9 +1506,7 @@ def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
     corpus — the IVF usage shape); a probe_filter selecting a
     corpus-sized fraction should instead go through repeated calls
     or the LSH all-pairs operator, which shuffles both sides."""
-    qe = F.transform(F.col("embedding"),
-                     lambda x: F.round(x.cast("double") * IVF_QUANT)
-                     .cast("long"))
+    _require_pos_int(nprobe=nprobe, topk=topk)
     # quantized base feeds every Lloyd pass + the final assignment:
     # checkpoint once (same rationale as the LSH coded base). Fan out
     # first: a single-file scan is ONE partition, and every downstream
@@ -1489,24 +1516,16 @@ def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
     # interleaved A/B at sf0.1: 1.8-1.9 s vs 2.8-4.7 s — the Lloyd
     # passes re-read this checkpoint 3x, so the one-off fan-out
     # amortizes (unlike ann_lsh_topk_over, where the same fan-out
-    # measured SLOWER — see its note). `fan_out=False` skips the
-    # shuffle for callers whose scan already has many splits (the
-    # cluster-scale shape — same parameterization discipline as
-    # line_dedup_over's melt_checkpoint). The stored `qn` column is
+    # measured SLOWER — see its note). The stored `qn` column is
     # _qn_sql's fold materialized once, so per-pass scoring pays k
     # dot-folds only (not k re-folds of the query norm).
-    if fan_out:
-        emb = emb.repartition(emb.sparkSession.sparkContext
-                              .defaultParallelism)
-    base = (emb.select("vec_id", "embedding", qe.alias("qe"))
+    emb = emb.repartition(emb.sparkSession.sparkContext
+                          .defaultParallelism)
+    base = (emb.select("vec_id", "embedding", _quantized().alias("qe"))
             .withColumn("qn", F.expr(_qn_sql("qe")))
             .localCheckpoint())
-    train = base
-    if train_frac is not None:
-        train = base.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000))
-            < int(train_frac * 1_000_000))
-    cents = _ivf_train_cells(train, k=k, iters=iters, qn_sql="qn")
+    cents = _ivf_train_cells(_train_slice(base, train_frac), k=k,
+                             iters=iters, qn_sql="qn")
     # r7: centroids are driver literals (k x 64 longs), so cell
     # assignment and probe ranking are ROW-LOCAL array ops over the
     # checkpointed base — the former crossJoin + row_number window
@@ -1519,13 +1538,11 @@ def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
                         _argmax_cell("qe", cents, "qn").alias("c_id"))
     # probe side: each query visits its `nprobe` nearest cells — the
     # full rank sort runs only on the filtered probe rows
-    pf = (probe_filter if probe_filter is not None
-          else (F.col("vec_id") % 100 == 0))
     top_cells = F.expr(
         "transform(slice(sort_array("
         f"{_cell_score_sql('qe', cents, 'qn')}, "
-        f"false), 1, {int(nprobe)}), s -> s.c)")
-    probes = (base.filter(pf)
+        f"false), 1, {nprobe}), s -> s.c)")
+    probes = (base.filter(_probe_rows(probe_filter))
               .select(F.col("vec_id").alias("q_id"),
                       F.col("embedding").alias("q_emb"),
                       F.explode(top_cells).alias("q_cell")))
@@ -1535,19 +1552,16 @@ def ann_ivf_over(emb: DataFrame, k: int = IVF_K,
              .select("q_id", "vec_id",
                      _cos_expr(F.col("embedding"), F.col("q_emb"))
                      .alias("cos_sim")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"),
-                                           F.asc("vec_id"))
-    return (pairs.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= topk)
-            .orderBy("q_id", "rk"))
+    return _topk(pairs, "q_id", "cos_sim", "vec_id",
+                 topk).orderBy("q_id", "rk")
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (the brief's named scale path alongside LSH):
     coarse-quantize every vector to its nearest of IVF_K=16 centroids
     TRAINED by IVF_LLOYD_ITERS=2 deterministic Lloyd iterations
-    (ivf_train — integer-sum spherical k-means, cross-engine exact),
-    then search top-5 within each probe's IVF_NPROBE=4 nearest
+    (_ivf_train_cells — integer-sum spherical k-means, cross-engine
+    exact), then search top-5 within each probe's IVF_NPROBE=4 nearest
     cells. r6: K 8->16 with Lloyd raised pinned recall@5 at sf0.01
     from 0.56 to 0.72 at the SAME ~25% searched fraction (untrained
     K=16/np=4 sits at 0.48 — the training is load-bearing; recall on
@@ -1557,7 +1571,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local array argmax/sort over them — no assignment shuffle —
     and the search join is an equi-join on cell id — candidates per
     probe shrink by ~nprobe/K, the whole point of IVF at 10^12
-    vectors (where ivf_train runs on a SAMPLE — ann_ivf_over's
+    vectors (where the Lloyd loop runs on a SAMPLE — ann_ivf_over's
     train_frac; the registry tables ARE the sample, so it trains on
     the full base here). Same output schema as q_ann_bruteforce for
     recall comparison."""
@@ -1580,7 +1594,7 @@ def _ivf_oracle_sql() -> str:
                         x -> cast(round(x * {IVF_QUANT}) AS bigint)) AS qe
   FROM embeddings
 ), c0 AS (
-  -- init = the K lowest vec_ids, STRUCTURALLY matching ivf_train's
+  -- init = the K lowest vec_ids, STRUCTURALLY matching _ivf_train_cells'
   -- orderBy(vec_id).limit(k) (not WHERE vec_id < K, which coincides
   -- only while vec_ids are contiguous from 0 — a regenerated or
   -- filtered corpus would silently diverge the trained seeds)
@@ -1652,12 +1666,11 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
                   iters: int = IVF_LLOYD_ITERS,
                   tau: float = SEMDEDUP_TAU,
                   train_frac: float | None = None,
-                  hot_threshold: int | None = None,
                   nprobe: int = 1) -> DataFrame:
     """SemDeDup (Abbas et al., 'SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication', arXiv:2303.09540):
     semantic near-dup removal by embedding clustering — cluster with
-    the shared Lloyd trainer (ivf_train, deterministic spherical
+    the shared Lloyd trainer (_ivf_train_cells, deterministic spherical
     k-means over quantized integers), then compute exact pairwise
     cosine ONLY within each cluster and drop members of any
     similarity-connected group above `tau`, keeping the member
@@ -1668,7 +1681,7 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
     Spark shape: `k` is THE scale lever — pair cost is sum of squared
     cluster sizes, so at 10^8+ vectors k grows toward ~sqrt(n) (the
     paper runs 50k clusters on LAION-440M; train on a sample via
-    `train_frac` like ivf_train documents). Assignment streams n*k
+    `train_frac` as ann_ivf_over does). Assignment streams n*k
     rows through a partial-aggregable max_by — the broadcast nested-
     loop join keeps row locality, so map-side combine collapses to
     one row per vector BEFORE the shuffle; at k >= ~10^4 that stream
@@ -1694,19 +1707,10 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
 
     Input (vec_id long, embedding array<numeric>); returns one row
     per vec_id: (vec_id, c_id, c_sim, keep_id, is_kept)."""
-    if not isinstance(nprobe, int) or isinstance(nprobe, bool) \
-            or nprobe < 1:
-        # nprobe=0 would silently degrade to the top-1 path (the
-        # mitigation the caller asked for never runs) and a string
-        # from a JSON opts template would only surface as an opaque
-        # analysis error at plan time (r6 review)
-        raise ValueError(f"nprobe must be an int >= 1, got {nprobe!r}")
-    qe = F.transform(F.col("embedding"),
-                     lambda x: F.round(x.cast("double") * IVF_QUANT)
-                     .cast("long"))
-    _norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
+    # nprobe=0 would silently degrade to the top-1 path (the
+    # mitigation the caller asked for never runs)
+    _require_pos_int(nprobe=nprobe)
+    qe = _quantized()
     # pre-normalized doubles + the quantized-vector norm in the ONE
     # checkpointed base: the k-way assignment and the within-cluster
     # pair join then pay 1 dot each instead of dot + 2 norms (the
@@ -1718,16 +1722,8 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
                     / _norm(F.col("embedding"))).alias("ne"),
         _norm(qe).alias("qn"))
         .localCheckpoint())
-    train = None
-    if train_frac is not None:
-        train = base.filter(
-            F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000))
-            < int(train_frac * 1_000_000))
-    cents = _ivf_train_cells(train if train is not None else base,
-                             k=k, iters=iters, qn_sql="qn")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
+    cents = _ivf_train_cells(_train_slice(base, train_frac), k=k,
+                             iters=iters, qn_sql="qn")
     # r7: centroids are driver literals (the q_ann_ivf rewrite), so
     # assignment/probe ranking are ROW-LOCAL array ops over the
     # checkpointed base, scored against the STORED qn and _py_norm
@@ -1764,7 +1760,7 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
                   .select("vec_id", "ne",
                           F.posexplode(F.expr(
                               f"slice(sort_array({score_sql}, false), "
-                              f"1, {int(nprobe)})")).alias("_r0", "_st"))
+                              f"1, {nprobe})")).alias("_r0", "_st"))
                   .select("vec_id", "ne",
                           F.col("_st.c").alias("c_id"),
                           F.col("_st.s").alias("sim"),
@@ -1775,12 +1771,10 @@ def semdedup_over(emb: DataFrame, k: int = IVF_K,
                             F.col("sim").alias("c_sim")))
         melt = ranked.select("vec_id", F.col("ne").alias("embedding"),
                              F.col("c_id").alias("bucket"))
-    kw = {} if hot_threshold is None else \
-        {"hot_threshold": hot_threshold}
-    joined = _salted_bucket_pairs(melt, lambda a, c: a < c, **kw)
+    joined = _salted_bucket_pairs(melt, lambda a, c: a < c)
     edges = (joined.select(
         F.col("a.vec_id").alias("s"), F.col("c.vec_id").alias("t"),
-        F.round(dot(F.col("a.embedding"), F.col("c.embedding")), 6)
+        F.round(_dot(F.col("a.embedding"), F.col("c.embedding")), 6)
         .alias("cos_sim"))
         .filter(F.col("cos_sim") > tau)
         .select("s", "t"))
@@ -1812,6 +1806,14 @@ PQ_CODES = 16          # K per subspace -> one code = 4 bits * 4 = 2B/vec
 PQ_ITERS = 2
 
 
+def _subspace_width(subspaces: int) -> int:
+    """Dims per PQ subspace; raises unless `subspaces` divides 64."""
+    if 64 % subspaces:
+        raise ValueError(f"subspaces={subspaces} must divide 64 "
+                         "(trailing dims would be silently dropped)")
+    return 64 // subspaces
+
+
 def pq_train(base: DataFrame, subspaces: int = PQ_SUBSPACES,
              codes: int = PQ_CODES, iters: int = PQ_ITERS,
              train: DataFrame | None = None) -> list:
@@ -1833,12 +1835,9 @@ def pq_train(base: DataFrame, subspaces: int = PQ_SUBSPACES,
     [m][c_id][dim] of ints — M*K*(64/M) values (~4 KB), the one
     legitimate collect (it becomes literal arrays in the encode/score
     projections, exactly like the LSH hyperplane literals).
-    `train` samples the Lloyd input at scale (the ivf_train lever)."""
-    if 64 % subspaces:
-        raise ValueError(f"subspaces={subspaces} must divide 64 "
-                         "(trailing dims would be silently dropped)")
+    `train` samples the Lloyd input at scale (_train_slice)."""
+    sub = _subspace_width(subspaces)
     t = train if train is not None else base
-    sub = 64 // subspaces
     init = (t.orderBy("vec_id").limit(codes).collect())
     if len(init) < codes:
         raise ValueError(f"training set has {len(init)} vectors, "
@@ -1899,17 +1898,26 @@ def _pq_code_col(book_lit, sub: int, src="qe"):
         .cast("int"))
 
 
+def _dequant_dot(q, c):
+    """dot(query, integer center / IVF_QUANT): one ADC table entry."""
+    return _fold(F.zip_with(q, c, lambda x, cc: x.cast("double")
+                            * (cc.cast("double") / IVF_QUANT)))
+
+
 def _pq_lut_col(book_lit, sub: int, src="embedding"):
     """Per-query ADC lookup table: dot(query subvector, dequantized
     code center) for every (m, c) — M*K doubles, broadcast-sized."""
     return F.transform(
         book_lit,
         lambda cb, m: F.transform(
-            cb, lambda c: F.aggregate(
-                F.zip_with(F.slice(src, m * sub + 1, sub), c,
-                           lambda q, cc: q.cast("double")
-                           * (cc.cast("double") / IVF_QUANT)),
-                F.lit(0.0), lambda acc, v: acc + v)))
+            cb, lambda c: _dequant_dot(F.slice(src, m * sub + 1, sub), c)))
+
+
+def _adc_score():
+    """ADC's approximate dot: the sum over subspaces of the probe's
+    `lut` entry at the candidate's `pq` code."""
+    return _fold(F.zip_with(F.col("lut"), F.col("pq"),
+                            lambda l, c: F.element_at(l, c)))
 
 
 def _exact_rerank(short: DataFrame, base: DataFrame,
@@ -1924,20 +1932,8 @@ def _exact_rerank(short: DataFrame, base: DataFrame,
              .select("q_id", "vec_id",
                      _cos_expr(F.col("embedding"), F.col("q_emb"))
                      .alias("cos_sim")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"),
-                                           F.asc("vec_id"))
-    return (exact.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= topk)
-            .orderBy("q_id", "rk"))
-
-
-def _train_slice(df: DataFrame, frac: "float | None") -> "DataFrame | None":
-    """Deterministic xxhash64(vec_id) training sample (the 10^12
-    lever shared by IVF/PQ/IVF-PQ), or None for train-on-everything."""
-    if frac is None:
-        return None
-    return df.filter(F.pmod(F.xxhash64("vec_id"), F.lit(1_000_000))
-                     < int(frac * 1_000_000))
+    return _topk(exact, "q_id", "cos_sim", "vec_id",
+                 topk).orderBy("q_id", "rk")
 
 
 def ann_pq_topk_over(emb: DataFrame, subspaces: int = PQ_SUBSPACES,
@@ -1965,14 +1961,9 @@ def ann_pq_topk_over(emb: DataFrame, subspaces: int = PQ_SUBSPACES,
     (3.2%) — the ADC pass touches every code row with M cheap
     lookups, the exact pass only the shortlist; IVF spends 25% exact
     for 0.72 on the same data, which is the PQ trade in one line."""
-    if 64 % subspaces:
-        raise ValueError(f"subspaces={subspaces} must divide 64 "
-                         "(trailing dims would be silently dropped)")
-    sub = 64 // subspaces
-    qe = F.transform(F.col("embedding"),
-                     lambda x: F.round(x.cast("double") * IVF_QUANT)
-                     .cast("long"))
-    base = (emb.select("vec_id", "embedding", qe.alias("qe"))
+    _require_pos_int(topk=topk, rerank=rerank)
+    sub = _subspace_width(subspaces)
+    base = (emb.select("vec_id", "embedding", _quantized().alias("qe"))
             .localCheckpoint())
     book = pq_train(base, subspaces=subspaces, codes=codes,
                     iters=iters, train=_train_slice(base, train_frac))
@@ -1980,29 +1971,20 @@ def ann_pq_topk_over(emb: DataFrame, subspaces: int = PQ_SUBSPACES,
     coded = (base.select("vec_id",
                          _pq_code_col(book_lit, sub).alias("pq"))
              .localCheckpoint())
-    pf = (probe_filter if probe_filter is not None
-          else (F.col("vec_id") % 100 == 0))
-    probes = (base.filter(pf)
+    probes = (base.filter(_probe_rows(probe_filter))
               .select(F.col("vec_id").alias("q_id"),
                       F.col("embedding").alias("q_emb"),
                       _pq_lut_col(book_lit, sub).alias("lut"))
               .localCheckpoint())  # tiny; scored join + rerank reuse it
-    adc = F.aggregate(
-        F.zip_with(F.col("lut"), F.col("pq"),
-                   lambda l, c: F.element_at(l, c)),
-        F.lit(0.0), lambda acc, v: acc + v)
     # scored rows carry only (q_id, vec_id, adc) through the window
     # shuffle — the 64-double q_emb rides the tiny probe table and is
     # re-joined AFTER the shortlist cut (r6 review: carrying it on
     # every candidate row was ~20x the shuffle bytes)
     short = (coded.crossJoin(F.broadcast(probes.select("q_id", "lut")))
              .filter(F.col("vec_id") != F.col("q_id"))
-             .select("q_id", "vec_id", adc.alias("adc")))
-    ws = Window.partitionBy("q_id").orderBy(F.desc("adc"),
-                                            F.asc("vec_id"))
-    short = (short.withColumn("sr", F.row_number().over(ws))
-             .filter(F.col("sr") <= rerank * topk)
-             .select("q_id", "vec_id"))
+             .select("q_id", "vec_id", _adc_score().alias("adc")))
+    short = _topk(short, "q_id", "adc", "vec_id",
+                  rerank * topk).select("q_id", "vec_id")
     return _exact_rerank(short, base, probes, topk)
 
 
@@ -2034,14 +2016,9 @@ def ann_ivfpq_topk_over(emb: DataFrame, cells: int = 16,
     residual codebooks both train through pq_train's deterministic
     integer floor-mean k-means (cells = one 'subspace' spanning all
     64 dims), so the whole index is bit-stable."""
-    if 64 % subspaces:
-        raise ValueError(f"subspaces={subspaces} must divide 64 "
-                         "(trailing dims would be silently dropped)")
-    sub = 64 // subspaces
-    qe = F.transform(F.col("embedding"),
-                     lambda x: F.round(x.cast("double") * IVF_QUANT)
-                     .cast("long"))
-    base = (emb.select("vec_id", "embedding", qe.alias("qe"))
+    _require_pos_int(nprobe=nprobe, topk=topk, rerank=rerank)
+    sub = _subspace_width(subspaces)
+    base = (emb.select("vec_id", "embedding", _quantized().alias("qe"))
             .localCheckpoint())
     # coarse cells: a single 'subspace' spanning all 64 dims gives
     # exactly a 64-dim L2 floor-mean codebook of `cells` centers
@@ -2061,46 +2038,30 @@ def ann_ivfpq_topk_over(emb: DataFrame, cells: int = 16,
                     lambda x, c: x - c))
                 .select("vec_id", "cell", "qr")
                 .localCheckpoint())
-    rbook = pq_train(assigned.select("vec_id",
-                                     F.col("qr").alias("qe")),
-                     subspaces=subspaces, codes=codes, iters=iters,
-                     train=_train_slice(
-                         assigned.select("vec_id",
-                                         F.col("qr").alias("qe")),
-                         train_frac))
+    resid = assigned.select("vec_id", F.col("qr").alias("qe"))
+    rbook = pq_train(resid, subspaces=subspaces, codes=codes, iters=iters,
+                     train=_train_slice(resid, train_frac))
     rbook_lit = _pq_book_lit(rbook)
     coded = (assigned.select(
         "vec_id", "cell",
         _pq_code_col(rbook_lit, sub, "qr").alias("pq"))
         .localCheckpoint())
-    pf = (probe_filter if probe_filter is not None
-          else (F.col("vec_id") % 100 == 0))
     # probe side: dot(q, every cell center) ranks the cells; the
     # residual LUT is computed ONCE per query (shared codebook)
     cdots = F.transform(
-        center_lit, lambda c: F.aggregate(
-            F.zip_with("embedding", c,
-                       lambda q, cc: q.cast("double")
-                       * (cc.cast("double") / IVF_QUANT)),
-            F.lit(0.0), lambda acc, v: acc + v))
-    probes0 = (base.filter(pf)
+        center_lit, lambda c: _dequant_dot(F.col("embedding"), c))
+    probes0 = (base.filter(_probe_rows(probe_filter))
                .select(F.col("vec_id").alias("q_id"),
                        F.col("embedding").alias("q_emb"),
                        cdots.alias("cdots"),
                        _pq_lut_col(rbook_lit, sub).alias("lut")))
     pe = probes0.select("q_id", "q_emb", "lut",
                         F.posexplode("cdots").alias("c0", "cdot"))
-    wc = Window.partitionBy("q_id").orderBy(F.desc("cdot"),
-                                            F.asc("c0"))
-    probes = (pe.withColumn("r", F.row_number().over(wc))
-              .filter(F.col("r") <= nprobe)
+    probes = (_topk(pe, "q_id", "cdot", "c0", nprobe)
               .select("q_id", "q_emb", "lut", "cdot",
                       (F.col("c0") + 1).alias("q_cell"))
               .localCheckpoint())  # tiny: queries x nprobe rows
-    adc = F.col("cdot") + F.aggregate(
-        F.zip_with(F.col("lut"), F.col("pq"),
-                   lambda l, c: F.element_at(l, c)),
-        F.lit(0.0), lambda acc, v: acc + v)
+    adc = F.col("cdot") + _adc_score()
     # the equi-join on cell is the IVF pruning: candidates shrink by
     # ~nprobe/cells, and each carries only (cell, 4 codes)
     short = (coded.join(
@@ -2108,11 +2069,8 @@ def ann_ivfpq_topk_over(emb: DataFrame, cells: int = 16,
         coded["cell"] == F.col("q_cell"))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", adc.alias("adc")))
-    ws = Window.partitionBy("q_id").orderBy(F.desc("adc"),
-                                            F.asc("vec_id"))
-    short = (short.withColumn("sr", F.row_number().over(ws))
-             .filter(F.col("sr") <= rerank * topk)
-             .select("q_id", "vec_id"))
+    short = _topk(short, "q_id", "adc", "vec_id",
+                  rerank * topk).select("q_id", "vec_id")
     return _exact_rerank(short, base, probes, topk)
 
 
@@ -3101,39 +3059,23 @@ ANN_COARSE_DIRECTED = (8, 4)   # (singles, pairs-among-top-k bits)
 ANN_FINE_DIRECTED = (12, 8)
 
 
-def _probe_masks(bits: int, radius: int) -> list[int]:
-    """0 plus every XOR mask of Hamming weight <= radius (legacy ball
-    probing, kept for the no-probe control and A/B against directed).
-    radius > 2 is unimplemented — raise instead of silently capping
-    (the ball is quadratic already; weight-3 masks never paid off)."""
-    if radius > 2:
-        raise ValueError(f"Hamming-ball probe radius {radius} > 2 is "
-                         "not implemented; use directed probing "
-                         "(coarse_directed/fine_directed) for deeper "
-                         "perturbation")
-    masks = [0]
-    if radius >= 1:
-        masks += [1 << i for i in range(bits)]
-    if radius >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(bits) for j in range(i + 1, bits)]
-    return masks
-
-
 def _dot_lit(col, vec):
-    arr = F.array(*[F.lit(float(v)) for v in vec])
-    return F.aggregate(
-        F.zip_with(col, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0), lambda acc, v: acc + v)
+    return _dot(col, F.array(*[F.lit(float(v)) for v in vec]))
+
+
+def _code_bits(dots: list):
+    """LSH code: bit j set iff the j-th hyperplane dot is >= 0."""
+    assert len(dots) <= 30  # int32 bit-sum bound
+    b = None
+    for j, d in enumerate(dots):
+        bit = F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        b = bit if b is None else b + bit
+    return b.cast("int")
 
 
 def _bucket_expr(col, planes: list[list[float]] | None = None):
-    assert planes is None or len(planes) <= 30  # int32 bit-sum bound
-    b = None
-    for j, hp in enumerate(planes if planes is not None else _HP):
-        bit = F.when(_dot_lit(col, hp) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        b = bit if b is None else b + bit
-    return b.cast("int")
+    return _code_bits([_dot_lit(col, hp) for hp in
+                       (planes if planes is not None else _HP)])
 
 
 def _dots_expr(col, planes: list[list[float]]):
@@ -3141,16 +3083,6 @@ def _dots_expr(col, planes: list[list[float]]):
     checkpointed; code bits AND directed-probe ranks both derive from
     it downstream (cheap element_at ops on the stored array)."""
     return F.array(*[_dot_lit(col, hp) for hp in planes])
-
-
-def _code_from_dots(dcol, bits: int):
-    assert bits <= 30  # int32 bit-sum bound
-    b = None
-    for j in range(bits):
-        bit = F.when(F.element_at(dcol, j + 1) >= 0,
-                     F.lit(1 << j)).otherwise(F.lit(0))
-        b = bit if b is None else b + bit
-    return b.cast("int")
 
 
 def _rank_expr(dcol, bits: int):
@@ -3219,7 +3151,7 @@ def _salted_bucket_pairs(b: DataFrame, pair_filter,
     c_id)` is the pair predicate (`<` unordered, `!=` directed).
     `probe` (default `b` — a self-join) supplies the left side;
     multiprobe ANN passes the expanded probe melt (own bucket +
-    Hamming-neighbor buckets) against the exact build melt.
+    directed-probe buckets) against the exact build melt.
 
     Per-bucket BUILD-side counts (one tiny agg, broadcast back) decide
     which buckets are hot; only those are salted — the probe side gets
@@ -3309,8 +3241,6 @@ ORDER BY vec_id
 
 def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
                       k: int = 3,
-                      coarse_probe: int | None = None,
-                      fine_probe: int | None = None,
                       coarse_directed: tuple = ANN_COARSE_DIRECTED,
                       fine_directed: tuple = ANN_FINE_DIRECTED,
                       coarse_planes: list | None = None,
@@ -3331,13 +3261,13 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     build-side bucket bound (q_lsh_buckets) still governs per-bucket
     work.
 
-    coarse_probe/fine_probe switch a table to legacy Hamming-BALL
-    probing at that radius (0 = exact buckets only — the no-probe
-    control; radius > 2 raises). coarse_planes/fine_planes override
-    the bit widths — the at-scale escalation: bucket occupancy ~
-    n/2^bits, so bits grow with log2(n) to hold per-bucket (and
-    per-probe) work constant. tools/soak.py ann mode runs
-    _hyperplanes(16)/(20) at 100k vectors this way."""
+    coarse_directed=(0, 0), fine_directed=(0, 0) probe the exact
+    buckets only — the no-probe control. coarse_planes/fine_planes
+    override the bit widths — the at-scale escalation: bucket
+    occupancy ~ n/2^bits, so bits grow with log2(n) to hold
+    per-bucket (and per-probe) work constant. tools/soak.py ann mode
+    runs _hyperplanes(16)/(20) at 100k vectors this way."""
+    _require_pos_int(k=k)
     cps = coarse_planes if coarse_planes is not None else _HP
     fps = fine_planes if fine_planes is not None else _HP_FINE
     # materialize the coded base ONCE (localCheckpoint): the join would
@@ -3350,10 +3280,6 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     # arrays feed the bucket/probe derivation in-plan and are NOT
     # stored (r7 — the single checkpoint materializes nemb + the
     # finished bucket arrays; see the note at the checkpoint below).
-    nrm_in = F.sqrt(F.aggregate(
-        F.transform(F.col("embedding"),
-                    lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
     dcols = [_dots_expr(F.col("embedding"), cps).alias("_dc")]
     if tables > 1:
         dcols.append(_dots_expr(F.col("embedding"), fps).alias("_df"))
@@ -3361,32 +3287,25 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     # it must clear BOTH code widths (r5 review: a coarse table wider
     # than the fine one would alias across tables with 1 << len(fps))
     off = F.lit(1 << max(len(cps), len(fps)))
-    b0 = _code_from_dots(F.col("_dc"), len(cps))
+
+    def table(name, planes, directed, dcol):
+        """(exact code, directed probe codes) of one table."""
+        s, p = directed
+        if s > len(planes) or p > len(planes):
+            raise ValueError(f"{name}_directed {directed} exceeds "
+                             f"{len(planes)} {name} bits")
+        dots = F.col(dcol)
+        code = _code_bits([F.element_at(dots, j + 1)
+                           for j in range(len(planes))])
+        return code, _directed_buckets(
+            code, _rank_expr(dots, len(planes)), len(planes), s, p)
+
+    b0, pc = table("coarse", cps, coarse_directed, "_dc")
     exact = [b0.cast("long")]
-    if coarse_probe is not None:
-        pc = [b0.bitwiseXOR(F.lit(m))
-              for m in _probe_masks(len(cps), coarse_probe)]
-    else:
-        s, p = coarse_directed
-        if s > len(cps) or p > len(cps):
-            raise ValueError(f"coarse_directed {coarse_directed} exceeds "
-                             f"{len(cps)} coarse bits")
-        pc = _directed_buckets(b0, _rank_expr(F.col("_dc"), len(cps)),
-                               len(cps), s, p)
     probes = [c.cast("long") for c in pc]
     if tables > 1:
-        f1 = _code_from_dots(F.col("_df"), len(fps))
+        f1, pf = table("fine", fps, fine_directed, "_df")
         exact.append((off + f1).cast("long"))
-        if fine_probe is not None:
-            pf = [f1.bitwiseXOR(F.lit(m))
-                  for m in _probe_masks(len(fps), fine_probe)]
-        else:
-            s, p = fine_directed
-            if s > len(fps) or p > len(fps):
-                raise ValueError(f"fine_directed {fine_directed} exceeds "
-                                 f"{len(fps)} fine bits")
-            pf = _directed_buckets(f1, _rank_expr(F.col("_df"), len(fps)),
-                                   len(fps), s, p)
         probes += [(off + c).cast("long") for c in pf]
     # melts carry ONLY (vec_id, bucket) — 12 bytes/row — so the probe
     # expansion shuffles kilobytes per vector, not 56 copies of the
@@ -3406,7 +3325,7 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     # opposite call — its Lloyd passes re-read the checkpointed base
     # 3x, so the one-off fan-out amortizes.)
     base = (emb.select("vec_id", "embedding", *dcols)
-            .withColumn("_nrm", nrm_in)
+            .withColumn("_nrm", _norm(F.col("embedding")))
             .select("vec_id",
                     F.transform(F.col("embedding"),
                                 lambda x: x.cast("double")
@@ -3430,20 +3349,15 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     # the zip_with/aggregate HOF over the pre-normalized arrays is the
     # fastest exact-order formulation measured)
     nv = base.select("vec_id", "nemb")
-    sim = F.round(F.aggregate(
-        F.zip_with(F.col("a_emb"), F.col("c_emb"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, v: acc + v), 6)
+    sim = F.round(_dot(F.col("a_emb"), F.col("c_emb")), 6)
     pairs = (pair_ids
              .join(nv.select(F.col("vec_id"),
                              F.col("nemb").alias("a_emb")), "vec_id")
              .join(nv.select(F.col("vec_id").alias("nn_id"),
                              F.col("nemb").alias("c_emb")), "nn_id")
              .select("vec_id", "nn_id", sim.alias("cos_sim")))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"),
-                                             F.asc("nn_id"))
-    return (pairs.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .orderBy("vec_id", "rk"))
+    return _topk(pairs, "vec_id", "cos_sim", "nn_id",
+                 k).orderBy("vec_id", "rk")
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3471,7 +3385,7 @@ def _dots_sql(col: str, planes: list[list[float]]) -> str:
 
 
 def _code_sql(dcol: str, bits: int) -> str:
-    """Code bits from a stored dot list (mirrors _code_from_dots)."""
+    """Code bits from a stored dot list (mirrors _code_bits)."""
     return ("cast(" + " + ".join(
         f"CASE WHEN {dcol}[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END"
         for j in range(bits)) + " AS int)")

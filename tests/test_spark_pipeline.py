@@ -2493,6 +2493,54 @@ def test_ivf_train_under_k_raises(spark):
         ann_ivf_over(emb.limit(5), k=16)
 
 
+def test_ann_operators_reject_non_positive_knobs(spark):
+    """nprobe=0 or topk=0 made both IVF operators return zero rows
+    silently (slice(arr, 1, 0) is [], IVF-PQ's rank cut `<= 0` keeps
+    nothing), as did the PQ and LSH rank cuts; a string from a JSON
+    opts template surfaced only as an analysis error at plan time.
+    Every ANN operator raises before any Spark job."""
+    from pdfio_spark.pipeline import queries as Q
+    emb = spark.createDataFrame([(0, [1.0] * 64)],
+                                "vec_id long, embedding array<double>")
+    for op, knobs in ((Q.ann_ivf_over, ("nprobe", "topk")),
+                      (Q.ann_ivfpq_topk_over, ("nprobe", "topk",
+                                               "rerank")),
+                      (Q.ann_pq_topk_over, ("topk", "rerank")),
+                      (Q.ann_lsh_topk_over, ("k",))):
+        for knob in knobs:
+            for bad in (0, "2"):
+                with pytest.raises(ValueError, match=f"^{knob} must"):
+                    op(emb, **{knob: bad})
+
+
+def test_ivf_train_null_cell_keeps_previous_centroid(spark):
+    """A cell whose every member is NULL or too short at some position
+    sums to NULL there: it keeps its PREVIOUS centroid, and training
+    does not raise. k=2 seeds are vectors 0 (e0) and 1 (e63). Pass 1:
+    vector 3 joins cell 1; the NULL-bearing 2 and 4-long 4 score NULL
+    against every centroid and fall to cell 0 (lowest c_id), whose
+    integer sum skips their NULLs: A' = 1000*e0 + 1e6*e30. Pass 2: 0, 1
+    and 3 all prefer cell 1, leaving cell 0 = {2, 4}, NULL at dim 6 —
+    so cell 0 stays A' while cell 1 moves to the sum of 0, 1 and 3."""
+    from pdfio_spark.pipeline.queries import _ivf_train_cells
+
+    def vec(**dims):
+        v = [0] * 64
+        for d, x in dims.items():
+            v[int(d[1:])] = x
+        return v
+
+    null_at_5 = vec(d30=10 ** 6)
+    null_at_5[5] = None
+    t = spark.createDataFrame(
+        [(0, vec(d0=1000)), (1, vec(d63=1000)), (2, null_at_5),
+         (3, vec(d0=900, d63=1000)), (4, [0, 0, 0, 0])],
+        "vec_id long, qe array<long>")
+    cents = _ivf_train_cells(t, k=2, iters=2)
+    assert cents == [(0, vec(d0=1000, d30=10 ** 6)),
+                     (1, vec(d0=1900, d63=2000))]
+
+
 def test_cli_sig_flags_rejected_outside_sigaudit(spark, tmp_path):
     """r6 review x2: `--mode pdf --crl-pems x.pem` used to drop the
     revocation material silently (sig_material was only built for
@@ -3163,7 +3211,8 @@ def test_multitable_lsh_recall_and_bucket_bound(spark):
     # multiprobe is the recall engine: without it the same two tables
     # sit at 0.042 (r4) — pin the gap so a probe regression is loud
     noprobe = topk_set(Q.ann_lsh_topk_over(emb, tables=2,
-                                           coarse_probe=0, fine_probe=0))
+                                           coarse_directed=(0, 0),
+                                           fine_directed=(0, 0)))
     assert r_multi >= 3 * len(noprobe & truth) / len(truth)
     # bucket-size bound: fine table's worst bucket <= coarse's worst
     stats = Q.QUERIES["q_lsh_buckets"](spark, sf)
@@ -3173,7 +3222,7 @@ def test_multitable_lsh_recall_and_bucket_bound(spark):
 
 
 def test_ann_ivf_sampled_training(spark):
-    """r6: ivf_train over a deterministic SAMPLE (train_frac — the
+    """r6: Lloyd training over a deterministic SAMPLE (train_frac — the
     10^12-scale path) still serves every probe with full top-k; the
     sample only moves centroid QUALITY, never coverage (assignment
     and search scan the full base)."""
@@ -3218,15 +3267,6 @@ def test_default_hyperplanes_hold_occupancy_bound(spark):
         assert distinct >= 0.85 * expected, (
             f"{bits}-bit planes correlate: {distinct} distinct buckets "
             f"vs {expected:.0f} expected for an independent code")
-
-
-def test_ball_probe_radius_over_2_raises():
-    """ADVICE r5: radius > 2 must raise, not silently cap."""
-    import pytest
-    from pdfio_spark.pipeline.queries import _probe_masks
-    with pytest.raises(ValueError, match="radius 3"):
-        _probe_masks(8, 3)
-    assert len(_probe_masks(4, 2)) == 1 + 4 + 6
 
 
 def test_dedup_keep_list_end_to_end(spark):

@@ -464,7 +464,7 @@ def main() -> None:
 
     if mode == "ivf":
         # IVF at 100k vectors with SAMPLED training (r6): the
-        # docstring escalation demonstrated — ivf_train runs over a
+        # docstring escalation demonstrated — _ivf_train_cells runs over a
         # 10% deterministic slice (train_frac=0.1, ~10k points for
         # K=64 cells), then the full corpus is assigned and searched.
         # Centroid quality needs ~1000x K training points, not the
