@@ -126,7 +126,8 @@ def _extract_row(url, html):
 
 def extract_in_place(corpus: DataFrame) -> DataFrame:
     """(url, html) -> extraction rows on the input's own partitioning:
-    the one extraction UDF, shared by extract_pdfs and stream_extract."""
+    the one extraction UDF, shared by extract_pdfs and
+    stream_stage("pdf")."""
     return map_rows(corpus, ["url", "html"], _EXTRACT_DDL, _extract_row)
 
 

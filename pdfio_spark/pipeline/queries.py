@@ -1863,11 +1863,17 @@ def pq_train(base: DataFrame, subspaces: int = PQ_SUBSPACES,
                          .alias("sv"))
                  .groupBy("m", "c")
                  .agg(F.count("*").alias("n"),
-                      F.array(*[F.sum(F.element_at("sv", i + 1))
-                                for i in range(sub)]).alias("s"))
+                      F.array(*[F.sum(F.try_element_at(
+                          "sv", F.lit(i + 1))) for i in range(sub)])
+                      .alias("s"))
                  .collect())
+        # try_element_at: a member too short for a position adds NULL
+        # there (the _ivf_train_cells rule), where ANSI element_at
+        # would fail the whole training job. A (subspace, code) whose
+        # sum reads NULL anywhere, or the NULL code such a member
+        # scores, keeps its PREVIOUS code
         for r in stats:
-            if r["n"]:
+            if r["n"] and r["c"] is not None and None not in r["s"]:
                 book[r["m"]][r["c"]] = [
                     int(v // r["n"]) for v in r["s"]]
     return book

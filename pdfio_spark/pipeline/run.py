@@ -3,18 +3,20 @@
     spark-submit --py-files pdfio_spark.zip pdfio_spark/pipeline/run.py \
         --input  <parquet/iceberg of (url, warc_ts, html, text, lang)> \
         --output <results dir/table> --metrics <metrics dir/table> \
-        [--resume] [--cpus N] [--mode MODE] [--<mode>-opts JSON]
+        [--resume] [--cpus N] [--mode MODE] [--opts JSON]
 
 Every --mode is one row of STAGES below, in one place: its operator,
 its lineage counters (Spark SQL aggregates over output-borne columns,
 which `lineage` applies per partition and stamps with the run), the
 input columns its scan prunes to (also the source schema of its
 streaming twin in streaming.py), whether its decisions are
-corpus-global, its options kwarg and a one-line description (`--help`
-lists them). --mode pdf (default) runs the full PDF parse stack. All
-modes share the resume/metrics/run_id-reconcile contract
-(corpus-global resume re-derives the decisions over the full input and
-appends only unwritten rows — see run_job).
+corpus-global, the option keys it accepts and a one-line description
+(`--help` lists them). `bind` validates a mode's options from its row
+alone, for run_job and streaming.stream_stage alike. --mode pdf
+(default) runs the full PDF parse stack. All modes share the
+resume/metrics/run_id-reconcile contract (corpus-global resume
+re-derives the decisions over the full input and appends only
+unwritten rows — see run_job).
 
 Input is the Common-Crawl-style table of the north rule (the binary
 `html` column carries PDF bytes). The job:
@@ -60,7 +62,7 @@ from .job import (PII_CATEGORIES, QUALITY_REASONS, URL_REASONS,
 class Stage(NamedTuple):
     """One run.py mode. `op(corpus, *args, **kw)` -> output rows, where
     (args, kw) is `prep(spark, opts)` when set (side inputs read before
-    the job starts) and ((), opts) otherwise."""
+    the job starts) and ((), opts) otherwise (see bind)."""
     op: Callable
     # the lineage counters: Spark SQL aggregates over the output rows,
     # one metrics row per partition (see lineage)
@@ -71,9 +73,9 @@ class Stage(NamedTuple):
     # decisions depend on EVERY other doc: resume must re-derive over
     # the full input, then append only unwritten rows
     corpus_global: bool = False
-    opts_kw: str | None = None
-    # accepted option keys; None = op's keyword parameters
-    keys: tuple | None = None
+    # accepted option keys: () = none, None = the op's keyword
+    # parameters
+    keys: tuple | None = ()
     prep: Callable | None = None
     doc: str = ""
 
@@ -81,9 +83,9 @@ class Stage(NamedTuple):
         return self.cols(opts or {}) if callable(self.cols) else self.cols
 
     def option_keys(self) -> tuple:
-        if self.keys is not None:
-            return self.keys
-        return tuple(inspect.signature(self.op).parameters)[1:]
+        if self.keys is None:
+            return tuple(inspect.signature(self.op).parameters)[1:]
+        return self.keys
 
 
 _TEXT = ("url string", "text string")
@@ -138,11 +140,10 @@ def _decontam_prep(spark, o):
 
 def _dedupref_prep(spark, o):
     if ("reference_path" in o) == ("index_path" in o):
-        raise ValueError("mode='dedupref' needs dedupref_opts "
-                         "with exactly one of reference_path "
-                         "(frozen kept corpus, hashed inline) / "
-                         "index_path (build_dedup_index output — "
-                         "the amortized daily path)")
+        raise ValueError("mode='dedupref' needs exactly one of "
+                         "reference_path (frozen kept corpus, hashed "
+                         "inline) / index_path (build_dedup_index "
+                         "output — the amortized daily path)")
     ref = (spark.read.parquet(o["reference_path"]).select("text")
            if "reference_path" in o else None)
     return (ref,), {"index_path": o.get("index_path")}
@@ -192,7 +193,6 @@ STAGES: dict[str, Stage] = {
          "sum(if(err = 'revoked signer certificate', 1, 0)) AS n_revoked",
          "sum(if(err = 'untrusted signer certificate', 1, 0)) "
          "AS n_untrusted", _is("nosig"), _is("error")),
-        opts_kw="sig_material",
         keys=("trust_pems", "crl_blobs", "ocsp_ders"),
         doc="corpus-scale signature audit over (url, html), trust and "
             "CRL/OCSP material from the --trust-pems/--crl-pems/"
@@ -202,7 +202,7 @@ STAGES: dict[str, Stage] = {
     # is faithful, not a bug)
     "filter": Stage(
         quality_decisions, (_DOCS, _is("kept"), *_tagged(QUALITY_REASONS)),
-        _TEXT, opts_kw="filter_opts",
+        _TEXT, keys=None,
         doc="Gopher/C4-style quality gate: keep decisions with "
             "per-rule reason tags, map-only"),
     "pii": Stage(
@@ -213,15 +213,14 @@ STAGES: dict[str, Stage] = {
         doc="PII redaction plus per-category counters, map-only"),
     "urlfilter": Stage(
         url_filter_decisions, (_DOCS, _is("kept"), *_tagged(URL_REASONS)),
-        ("url string",), opts_kw="url_opts",
+        ("url string",), keys=None,
         doc="URL gate before any content is read (--blocked-domains "
-            "merges a list read from a file into url_opts)"),
+            "merges a list read from a file into the options)"),
     "decontam": Stage(
         decontam_decisions,
         (_DOCS, _is("kept"), _is("dropped", "n_contaminated"),
          *_sums("n_contam_grams", "n_contam_spans")),
-        _TEXT, opts_kw="decontam_opts",
-        keys=("benchmark_path", "benchmark_texts", "k", "min_hits"),
+        _TEXT, keys=("benchmark_path", "benchmark_texts", "k", "min_hits"),
         prep=_decontam_prep,
         doc="benchmark decontamination: drop docs sharing a k-token "
             "span with an evaluation set"),
@@ -230,7 +229,7 @@ STAGES: dict[str, Stage] = {
     "domaincap": Stage(
         domain_cap_decisions,
         (_DOCS, _is("kept"), _is("dropped", "n_capped")),
-        _domaincap_cols, True, opts_kw="domaincap_opts",
+        _domaincap_cols, True, keys=None,
         doc="per-registrable-domain document or token cap"),
     "linededup": Stage(
         linededup_decisions,
@@ -243,8 +242,7 @@ STAGES: dict[str, Stage] = {
         doc="exact-substring dedup"),
     "semdedup": Stage(
         semdedup_decisions, (_DOCS, _KEPT, _is("sem_dup")),
-        ("url string", "embedding array<float>"), True,
-        opts_kw="semdedup_opts",
+        ("url string", "embedding array<float>"), True, keys=None,
         doc="SemDeDup embedding-cluster semantic dedup over "
             "(url, embedding)"),
     # n_copies_out: the corpus size mix_apply would produce
@@ -252,11 +250,11 @@ STAGES: dict[str, Stage] = {
         mix_decisions,
         (_DOCS, _is("dropped"), _is("kept"), _is("upsampled"),
          "sum(n_copies) AS n_copies_out"),
-        _mix_cols, opts_kw="mix_opts",
+        _mix_cols, keys=None,
         doc="data-mixture sampling: per-key rates (registrable domain "
             "or key_col), deterministic down/upsampling, map-only"),
     "dedupref": Stage(
-        dedup_against, _DEDUP, _TEXT, opts_kw="dedupref_opts",
+        dedup_against, _DEDUP, _TEXT,
         keys=("reference_path", "index_path"), prep=_dedupref_prep,
         doc="decide a NEW crawl against a FROZEN kept corpus, "
             "doc-local given the reference"),
@@ -265,6 +263,28 @@ STAGES: dict[str, Stage] = {
         ("url string",), True,
         doc="collapse recrawls of the same resource by normalized url"),
 }
+
+
+def bind(spark, mode: str, opts: dict | None = None):
+    """(stage, args, kw) of `mode` under `opts`, validated from its
+    STAGES row alone, before any read: the op runs as
+    `stage.op(corpus, *args, **kw)`. `prep` (the side-input read) runs
+    last."""
+    stage = STAGES.get(mode)
+    if stage is None:
+        raise ValueError(f"unknown mode {mode!r} ({' | '.join(STAGES)})")
+    opts = dict(opts or {})
+    keys = stage.option_keys()
+    if opts and not keys:
+        raise ValueError(f"mode={mode!r} takes no options, got "
+                         f"{sorted(opts)}")
+    # fail fast on a typo'd key: 'min_word' or 'blocked_domain' would
+    # otherwise silently run the defaults (the sigaudit 'crls' lesson)
+    if bad := set(opts) - set(keys):
+        raise ValueError(f"unknown {mode} option keys {sorted(bad)} "
+                         f"({' | '.join(keys)})")
+    args, kw = stage.prep(spark, opts) if stage.prep else ((), opts)
+    return stage, args, kw
 
 
 def lineage(extracted, mode: str, run_id: str, reconciled: bool = False):
@@ -303,17 +323,12 @@ def make_cc_table(docs, classes=None):
 def run_job(spark, input_path: str, output_path: str,
             metrics_path: str | None = None, resume: bool = False,
             mode: str = "pdf", run_id: str | None = None,
-            sig_material: dict | None = None,
-            filter_opts: dict | None = None,
-            url_opts: dict | None = None,
-            decontam_opts: dict | None = None,
-            domaincap_opts: dict | None = None,
-            semdedup_opts: dict | None = None,
-            mix_opts: dict | None = None,
-            dedupref_opts: dict | None = None) -> dict:
-    """mode='pdf' (default): full PDF parse stack. mode='html': the
-    web-page half — DOM block-scoring boilerplate strip over the same
-    (url, html binary) table shape, same resume/metrics contract.
+            opts: dict | None = None) -> dict:
+    """Run one STAGES mode over the input table. mode='pdf' (default):
+    full PDF parse stack. mode='html': the web-page half — DOM
+    block-scoring boilerplate strip over the same (url, html binary)
+    table shape, same resume/metrics contract. `opts` are the mode's
+    option keys (Stage.keys; see bind).
 
     Every run stamps its output AND metrics rows with a `run_id`; on
     --resume, any run_id present in the output but absent from the
@@ -329,26 +344,7 @@ def run_job(spark, input_path: str, output_path: str,
     # validate the mode and its options BEFORE any column select or
     # read: an unknown mode used to surface as a misleading
     # cannot-resolve-column AnalysisException on WET-shaped tables
-    stage = STAGES.get(mode)
-    if stage is None:
-        raise ValueError(f"unknown mode {mode!r} ({' | '.join(STAGES)})")
-    given = dict(sig_material=sig_material, filter_opts=filter_opts,
-                 url_opts=url_opts, decontam_opts=decontam_opts,
-                 domaincap_opts=domaincap_opts,
-                 semdedup_opts=semdedup_opts, mix_opts=mix_opts,
-                 dedupref_opts=dedupref_opts)
-    opts = given.pop(stage.opts_kw, None) or {}
-    # fail fast on a typo'd key: 'min_word' or 'blocked_domain' would
-    # otherwise silently run the defaults (the sig_material lesson)
-    keys = stage.option_keys()
-    if bad := set(opts) - set(keys):
-        raise ValueError(f"unknown {stage.opts_kw} keys {sorted(bad)} "
-                         f"({' | '.join(keys)})")
-    for other, st in STAGES.items():
-        if given.get(st.opts_kw) is not None:
-            raise ValueError(f"{st.opts_kw} is only valid with "
-                             f"mode={other!r}")
-    args, kw = stage.prep(spark, opts) if stage.prep else ((), opts)
+    stage, args, kw = bind(spark, mode, opts)
 
     rid = run_id or uuid.uuid4().hex
     # column pruning reaches the scan: each mode reads only its columns
@@ -486,11 +482,9 @@ def _reconcile_metrics(spark, prev_output, output_path: str,
             .write.mode("append").parquet(metrics_path)
 
 
-# every options kwarg but sig_material (built from the three file
-# flags below) is a JSON-object flag, e.g.
-# --filter-opts '{"min_words": 10, "langs": ["en", "de"]}'
-_JSON_OPTS = [st.opts_kw for st in STAGES.values()
-              if st.opts_kw and st.opts_kw.endswith("_opts")]
+# sigaudit material: the flag that names its files, per option key
+_SIG_FLAGS = {"trust_pems": "trust_pems", "crl_blobs": "crl_pems",
+              "ocsp_ders": "ocsp_ders"}
 
 
 def _arg_parser() -> argparse.ArgumentParser:
@@ -503,52 +497,50 @@ def _arg_parser() -> argparse.ArgumentParser:
     ap.add_argument("--mode", choices=tuple(STAGES), default="pdf",
                     help="; ".join(f"{m}: {st.doc}"
                                    for m, st in STAGES.items()))
+    # the mode's options as one JSON object, e.g. --mode filter
+    # --opts '{"min_words": 10, "langs": ["en", "de"]}'
+    ap.add_argument("--opts", default=None)
     # sigaudit material: os.pathsep-separated file paths, read on the
     # driver and shipped into task closures (works on a real cluster
     # where executors lack the driver's filesystem); omit to fall
     # through to the executor-side $PDFIO_SPARK_* env lookup
-    ap.add_argument("--trust-pems", default=None)
-    ap.add_argument("--crl-pems", default=None)
-    ap.add_argument("--ocsp-ders", default=None)
+    for flag in _SIG_FLAGS.values():
+        ap.add_argument("--" + flag.replace("_", "-"), default=None)
     # --mode urlfilter: a newline-separated entry file read here, before
     # the job starts (a UT1-style list doesn't fit in argv), merged into
-    # url_opts
+    # the options
     ap.add_argument("--blocked-domains", default=None)
-    for kw in _JSON_OPTS:
-        ap.add_argument("--" + kw.replace("_", "-"), default=None)
     return ap
 
 
 def main(argv=None) -> None:
     import json
     args = _arg_parser().parse_args(argv)
-    opts = {kw: json.loads(getattr(args, kw)) for kw in _JSON_OPTS
-            if getattr(args, kw) is not None}
+    opts = json.loads(args.opts) if args.opts is not None else {}
+    if not isinstance(opts, dict):
+        raise ValueError("--opts must be a JSON object")
+    if bad := set(opts) & set(_SIG_FLAGS):
+        raise ValueError(f"{sorted(bad)}: sigaudit material comes from "
+                         "the --trust-pems/--crl-pems/--ocsp-ders files")
     if args.blocked_domains is not None:
         with open(args.blocked_domains) as f:
-            doms = [ln.strip() for ln in f if ln.strip()
-                    and not ln.strip().startswith("#")]
-        opts["url_opts"] = dict(opts.get("url_opts") or {},
-                                blocked_domains=doms)
-
-    # build sig_material from the flags in EVERY mode: run_job's
-    # mode guard then rejects e.g. `--mode pdf --crl-pems x.pem`
-    # loudly instead of the flags being silently dropped — the exact
-    # silent-no-revocation failure the sig_material key check exists
-    # to prevent (r6 review x2)
+            opts["blocked_domains"] = [
+                ln.strip() for ln in f
+                if ln.strip() and not ln.strip().startswith("#")]
+    # read the material flags in EVERY mode: bind then rejects e.g.
+    # `--mode pdf --crl-pems x.pem` loudly instead of the flags being
+    # silently dropped — the exact silent-no-revocation failure the
+    # sigaudit key check exists to prevent (r6 review x2)
     from ..pd.signature import read_pathsep_blobs
-    sig_material = {
-        k: read_pathsep_blobs(spec) for k, spec in
-        (("trust_pems", args.trust_pems), ("crl_blobs", args.crl_pems),
-         ("ocsp_ders", args.ocsp_ders)) if spec}
+    for key, flag in _SIG_FLAGS.items():
+        if spec := getattr(args, flag):
+            opts[key] = read_pathsep_blobs(spec)
 
     from .session import get_spark
     spark = get_spark(cpus=args.cpus, app="pdfio_spark_job")
     spark.sparkContext.setLogLevel("WARN")
-    out = run_job(spark, args.input, args.output, args.metrics,
-                  args.resume, mode=args.mode,
-                  sig_material=sig_material or None, **opts)
-    print(out)
+    print(run_job(spark, args.input, args.output, args.metrics,
+                  args.resume, mode=args.mode, opts=opts))
     spark.stop()
 
 

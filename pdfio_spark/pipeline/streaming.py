@@ -11,10 +11,12 @@ the genuinely streaming variant for crawl-as-it-arrives deployments:
 plus a watermarked windowed metrics stream (late-data tolerant), the
 standard Structured Streaming shapes (SURVEY §2.12 streaming).
 
-Each stateless twin of a run.py mode is one _stream_map call whose
-source schema is that mode's STAGES column declaration (the columns
-the batch scan prunes to); the stateful twins keep their GroupState
-functions and share _ttl and _sink.
+Every doc-local run.py mode without side inputs streams through one
+call, stream_stage(spark, mode, ...): its source schema is the mode's
+STAGES column declaration (the columns the batch scan prunes to) and
+its options are validated by the same run.bind as run_job's. The
+corpus-global modes have stateful twins instead, which keep their
+GroupState functions and share _ttl and _sink.
 """
 from __future__ import annotations
 
@@ -22,19 +24,13 @@ from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
-from .html_extract import extract_html
-from .job import (annotate_wat, annotate_wet, extract_in_place,
-                  mix_decisions, pii_scrub_over, quality_decisions,
-                  url_filter_decisions, validate_signatures_over)
-from .run import STAGES
+from .job import extract_in_place, validate_signatures_over
+from .run import STAGES, bind
 
-__all__ = ["stream_extract", "stream_extract_html", "stream_metrics",
-           "stream_dedup", "stream_neardup", "neardup_keep_decisions",
-           "stream_ingest_wet", "stream_ingest_wat", "stream_sigaudit",
-           "stream_quality_filter", "stream_url_filter", "stream_mix",
-           "stream_pii_scrub", "stream_shard_export",
-           "stream_domain_cap", "stream_line_dedup",
-           "stream_substr_dedup"]
+__all__ = ["stream_stage", "stream_metrics", "stream_dedup",
+           "stream_neardup", "neardup_keep_decisions",
+           "stream_shard_export", "stream_domain_cap",
+           "stream_line_dedup", "stream_substr_dedup"]
 
 
 def _schema(mode: str, opts=None) -> str:
@@ -66,16 +62,69 @@ def _sink(df, output_dir: str, checkpoint_dir: str,
 
 def _stream_map(spark, input_dir: str, checkpoint_dir: str,
                 output_dir: str, available_now: bool, schema: str, op,
-                fan_out: bool = False, partition_by=None):
-    """The stateless twin: readStream of `schema` -> op -> parquet sink.
-    fan_out spreads each micro-batch over every core — for CPU-bound
-    UDF ops, whose file-source partitioning is maxFilesPerTrigger tasks
-    (the batch path's perf lesson)."""
-    src = _source(spark, input_dir, schema)
-    if fan_out:
-        src = src.repartition(spark.sparkContext.defaultParallelism)
-    return _sink(op(src), output_dir, checkpoint_dir, available_now,
-                 partition_by)
+                partition_by=None):
+    """The stateless twin: readStream of `schema` -> op -> parquet sink."""
+    return _sink(op(_source(spark, input_dir, schema)), output_dir,
+                 checkpoint_dir, available_now, partition_by)
+
+
+def _fanned(op):
+    """`op` after spreading each micro-batch over every core: a
+    CPU-bound UDF would otherwise run one task per file of the trigger
+    (maxFilesPerTrigger), the batch path's perf lesson."""
+    def run(src, **kw):
+        return op(src.repartition(
+            src.sparkSession.sparkContext.defaultParallelism), **kw)
+    return run
+
+
+# the micro-batch op where it differs from the STAGES op. pdf runs
+# extract_in_place without the heavy-tail split: Structured Streaming
+# runs without AQE, so the tail exchange would start
+# spark.sql.shuffle.partitions Python tasks in every micro-batch (the
+# empty-task cost the batch path shed). Both are CPU-bound per row
+# (parse; CMS parse + verify), so both fan out: 3,550 -> 6,501 docs/s
+# for pdf on the 100k streaming soak, the rest of the gap to batch
+# being per-micro-batch scheduling.
+_MICRO_BATCH = {"pdf": _fanned(extract_in_place),
+                "sigaudit": _fanned(validate_signatures_over)}
+
+
+def stream_stage(spark: SparkSession, mode: str, input_dir: str,
+                 checkpoint_dir: str, output_dir: str,
+                 opts: dict | None = None, available_now: bool = True):
+    """Streaming twin of `run.py --mode <mode>`: file-source stream of
+    the mode's scan columns -> its op per micro-batch -> parquet sink,
+    exactly-once via the streaming checkpoint; resume is free (restart
+    with the same checkpoint dir). `opts` are validated by run.bind, as
+    run_job's are. Only doc-local modes without side inputs stream
+    this way: a stateless map per micro-batch is then globally correct
+    (a DataFrame option such as a urlfilter blocklist must be a BATCH
+    DataFrame; it is broadcast per micro-batch).
+
+    Returns the StreamingQuery (already started)."""
+    stage = STAGES.get(mode)
+    if stage is not None and (stage.corpus_global or stage.prep):
+        raise ValueError(
+            f"mode={mode!r} has no stateless streaming twin: its "
+            "decisions are corpus-global or need a side input; use "
+            "its stateful twin (stream_dedup, stream_neardup, "
+            "stream_domain_cap, stream_line_dedup, stream_substr_dedup) "
+            "or, with a side input, its op per micro-batch through "
+            "foreachBatch")
+    stage, _, kw = bind(spark, mode, opts)
+    if mode == "mix" and \
+            (key := kw.get("key_col", "domain")) != "domain" and \
+            key not in spark.read.parquet(input_dir).columns:
+        # a missing/misnamed key column would project as NULL, every
+        # doc falls through to default_rate and the mix is silently a
+        # no-op; the batch path fails loudly — match it (the
+        # stream_domain_cap text rule, r6 review)
+        raise ValueError(f"key_col {key!r} not in {input_dir}")
+    op = _MICRO_BATCH.get(mode, stage.op)
+    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
+                       available_now, _schema(mode, kw),
+                       partial(op, **kw))
 
 
 def _ttl(state_ttl_hours):
@@ -226,101 +275,11 @@ def neardup_keep_decisions(spark: SparkSession, flags_dir: str):
                     "dup_of"))
 
 
-def stream_extract(spark: SparkSession, input_dir: str,
-                   checkpoint_dir: str, output_dir: str,
-                   available_now: bool = True):
-    """File-source stream of (url, html[, nbytes]) parquet -> extraction
-    -> parquet sink. Exactly-once via the streaming checkpoint; resume
-    is free (restart with the same checkpoint dir).
-
-    Returns the StreamingQuery (already started)."""
-    # fan out: measured on the 100k streaming soak, 3,550 -> 6,501
-    # docs/s; the rest of the gap to batch is per-micro-batch scheduling
-    return _stream_map(
-        spark, input_dir, checkpoint_dir, output_dir, available_now,
-        _schema("pdf"), extract_in_place, fan_out=True)
 
 
-def stream_extract_html(spark: SparkSession, input_dir: str,
-                        checkpoint_dir: str, output_dir: str,
-                        available_now: bool = True):
-    """Streaming twin of run.py --mode html: file-source stream of
-    (url, html) web pages -> boilerplate strip -> parquet sink,
-    exactly-once via the streaming checkpoint."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("html"), extract_html)
 
 
-def stream_ingest_wet(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True):
-    """Streaming twin of run.py --mode wet: file-source stream of
-    (url, text) pre-extracted pages -> the oracled analytics
-    annotation (job.annotate_wet's expression set; stateless, so no
-    GroupState) -> parquet sink, exactly-once via the checkpoint."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("wet"), annotate_wet)
 
-
-def stream_ingest_wat(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True):
-    """Streaming twin of run.py --mode wat: file-source stream of
-    (url, metadata map, nbytes) crawl-metadata rows -> typed
-    selection columns (job.annotate_wat's expression set; stateless)
-    -> parquet sink, exactly-once via the checkpoint."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("wat"), annotate_wat)
-
-
-def stream_quality_filter(spark: SparkSession, input_dir: str,
-                          checkpoint_dir: str, output_dir: str,
-                          available_now: bool = True, **thresholds):
-    """Streaming twin of run.py --mode filter: file-source stream of
-    (url, text) docs -> per-doc keep decisions with reason tags
-    (job.quality_decisions — stateless JVM expressions, no fan-out
-    needed: this runs at scan speed) -> parquet sink, exactly-once
-    via the checkpoint. `thresholds` pass through (min_words=...,
-    langs=..., etc.)."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("filter"),
-                       partial(quality_decisions, **thresholds))
-
-
-def stream_url_filter(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True, **url_opts):
-    """Streaming twin of run.py --mode urlfilter: file-source stream
-    of docs -> per-URL keep decisions with reason tags
-    (job.url_filter_decisions — row-local JVM exprs plus two
-    broadcast blocklist joins, no fan-out needed: runs at scan
-    speed) -> parquet sink, exactly-once via the checkpoint.
-    `url_opts` pass through (blocked_domains=..., blocked_tokens=...,
-    etc.); a DataFrame blocklist must be a BATCH DataFrame (it is
-    broadcast per micro-batch)."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("urlfilter"),
-                       partial(url_filter_decisions, **url_opts))
-
-
-def stream_mix(spark: SparkSession, input_dir: str,
-               checkpoint_dir: str, output_dir: str,
-               available_now: bool = True, **mix_opts):
-    """Streaming twin of run.py --mode mix: the decision is doc-local
-    (a deterministic hash of the url), so the stateless map per
-    micro-batch IS globally correct — same rationale as the urlfilter
-    twin; a dict `weights` is broadcast per micro-batch."""
-    key = mix_opts.get("key_col", "domain")
-    if key != "domain" and \
-            key not in spark.read.parquet(input_dir).columns:
-        # a missing/misnamed key column would project as NULL, every
-        # doc falls through to default_rate and the mix is silently a
-        # no-op; the batch path fails loudly — match it (the
-        # stream_domain_cap text rule, r6 review)
-        raise ValueError(f"key_col {key!r} not in {input_dir}")
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("mix", mix_opts),
-                       partial(mix_decisions, **mix_opts))
 
 
 def stream_shard_export(spark: SparkSession, input_dir: str,
@@ -608,36 +567,6 @@ def stream_substr_dedup(spark: SparkSession, input_dir: str,
     return _sink(decided, output_dir, checkpoint_dir)
 
 
-def stream_pii_scrub(spark: SparkSession, input_dir: str,
-                     checkpoint_dir: str, output_dir: str,
-                     available_now: bool = True):
-    """Streaming twin of run.py --mode pii: file-source stream of
-    (url, text) docs -> PII-redacted text + per-category counters
-    (job.pii_scrub_over — stateless JVM regexes, runs at scan speed,
-    no fan-out needed) -> parquet sink, exactly-once via the
-    checkpoint."""
-    return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema("pii"), pii_scrub_over)
-
-
-def stream_sigaudit(spark: SparkSession, input_dir: str,
-                    checkpoint_dir: str, output_dir: str,
-                    trust_pems=None, crl_blobs=None, ocsp_ders=None,
-                    available_now: bool = True):
-    """Streaming twin of run.py --mode sigaudit: file-source stream
-    of (url, html) documents -> per-signature audit rows
-    (job.validate_signatures_over — trust/CRL/OCSP bytes snapshotted
-    into the task closure at plan build time, the only way driver
-    material reaches executors) -> parquet sink, exactly-once via the
-    checkpoint. CMS parse + verify is CPU-bound per row, so each
-    micro-batch fans out across every core (the stream_extract
-    lesson)."""
-    return _stream_map(
-        spark, input_dir, checkpoint_dir, output_dir, available_now,
-        _schema("sigaudit"),
-        partial(validate_signatures_over, trust_pems=trust_pems,
-                crl_blobs=crl_blobs, ocsp_ders=ocsp_ders),
-        fan_out=True)
 
 
 def stream_metrics(spark: SparkSession, input_dir: str,

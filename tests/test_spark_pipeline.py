@@ -52,20 +52,20 @@ def test_resume_antijoin(spark, corpus):
 
 
 def test_streaming_extract(spark, corpus):
-    from pdfio_spark.pipeline.streaming import stream_extract
+    from pdfio_spark.pipeline.streaming import stream_stage
     tmp = tempfile.mkdtemp(prefix="pdfio_stream_")
     try:
         inp, chk, outp = (os.path.join(tmp, d) for d in
                           ("in", "chk", "out"))
         corpus.write.parquet(inp)
-        q = stream_extract(spark, inp, chk, outp)
+        q = stream_stage(spark, "pdf", inp, chk, outp)
         q.awaitTermination(120)
         out = spark.read.parquet(outp)
         assert out.count() == 60
         assert out.filter("status = 'ok'").count() == 60
         # exactly-once resume: restarting with the same checkpoint
         # processes nothing new
-        q2 = stream_extract(spark, inp, chk, outp)
+        q2 = stream_stage(spark, "pdf", inp, chk, outp)
         q2.awaitTermination(60)
         assert spark.read.parquet(outp).count() == 60
     finally:
@@ -705,20 +705,20 @@ def test_run_job_wet_mode_resume(spark, tmp_path):
 def test_stream_ingest_wet(spark, tmp_path):
     """Streaming twin of --mode wet: exactly-once annotation of a
     pre-extracted-text stream; restart reprocesses nothing."""
-    from pdfio_spark.pipeline.streaming import stream_ingest_wet
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "swet_in")
     chk = str(tmp_path / "swet_chk")
     outp = str(tmp_path / "swet_out")
     spark.createDataFrame(
         [(f"wet://{i}", f"stream body {i} of the corpus") for i in
          range(12)], "url string, text string").write.parquet(inp)
-    q = stream_ingest_wet(spark, inp, chk, outp)
+    q = stream_stage(spark, "wet", inp, chk, outp)
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 12
     assert out.filter("status = 'ok'").count() == 12
     assert out.filter("url = 'wet://5'").collect()[0]["ws_tokens"] == 6
-    q2 = stream_ingest_wet(spark, inp, chk, outp)
+    q2 = stream_stage(spark, "wet", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 12  # nothing reprocessed
 
@@ -783,19 +783,19 @@ def test_stream_ingest_wat(spark, tmp_path):
     """Streaming twin of --mode wat: exactly-once typed-column
     promotion of a crawl-metadata stream; restart reprocesses
     nothing."""
-    from pdfio_spark.pipeline.streaming import stream_ingest_wat
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "swat_in")
     chk = str(tmp_path / "swat_chk")
     outp = str(tmp_path / "swat_out")
     spark.createDataFrame(_wat_rows(12), _WAT_SCHEMA) \
         .write.parquet(inp)
-    q = stream_ingest_wat(spark, inp, chk, outp)
+    q = stream_stage(spark, "wat", inp, chk, outp)
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 12
     assert out.filter("status = 'ok'").count() == 12
     assert out.filter("url = 'wat://5'").collect()[0]["n_links"] == 6
-    q2 = stream_ingest_wat(spark, inp, chk, outp)
+    q2 = stream_stage(spark, "wat", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 12  # nothing reprocessed
 
@@ -803,7 +803,7 @@ def test_stream_ingest_wat(spark, tmp_path):
 def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     """run.py --mode sigaudit (r6): corpus signature audit under the
     resume/metrics/run_id contract, with OCSP revocation material
-    shipped into executor closures via sig_material."""
+    shipped into executor closures via opts."""
     from pyspark.sql import functions as F
     from pdfio_spark.fixtures import (build_fixture, make_signed_pdf,
                                       test_trust_pems)
@@ -823,7 +823,7 @@ def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     mat = {"trust_pems": [bytes(p) for p in test_trust_pems()],
            "ocsp_ders": [resp]}
     r1 = run_job(spark, inp, outp, met, mode="sigaudit", run_id="s1",
-                 sig_material=mat)
+                 opts=mat)
     assert r1["by_status"] == {"ok": 8, "nosig": 1, "error": 1}
     out = spark.read.parquet(outp)
     # the stapled OCSP response revokes every leaf signature
@@ -837,19 +837,19 @@ def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     spark.createDataFrame(more, "url string, html binary") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="sigaudit", resume=True,
-                 run_id="s2", sig_material=mat)
+                 run_id="s2", opts=mat)
     assert r2["written"] == 3
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_rows")).collect()[0][0] == 13
     assert m.agg(F.sum("n_revoked")).collect()[0][0] == 11
     assert m.agg(F.sum("n_nosig")).collect()[0][0] == 1
     assert m.agg(F.sum("n_error")).collect()[0][0] == 1
-    # typo'd sig_material key / wrong-mode material fail driver-side
+    # typo'd material key / wrong-mode material fail driver-side
     with pytest.raises(ValueError):
         run_job(spark, inp, outp, met, mode="sigaudit",
-                sig_material={"crls": [crl]})
+                opts={"crls": [crl]})
     with pytest.raises(ValueError):
-        run_job(spark, inp, outp, met, mode="pdf", sig_material={})
+        run_job(spark, inp, outp, met, mode="pdf", opts=mat)
 
 
 def test_stream_sigaudit(spark, tmp_path):
@@ -857,7 +857,7 @@ def test_stream_sigaudit(spark, tmp_path):
     audit rows; restart with the same checkpoint reprocesses
     nothing."""
     from pdfio_spark.fixtures import make_signed_pdf, test_trust_pems
-    from pdfio_spark.pipeline.streaming import stream_sigaudit
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "ssig_in")
     chk = str(tmp_path / "ssig_chk")
     outp = str(tmp_path / "ssig_out")
@@ -867,13 +867,15 @@ def test_stream_sigaudit(spark, tmp_path):
     spark.createDataFrame(rows, "url string, html binary") \
         .write.parquet(inp)
     trust = [bytes(p) for p in test_trust_pems()]
-    q = stream_sigaudit(spark, inp, chk, outp, trust_pems=trust)
+    q = stream_stage(spark, "sigaudit", inp, chk, outp,
+                     opts={"trust_pems": trust})
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 6
     assert out.filter("passed").count() == 6
     assert out.filter("signer = 'CN=pdfio-spark-leaf'").count() == 6
-    q2 = stream_sigaudit(spark, inp, chk, outp, trust_pems=trust)
+    q2 = stream_stage(spark, "sigaudit", inp, chk, outp,
+                      opts={"trust_pems": trust})
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 6  # nothing reprocessed
 
@@ -940,17 +942,17 @@ def test_quality_decisions_and_run_job_filter_mode(spark, tmp_path):
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     assert m.agg(F.sum("n_repetition")).collect()[0][0] == 1
     assert m.agg(F.sum("n_lang")).collect()[0][0] == 1
-    # filter_opts thresholds flow through run_job; typo'd keys and
+    # filter opts thresholds flow through run_job; typo'd keys and
     # wrong-mode opts fail driver-side
     outp2 = str(tmp_path / "qf_out2")
     r3 = run_job(spark, inp, outp2, None, mode="filter", run_id="f3",
-                 filter_opts={"langs": ["en", "de"], "min_words": 1})
+                 opts={"langs": ["en", "de"], "min_words": 1})
     assert r3["by_status"] == {"kept": 4, "dropped": 1}
     with pytest.raises(ValueError):
         run_job(spark, inp, outp2, None, mode="filter",
-                filter_opts={"min_word": 1})
+                opts={"min_word": 1})
     with pytest.raises(ValueError):
-        run_job(spark, inp, outp2, None, mode="pdf", filter_opts={})
+        run_job(spark, inp, outp2, None, mode="pdf", opts={"min_words": 1})
 
 
 def test_pii_scrub_over_and_run_job_pii_mode(spark, tmp_path):
@@ -1085,24 +1087,24 @@ def test_url_filter_decisions_and_run_job_urlfilter_mode(spark,
     uo = {"blocked_domains": ["example.com", "news.co.uk"],
           "blocked_tokens": ["casino", "poker"]}
     r1 = run_job(spark, inp, outp, met, mode="urlfilter",
-                 run_id="u1", url_opts=uo)
+                 run_id="u1", opts=uo)
     assert r1["by_status"] == {"kept": 2, "dropped": 5}
     spark.createDataFrame([("https://late.example.com/y",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2j = run_job(spark, inp, outp, met, mode="urlfilter",
-                  resume=True, run_id="u2", url_opts=uo)
+                  resume=True, run_id="u2", opts=uo)
     assert r2j["written"] == 1 and r2j["by_status"] == {"dropped": 1}
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 8
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     assert m.agg(F.sum("n_blocked_domain")).collect()[0][0] == 4
     # typo'd option key fails driver-side; opts rejected off-mode
-    with pytest.raises(ValueError, match="unknown url_opts"):
+    with pytest.raises(ValueError, match="unknown urlfilter option keys"):
         run_job(spark, inp, outp, met, mode="urlfilter",
-                url_opts={"blocked_domain": []})
-    with pytest.raises(ValueError, match="url_opts is only valid"):
-        run_job(spark, inp, outp, met, mode="pdf", url_opts={})
+                opts={"blocked_domain": []})
+    with pytest.raises(ValueError, match="takes no options"):
+        run_job(spark, inp, outp, met, mode="pdf", opts=uo)
 
 
 def test_urldedup_decisions_and_run_job_mode(spark, tmp_path):
@@ -1258,23 +1260,23 @@ def test_mix_decisions_and_run_job_mix_mode(spark, tmp_path):
     df.filter("url is not null").write.parquet(inp)
     mo = {"weights": w}
     r1 = run_job(spark, inp, outp, met, mode="mix", run_id="m1",
-                 mix_opts=mo)
+                 opts=mo)
     assert r1["written"] == 91
     spark.createDataFrame([("https://late.plain.org/z",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="mix", resume=True,
-                 run_id="m2", mix_opts=mo)
+                 run_id="m2", opts=mo)
     assert r2["written"] == 1
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 92
     assert (m.agg(F.sum("n_copies_out")).collect()[0][0]
             == total + 1)
-    with pytest.raises(ValueError, match="unknown mix_opts"):
+    with pytest.raises(ValueError, match="unknown mix option keys"):
         run_job(spark, inp, outp, met, mode="mix",
-                mix_opts={"weight": w})
-    with pytest.raises(ValueError, match="mix_opts is only valid"):
-        run_job(spark, inp, outp, met, mode="pdf", mix_opts={})
+                opts={"weight": w})
+    with pytest.raises(ValueError, match="takes no options"):
+        run_job(spark, inp, outp, met, mode="pdf", opts=mo)
 
 
 def test_run_job_null_url_resume_idempotent(spark, tmp_path):
@@ -1310,10 +1312,10 @@ def test_run_job_null_url_resume_idempotent(spark, tmp_path):
     vdf.write.parquet(inp2)
     so = {"k": 2, "iters": 1, "tau": 0.99}
     rg1 = run_job(spark, inp2, outp2, met2, mode="semdedup",
-                  run_id="g1", semdedup_opts=so)
+                  run_id="g1", opts=so)
     assert rg1["written"] == 3
     rg2 = run_job(spark, inp2, outp2, met2, mode="semdedup",
-                  resume=True, run_id="g2", semdedup_opts=so)
+                  resume=True, run_id="g2", opts=so)
     assert rg2["written"] == 0
     out2 = spark.read.parquet(outp2)
     assert out2.count() == 3
@@ -1351,7 +1353,7 @@ def test_stream_mix_twin(spark, tmp_path):
     """The stateless streaming twin emits byte-identical decisions to
     the batch operator (doc-local rule -> foreachBatch-free map)."""
     from pdfio_spark.pipeline.job import mix_decisions
-    from pdfio_spark.pipeline.streaming import stream_mix
+    from pdfio_spark.pipeline.streaming import stream_stage
     rows = [(f"https://d{i % 5}.example{i % 7}.org/p{i}",)
             for i in range(60)]
     df = spark.createDataFrame(rows, "url string")
@@ -1359,7 +1361,7 @@ def test_stream_mix_twin(spark, tmp_path):
                       ("smx_in", "smx_chk", "smx_out"))
     df.write.parquet(inp)
     w = {"example0.org": 2.0, "example1.org": 0.25}
-    q = stream_mix(spark, inp, chk, outp, weights=w)
+    q = stream_stage(spark, "mix", inp, chk, outp, opts={"weights": w})
     q.awaitTermination(120)
     got = {tuple(r) for r in spark.read.parquet(outp).collect()}
     want = {tuple(r) for r in
@@ -1368,8 +1370,8 @@ def test_stream_mix_twin(spark, tmp_path):
     # a missing/misnamed key column refuses instead of silently
     # default-rating the whole corpus (NULL projection)
     with pytest.raises(ValueError, match="key_col"):
-        stream_mix(spark, inp, chk, outp, key_col="lang",
-                   weights={"en": 2.0})
+        stream_stage(spark, "mix", inp, chk, outp,
+                     opts={"key_col": "lang", "weights": {"en": 2.0}})
 
 
 def test_shard_export(spark, tmp_path):
@@ -1519,26 +1521,26 @@ def test_decontam_decisions_and_run_job_mode(spark, tmp_path):
     bdf.write.parquet(bp)
     do = {"benchmark_path": bp, "k": 5}
     r1 = run_job(spark, inp, outp, met, mode="decontam",
-                 run_id="dc1", decontam_opts=do)
+                 run_id="dc1", opts=do)
     assert r1["by_status"] == {"kept": 3, "dropped": 2}
     spark.createDataFrame(
         [("d://late", "the capital of france paris again here")],
         "url string, text string").write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="decontam",
-                 resume=True, run_id="dc2", decontam_opts=do)
+                 resume=True, run_id="dc2", opts=do)
     assert r2["written"] == 1 and r2["by_status"] == {"dropped": 1}
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 6
     assert m.agg(F.sum("n_contaminated")).collect()[0][0] == 3
     # option fail-fast: typo'd key, both/neither benchmark source
-    with pytest.raises(ValueError, match="unknown decontam_opts"):
+    with pytest.raises(ValueError, match="unknown decontam option keys"):
         run_job(spark, inp, outp, met, mode="decontam",
-                decontam_opts={"bench_path": bp})
+                opts={"bench_path": bp})
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="decontam",
-                decontam_opts={})
-    with pytest.raises(ValueError, match="decontam_opts is only"):
-        run_job(spark, inp, outp, met, mode="pdf", decontam_opts={})
+                opts={})
+    with pytest.raises(ValueError, match="takes no options"):
+        run_job(spark, inp, outp, met, mode="pdf", opts=do)
 
 
 def test_domain_cap_decisions_and_run_job_mode(spark, tmp_path):
@@ -1591,20 +1593,21 @@ def test_domain_cap_decisions_and_run_job_mode(spark, tmp_path):
     df.write.parquet(inp)
     r1 = run_job(spark, inp, outp, met, mode="domaincap",
                  run_id="cap1",
-                 domaincap_opts={"max_per_domain": CAP})
+                 opts={"max_per_domain": CAP})
     assert r1["by_status"] == {"kept": 6, "dropped": 8}
     spark.createDataFrame([("https://solo.example.net/y",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="domaincap",
                  resume=True, run_id="cap2",
-                 domaincap_opts={"max_per_domain": CAP})
+                 opts={"max_per_domain": CAP})
     assert r2["written"] == 1
-    with pytest.raises(ValueError, match="unknown domaincap_opts"):
+    with pytest.raises(ValueError, match="unknown domaincap option keys"):
         run_job(spark, inp, outp, met, mode="domaincap",
-                domaincap_opts={"cap": 1})
-    with pytest.raises(ValueError, match="domaincap_opts is only"):
-        run_job(spark, inp, outp, met, mode="pdf", domaincap_opts={})
+                opts={"cap": 1})
+    with pytest.raises(ValueError, match="takes no options"):
+        run_job(spark, inp, outp, met, mode="pdf",
+                opts={"max_per_domain": CAP})
 
 
 def test_domain_token_cap(spark, tmp_path):
@@ -1670,8 +1673,8 @@ def test_domain_token_cap(spark, tmp_path):
     df.write.parquet(inp)
     r1 = run_job(spark, inp, outp, met, mode="domaincap",
                  run_id="tc1",
-                 domaincap_opts={"max_per_domain": None,
-                                 "max_tokens_per_domain": BUDGET})
+                 opts={"max_per_domain": None,
+                       "max_tokens_per_domain": BUDGET})
     want_kept = sum(r.status == "kept" for r in out.values())
     assert r1["by_status"].get("kept") == want_kept
 
@@ -1695,21 +1698,21 @@ def test_corpus_global_resume_displacement_warns(spark, tmp_path):
     outp = str(tmp_path / "disp_out")
     spark.createDataFrame([(first,)], "url string").write.parquet(inp)
     r1 = run_job(spark, inp, outp, None, mode="domaincap",
-                 run_id="w1", domaincap_opts={"max_per_domain": 1})
+                 run_id="w1", opts={"max_per_domain": 1})
     assert r1["by_status"] == {"kept": 1}
     # unchanged snapshot: clean crash-recovery resume stays silent
     with _w.catch_warnings():
         _w.simplefilter("error")
         r2 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w2",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
     assert r2["written"] == 0
     spark.createDataFrame([(second,)], "url string") \
         .write.mode("append").parquet(inp)
     with pytest.warns(UserWarning, match="diverge"):
         r3 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w3",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
     assert r3["by_status"] == {"kept": 1}  # the documented violation
     out = spark.read.parquet(outp)
     assert out.filter("status = 'kept'").count() == 2
@@ -1717,7 +1720,7 @@ def test_corpus_global_resume_displacement_warns(spark, tmp_path):
     with pytest.warns(UserWarning, match="diverge"):
         r4 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w4",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
     assert r4["written"] == 0
 
 
@@ -1788,15 +1791,15 @@ def test_stream_domain_cap(spark, tmp_path):
 
 def test_stream_url_filter(spark, tmp_path):
     """Streaming twin of --mode urlfilter: exactly-once decisions."""
-    from pdfio_spark.pipeline.streaming import stream_url_filter
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "suf_in")
     chk = str(tmp_path / "suf_chk")
     outp = str(tmp_path / "suf_out")
     spark.createDataFrame(
         [("https://ok.example.org/a",), ("http://bad.example.com/b",)],
         "url string").write.parquet(inp)
-    q = stream_url_filter(spark, inp, chk, outp,
-                          blocked_domains=["example.com"])
+    q = stream_stage(spark, "urlfilter", inp, chk, outp,
+                     opts={"blocked_domains": ["example.com"]})
     q.awaitTermination(120)
     out = {r.url: r.status for r in
            spark.read.parquet(outp).collect()}
@@ -1806,38 +1809,38 @@ def test_stream_url_filter(spark, tmp_path):
 
 def test_stream_pii_scrub(spark, tmp_path):
     """Streaming twin of --mode pii: exactly-once redaction."""
-    from pdfio_spark.pipeline.streaming import stream_pii_scrub
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "spii_in")
     chk = str(tmp_path / "spii_chk")
     outp = str(tmp_path / "spii_out")
     spark.createDataFrame(
         [("s://a", "mail me a@b.co"), ("s://b", "no pii here")],
         "url string, text string").write.parquet(inp)
-    q = stream_pii_scrub(spark, inp, chk, outp)
+    q = stream_stage(spark, "pii", inp, chk, outp)
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 2
     assert (out.filter("url = 's://a'").collect()[0]["text"]
             == "mail me <EMAIL>")
-    q2 = stream_pii_scrub(spark, inp, chk, outp)
+    q2 = stream_stage(spark, "pii", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 2  # nothing reprocessed
 
 
 def test_stream_quality_filter(spark, tmp_path):
     """Streaming twin of --mode filter: exactly-once decisions."""
-    from pdfio_spark.pipeline.streaming import stream_quality_filter
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "sqf_in")
     chk = str(tmp_path / "sqf_chk")
     outp = str(tmp_path / "sqf_out")
     spark.createDataFrame(_quality_corpus(),
                           "url string, text string").write.parquet(inp)
-    q = stream_quality_filter(spark, inp, chk, outp)
+    q = stream_stage(spark, "filter", inp, chk, outp)
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 4
     assert out.filter("status = 'kept'").count() == 1
-    q2 = stream_quality_filter(spark, inp, chk, outp)
+    q2 = stream_stage(spark, "filter", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 4  # nothing reprocessed
 
@@ -2125,7 +2128,7 @@ def test_run_job_semdedup_mode_crash_resume(spark, tmp_path):
     (semdedup_decisions(df, **so).limit(3)
      .withColumn("run_id", F.lit("s1")).write.parquet(outp))
     r = run_job(spark, inp, outp, met, resume=True, mode="semdedup",
-                run_id="s2", semdedup_opts=so)
+                run_id="s2", opts=so)
     assert r["written"] == 5
     out = spark.read.parquet(outp)
     assert out.count() == 8
@@ -2151,12 +2154,12 @@ def test_run_job_semdedup_mode_crash_resume(spark, tmp_path):
             == sum(1 for x in by_url.values() if x.is_kept))
     # opts hygiene: typo'd key and wrong-mode opts fail fast
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="semdedup_opts"):
+    with _pytest.raises(ValueError, match="unknown semdedup option keys"):
         run_job(spark, inp, outp, met, mode="semdedup",
-                semdedup_opts={"kk": 3})
-    with _pytest.raises(ValueError, match="only valid"):
+                opts={"kk": 3})
+    with _pytest.raises(ValueError, match="takes no options"):
         run_job(spark, inp, outp, met, mode="pdf",
-                semdedup_opts=so)
+                opts=so)
 
 
 def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
@@ -2221,14 +2224,14 @@ def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
     ref.write.parquet(refp)
     ro = {"reference_path": refp}
     r1 = run_job(spark, inp, outp, met, mode="dedupref", run_id="d1",
-                 dedupref_opts=ro)
+                 opts=ro)
     assert r1["by_status"] == {"kept": 2, "exact_dup": 1,
                                "near_dup": 1}
     spark.createDataFrame([("doc://e", other)],
                           "url string, text string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="dedupref", resume=True,
-                 run_id="d2", dedupref_opts=ro)
+                 run_id="d2", opts=ro)
     assert r2["written"] == 1
     assert r2["by_status"] == {"exact_dup": 1}
     m = spark.read.parquet(met)
@@ -2236,18 +2239,18 @@ def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="dedupref",
-                dedupref_opts={})
+                opts={})
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="dedupref",
-                dedupref_opts={"reference_path": refp,
-                               "index_path": ixp})
-    with pytest.raises(ValueError, match="only valid"):
+                opts={"reference_path": refp,
+                      "index_path": ixp})
+    with pytest.raises(ValueError, match="takes no options"):
         run_job(spark, inp, outp, met, mode="pdf",
-                dedupref_opts=ro)
+                opts=ro)
     # index-path mode through the contract too
     outp2, met2 = str(tmp_path / "dr_out2"), str(tmp_path / "dr_met2")
     rix = run_job(spark, inp, outp2, met2, mode="dedupref",
-                  run_id="d3", dedupref_opts={"index_path": ixp})
+                  run_id="d3", opts={"index_path": ixp})
     assert rix["by_status"] == {"kept": 2, "exact_dup": 2,
                                 "near_dup": 1}
     # index integrity (r6 review): an interrupted rebuild leaves the
@@ -2544,14 +2547,37 @@ def test_ivf_train_null_cell_keeps_previous_centroid(spark):
 def test_cli_sig_flags_rejected_outside_sigaudit(spark, tmp_path):
     """r6 review x2: `--mode pdf --crl-pems x.pem` used to drop the
     revocation material silently (sig_material was only built for
-    --mode sigaudit); the CLI must hit run_job's mode guard."""
+    --mode sigaudit); the CLI must hit run_job's option check."""
     from pdfio_spark.pipeline.run import main
     pem = tmp_path / "crl.pem"
     pem.write_bytes(b"not really a crl")
-    with pytest.raises(ValueError, match="sig_material is only valid"):
+    with pytest.raises(ValueError, match="takes no options"):
         main(["--input", str(tmp_path / "in"),
               "--output", str(tmp_path / "out"),
               "--mode", "pdf", "--crl-pems", str(pem)])
+
+
+def test_cli_opts_rejected_before_any_read(spark, tmp_path):
+    """--opts and --blocked-domains reach run_job's option check
+    through main(); the input does not exist, so a call that got past
+    validation would fail on the read instead."""
+    from pdfio_spark.pipeline.run import main
+    base = ["--input", str(tmp_path / "in"),
+            "--output", str(tmp_path / "out"), "--mode", "filter"]
+    with pytest.raises(ValueError,
+                       match=r"unknown filter option keys \['min_word'\]"):
+        main(base + ["--opts", '{"min_word": 1}'])
+    doms = tmp_path / "f.txt"
+    doms.write_text("example.com\n")
+    with pytest.raises(ValueError, match=r"\['blocked_domains'\]"):
+        main(base + ["--blocked-domains", str(doms)])
+    with pytest.raises(ValueError, match="Expecting property name"):
+        main(base + ["--opts", "{min_words: 1}"])
+    with pytest.raises(ValueError, match="JSON object"):
+        main(base + ["--opts", "[1]"])
+    # sigaudit material comes only from the three file flags
+    with pytest.raises(ValueError, match="--trust-pems"):
+        main(base[:-1] + ["sigaudit", "--opts", '{"trust_pems": []}'])
 
 
 def test_extract_pdfs_null_html_quarantined(spark):
@@ -2913,14 +2939,14 @@ def test_stream_extract_html(spark, tmp_path):
     checkpoint, byte-identical main text."""
     from pdfio_spark.pipeline.html_extract import (build_html_for_doc,
                                                    expected_main_text)
-    from pdfio_spark.pipeline.streaming import stream_extract_html
+    from pdfio_spark.pipeline.streaming import stream_stage
 
     rows = [(f"doc://{i}", build_html_for_doc(i, f"stream body {i} " * 6))
             for i in range(30)]
     inp, chk, outp = (str(tmp_path / d) for d in ("in", "chk", "out"))
     spark.createDataFrame(rows, "url string, html binary") \
         .write.parquet(inp)
-    q = stream_extract_html(spark, inp, chk, outp)
+    q = stream_stage(spark, "html", inp, chk, outp)
     q.awaitTermination(120)
     out = spark.read.parquet(outp)
     assert out.count() == 30
@@ -2929,7 +2955,7 @@ def test_stream_extract_html(spark, tmp_path):
     want = expected_main_text(3, "stream body 3 " * 6)  # sjis page
     assert got["doc://3"] == want
     # restart with the same checkpoint: nothing reprocessed
-    q2 = stream_extract_html(spark, inp, chk, outp)
+    q2 = stream_stage(spark, "html", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 30
 
@@ -3114,6 +3140,35 @@ def test_ann_ivfpq_recall_and_determinism(spark):
     # bit-determinism: both trainings + residual encode are integer
     again = Q.ann_ivfpq_topk_over(emb).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_pq_operators_survive_a_short_embedding(spark):
+    """One embedding shorter than 64 dims used to fail the whole PQ
+    training job under ANSI element_at (INVALID_ARRAY_INDEX): a
+    (subspace, code) whose subvector sum reads NULL now keeps its
+    previous code, and both PQ operators return rows."""
+    from pyspark.sql import functions as F
+    from pdfio_spark.pipeline import queries as Q
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cut = emb.withColumn("embedding", F.when(
+        F.col("vec_id") == 7, F.slice("embedding", 1, 10))
+        .otherwise(F.col("embedding")))
+    assert cut.filter("size(embedding) = 10").count() == 1
+    for op in (Q.ann_pq_topk_over, Q.ann_ivfpq_topk_over):
+        rows = op(cut).collect()
+        assert rows
+        assert {r.q_id for r in rows} == {
+            r.vec_id for r in emb.filter("vec_id % 100 = 0").collect()}
+    # two members NULL at different positions of subspace 0 both score
+    # its NULL code, whose sums then read no NULL: that code is skipped
+    # too. Pass 1 moves code 1 of subspaces 1-3 to floor(60 / 3); pass
+    # 2 ties vec 1 between 0 and 20 (lowest code wins)
+    qe = [[10 * i] * 64 for i in range(4)]
+    qe[2][3] = qe[3][5] = None
+    t = spark.createDataFrame(list(enumerate(qe)),
+                              "vec_id long, qe array<long>")
+    book = Q.pq_train(t, subspaces=4, codes=2, iters=2)
+    assert book == [[[0] * 16, [10] * 16]] + [[[5] * 16, [25] * 16]] * 3
 
 
 def test_jaccard_candidate_cap_bounds_clique(spark):
@@ -3397,11 +3452,11 @@ def test_metrics_table_schema(spark, every_mode_input, mode):
     assert set(_METRICS_COUNTERS) == set(STAGES)
     tmp, inp, ref, texts = every_mode_input
     opts = {
-        "decontam": {"decontam_opts": {"benchmark_texts":
+        "decontam": {"opts": {"benchmark_texts":
                      spark.createDataFrame([(texts[1],)], "text string"),
                      "k": 3}},
-        "dedupref": {"dedupref_opts": {"reference_path": ref}},
-        "semdedup": {"semdedup_opts": {"k": 2, "iters": 1, "tau": 0.99}},
+        "dedupref": {"opts": {"reference_path": ref}},
+        "semdedup": {"opts": {"k": 2, "iters": 1, "tau": 0.99}},
     }.get(mode, {})
     met = str(tmp / f"{mode}_met")
     run_job(spark, inp, str(tmp / f"{mode}_out"), met, mode=mode,

@@ -16,7 +16,7 @@ Lee et al. exact-substring) — the hot-key partial-agg and
 interval-merge stress.
 
 stream mode: n_docs PDFs (default 100k) through the exactly-once
-streaming ingest (stream_extract: readStream -> extraction UDF ->
+streaming ingest (stream_stage("pdf"): readStream -> extraction UDF ->
 checkpointed parquet sink, maxFilesPerTrigger micro-batches) —
 measures Structured Streaming overhead vs the batch path.
 
@@ -120,10 +120,6 @@ def _replicated_corpus(spark, sf_dir: str, n_docs: int, cpus: int,
     return out.localCheckpoint() if checkpoint else out
 
 
-def _replicated_url_corpus(spark, sf_dir: str, n_docs: int, cpus: int):
-    return _replicated_corpus(spark, sf_dir, n_docs, cpus, key="url")
-
-
 def _uniform_corpus(spark, n_vec: int, cpus: int):
     """Deterministic synthetic vectors: 64 dims from xxhash64 of
     (id, dim), scaled to [-1, 1) — JVM-side, no driver loop. Shared
@@ -177,7 +173,7 @@ def main() -> None:
         # micro-batches; n_docs default 100k keeps file counts sane)
         from bench import replicate_corpus
         from pdfio_spark.pipeline.job import gen_pdf_corpus
-        from pdfio_spark.pipeline.streaming import stream_extract
+        from pdfio_spark.pipeline.streaming import stream_stage
         n_docs = n_docs if len(sys.argv) > 2 else 100_000
         base = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
         k = max(1, (n_docs + base - 1) // base)
@@ -192,7 +188,7 @@ def main() -> None:
         (gen_pdf_corpus(docs).repartition(64).write.parquet(inp))
         n = spark.read.parquet(inp).count()
         t0 = time.perf_counter()
-        q = stream_extract(spark, inp, chk, outp)
+        q = stream_stage(spark, "pdf", inp, chk, outp)
         q.awaitTermination()
         dt = time.perf_counter() - t0
         out = spark.read.parquet(outp)
@@ -668,8 +664,8 @@ def main() -> None:
             F.concat(F.lit("doc://"), F.col("vec_id")).alias("url"),
             "embedding")
         _soak_run_job(spark, rows, "semdedup", mode, smj, soak_dir,
-                      semdedup_opts={"k": 256, "tau": 0.95,
-                                     "train_frac": 0.1})
+                      opts={"k": 256, "tau": 0.95,
+                            "train_frac": 0.1})
         return
 
     if mode == "dedup":
@@ -762,7 +758,7 @@ def main() -> None:
         # half = everything run_job does (decide + anti-join + two
         # appends), reading a pre-materialized input like a real crawl
         # table.
-        docs = _replicated_url_corpus(spark, sf_dir, n_docs, cpus)
+        docs = _replicated_corpus(spark, sf_dir, n_docs, cpus)
         _soak_run_job(spark, docs, "dedup", mode, smj, soak_dir)
         return
 
@@ -773,15 +769,15 @@ def main() -> None:
         # wat, this measures the production contract's overhead
         # ceiling for an expression-plane stage (the repetition
         # aggregate is the only per-row heavy hitter).
-        docs = _replicated_url_corpus(spark, sf_dir, n_docs, cpus)
+        docs = _replicated_corpus(spark, sf_dir, n_docs, cpus)
         # thresholds fitted to the synthetic corpus (16-65-word texts
         # with small vocabularies — Gopher web defaults drop 100% of
         # them, faithfully but uselessly for a soak): the mix below
         # keeps ~half, so both decision paths and every reason
         # counter are exercised at 1M
         _soak_run_job(spark, docs, "filter", mode, smj, soak_dir,
-                      filter_opts={"min_words": 30,
-                                   "max_dup_word_frac": 0.55})
+                      opts={"min_words": 30,
+                            "max_dup_word_frac": 0.55})
         return
 
     if mode == "trainingprep":
@@ -923,8 +919,8 @@ def main() -> None:
         blocked = [f"site{i}.example.com" for i in range(100)]
         _soak_run_job(spark, urls.repartition(cpus * 2), "urlfilter",
                       mode, smj, soak_dir, run_id=f"soak-{mode}",
-                      url_opts={"blocked_domains": blocked,
-                                "blocked_tokens": ["casino"]})
+                      opts={"blocked_domains": blocked,
+                            "blocked_tokens": ["casino"]})
         return
 
     if mode == "runmix":
@@ -952,7 +948,7 @@ def main() -> None:
 
         _soak_run_job(spark, urls.repartition(cpus * 2), "mix", mode,
                       smj, soak_dir, check, run_id=f"soak-{mode}",
-                      mix_opts={"weights": w})
+                      opts={"weights": w})
         return
 
     if mode == "shardexport":
@@ -960,7 +956,7 @@ def main() -> None:
         # shuffle (the permutation), map-side sort, one sorted file
         # per shard dir — the export step after the prep chain.
         from pdfio_spark.pipeline.job import shard_export
-        rows = _replicated_url_corpus(spark, sf_dir, n_docs, cpus)
+        rows = _replicated_corpus(spark, sf_dir, n_docs, cpus)
         inp = os.path.join(soak_dir, "se_in")
         outp = os.path.join(soak_dir, "se_out")
         for d in (inp, outp):
@@ -1031,7 +1027,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="dedupref",
                       run_id=f"soak-{mode}",
-                      dedupref_opts={"reference_path": refp})
+                      opts={"reference_path": refp})
         dt = time.perf_counter() - t0
         bs = res["by_status"]
         # a near plant whose swapped last word collides with the
@@ -1110,7 +1106,7 @@ def main() -> None:
                 else {"max_per_domain": 1000})
         _soak_run_job(spark, urls.repartition(cpus * 2), "domaincap",
                       mode, smj, soak_dir, run_id=f"soak-{mode}",
-                      domaincap_opts=opts)
+                      opts=opts)
         return
 
     if mode == "rundecontam":
@@ -1124,7 +1120,7 @@ def main() -> None:
         # are true positives). Timed half = run_job (melt +
         # broadcast probe + hit join + both appends).
         from pdfio_spark.pipeline.run import run_job
-        docs = _replicated_url_corpus(spark, sf_dir, n_docs, cpus)
+        docs = _replicated_corpus(spark, sf_dir, n_docs, cpus)
         bench = (spark.read.parquet(f"{sf_dir}/documents.parquet")
                  .orderBy("doc_id").limit(25).select("text"))
         bp = os.path.join(soak_dir, "dc_bench")
@@ -1139,7 +1135,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="decontam",
                       run_id=f"soak-{mode}",
-                      decontam_opts={"benchmark_path": bp})
+                      opts={"benchmark_path": bp})
         dt = time.perf_counter() - t0
         print(json.dumps({"mode": mode, "n_docs": n,
                           "by_status": res["by_status"],
@@ -1157,7 +1153,7 @@ def main() -> None:
         # regex passes per row (4 counts + 4 replaces), the
         # production contract's throughput for a regex-bound
         # map-only stage.
-        docs = _replicated_url_corpus(spark, sf_dir, n_docs, cpus)
+        docs = _replicated_corpus(spark, sf_dir, n_docs, cpus)
         pii = F.element_at(
             F.array(F.lit(" mail bob@example.com"),
                     F.lit(" ssn 123-45-6789"),
