@@ -12,11 +12,11 @@ input columns its scan prunes to (also the source schema of its
 streaming twin in streaming.py), whether its decisions are
 corpus-global, the option keys it accepts and a one-line description
 (`--help` lists them). `bind` validates a mode's options from its row
-alone, for run_job and streaming.stream_stage alike. --mode pdf
-(default) runs the full PDF parse stack. All modes share the
-resume/metrics/run_id-reconcile contract (corpus-global resume
-re-derives the decisions over the full input and appends only
-unwritten rows — see run_job).
+alone (`check_opts`, which needs no session), for run_job and
+streaming.stream_stage alike. --mode pdf (default) runs the full PDF
+parse stack. All modes share the resume/metrics/run_id-reconcile
+contract (corpus-global resume re-derives the decisions over the full
+input and appends only unwritten rows — see run_job).
 
 Input is the Common-Crawl-style table of the north rule (the binary
 `html` column carries PDF bytes). The job:
@@ -265,24 +265,32 @@ STAGES: dict[str, Stage] = {
 }
 
 
-def bind(spark, mode: str, opts: dict | None = None):
-    """(stage, args, kw) of `mode` under `opts`, validated from its
-    STAGES row alone, before any read: the op runs as
-    `stage.op(corpus, *args, **kw)`. `prep` (the side-input read) runs
-    last."""
+def check_opts(mode: str, opts: dict | None = None) -> Stage:
+    """The STAGES row of `mode` after checking `opts` against it: the
+    mode exists and takes every given key. Needs no session, so a
+    launcher can run it before the JVM starts."""
     stage = STAGES.get(mode)
     if stage is None:
         raise ValueError(f"unknown mode {mode!r} ({' | '.join(STAGES)})")
-    opts = dict(opts or {})
     keys = stage.option_keys()
     if opts and not keys:
         raise ValueError(f"mode={mode!r} takes no options, got "
                          f"{sorted(opts)}")
     # fail fast on a typo'd key: 'min_word' or 'blocked_domain' would
     # otherwise silently run the defaults (the sigaudit 'crls' lesson)
-    if bad := set(opts) - set(keys):
+    if bad := set(opts or {}) - set(keys):
         raise ValueError(f"unknown {mode} option keys {sorted(bad)} "
                          f"({' | '.join(keys)})")
+    return stage
+
+
+def bind(spark, mode: str, opts: dict | None = None):
+    """(stage, args, kw) of `mode` under `opts`, validated from its
+    STAGES row alone (check_opts), before any read: the op runs as
+    `stage.op(corpus, *args, **kw)`. `prep` (the side-input read) runs
+    last."""
+    stage = check_opts(mode, opts)
+    opts = dict(opts or {})
     args, kw = stage.prep(spark, opts) if stage.prep else ((), opts)
     return stage, args, kw
 
@@ -535,6 +543,8 @@ def main(argv=None) -> None:
     for key, flag in _SIG_FLAGS.items():
         if spec := getattr(args, flag):
             opts[key] = read_pathsep_blobs(spec)
+    # a typo'd key fails here, not after a JVM start
+    check_opts(args.mode, opts)
 
     from .session import get_spark
     spark = get_spark(cpus=args.cpus, app="pdfio_spark_job")

@@ -275,13 +275,6 @@ def neardup_keep_decisions(spark: SparkSession, flags_dir: str):
                     "dup_of"))
 
 
-
-
-
-
-
-
-
 def stream_shard_export(spark: SparkSession, input_dir: str,
                         checkpoint_dir: str, output_dir: str,
                         n_shards: int, seed: int = 0,
@@ -565,8 +558,6 @@ def stream_substr_dedup(spark: SparkSession, input_dir: str,
         outputMode="append",
         timeoutConf=timeout)
     return _sink(decided, output_dir, checkpoint_dir)
-
-
 
 
 def stream_metrics(spark: SparkSession, input_dir: str,

@@ -7,8 +7,9 @@ import pytest
 
 pytest.importorskip("pyspark")
 
-from pdfio_spark.pipeline import streaming  # noqa: E402
-from pdfio_spark.pipeline.run import STAGES, _arg_parser, run_job  # noqa: E402
+from pdfio_spark.pipeline import session, streaming  # noqa: E402
+from pdfio_spark.pipeline.run import (STAGES, _arg_parser, main,  # noqa: E402
+                                      run_job)
 from pdfio_spark.pipeline.streaming import stream_stage  # noqa: E402
 
 # each mode with options -> the exact key set it accepts
@@ -112,3 +113,15 @@ def test_every_stage_is_a_cli_mode():
         assert ap.parse_args(base + ["--mode", mode]).mode == mode
     with pytest.raises(SystemExit):
         ap.parse_args(base + ["--mode", "pfd"])
+
+
+def test_cli_checks_opts_before_the_session(monkeypatch):
+    def no_session(*a, **kw):
+        raise AssertionError("the session started before the opts check")
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(ValueError, match="unknown filter option keys"):
+        main(["--input", "in", "--output", "out", "--mode", "filter",
+              "--opts", '{"min_word": 1}'])
+    with pytest.raises(ValueError, match="takes no options"):
+        main(["--input", "in", "--output", "out", "--mode", "wat",
+              "--opts", '{"min_words": 1}'])
