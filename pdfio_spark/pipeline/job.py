@@ -317,6 +317,26 @@ def annotate_wat(corpus: DataFrame,
         .withColumn("err", F.lit(None).cast("string")))
 
 
+def _decision_subjects(corpus: DataFrame):
+    """(url, text) -> (ids, docs) of the corpus-global dedup ops: ids
+    one (doc_id, url) row per distinct url, docs one (doc_id, text)
+    row per doc_id = xxhash64(url), the id the streaming sub-document
+    twins key by too."""
+    # a url crawled twice is ONE decision subject: without this, the
+    # final fan-out join emits two identical rows for it, and a
+    # crash-resume (anti-join on url) then drops BOTH re-derived
+    # copies — resumed output diverges from an uninterrupted run.
+    # min(text), NOT dropDuplicates: a recrawl with a CHANGED body
+    # must resolve to the same representative on every derivation, or
+    # the resume's re-derived decision set differs from the crashed
+    # run's (dropDuplicates keeps a partition-order-dependent row)
+    # (r6 review x2)
+    corpus = corpus.groupBy("url").agg(F.min("text").alias("text"))
+    ids = corpus.select(F.xxhash64("url").alias("doc_id"), "url", "text")
+    docs = ids.groupBy("doc_id").agg(F.min("text").alias("text"))
+    return ids.select("doc_id", "url"), docs
+
+
 def dedup_decisions(corpus: DataFrame) -> DataFrame:
     """Production surface of the composed dedup operator (r6): (url,
     text) -> exactly one keep decision per url via queries.
@@ -337,18 +357,7 @@ def dedup_decisions(corpus: DataFrame) -> DataFrame:
     byte-identical copy of its exact-group rep), 'near_dup' (an exact
     rep whose cluster keep is another doc)."""
     from .queries import dedup_keep_list
-    # a url crawled twice is ONE decision subject: without this, the
-    # final fan-out join emits two identical rows for it, and a
-    # crash-resume (anti-join on url) then drops BOTH re-derived
-    # copies — resumed output diverges from an uninterrupted run.
-    # min(text), NOT dropDuplicates: a recrawl with a CHANGED body
-    # must resolve to the same representative on every derivation, or
-    # the resume's re-derived decision set differs from the crashed
-    # run's (dropDuplicates keeps a partition-order-dependent row)
-    # (r6 review x2)
-    corpus = corpus.groupBy("url").agg(F.min("text").alias("text"))
-    ids = corpus.select(F.xxhash64("url").alias("doc_id"), "url", "text")
-    docs = ids.groupBy("doc_id").agg(F.min("text").alias("text"))
+    ids, docs = _decision_subjects(corpus)
     dec = dedup_keep_list(docs)
     keep_urls = ids.select(F.col("doc_id").alias("keep_id"),
                            F.col("url").alias("keep_url"))
@@ -356,8 +365,7 @@ def dedup_decisions(corpus: DataFrame) -> DataFrame:
     # always a doc_id present in ids, so the join never drops rows
     keep_urls = keep_urls.groupBy("keep_id").agg(
         F.min("keep_url").alias("keep_url"))
-    return (ids.select("doc_id", "url")
-            .join(dec, "doc_id")
+    return (ids.join(dec, "doc_id")
             .join(keep_urls, "keep_id")
             .select("url", "text_hash", "n_dups", "keep_url", "is_kept",
                     F.when(F.col("is_kept"), "kept")
@@ -516,12 +524,9 @@ def _subdoc_decisions(corpus: DataFrame, over_fn, out_cols: list,
     never a lost row). Decisions are corpus-GLOBAL: run_job routes
     these modes through the dedup resume branch (re-derive over the
     full input, append only unwritten urls)."""
-    corpus = corpus.groupBy("url").agg(F.min("text").alias("text"))
-    ids = corpus.select(F.xxhash64("url").alias("doc_id"), "url",
-                        "text")
-    docs = ids.groupBy("doc_id").agg(F.min("text").alias("text"))
+    ids, docs = _decision_subjects(corpus)
     dec = over_fn(docs)
-    return (ids.select("doc_id", "url").join(dec, "doc_id")
+    return (ids.join(dec, "doc_id")
             .select("url", *out_cols,
                     F.when(F.col("n_kept") < F.col(total_col),
                            "deduped").otherwise("intact")
@@ -1302,6 +1307,29 @@ def _shard_route(n_shards: int) -> dict:
 _CAP_DEFAULT = object()  # sentinel: distinguishes omitted from None
 
 
+def domain_cap_limits(max_per_domain=_CAP_DEFAULT,
+                      max_tokens_per_domain=None) -> tuple:
+    """The domaincap options -> (doc cap, token budget), either None
+    for no limit: the one rule set of the batch op and its streaming
+    twin."""
+    if max_per_domain is _CAP_DEFAULT:
+        # the doc-cap default applies only when NO cap was chosen at
+        # all: a caller setting just the token budget must not get a
+        # 100k doc cap silently composed in (r6 review — every
+        # token-only caller had to know to pass max_per_domain=None)
+        max_per_domain = (None if max_tokens_per_domain is not None
+                          else 100_000)
+    if max_per_domain is None and max_tokens_per_domain is None:
+        raise ValueError("at least one of max_per_domain / "
+                         "max_tokens_per_domain must be set")
+    # a mis-signed limit would silently drop every document
+    if max_per_domain is not None and max_per_domain < 0:
+        raise ValueError("max_per_domain must be >= 0")
+    if max_tokens_per_domain is not None and max_tokens_per_domain < 0:
+        raise ValueError("max_tokens_per_domain must be >= 0")
+    return max_per_domain, max_tokens_per_domain
+
+
 def domain_cap_decisions(corpus: DataFrame,
                          max_per_domain=_CAP_DEFAULT,
                          max_tokens_per_domain: int | None = None
@@ -1344,20 +1372,8 @@ def domain_cap_decisions(corpus: DataFrame,
     convention). Requires a `text` column; reasons gains
     'domain_token_cap'."""
     from pyspark.sql import Window
-    if max_per_domain is _CAP_DEFAULT:
-        # the doc-cap default applies only when NO cap was chosen at
-        # all: a caller setting just the token budget must not get a
-        # 100k doc cap silently composed in (r6 review — every
-        # token-only caller had to know to pass max_per_domain=None)
-        max_per_domain = (None if max_tokens_per_domain is not None
-                          else 100_000)
-    if max_per_domain is None and max_tokens_per_domain is None:
-        raise ValueError("at least one of max_per_domain / "
-                         "max_tokens_per_domain must be set")
-    if max_per_domain is not None and max_per_domain < 0:
-        raise ValueError("max_per_domain must be >= 0")
-    if max_tokens_per_domain is not None and max_tokens_per_domain < 0:
-        raise ValueError("max_tokens_per_domain must be >= 0")
+    max_per_domain, max_tokens_per_domain = domain_cap_limits(
+        max_per_domain, max_tokens_per_domain)
     token_mode = max_tokens_per_domain is not None
     cols = [F.coalesce(F.col("url"), F.lit("")).alias("url")]
     if token_mode:

@@ -2451,7 +2451,7 @@ def line_dedup_reassemble(decided: DataFrame) -> DataFrame:
     """(doc_id, pos, line, kept) rows -> one (doc_id, n_lines,
     n_kept, text_out) row per doc, kept lines re-joined in position
     order. ONE kernel shared by batch line_dedup_over and the
-    streaming twin's post-pass (streaming.stream_line_dedup), so
+    streaming twin's post-pass (stream_stage("linededup")), so
     both reassemble identically by construction."""
     return (decided.groupBy("doc_id")
             .agg(F.count("*").alias("n_lines"),
@@ -2554,7 +2554,7 @@ def substr_gram_melt(docs: DataFrame, k: int = GRAM_K) -> DataFrame:
     """(doc_id, text) -> one (doc_id, pos, g) row per k-token window,
     g = md5 of the space-joined gram. ONE kernel shared by batch
     substr_dedup_over and the streaming twin
-    (streaming.stream_substr_dedup), so both hash identically by
+    (stream_stage("substrdedup")), so both hash identically by
     construction. The shuffle downstream carries the 32-byte hash per
     token position, never the k-fold text expansion. Docs shorter
     than k tokens contribute no rows."""

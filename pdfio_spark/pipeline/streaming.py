@@ -11,12 +11,16 @@ the genuinely streaming variant for crawl-as-it-arrives deployments:
 plus a watermarked windowed metrics stream (late-data tolerant), the
 standard Structured Streaming shapes (SURVEY §2.12 streaming).
 
-Every doc-local run.py mode without side inputs streams through one
-call, stream_stage(spark, mode, ...): its source schema is the mode's
-STAGES column declaration (the columns the batch scan prunes to) and
-its options are validated by the same run.bind as run_job's. The
-corpus-global modes have stateful twins instead, which keep their
-GroupState functions and share _ttl and _sink.
+Every run.py mode with a streaming form starts through one call,
+stream_stage(spark, mode, ...): its source schema is the mode's STAGES
+column declaration (the columns the batch scan prunes to, all of which
+the input must hold), its options are validated by the same run.bind
+as run_job's, and its micro-batch op is the STAGES op unless
+_STREAM_OPS names another. There the corpus-global domaincap,
+linededup and substrdedup have their stateful twins: GroupState
+counters and seen-sets that decide in arrival order. stream_dedup and
+stream_neardup (url and MinHash-band seen-sets) have no STAGES row and
+keep their own signatures.
 """
 from __future__ import annotations
 
@@ -24,18 +28,13 @@ from functools import partial
 
 from pyspark.sql import SparkSession, functions as F
 
-from .job import extract_in_place, validate_signatures_over
+from .job import (domain_cap_limits, extract_in_place, url_parse_cols,
+                  validate_signatures_over)
 from .run import STAGES, bind
 
 __all__ = ["stream_stage", "stream_metrics", "stream_dedup",
            "stream_neardup", "neardup_keep_decisions",
-           "stream_shard_export", "stream_domain_cap",
-           "stream_line_dedup", "stream_substr_dedup"]
-
-
-def _schema(mode: str, opts=None) -> str:
-    """The run.py stage's scan columns as a stream source schema."""
-    return ", ".join(STAGES[mode].fields(opts))
+           "stream_shard_export"]
 
 
 def _source(spark, input_dir: str, schema: str, max_files=8):
@@ -63,7 +62,7 @@ def _sink(df, output_dir: str, checkpoint_dir: str,
 def _stream_map(spark, input_dir: str, checkpoint_dir: str,
                 output_dir: str, available_now: bool, schema: str, op,
                 partition_by=None):
-    """The stateless twin: readStream of `schema` -> op -> parquet sink."""
+    """readStream of `schema` -> op -> parquet sink."""
     return _sink(op(_source(spark, input_dir, schema)), output_dir,
                  checkpoint_dir, available_now, partition_by)
 
@@ -78,18 +77,6 @@ def _fanned(op):
     return run
 
 
-# the micro-batch op where it differs from the STAGES op. pdf runs
-# extract_in_place without the heavy-tail split: Structured Streaming
-# runs without AQE, so the tail exchange would start
-# spark.sql.shuffle.partitions Python tasks in every micro-batch (the
-# empty-task cost the batch path shed). Both are CPU-bound per row
-# (parse; CMS parse + verify), so both fan out: 3,550 -> 6,501 docs/s
-# for pdf on the 100k streaming soak, the rest of the gap to batch
-# being per-micro-batch scheduling.
-_MICRO_BATCH = {"pdf": _fanned(extract_in_place),
-                "sigaudit": _fanned(validate_signatures_over)}
-
-
 def stream_stage(spark: SparkSession, mode: str, input_dir: str,
                  checkpoint_dir: str, output_dir: str,
                  opts: dict | None = None, available_now: bool = True):
@@ -97,34 +84,40 @@ def stream_stage(spark: SparkSession, mode: str, input_dir: str,
     the mode's scan columns -> its op per micro-batch -> parquet sink,
     exactly-once via the streaming checkpoint; resume is free (restart
     with the same checkpoint dir). `opts` are validated by run.bind, as
-    run_job's are. Only doc-local modes without side inputs stream
-    this way: a stateless map per micro-batch is then globally correct
-    (a DataFrame option such as a urlfilter blocklist must be a BATCH
-    DataFrame; it is broadcast per micro-batch).
+    run_job's are. A doc-local mode without side inputs runs its
+    STAGES op, a stateless map that is globally correct per
+    micro-batch (a DataFrame option such as a urlfilter blocklist must
+    be a BATCH DataFrame; it is broadcast per micro-batch); domaincap,
+    linededup and substrdedup run their stateful twins (_STREAM_OPS).
 
     Returns the StreamingQuery (already started)."""
+    from pyspark.sql.utils import AnalysisException
+
     stage = STAGES.get(mode)
-    if stage is not None and (stage.corpus_global or stage.prep):
+    if stage is not None and (stage.prep or stage.corpus_global
+                              and mode not in _STREAM_OPS):
         raise ValueError(
-            f"mode={mode!r} has no stateless streaming twin: its "
-            "decisions are corpus-global or need a side input; use "
-            "its stateful twin (stream_dedup, stream_neardup, "
-            "stream_domain_cap, stream_line_dedup, stream_substr_dedup) "
-            "or, with a side input, its op per micro-batch through "
-            "foreachBatch")
+            f"mode={mode!r} does not stream through stream_stage: its "
+            "decisions are corpus-global with no stateful twin here "
+            "(url and near-dup seen-sets stream through stream_dedup "
+            "and stream_neardup) or need a side input (run its op per "
+            "micro-batch through foreachBatch)")
     stage, _, kw = bind(spark, mode, opts)
-    if mode == "mix" and \
-            (key := kw.get("key_col", "domain")) != "domain" and \
-            key not in spark.read.parquet(input_dir).columns:
-        # a missing/misnamed key column would project as NULL, every
-        # doc falls through to default_rate and the mix is silently a
-        # no-op; the batch path fails loudly — match it (the
-        # stream_domain_cap text rule, r6 review)
-        raise ValueError(f"key_col {key!r} not in {input_dir}")
-    op = _MICRO_BATCH.get(mode, stage.op)
+    fields = stage.fields(kw)
+    try:
+        have = spark.read.parquet(input_dir).columns
+    except AnalysisException:
+        have = None  # no file has landed yet: nothing to check
+    # readStream.schema would project a missing column as NULL and the
+    # op would run silently wrong (a mix key rates every doc by
+    # default_rate, a token budget counts '' as 1 token); the batch
+    # scan fails loudly — match it
+    if have is not None and (missing := [
+            f for f in fields if f.split(" ", 1)[0] not in have]):
+        raise ValueError(f"mode={mode!r} needs {missing} in {input_dir}")
     return _stream_map(spark, input_dir, checkpoint_dir, output_dir,
-                       available_now, _schema(mode, kw),
-                       partial(op, **kw))
+                       available_now, ", ".join(fields),
+                       partial(_STREAM_OPS.get(mode, stage.op), **kw))
 
 
 def _ttl(state_ttl_hours):
@@ -305,53 +298,36 @@ def stream_shard_export(spark: SparkSession, input_dir: str,
                        available_now, schema, shard, partition_by="shard")
 
 
-def stream_domain_cap(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      max_per_domain=None,
-                      max_tokens_per_domain: int | None = None):
-    """Streaming twin of run.py --mode domaincap: one GroupState
-    counter per registrable domain; a doc keeps while its domain's
-    running count is below max_per_domain — ARRIVAL-order semantics
-    (the stream_dedup convention), not the batch operator's
-    deterministic hash order: the streaming cap admits the first N
-    to arrive, the batch cap admits the hash-smallest N. Emits
-    (url, domain, kept). State is one (count, tokens) pair per
-    domain — growth is O(distinct domains), no TTL needed at web
-    scale (~10^8 domains is a few GB across the state store).
-
-    max_tokens_per_domain mirrors the batch token budget (late r6):
-    a doc keeps while the domain's tokens BEFORE it (arrival order)
-    are under the budget; the token weight is the shared
-    ws_tokens_expr kernel computed JVM-side before the stateful op,
-    so the pandas fn only cumsums. The omitted-doc-cap default
-    resolves like the batch sentinel: token-only when a token budget
-    is given, 100k docs otherwise."""
+def _stateful(df, by: str, fn, out: str, state: str):
+    """`df` grouped by `by` through the GroupState function `fn`:
+    `out` and `state` are the DDL of its emitted rows and of its
+    per-key state. No timeout: state lives as long as the checkpoint."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from .job import url_parse_cols
+    return df.groupBy(by).applyInPandasWithState(
+        fn, outputStructType=out, stateStructType=state,
+        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
+
+
+def _domain_cap(src, **opts):
+    """domaincap's stateful twin: one GroupState counter per
+    registrable domain; a doc keeps while its domain's running count
+    is under the cap — ARRIVAL-order semantics (the stream_dedup
+    convention), not the batch operator's deterministic hash order:
+    the streaming cap admits the first N to arrive, the batch cap
+    admits the hash-smallest N. Emits (url, domain, kept). The options
+    resolve through job.domain_cap_limits, as the batch op's do. State
+    is one (count, tokens) pair per domain — growth is O(distinct
+    domains), no TTL needed at web scale (~10^8 domains is a few GB
+    across the state store).
+
+    The token budget (late r6): a doc keeps while the domain's tokens
+    BEFORE it (arrival order) are under the budget; the token weight
+    is the shared ws_tokens_expr kernel computed JVM-side before the
+    stateful op, so the pandas fn only cumsums."""
     from .queries import ws_tokens_expr
 
-    token_mode = max_tokens_per_domain is not None
-    if max_per_domain is None:
-        max_per_domain = None if token_mode else 100_000
-    cap = None if max_per_domain is None else int(max_per_domain)
-    budget = (None if max_tokens_per_domain is None
-              else int(max_tokens_per_domain))
-    if cap is not None and cap < 0:
-        # mirror the batch guard: a mis-signed cap would otherwise
-        # silently mark every document kept=false forever
-        raise ValueError("max_per_domain must be >= 0")
-    if budget is not None and budget < 0:
-        raise ValueError("max_tokens_per_domain must be >= 0")
-    if token_mode:
-        # fail fast on a text-less source: readStream.schema would
-        # project the missing column as NULL and ws_tokens_expr
-        # counts '' as 1 token — a token budget silently becomes a
-        # doc cap (r6 review). The batch path fails loudly; match it.
-        if "text" not in spark.read.parquet(input_dir).columns:
-            raise ValueError("max_tokens_per_domain needs a `text` "
-                             f"column in {input_dir}")
-    src = _source(spark, input_dir, _schema(
-        "domaincap", {"max_tokens_per_domain": max_tokens_per_domain}))
+    cap, budget = domain_cap_limits(**opts)
+    token_mode = budget is not None
     wcols = ([ws_tokens_expr().cast("long").alias("w")]
              if token_mode else [])
     m = (src.select(F.coalesce(F.col("url"), F.lit(""))
@@ -382,7 +358,8 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
                 pdf = pdf.copy()
                 ok = np.ones(n, dtype=bool)
                 if cap is not None:
-                    ok &= (c + np.arange(n)) < cap
+                    # domain rank <= cap, the batch rule
+                    ok &= (c + np.arange(1, n + 1)) <= cap
                 if budget is not None:
                     w = pdf["w"].to_numpy()
                     before = t + np.concatenate(
@@ -396,45 +373,33 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
 
         return gen()
 
-    decided = m.groupBy("domain").applyInPandasWithState(
-        decide_fn,
-        outputStructType="url string, domain string, kept boolean",
-        stateStructType=("cnt long, tok long" if token_mode
-                         else "cnt long"),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-    return _sink(decided, output_dir, checkpoint_dir)
+    return _stateful(m, "domain", decide_fn,
+                     "url string, domain string, kept boolean",
+                     "cnt long, tok long" if token_mode else "cnt long")
 
 
-def _first_seen_state_fn(cols, ttl_ms):
-    """applyInPandasWithState function for a corpus-global
-    first-occurrence seen-set: per grouping key, the lexicographic
-    (doc_id, pos) min of the key's FIRST batch gets kept=true, every
-    other arrival (same batch or later) kept=false. `cols` is the
-    output column order (must include doc_id/pos/kept). Shared by
-    stream_line_dedup (key = md5(line)) and stream_substr_dedup
-    (key = md5(k-gram)) so both twins decide identically by
-    construction.
+def _first_seen(keyed, by: str, out: str):
+    """`keyed` through a corpus-global first-occurrence seen-set: per
+    `by` key, the lexicographic (doc_id, pos) min of the key's FIRST
+    batch gets kept=true, every other arrival (same batch or later)
+    kept=false. `out` is the DDL of the emitted rows (must include
+    doc_id/pos/kept). Shared by the line twin (key = md5(line)) and
+    the substring twin (key = md5(k-gram)) so both decide identically
+    by construction.
 
     Memory shape: a hot boilerplate key (nav line / ToS gram shared
     by every doc) can land its whole batch-wide group under this one
     key — never concat the group: stream chunks, holding back only
     the current (doc_id, pos)-min candidate row (an encoded bigint
     key would overflow for xxhash64 ids, the queries._okey note).
-    State ops happen before the generator is consumed; the TTL
-    re-arms every invocation (GroupState drops timeouts not set
-    again)."""
+    The state update happens before the generator is consumed."""
     import pandas as pd
+    cols = [f.split(" ", 1)[0] for f in out.split(", ")]
 
     def decide_fn(key, pdf_iter, state):
-        if state.hasTimedOut:
-            state.remove()
-            return iter(())
         fresh = not state.exists
         if fresh:
             state.update((1,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
 
         def gen():
             cand = None  # one-row frame: current first-occurrence
@@ -467,34 +432,33 @@ def _first_seen_state_fn(cols, ttl_ms):
 
         return gen()
 
-    return decide_fn
+    return _stateful(keyed, by, decide_fn, out, "seen int")
 
 
-def stream_line_dedup(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      state_ttl_hours: int | None = None):
-    """Streaming twin of line_dedup_over (C4 corpus-level line
-    dedup): docs arrive as (doc_id, text); every NON-BLANK line is
-    checked against a corpus-global seen-set — one GroupState per
-    md5(line) — and only its first arrival keeps kept=true. Blank
-    lines bypass the stateful operator entirely (always kept, and a
-    seen-set entry per structural blank would be pure state bloat).
-    Within one micro-batch the winner is the min (doc_id, pos) key —
-    deterministic and identical to the batch operator when the whole
-    corpus lands in one batch; across batches it is arrival order,
-    the same semantics stream_dedup documents for urls.
+def _doc_ids(src):
+    # (url, text) -> (doc_id, text) under the batch ops' id,
+    # xxhash64(url) (job._decision_subjects): one batch holding the
+    # whole corpus then decides exactly what the batch op decides
+    return src.select(F.xxhash64("url").alias("doc_id"), "text")
+
+
+def _line_dedup(src):
+    """linededup's stateful twin (C4 corpus-level line dedup): every
+    NON-BLANK line is checked against a corpus-global seen-set — one
+    GroupState per md5(line) — and only its first arrival keeps
+    kept=true. Blank lines bypass the stateful operator entirely
+    (always kept, and a seen-set entry per structural blank would be
+    pure state bloat). Within one micro-batch the winner is the min
+    (doc_id, pos) key; across batches it is arrival order, the same
+    semantics stream_dedup documents for urls.
 
     Emits one row PER LINE (doc_id, pos, line, kept); reassemble docs
     with queries.line_dedup_reassemble over the sink — the same
     kernel the batch operator ends with. State growth is O(distinct
-    non-blank lines); state_ttl_hours bounds it for unbounded crawls
-    (an expired line re-admits one copy, the stream_dedup tradeoff).
-    NOTE (CLAUDE.md invariant): availableNow + ProcessingTimeTimeout
-    never self-terminates — tests with a TTL must stop() the query."""
+    non-blank lines)."""
     from .queries import _WS_CHARS
 
-    src = _source(spark, input_dir, "doc_id long, text string")
-    lines = src.select(
+    lines = _doc_ids(src).select(
         "doc_id",
         F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")),
                              "\n")).alias("pos", "line"))
@@ -503,61 +467,51 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
              .withColumn("kept", F.lit(True)))
     keyed = (lines.filter(~is_blank)
              .withColumn("k", F.md5("line")))
-    ttl_ms, timeout = _ttl(state_ttl_hours)
-
-    decided = keyed.groupBy("k").applyInPandasWithState(
-        _first_seen_state_fn(["doc_id", "pos", "line", "kept"],
-                             ttl_ms),
-        outputStructType="doc_id long, pos int, line string, "
-                         "kept boolean",
-        stateStructType="seen int",
-        outputMode="append",
-        timeoutConf=timeout)
-    out = blank.select("doc_id", "pos", "line", "kept") \
+    decided = _first_seen(keyed, "k",
+                          "doc_id long, pos int, line string, "
+                          "kept boolean")
+    return blank.select("doc_id", "pos", "line", "kept") \
         .unionByName(decided)
-    return _sink(out, output_dir, checkpoint_dir)
 
 
-def stream_substr_dedup(spark: SparkSession, input_dir: str,
-                        checkpoint_dir: str, output_dir: str,
-                        k: int | None = None,
-                        state_ttl_hours: int | None = None):
-    """Streaming twin of substr_dedup_over (Lee et al. 2022
-    ExactSubstr): docs arrive as (doc_id, text); every k-token gram
-    (queries.substr_gram_melt — the SAME md5 kernel as batch) is
-    checked against a corpus-global seen-set, one GroupState per gram
-    hash, and only its first arrival keeps kept=true. Within one
-    micro-batch the winner is the min (doc_id, pos) key —
-    deterministic and identical to the batch operator when the whole
-    corpus lands in one batch; across batches it is arrival order,
-    the stream_dedup semantics. Unlike the line twin, arrival order
-    also moves the kept TOKEN total slightly: which copy of two
+def _substr_dedup(src):
+    """substrdedup's stateful twin (Lee et al. 2022 ExactSubstr):
+    every GRAM_K-token gram (queries.substr_gram_melt — the SAME md5
+    kernel as batch) is checked against a corpus-global seen-set, one
+    GroupState per gram hash, and only its first arrival keeps
+    kept=true. Within one micro-batch the winner is the min
+    (doc_id, pos) key; across batches it is arrival order, the
+    stream_dedup semantics. Unlike the line twin, arrival order also
+    moves the kept TOKEN total slightly: which copy of two
     OVERLAPPING grams survives changes that doc's interval gaps. The
     order-independent invariant is one kept row per distinct gram
     (pinned by the soak); token counts are exact only single-batch.
 
     Emits one row PER GRAM START (doc_id, pos, kept); rebuild docs by
     feeding the sink's kept=false rows as `dup` into
-    queries.substr_dedup_reassemble beside the original corpus — the
-    same gaps-and-islands kernel the batch operator ends with. State
-    growth is O(distinct grams) (32-byte keys; at crawl scale bound
-    it with state_ttl_hours — an expired gram re-admits one copy,
-    the stream_dedup tradeoff). Docs shorter than k tokens produce
-    no rows here and pass through reassembly untouched.
-    NOTE (CLAUDE.md invariant): availableNow + ProcessingTimeTimeout
-    never self-terminates — tests with a TTL must stop() the query."""
-    from .queries import GRAM_K, substr_gram_melt
+    queries.substr_dedup_reassemble beside the (xxhash64(url), text)
+    corpus — the same gaps-and-islands kernel the batch operator ends
+    with. State growth is O(distinct grams) (32-byte keys). Docs
+    shorter than GRAM_K tokens produce no rows here and pass through
+    reassembly untouched."""
+    from .queries import substr_gram_melt
+    return _first_seen(substr_gram_melt(_doc_ids(src)), "g",
+                       "doc_id long, pos int, kept boolean")
 
-    src = _source(spark, input_dir, "doc_id long, text string")
-    grams = substr_gram_melt(src, k or GRAM_K)
-    ttl_ms, timeout = _ttl(state_ttl_hours)
-    decided = grams.groupBy("g").applyInPandasWithState(
-        _first_seen_state_fn(["doc_id", "pos", "kept"], ttl_ms),
-        outputStructType="doc_id long, pos int, kept boolean",
-        stateStructType="seen int",
-        outputMode="append",
-        timeoutConf=timeout)
-    return _sink(decided, output_dir, checkpoint_dir)
+
+# the micro-batch op where it differs from the STAGES op. pdf runs
+# extract_in_place without the heavy-tail split: Structured Streaming
+# runs without AQE, so the tail exchange would start
+# spark.sql.shuffle.partitions Python tasks in every micro-batch (the
+# empty-task cost the batch path shed). Both are CPU-bound per row
+# (parse; CMS parse + verify), so both fan out: 3,550 -> 6,501 docs/s
+# for pdf on the 100k streaming soak, the rest of the gap to batch
+# being per-micro-batch scheduling. The corpus-global modes stream
+# through their stateful twins.
+_STREAM_OPS = {"pdf": _fanned(extract_in_place),
+               "sigaudit": _fanned(validate_signatures_over),
+               "domaincap": _domain_cap, "linededup": _line_dedup,
+               "substrdedup": _substr_dedup}
 
 
 def stream_metrics(spark: SparkSession, input_dir: str,

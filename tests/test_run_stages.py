@@ -30,10 +30,11 @@ OPTION_KEYS = {
 NO_OPTIONS = ("pdf", "html", "wet", "wat", "dedup", "pii", "linededup",
               "substrdedup", "urldedup")
 
-# the doc-local modes without side inputs: one stateless map per
-# micro-batch is globally correct for them
+# the doc-local modes without side inputs (one stateless map per
+# micro-batch is globally correct for them) and the three corpus-global
+# modes with a stateful twin
 STREAMED = ("pdf", "html", "wet", "wat", "sigaudit", "filter", "pii",
-            "urlfilter", "mix")
+            "urlfilter", "mix", "domaincap", "linededup", "substrdedup")
 
 
 def _stream(mode, opts=None):
@@ -83,21 +84,28 @@ def test_modes_without_options_reject_any_key():
         _stream("pfd")
 
 
-def test_stream_stage_accepts_the_stateless_modes_only():
-    assert {m for m, st in STAGES.items()
-            if not st.corpus_global and st.prep is None} == set(STREAMED)
-    for mode in set(STAGES) - set(STREAMED):
+def test_stream_stage_accepts_the_streamable_modes_only():
+    assert {m for m, st in STAGES.items() if st.prep is None and (
+        not st.corpus_global or m in streaming._STREAM_OPS)} == \
+        set(STREAMED)
+    rejected = set(STAGES) - set(STREAMED)
+    assert rejected == {"dedup", "semdedup", "urldedup", "decontam",
+                        "dedupref"}
+    for mode in rejected:
         with pytest.raises(ValueError, match="stateful twin") as e:
             _stream(mode)
-        assert "foreachBatch" in str(e.value)
+        for name in ("stream_dedup", "stream_neardup", "foreachBatch"):
+            assert name in str(e.value)
 
 
 def test_streaming_all_lists_every_twin():
     assert set(streaming.__all__) == {
         "stream_stage", "stream_metrics", "stream_dedup",
         "stream_neardup", "neardup_keep_decisions",
-        "stream_shard_export", "stream_domain_cap", "stream_line_dedup",
-        "stream_substr_dedup"}
+        "stream_shard_export"}
+    for gone in ("stream_domain_cap", "stream_line_dedup",
+                 "stream_substr_dedup"):
+        assert not hasattr(streaming, gone)
     public = {n for n in dir(streaming)
               if n.startswith("stream_")
               and callable(getattr(streaming, n))}

@@ -1369,7 +1369,7 @@ def test_stream_mix_twin(spark, tmp_path):
     assert got == want
     # a missing/misnamed key column refuses instead of silently
     # default-rating the whole corpus (NULL projection)
-    with pytest.raises(ValueError, match="key_col"):
+    with pytest.raises(ValueError, match="lang"):
         stream_stage(spark, "mix", inp, chk, outp,
                      opts={"key_col": "lang", "weights": {"en": 2.0}})
 
@@ -1727,14 +1727,16 @@ def test_corpus_global_resume_displacement_warns(spark, tmp_path):
 def test_stream_domain_cap(spark, tmp_path):
     """Streaming twin: arrival-order cap, counter state persists
     across runs on the same checkpoint."""
-    from pdfio_spark.pipeline.streaming import stream_domain_cap
+    from pdfio_spark.pipeline.run import run_job
+    from pdfio_spark.pipeline.streaming import stream_stage
     inp = str(tmp_path / "sdc_in")
     chk = str(tmp_path / "sdc_chk")
     outp = str(tmp_path / "sdc_out")
     spark.createDataFrame(
         [(f"https://hot.example.com/{i}",) for i in range(5)],
         "url string").coalesce(1).write.parquet(inp)
-    q = stream_domain_cap(spark, inp, chk, outp, max_per_domain=3)
+    q = stream_stage(spark, "domaincap", inp, chk, outp,
+                     opts={"max_per_domain": 3})
     q.awaitTermination(120)
     out1 = spark.read.parquet(outp)
     assert out1.filter("kept").count() == 3
@@ -1744,7 +1746,8 @@ def test_stream_domain_cap(spark, tmp_path):
                            ("https://fresh.example.org/a",)],
                           "url string") \
         .coalesce(1).write.mode("append").parquet(inp)
-    q2 = stream_domain_cap(spark, inp, chk, outp, max_per_domain=3)
+    q2 = stream_stage(spark, "domaincap", inp, chk, outp,
+                      opts={"max_per_domain": 3})
     q2.awaitTermination(60)
     out2 = {r.url: r.kept for r in
             spark.read.parquet(outp).collect()}
@@ -1762,8 +1765,8 @@ def test_stream_domain_cap(spark, tmp_path):
             + [("https://cool.example.org/a", t30)])
     spark.createDataFrame(rows, "url string, text string") \
         .coalesce(1).write.parquet(inp2)
-    qt = stream_domain_cap(spark, inp2, chk2, outp2,
-                           max_tokens_per_domain=100)
+    qt = stream_stage(spark, "domaincap", inp2, chk2, outp2,
+                      opts={"max_tokens_per_domain": 100})
     qt.awaitTermination(120)
     ot = spark.read.parquet(outp2)
     hot = ot.filter("domain = 'example.com'")
@@ -1773,20 +1776,28 @@ def test_stream_domain_cap(spark, tmp_path):
     spark.createDataFrame([("https://hot.example.com/late", t30)],
                           "url string, text string") \
         .coalesce(1).write.mode("append").parquet(inp2)
-    qt2 = stream_domain_cap(spark, inp2, chk2, outp2,
-                            max_tokens_per_domain=100)
+    qt2 = stream_stage(spark, "domaincap", inp2, chk2, outp2,
+                       opts={"max_tokens_per_domain": 100})
     qt2.awaitTermination(60)
     late = {r.url: r.kept for r in
             spark.read.parquet(outp2).collect()}
     assert late["https://hot.example.com/late"] is False
     with pytest.raises(ValueError, match="max_tokens_per_domain"):
-        stream_domain_cap(spark, inp2, chk2, outp2,
-                          max_tokens_per_domain=-5)
+        stream_stage(spark, "domaincap", inp2, chk2, outp2,
+                     opts={"max_tokens_per_domain": -5})
     # a text-less source must refuse token mode (the NULL projection
     # would count every doc as 1 token — a silent doc cap)
     with pytest.raises(ValueError, match="text"):
-        stream_domain_cap(spark, inp, chk2, outp2,
-                          max_tokens_per_domain=100)
+        stream_stage(spark, "domaincap", inp, chk2, outp2,
+                     opts={"max_tokens_per_domain": 100})
+    # no limit at all is refused as the batch mode refuses it, not
+    # silently capped at the omitted-cap default
+    for start in (
+            lambda o: run_job(spark, inp, outp2, mode="domaincap", opts=o),
+            lambda o: stream_stage(spark, "domaincap", inp, chk2, outp2,
+                                   opts=o)):
+        with pytest.raises(ValueError, match="at least one of"):
+            start({"max_per_domain": None})
 
 
 def test_stream_url_filter(spark, tmp_path):
@@ -1825,6 +1836,20 @@ def test_stream_pii_scrub(spark, tmp_path):
     q2 = stream_stage(spark, "pii", inp, chk, outp)
     q2.awaitTermination(60)
     assert spark.read.parquet(outp).count() == 2  # nothing reprocessed
+    # a url-only input has no text to scrub: refused, not a stream of
+    # NULL texts
+    url_only = str(tmp_path / "spii_urls")
+    spark.createDataFrame([("s://c",)], "url string").write.parquet(
+        url_only)
+    with pytest.raises(ValueError, match="text"):
+        stream_stage(spark, "pii", url_only, chk + "2", outp + "2")
+    # a landing dir no file has reached yet has nothing to check: the
+    # stream still starts
+    empty = tmp_path / "spii_empty"
+    empty.mkdir()
+    q3 = stream_stage(spark, "pii", str(empty), chk + "3", outp + "3")
+    q3.awaitTermination(60)
+    assert q3.exception() is None
 
 
 def test_stream_quality_filter(spark, tmp_path):
@@ -2364,97 +2389,109 @@ def test_dedup_minhash_production_variant(spark):
     assert pairs == again
 
 
+def _by_url(per_doc, docs):
+    """A sub-document twin's reassembled per-doc rows keyed back to url
+    through the twins' doc id, xxhash64(url)."""
+    from pyspark.sql import functions as F
+    ids = docs.select(F.xxhash64("url").alias("doc_id"), "url")
+    return {r.url: r for r in per_doc.join(ids, "doc_id").collect()}
+
+
 def test_stream_line_dedup(spark, tmp_path):
-    """r6: streaming twin of line_dedup_over — one GroupState per
+    """r6: streaming twin of --mode linededup — one GroupState per
     line hash, blanks bypass state; a whole-corpus single batch must
-    reassemble EXACTLY the batch operator's output, and a later run
-    over the same checkpoint must dedup new docs against the
-    persisted seen-set exactly once."""
-    from pdfio_spark.pipeline.queries import (line_dedup_over,
-                                              line_dedup_reassemble)
-    from pdfio_spark.pipeline.streaming import stream_line_dedup
+    reassemble EXACTLY the batch STAGES op's per-url output, and a
+    later run over the same checkpoint must dedup new docs against
+    the persisted seen-set exactly once."""
+    from pdfio_spark.pipeline.job import linededup_decisions
+    from pdfio_spark.pipeline.queries import line_dedup_reassemble
+    from pdfio_spark.pipeline.streaming import stream_stage
     rows = [
-        (0, "nav bar\nunique alpha\n\nnav bar\nfooter"),
-        (1, "nav bar\nunique beta\n\nfooter"),
-        (2, "only original content here"),
+        ("s://0", "nav bar\nunique alpha\n\nnav bar\nfooter"),
+        ("s://1", "nav bar\nunique beta\n\nfooter"),
+        ("s://2", "only original content here"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(rows, "url string, text string")
     inp = str(tmp_path / "sld_in")
     chk = str(tmp_path / "sld_chk")
     outp = str(tmp_path / "sld_out")
     df.coalesce(1).write.parquet(inp)  # one file -> one micro-batch
-    q = stream_line_dedup(spark, inp, chk, outp)
+    q = stream_stage(spark, "linededup", inp, chk, outp)
     q.awaitTermination(120)
-    got = {r.doc_id: r for r in
-           line_dedup_reassemble(spark.read.parquet(outp)).collect()}
-    want = {r.doc_id: r for r in line_dedup_over(df).collect()}
+    got = _by_url(line_dedup_reassemble(spark.read.parquet(outp)), df)
+    want = {r.url: r for r in linededup_decisions(df).collect()}
     # single batch + min-okey winner == the batch operator exactly
-    for d in want:
-        assert (got[d].n_lines, got[d].n_kept, got[d].text_out) == \
-            (want[d].n_lines, want[d].n_kept, want[d].text_out)
+    assert set(got) == set(want)
+    for u in want:
+        assert (got[u].n_lines, got[u].n_kept, got[u].text_out) == \
+            (want[u].n_lines, want[u].n_kept, want[u].text_out)
     # cross-run state: a later file repeating a seen line loses it
-    spark.createDataFrame([(3, "unique alpha\nfresh line")],
-                          "doc_id long, text string") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    q2 = stream_line_dedup(spark, inp, chk, outp)
+    late = spark.createDataFrame([("s://3", "unique alpha\nfresh line")],
+                                 "url string, text string")
+    late.coalesce(1).write.mode("append").parquet(inp)
+    q2 = stream_stage(spark, "linededup", inp, chk, outp)
     q2.awaitTermination(60)
     out2 = spark.read.parquet(outp)
     assert out2.count() == 12  # 10 first-run lines + 2 new, no replays
-    d3 = line_dedup_reassemble(out2).filter("doc_id = 3").collect()[0]
+    d3 = _by_url(line_dedup_reassemble(out2), late)["s://3"]
     assert (d3.n_lines, d3.n_kept, d3.text_out) == (2, 1, "fresh line")
 
 
 def test_stream_substr_dedup(spark, tmp_path):
-    """r6: streaming twin of substr_dedup_over — one GroupState per
-    k-gram hash (the SAME substr_gram_melt kernel as batch); a
+    """r6: streaming twin of --mode substrdedup — one GroupState per
+    GRAM_K-gram hash (the SAME substr_gram_melt kernel as batch); a
     whole-corpus single batch fed through substr_dedup_reassemble
-    must equal the batch operator EXACTLY, and a later run over the
-    same checkpoint must strip spans seen in the first run."""
-    from pdfio_spark.pipeline.queries import (substr_dedup_over,
+    must equal the batch STAGES op's per-url output EXACTLY, and a
+    later run over the same checkpoint must strip spans seen in the
+    first run."""
+    from pyspark.sql import functions as F
+    from pdfio_spark.pipeline.job import substrdedup_decisions
+    from pdfio_spark.pipeline.queries import (GRAM_K,
                                               substr_dedup_reassemble)
-    from pdfio_spark.pipeline.streaming import stream_substr_dedup
-    K = 4
+    from pdfio_spark.pipeline.streaming import stream_stage
+    K = GRAM_K
+    span = " ".join(f"t{i}" for i in range(K))  # one shared gram
     rows = [
-        (0, "t1 t2 t3 t4 body0 x y z"),
-        (1, "t1 t2 t3 t4 body1 p q r"),
-        (2, "solo words only here nothing shared"),
-        (3, "tiny doc"),  # < k tokens: no grams, passes untouched
+        ("s://0", span + " body0 x y z"),
+        ("s://1", span + " body1 p q r"),
+        ("s://2", " ".join(f"solo{i}" for i in range(K + 2))),
+        ("s://3", "tiny doc"),  # < k tokens: no grams, passes untouched
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(rows, "url string, text string")
     inp = str(tmp_path / "ssd_in")
     chk = str(tmp_path / "ssd_chk")
     outp = str(tmp_path / "ssd_out")
     df.coalesce(1).write.parquet(inp)  # one file -> one micro-batch
-    q = stream_substr_dedup(spark, inp, chk, outp, k=K)
+    q = stream_stage(spark, "substrdedup", inp, chk, outp)
     q.awaitTermination(120)
     sink = spark.read.parquet(outp)
-    assert sink.count() == 13  # (8-3) + (8-3) + (6-3) + 0 grams
-    dup = sink.filter("NOT kept").select("doc_id", "pos")
-    got = {r.doc_id: r for r in
-           substr_dedup_reassemble(df, dup, k=K).collect()}
-    want = {r.doc_id: r for r in substr_dedup_over(df, k=K).collect()}
-    for d in want:
-        assert (got[d].n_tokens, got[d].n_dup_starts, got[d].n_kept,
-                got[d].text_out) == \
-            (want[d].n_tokens, want[d].n_dup_starts, want[d].n_kept,
-             want[d].text_out)
-    assert got[1].text_out == "body1 p q r"  # shared span stripped
-    assert got[3].text_out == "tiny doc"
+    assert sink.count() == 13  # 5 + 5 + 3 + 0 grams
+
+    def rebuilt(docs, sink):
+        return _by_url(substr_dedup_reassemble(
+            docs.select(F.xxhash64("url").alias("doc_id"), "text"),
+            sink.filter("NOT kept").select("doc_id", "pos")), docs)
+    got = rebuilt(df, sink)
+    want = {r.url: r for r in substrdedup_decisions(df).collect()}
+    assert set(got) == set(want)
+    for u in want:
+        assert (got[u].n_tokens, got[u].n_dup_starts, got[u].n_kept,
+                got[u].text_out) == \
+            (want[u].n_tokens, want[u].n_dup_starts, want[u].n_kept,
+             want[u].text_out)
+    # the shared span is stripped from exactly one of its two docs
+    assert {got["s://0"].n_kept, got["s://1"].n_kept} == {4, K + 4}
+    assert got["s://3"].text_out == "tiny doc"
     # cross-run state: a later file repeating the span loses it
-    spark.createDataFrame([(4, "t1 t2 t3 t4 fresh tokens here now")],
-                          "doc_id long, text string") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    q2 = stream_substr_dedup(spark, inp, chk, outp, k=K)
+    late = spark.createDataFrame([("s://4", span + " fresh tokens here now")],
+                                 "url string, text string")
+    late.coalesce(1).write.mode("append").parquet(inp)
+    q2 = stream_stage(spark, "substrdedup", inp, chk, outp)
     q2.awaitTermination(60)
     out2 = spark.read.parquet(outp)
     assert out2.count() == 18  # 13 first-run grams + 5 new, no replay
-    df4 = spark.createDataFrame(
-        [(4, "t1 t2 t3 t4 fresh tokens here now")],
-        "doc_id long, text string")
-    d4 = substr_dedup_reassemble(
-        df4, out2.filter("NOT kept AND doc_id = 4")
-        .select("doc_id", "pos"), k=K).collect()[0]
-    assert (d4.n_tokens, d4.text_out) == (8, "fresh tokens here now")
+    d4 = rebuilt(late, out2)["s://4"]
+    assert (d4.n_tokens, d4.text_out) == (K + 4, "fresh tokens here now")
 
 
 def test_dedup_decisions_recrawl_changed_body_deterministic(spark):

@@ -646,39 +646,44 @@ def _neardup(c: Ctx):
 
 
 def _streamline(c: Ctx):
-    """200-way-duplicated docs through the multi-line fixture and
-    stream_line_dedup: every body line's GroupState contested by ~200
-    replicas, the header line by the whole corpus. The corpus-global
-    KEPT COUNT is order-independent even though which copy wins is
-    arrival order, so the batch operator on the same input is the
-    truth."""
-    from pdfio_spark.pipeline.streaming import stream_line_dedup
+    """The url-keyed multi-line fixture (run linededup's input, 200-way
+    duplicated) through stream_stage("linededup"): every body line's
+    GroupState contested by ~200 replicas, the header line by the whole
+    corpus. The corpus-global KEPT COUNT is order-independent even
+    though which copy wins is arrival order, so the STAGES op on the
+    same input is the truth."""
+    from pdfio_spark.pipeline.run import STAGES
+    from pdfio_spark.pipeline.streaming import stream_stage
 
     def check(q, inp, out):
         agg = (Q.line_dedup_reassemble(c.spark.read.parquet(out))
                .agg(F.sum("n_lines").alias("lines"),
                     F.sum("n_kept").alias("kept")).collect()[0])
-        bk = (Q.line_dedup_over(c.spark.read.parquet(inp))
+        bk = (STAGES["linededup"].op(c.spark.read.parquet(inp))
               .agg(F.sum("n_kept")).collect()[0][0])
         return {"lines": int(agg["lines"]), "kept_lines": int(agg["kept"]),
                 "batch_kept_lines": int(bk)}
-    return (Q.line_dedup_fixture(_replicated_corpus(c, key="doc_id")),
-            stream_line_dedup, check)
+    return (_fixture_urls(Q.line_dedup_fixture)(c),
+            lambda s, *p: stream_stage(s, "linededup", *p), check)
 
 
 def _streamsubstr(c: Ctx):
-    """200-way-duplicated docs through the span-planting fixture and
-    stream_substr_dedup: every body gram's GroupState contested by ~200
-    replicas, the header passage's by the whole corpus (the hot-key
-    shape the chunk-wise decide_fn exists for). One state row per TOKEN
-    position, ~10x the line soak's volume per doc."""
-    from pdfio_spark.pipeline.streaming import stream_substr_dedup
+    """The url-keyed span-planting fixture (run substrdedup's input,
+    200-way duplicated) through stream_stage("substrdedup"): every body
+    gram's GroupState contested by ~200 replicas, the header passage's
+    by the whole corpus (the hot-key shape the chunk-wise decide_fn
+    exists for). One state row per TOKEN position, ~10x the line soak's
+    volume per doc."""
+    from pdfio_spark.pipeline.run import STAGES
+    from pdfio_spark.pipeline.streaming import stream_stage
 
     def check(q, inp, out):
         src = c.spark.read.parquet(inp)
+        # the twin's doc id
+        docs = src.select(F.xxhash64("url").alias("doc_id"), "text")
         sink = c.spark.read.parquet(out)
         dup = sink.filter("NOT kept").select("doc_id", "pos")
-        agg = (Q.substr_dedup_reassemble(src, dup)
+        agg = (Q.substr_dedup_reassemble(docs, dup)
                .agg(F.sum("n_tokens").alias("tokens"),
                     F.sum("n_kept").alias("kept")).collect()[0])
         # the order-independent invariant: exactly ONE kept gram row
@@ -687,16 +692,17 @@ def _streamsubstr(c: Ctx):
         # (which copy of two OVERLAPPING grams survives changes the
         # interval gaps): the batch total sits beside it for the drift
         kept_grams = sink.filter("kept").count()
-        distinct_grams = (Q.substr_gram_melt(src).select("g")
+        distinct_grams = (Q.substr_gram_melt(docs).select("g")
                           .distinct().count())
         assert kept_grams == distinct_grams, (kept_grams, distinct_grams)
-        bk = Q.substr_dedup_over(src).agg(F.sum("n_kept")).collect()[0][0]
+        bk = (STAGES["substrdedup"].op(src)
+              .agg(F.sum("n_kept")).collect()[0][0])
         return {"tokens": int(agg["tokens"]), "kept_grams": kept_grams,
                 "distinct_grams": distinct_grams,
                 "kept_tokens": int(agg["kept"]),
                 "batch_kept_tokens": int(bk)}
-    return (Q.substr_dedup_fixture(_replicated_corpus(c, key="doc_id")),
-            stream_substr_dedup, check)
+    return (_fixture_urls(Q.substr_dedup_fixture)(c),
+            lambda s, *p: stream_stage(s, "substrdedup", *p), check)
 
 
 def _dedup(c: Ctx) -> dict:
