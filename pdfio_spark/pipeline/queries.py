@@ -2236,6 +2236,18 @@ ORACLE_DEDUP_MINHASH_MD5 = _minhash_md5_oracle()
 ORACLE_DEDUP_PIPELINE = _dedup_pipeline_oracle()
 
 
+def _star_forest(edges: DataFrame) -> bool:
+    """True iff the distinct u > v parent pointers form a star forest:
+    no node is both a child u and a parent v, and no child has two
+    parents: a child (c = 1) may have no second endpoint row (n > 1),
+    as a child or as a parent. One grouped pass, then emptiness."""
+    ends = edges.select("u", F.lit(1).alias("c")).unionAll(
+        edges.select("v", F.lit(0)))
+    return (ends.groupBy("u")
+            .agg(F.max("c").alias("c"), F.count("*").alias("n"))
+            .filter("c > 0 AND n > 1").isEmpty())
+
+
 def connected_components(pairs: DataFrame, s: str = "s", t: str = "t",
                          max_rounds: int = 24) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
@@ -2244,8 +2256,17 @@ def connected_components(pairs: DataFrame, s: str = "s", t: str = "t",
     graph vs O(diameter) for plain min-label propagation, so a
     pathological chain of near-dups (long path graph) cannot blow the
     round budget. Per round: one groupBy-min + one join per phase, all
-    shuffles on the node id; localCheckpoint cuts lineage. Returns
-    (labels(node, component=min node id), rounds_used)."""
+    shuffles on the node id; localCheckpoint cuts lineage.
+
+    Termination: the rounds stop at the first STAR FOREST — no node is
+    both a child u and a parent v, and no child has two parents. Those
+    edges are exactly the rounds' fixed point (large-star and
+    small-star return a star forest unchanged, and change any other
+    edge set), so one grouped emptiness check before each round
+    replaces the former edge-set fingerprint and the extra round that
+    only confirmed it. Returns (labels(node, component=min node id),
+    rounds), `rounds` counting the rounds actually run: 0 when the
+    input pairs already form a star forest."""
     # parent-pointer representation: every edge stored u > v
     edges = (pairs.select(F.col(s).cast("long").alias("a"),
                           F.col(t).cast("long").alias("b"))
@@ -2256,9 +2277,19 @@ def connected_components(pairs: DataFrame, s: str = "s", t: str = "t",
     nodes = (edges.select(F.col("u").alias("node"))
              .unionAll(edges.select(F.col("v").alias("node")))
              .distinct().localCheckpoint())
-    prev_sig = None
     rounds = 0
-    for _ in range(max_rounds):
+    while not _star_forest(edges):
+        if rounds == max_rounds:
+            # Kiveris et al.'s bound is O(log^2 n) WORST case, not
+            # O(log n): exhausting the budget without a fixpoint means
+            # the labels may be wrong — surface it loudly instead of
+            # returning silently (ADVICE r4)
+            import warnings
+            warnings.warn(
+                f"connected_components: no fixpoint after {max_rounds} "
+                "rounds — labels may be unconverged; raise max_rounds",
+                RuntimeWarning, stacklevel=2)
+            break
         rounds += 1
         # large-star: center u over the SYMMETRIZED neighborhood; every
         # strictly-larger neighbor hooks to min(N(u) ∪ {u})
@@ -2273,30 +2304,11 @@ def connected_components(pairs: DataFrame, s: str = "s", t: str = "t",
         # small-star: edges already point u -> smaller v; all smaller
         # neighbors (and u itself) hook to the minimum
         smin = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (large.join(smin, "u")
+        edges = (large.join(smin, "u")
                  .select(F.col("v").alias("u"), F.col("m").alias("v"))
                  .filter(F.col("u") != F.col("v"))
                  .unionAll(smin)
                  .distinct().localCheckpoint())
-        # order-insensitive edge-set fingerprint; bit_xor cannot
-        # overflow (ANSI mode rejects a plain sum of xxhash64)
-        sig = tuple(small.agg(
-            F.count("*"),
-            F.expr("bit_xor(xxhash64(u, v))")).collect()[0])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        edges = small
-    else:
-        # Kiveris et al.'s bound is O(log^2 n) WORST case, not O(log n):
-        # exhausting the budget without a fixpoint means the labels may
-        # be wrong — surface it loudly instead of returning silently
-        # (ADVICE r4)
-        import warnings
-        warnings.warn(
-            f"connected_components: no fixpoint after {max_rounds} "
-            "rounds — labels may be unconverged; raise max_rounds",
-            RuntimeWarning, stacklevel=2)
     # fixed point = disjoint stars centered at each component's min
     labels = (nodes.join(edges.select(F.col("u").alias("node"),
                                       F.col("v").alias("root")),
@@ -3052,62 +3064,72 @@ ANN_COARSE_DIRECTED = (8, 4)   # (singles, pairs-among-top-k bits)
 ANN_FINE_DIRECTED = (12, 8)
 
 
-def _dot_lit(col, vec):
-    return _dot(col, F.array(*[F.lit(float(v)) for v in vec]))
+def _spark_dot_sql(col: str, plane: list[float]) -> str:
+    """Spark SQL text of one hyperplane dot product: the _dot fold of
+    array column `col` against a literal plane, spelled with the lambda
+    names and operand order the Column-API _dot uses, so the optimized
+    plan is the same. Every LSH tree below is generated as SQL text and
+    parsed JVM-side in one F.expr per column: building the coded base
+    Column by Column cost ~17.5k py4j round trips, ~1.3 s of a warm
+    ann_lsh_topk_over call on a 4-vCPU host."""
+    lits = ", ".join(f"{float(v)!r}D" for v in plane)
+    return (f"aggregate(zip_with({col}, array({lits}), "
+            "(x, y) -> cast(x AS double) * cast(y AS double)), "
+            "0.0D, (x, y) -> x + y)")
 
 
-def _code_bits(dots: list):
-    """LSH code: bit j set iff the j-th hyperplane dot is >= 0."""
-    assert len(dots) <= 30  # int32 bit-sum bound
-    b = None
-    for j, d in enumerate(dots):
-        bit = F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        b = bit if b is None else b + bit
-    return b.cast("int")
-
-
-def _bucket_expr(col, planes: list[list[float]] | None = None):
-    return _code_bits([_dot_lit(col, hp) for hp in
-                       (planes if planes is not None else _HP)])
-
-
-def _dots_expr(col, planes: list[list[float]]):
+def _spark_dots_sql(col: str, planes: list[list[float]]) -> str:
     """array<double> of the hyperplane dot products — computed ONCE and
     checkpointed; code bits AND directed-probe ranks both derive from
     it downstream (cheap element_at ops on the stored array)."""
-    return F.array(*[_dot_lit(col, hp) for hp in planes])
+    return "array(" + ", ".join(_spark_dot_sql(col, hp)
+                                for hp in planes) + ")"
 
 
-def _rank_expr(dcol, bits: int):
+def _spark_code_sql(dots: list[str]) -> str:
+    """LSH code: bit j set iff the j-th hyperplane dot is >= 0."""
+    assert len(dots) <= 30  # int32 bit-sum bound
+    bits = " + ".join(f"CASE WHEN {d} >= 0 THEN {1 << j} ELSE 0 END"
+                      for j, d in enumerate(dots))
+    return f"cast({bits} AS int)"
+
+
+def _bucket_expr(col: str, planes: list[list[float]] | None = None):
+    """The LSH bucket of array column `col` (default: the 8 coarse
+    planes) as one Column."""
+    return F.expr(_spark_code_sql(
+        [_spark_dot_sql(col, hp)
+         for hp in (planes if planes is not None else _HP)]))
+
+
+def _spark_rank_sql(dcol: str, bits: int) -> str:
     """array<int> of plane indices ordered by ascending round(|dot|,6)
     (tie-break: plane index — deterministic cross-engine): the
     query-directed probe order. Rounding to 6 decimals keeps the sort
     key identical between Spark and the DuckDB oracle."""
-    structs = F.array(*[
-        F.struct(F.round(F.abs(F.element_at(dcol, j + 1)), 6).alias("a"),
-                 F.lit(j).alias("j"))
-        for j in range(bits)])
-    return F.transform(F.array_sort(structs), lambda x: x["j"])
+    structs = ", ".join(
+        f"struct(round(abs(element_at({dcol}, {j + 1})), 6) AS a, "
+        f"{j} AS j)" for j in range(bits))
+    return f"transform(array_sort(array({structs})), x -> x.j)"
 
 
-def _directed_buckets(code, js, bits: int, singles: int, pairs: int):
+def _spark_directed_sql(code: str, js: str, bits: int, singles: int,
+                        pairs: int) -> list[str]:
     """Probe-bucket exprs for one table: the exact code, single flips
     of the top `singles` ranked bits, pair flips among the top `pairs`
-    ranked bits (Lv et al. query-directed perturbation sets).
-    (F.shiftleft needs a Python-int shift, so bit masks come from a
-    literal power-of-two array indexed by the rank entry.)"""
-    pw = F.array(*[F.lit(1 << j) for j in range(bits)])
+    ranked bits (Lv et al. query-directed perturbation sets). Bit masks
+    come from a literal power-of-two array indexed by the rank entry."""
+    pw = "array(" + ", ".join(str(1 << j) for j in range(bits)) + ")"
 
     def bitmask(t):
-        return F.element_at(pw, F.element_at(js, t) + 1)
+        return f"element_at({pw}, element_at({js}, {t}) + 1)"
 
     out = [code]
     for t in range(singles):
-        out.append(code.bitwiseXOR(bitmask(t + 1)))
+        out.append(f"{code} ^ {bitmask(t + 1)}")
     for a in range(pairs):
         for b in range(a + 1, pairs):
-            out.append(code.bitwiseXOR(
-                bitmask(a + 1).bitwiseOR(bitmask(b + 1))))
+            out.append(f"{code} ^ ({bitmask(a + 1)} | {bitmask(b + 1)})")
     return out
 
 
@@ -3194,8 +3216,8 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final join) would otherwise each recompute all 20 hyperplane dot
     # products (same rationale as the ann_lsh_topk_over checkpoint)
     b = emb.select("vec_id",
-                   _bucket_expr(F.col("embedding")).alias("bucket"),
-                   _bucket_expr(F.col("embedding"), _HP_FINE)
+                   _bucket_expr("embedding").alias("bucket"),
+                   _bucket_expr("embedding", _HP_FINE)
                    .alias("bucket_fine")).localCheckpoint()
     stats = (b.groupBy("bucket")
              .agg(F.count("*").alias("n_vectors"))
@@ -3273,13 +3295,13 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
     # arrays feed the bucket/probe derivation in-plan and are NOT
     # stored (r7 — the single checkpoint materializes nemb + the
     # finished bucket arrays; see the note at the checkpoint below).
-    dcols = [_dots_expr(F.col("embedding"), cps).alias("_dc")]
+    dcols = [F.expr(_spark_dots_sql("embedding", cps)).alias("_dc")]
     if tables > 1:
-        dcols.append(_dots_expr(F.col("embedding"), fps).alias("_df"))
+        dcols.append(F.expr(_spark_dots_sql("embedding", fps)).alias("_df"))
     # offset keeps per-table key spaces disjoint in one join column —
     # it must clear BOTH code widths (r5 review: a coarse table wider
     # than the fine one would alias across tables with 1 << len(fps))
-    off = F.lit(1 << max(len(cps), len(fps)))
+    off = 1 << max(len(cps), len(fps))
 
     def table(name, planes, directed, dcol):
         """(exact code, directed probe codes) of one table."""
@@ -3287,19 +3309,18 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
         if s > len(planes) or p > len(planes):
             raise ValueError(f"{name}_directed {directed} exceeds "
                              f"{len(planes)} {name} bits")
-        dots = F.col(dcol)
-        code = _code_bits([F.element_at(dots, j + 1)
-                           for j in range(len(planes))])
-        return code, _directed_buckets(
-            code, _rank_expr(dots, len(planes)), len(planes), s, p)
+        code = _spark_code_sql([f"element_at({dcol}, {j + 1})"
+                                for j in range(len(planes))])
+        return code, _spark_directed_sql(
+            code, _spark_rank_sql(dcol, len(planes)), len(planes), s, p)
 
     b0, pc = table("coarse", cps, coarse_directed, "_dc")
-    exact = [b0.cast("long")]
-    probes = [c.cast("long") for c in pc]
+    exact = [f"cast({b0} AS bigint)"]
+    probes = [f"cast({c} AS bigint)" for c in pc]
     if tables > 1:
         f1, pf = table("fine", fps, fine_directed, "_df")
-        exact.append((off + f1).cast("long"))
-        probes += [(off + c).cast("long") for c in pf]
+        exact.append(f"cast({off} + {f1} AS bigint)")
+        probes += [f"cast({off} + ({c}) AS bigint)" for c in pf]
     # melts carry ONLY (vec_id, bucket) — 12 bytes/row — so the probe
     # expansion shuffles kilobytes per vector, not 56 copies of the
     # 64-double embedding. ONE checkpoint (r7: was base + a second
@@ -3323,8 +3344,8 @@ def ann_lsh_topk_over(emb: DataFrame, tables: int = 2,
                     F.transform(F.col("embedding"),
                                 lambda x: x.cast("double")
                                 / F.col("_nrm")).alias("nemb"),
-                    F.array(*exact).alias("_builds"),
-                    F.array(*probes).alias("_probes"))
+                    F.expr(f"array({', '.join(exact)})").alias("_builds"),
+                    F.expr(f"array({', '.join(probes)})").alias("_probes"))
             .localCheckpoint())
     build = base.select("vec_id",
                         F.explode(F.col("_builds")).alias("bucket"))
@@ -3371,21 +3392,23 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dots_sql(col: str, planes: list[list[float]]) -> str:
-    """SQL list of the per-plane dot products (mirrors _dots_expr)."""
+    """DuckDB list of the per-plane dot products (mirrors
+    _spark_dots_sql)."""
     return "[" + ", ".join(
         f"list_dot_product({col}::DOUBLE[], "
         f"[{','.join(repr(v) for v in hp)}])" for hp in planes) + "]"
 
 
 def _code_sql(dcol: str, bits: int) -> str:
-    """Code bits from a stored dot list (mirrors _code_bits)."""
+    """DuckDB code bits from a stored dot list (mirrors
+    _spark_code_sql)."""
     return ("cast(" + " + ".join(
         f"CASE WHEN {dcol}[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END"
         for j in range(bits)) + " AS int)")
 
 
 def _rank_sql(dcol: str, bits: int) -> str:
-    """Plane indices by ascending round(|dot|,6) (mirrors _rank_expr —
+    """Plane indices by ascending round(|dot|,6) (mirrors _spark_rank_sql —
     same rounding, same tie-break, so the probe order is identical)."""
     structs = ", ".join(
         f"{{'a': round(abs({dcol}[{j + 1}]), 6), 'j': {j}}}"
@@ -3395,7 +3418,7 @@ def _rank_sql(dcol: str, bits: int) -> str:
 
 def _directed_sql(code: str, js: str, singles: int, pairs: int,
                   off: int = 0) -> list[str]:
-    """Directed probe-bucket SQL exprs (mirrors _directed_buckets)."""
+    """Directed probe-bucket DuckDB exprs (mirrors _spark_directed_sql)."""
     pre = f"{off} + " if off else ""
     out = [f"cast({pre}{code} AS bigint)"]
     for t in range(singles):
@@ -3489,7 +3512,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings, whose max within-bucket cosine is ~0.46.)"""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     b = emb.select("vec_id", "embedding",
-                   _bucket_expr(F.col("embedding")).alias("bucket"))
+                   _bucket_expr("embedding").alias("bucket"))
     sim = _cos_expr("a.embedding", "c.embedding")
     return (_salted_bucket_pairs(b, lambda a, c: a < c)
             .select(F.col("a.vec_id").alias("vec_a"),

@@ -78,7 +78,7 @@ def main() -> None:
     gen_skewed(spark).repartition(cpus).write.mode("overwrite").parquet(path)
     emb = spark.read.parquet(path)
     b = emb.select("vec_id", "embedding",
-                   _bucket_expr(F.col("embedding")).alias("bucket")).cache()
+                   _bucket_expr("embedding").alias("bucket")).cache()
     b.count()
     stats = (b.groupBy("bucket").count()
              .orderBy(F.desc("count")).limit(5).collect())
